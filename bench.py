@@ -156,12 +156,17 @@ def live_http_bench(
          portfile, logfile, str(pages_per_host)],
         cwd=os.path.dirname(os.path.abspath(__file__)),
     )
-    for _ in range(200):
-        if os.path.exists(portfile) and open(portfile).read().strip():
-            break
-        _time.sleep(0.05)
-    port = int(open(portfile).read().strip())
     try:
+        for _ in range(200):
+            if os.path.exists(portfile) and open(portfile).read().strip():
+                break
+            if srv.poll() is not None:
+                raise RuntimeError(
+                    f"live server exited with code {srv.returncode} "
+                    "before writing its port file"
+                )
+            _time.sleep(0.05)
+        port = int(open(portfile).read().strip())
         seeds = [
             f"http://127.0.0.{k + 1}:{port}/p/0" for k in range(n_hosts)
         ]
@@ -398,7 +403,7 @@ def crawl_bench(spark, n_pages: int, workdir: str) -> dict:
     # Warm the JVM + executor pool before the measured window with a
     # throwaway micro-crawl (256 pages, own temp workdir): Python worker
     # fork + pandas/kernel imports, whole-stage codegen, the parquet
-    # partitionBy committer, and the cogroup/broadcast machinery are all
+    # partitionBy committer, and the mapInPandas/broadcast machinery are all
     # one-time JVM costs (~4-6s) that a production crawl amortizes over
     # hundreds of rounds; excluding them makes urls_per_sec the
     # steady-state per-round throughput the metric describes. Transparent:

@@ -534,13 +534,13 @@ class CrawlEngine:
         ok = routed.where(F.col("_ok"))
         deferred = routed.where(F.col("_ok").isNull())
 
-        # attach bodies via the cogrouped replay (make_replay_fn): slim
-        # request rows grouped with the pages table's single row per url —
-        # each page body crosses one exchange and enters Python once per
-        # url, never a per-path join or a body-carrying sort. Missing page
-        # (404) => empty body; robots-blocked urls (any round's block: the
-        # seen sink already holds this round's delta) traverse with an
-        # empty body even when the snapshot table has content for them.
+        # attach bodies via the batched replay (_replay): slim request rows
+        # url-sorted behind the pages table's single row per url — each
+        # page body crosses one exchange and one Arrow boundary, never a
+        # per-path join. Missing page (404) => empty body; robots-blocked
+        # urls (any round's block: the seen sink already holds this round's
+        # delta) traverse with an empty body even when the snapshot table
+        # has content for them.
         if self.robots is not None:
             blocked_all = self._read_sink("seen").where(F.col("status") == 999)
             ok = (
@@ -553,19 +553,7 @@ class CrawlEngine:
             )
         else:
             ok = ok.withColumn("_blk", F.lit(False))
-        ok_urls = ok.select("url_canon").distinct()
-        pages_src = self._body_source().join(
-            F.broadcast(ok_urls), "url_canon", "left_semi"
-        )
-        ok_slim = ok.select(
-            "pc", "url_canon", "url_full", "bindings", "path_key",
-            "method", "cookies", "_blk",
-        )
-        out1 = (
-            ok_slim.groupby("url_canon")
-            .cogroup(pages_src.groupby("url_canon"))
-            .applyInPandas(self._replay_fn, CASCADE_SCHEMA)
-        )
+        out1 = self._replay(ok, self._cur_round_parts)
 
         # results-sink keys: (rnd+1)*1000+gen — the pre-round init cascade
         # owns the 0..999 key space
@@ -606,13 +594,13 @@ class CrawlEngine:
         and persist to the store sink — the crash-resumable page cache.
         CACHE-HIT traversals (urls fetched in an earlier round, or
         robots-blocked replays) never reach fetch_fn: they evaluate through
-        the cogrouped store replay (make_replay_fn) — the memoized replay
-        of browser-services.rkt:36-40, correct for live/non-deterministic
+        the batched store replay (``_replay``) — the memoized replay of
+        browser-services.rkt:36-40, correct for live/non-deterministic
         fetchers (round 1 re-fetched cache hits, bypassing the politeness
         budget). All routing frames are slim; body bytes flow
         fetch→Arrow→store once, and per replaying round each body crosses
-        one cogroup exchange + one Arrow boundary — never a per-path join,
-        a body sort, or a dedup shuffle."""
+        one url_canon exchange + one Arrow boundary — never a per-path
+        join or a dedup shuffle."""
         decided = selected.select(
             "url_canon", F.lit(True).alias("_fresh"), F.lit(False).alias("_blk")
         ).unionByName(
@@ -631,7 +619,7 @@ class CrawlEngine:
         # a segment — fresh (politeness winner, gets the fused fetch+eval),
         # jvmrep (cache hit whose exact input state is in the eval-output
         # memo: replayed by a pure JVM join), pyrep (cache hit that needs
-        # the cogrouped Python replay: memo miss or robots-blocked), or
+        # the batched Python replay: memo miss or robots-blocked), or
         # deferred (over budget, back to the frontier) — and the whole
         # tagged frame is written once, hive-partitioned by ``seg``. The
         # rest of the round (eval job, seen chain, frontier checkpoint)
@@ -677,7 +665,7 @@ class CrawlEngine:
         # dominant wasted work, and this removes it entirely. Misses
         # (states never evaluated at fetch time, e.g. a branch arriving
         # with a different cookie jar) and robots-blocked branches fall
-        # back to the cogrouped Python replay, which is always exact.
+        # back to the batched Python replay, which is always exact.
         # Hit-detection happens HERE, in the routing job, against the
         # DISTINCT memo input-state keys (filtered to this round's
         # candidate urls — a superset of the replay urls is safe: fresh and
@@ -728,7 +716,7 @@ class CrawlEngine:
         routed_path = self._path("cascade_tmp", f"routed={rnd}")
         # the routed rows are SLIM (no bodies) and every downstream consumer
         # re-partitions for its own needs (fresh → url_canon co-location,
-        # pyrep → cogroup exchange), so the write's partitioning is pure
+        # pyrep → replay exchange), so the write's partitioning is pure
         # task/file overhead: collapse to a few write tasks instead of
         # shuffle_partitions × segs tiny files + footers per round — at
         # politeness-bound (many-round, few-rows) tiers this is a per-round
@@ -772,32 +760,16 @@ class CrawlEngine:
                 .sortWithinPartitions("url_canon", "pc", "bindings")
                 .mapInPandas(self._fused_fn, CASCADE_SCHEMA)
             )
-        # cache-hit replay: COGROUPED with the store sink on url_canon
-        # (make_replay_fn) — each group is one url: slim replay rows on the
-        # left, the url's single store row (body/head/status) on the right.
-        # A page body crosses exactly one shuffle (the cogroup exchange of
-        # the one-row-per-url store side, pre-filtered to this round's
-        # replayed urls via a broadcast semi-join of the SLIM url set) and
-        # is never joined per path, never sorted, never duplicated —
-        # identical semantics to a fresh fetch because fetch memoization
-        # replays the SAME response per url (browser-services.rkt:36-40).
-        # Missing store row (url seen but never stored, e.g. robots-
-        # blocked) → empty body. The branch exists ONLY when the footers
-        # say there are pyrep rows — memo-covered rounds never plan the
-        # body-bearing store scan at all.
+        # cache-hit replay (_replay): the url's single store row leads its
+        # slim replay rows through one batched Python stage — identical
+        # semantics to a fresh fetch because fetch memoization replays the
+        # SAME response per url (browser-services.rkt:36-40). The branch
+        # exists ONLY when the footers say there are pyrep rows —
+        # memo-covered rounds never plan the body-bearing store scan at
+        # all; its width follows the pyrep row count like the fresh stage.
         if segs.get("pyrep", 0):
-            py_replay = _seg("pyrep").select(
-                "pc", "url_canon", "url_full", "bindings", "path_key",
-                "method", "cookies", "_blk",
-            )
-            py_urls = py_replay.select("url_canon").distinct()
-            store_src = self._body_source().join(
-                F.broadcast(py_urls), "url_canon", "left_semi"
-            )
             outs.append(
-                py_replay.groupby("url_canon")
-                .cogroup(store_src.groupby("url_canon"))
-                .applyInPandas(self._replay_fn, CASCADE_SCHEMA)
+                self._replay(_seg("pyrep"), self._round_parts(segs["pyrep"]))
             )
         if memo_f is not None and segs.get("jvmrep", 0):
             jr = _seg("jvmrep")
@@ -1241,13 +1213,11 @@ class CrawlEngine:
         (``_drop_tmp_sinks``), after every consumer has executed.
         Generation row counts come from the parquet kind-column statistics
         driver-side (no Spark jobs)."""
-        import time as _t
         requests_acc = self._empty(REQUEST_SCHEMA)
         n_results = 0
         gen = 0
         gen_paths: list[str] = []
         while True:
-            _g1 = _t.time()
             gen += 1
             if gen > 200:
                 raise RuntimeError("cascade depth exceeded (fetch-free recur loop?)")
@@ -1283,8 +1253,6 @@ class CrawlEngine:
                 for d in os.listdir(path) if d.startswith("kind=")
             }
             n_results += int(kinds.get("result", 0))
-            if os.environ.get("BORIS_TIMING"):
-                print(f"  cascade gen{gen}: eval+write={_t.time()-_g1:.2f} kinds={kinds}")
             # Durable result/download history: ADOPT the generation's
             # kind= partitions by directory rename (Iceberg add_files —
             # data files written once by the generation's own tasks,
@@ -1320,11 +1288,35 @@ class CrawlEngine:
 
     # ------------------------------------------------------- checkpointing
 
+    def _replay(self, rows: DataFrame, width: int) -> DataFrame:
+        """Batched cache-hit replay (make_replay_fn): the slim replay rows
+        (``_src=1``, no body) unioned with each replayed url's single body
+        row from ``_body_source`` (``_src=0``), semi-joined to the replay
+        url set via a broadcast of the SLIM url list. One url_canon
+        exchange of *width* partitions, then url-sorted so each url's body
+        row leads its replay rows into one ``mapInPandas`` — a page body
+        crosses exactly one shuffle and one Arrow boundary and is never
+        copied per path."""
+        rows = rows.select(
+            "pc", "url_canon", "url_full", "bindings", "path_key",
+            "method", "cookies", "_blk", F.lit(1).alias("_src"),
+        )
+        bodies = self._body_source().join(
+            F.broadcast(rows.select("url_canon").distinct()),
+            "url_canon", "left_semi",
+        ).withColumn("_src", F.lit(0))
+        return (
+            rows.unionByName(bodies, allowMissingColumns=True)
+            .repartition(width, "url_canon")
+            .sortWithinPartitions("url_canon", "_src", "pc", "bindings")
+            .mapInPandas(self._replay_fn, CASCADE_SCHEMA)
+        )
+
     def _body_source(self) -> DataFrame:
-        """(url_canon, body) for the cascade's current-document joins:
-        the pages table in snapshot mode, the fetched store in HTTP mode."""
+        """(url_canon, body, head) for the cache-hit replay: the pages
+        table (no head) in snapshot mode, the fetched store otherwise."""
         if self.fetch_mode == "snapshot":
-            return self.pages
+            return self.pages.withColumn("head", F.lit(None).cast("string"))
         store = self._read_sink("store")
         if store is None:
             return self._empty("url_canon string, body string, head string")

@@ -55,7 +55,7 @@ _COLS = [
 # multi-generation outputs — exactly the class whose cache-hit replays can
 # run as a JVM join against the memo sink instead of re-evaluating bodies
 # in Python (let/for/label/recur/show produce 'apply' generations and
-# download emits the body itself, so they take the cogroup Python path)
+# download emits the body itself, so they take the batched Python replay)
 MEMO_JOINABLE_KINDS = frozenset(
     {"go", "click", "submit", "extract", "extract_list"}
 )
@@ -63,36 +63,6 @@ MEMO_JOINABLE_KINDS = frozenset(
 
 def _hx(i: int) -> str:
     return f"{i:08x}"
-
-
-# -- env-gated executor-side timing (BORIS_UDF_TIMING=1): per-worker totals
-# printed at interpreter exit; local-mode stderr shows them at spark.stop()
-_TIMING: dict[str, float] = {}
-
-
-def _timing_enabled() -> bool:
-    import os
-
-    return bool(os.environ.get("BORIS_UDF_TIMING"))
-
-
-_T_FLUSH = [0.0]
-
-
-def _t_add(name: str, dt: float) -> None:
-    import os
-    import time
-
-    _TIMING[name] = _TIMING.get(name, 0.0) + dt
-    now = time.time()
-    if now - _T_FLUSH[0] > 2.0:  # workers get SIGKILLed; flush to disk
-        _T_FLUSH[0] = now
-        d = "/tmp/boris_udf_timing"
-        os.makedirs(d, exist_ok=True)
-        with open(os.path.join(d, str(os.getpid())), "w") as f:
-            f.write(
-                " ".join(f"{k}={v:.2f}" for k, v in sorted(_TIMING.items()))
-            )
 
 
 def _out_row(kind: str, **kw) -> dict:
@@ -298,6 +268,37 @@ def _eval_memo(
         out.append(r2)
 
 
+def _emit_memo(
+    out: list[dict], row_start: int, path: str, memo_states: set,
+    url: str, skey: tuple,
+) -> None:
+    """Eval-output cache: once per distinct input state *skey* = (pc,
+    url_full, bindings, method, pre-fold jar) per url, duplicate the
+    state's outputs ``out[row_start:]`` as ``kind='memo'`` rows with
+    suffix-only paths + the state key — the memo sink later rounds JOIN
+    against (JVM concat of path prefixes) instead of re-running the page
+    through Python per replay branch. The 'mark' row records states with
+    ZERO outputs, so a join miss means "state never evaluated", not "state
+    evaluated to nothing"."""
+    if skey in memo_states:
+        return
+    memo_states.add(skey)
+    pc, url_full, bindings_json, method, cj_in = skey
+    n_out = len(out)
+    mk_kw = dict(
+        cur_url=url, mk_pc=pc, mk_full=url_full, mk_method=method,
+        mk_bindings=bindings_json, mk_cookies=cj_in,
+    )
+    out.append(_out_row("memo", mk="mark", **mk_kw))
+    for r in out[row_start:n_out]:
+        m = dict(r)
+        m["kind"] = "memo"
+        m["mk"] = r["kind"]
+        m["path_key"] = r["path_key"][len(path):]
+        m.update(mk_kw)
+        out.append(m)
+
+
 def make_fused_fn(
     node_table: dict[int, NodeSpec],
     fetch_fn,
@@ -368,11 +369,7 @@ def make_fused_fn(
         # crawl" true across Arrow batch boundaries in O(1) memory (a url
         # spanning 3+ batches chains through, it is last in each).
         carry: dict[str, tuple] = {}
-        import time as _time
-
-        timing = _timing_enabled()
         for batch_idx, pdf in enumerate(batches):
-            _t0 = _time.time()
             out: list[dict] = []
             store_rows: list[tuple] = []
             cookies_col = (
@@ -403,9 +400,6 @@ def make_fused_fn(
                 resps = fetch_fn(need) if need else []
             fetched = dict(zip(need, resps))
             fetched.update(carry)
-            if timing:
-                _t_add("fused.fetch", _time.time() - _t0)
-                _t0 = _time.time()
             emitted: dict[str, int] = {}
             for pc, url, url_full, url_hash, host, bindings_json, path, method, cj in zip(
                 pdf["pc"], pdf["url_canon"], pdf["url_full"], pdf["url_hash"],
@@ -472,69 +466,41 @@ def make_fused_fn(
                         head=head, method=method, cookies_json=cj,
                     )
                 if emit_memo:
-                    # eval-output cache: once per distinct input state per
-                    # url, duplicate this row's outputs with suffix-only
-                    # paths + the state key — the memo sink later rounds
-                    # JOIN against (JVM concat of path prefixes) instead of
-                    # re-running the page through Python per replay branch.
-                    # The 'mark' row records states with ZERO outputs, so a
-                    # join miss means "state never evaluated", not "state
-                    # evaluated to nothing".
-                    skey = (int(pc), url_full, bindings_json, method, cj_in)
-                    if skey not in memo_states:
-                        memo_states.add(skey)
-                        n_out = len(out)
-                        mk_kw = dict(
-                            cur_url=url, mk_pc=int(pc), mk_full=url_full,
-                            mk_method=method, mk_bindings=bindings_json,
-                            mk_cookies=cj_in,
-                        )
-                        out.append(_out_row("memo", mk="mark", **mk_kw))
-                        for r in out[row_start:n_out]:
-                            m = dict(r)
-                            m["kind"] = "memo"
-                            m["mk"] = r["kind"]
-                            m["path_key"] = r["path_key"][len(path):]
-                            m.update(mk_kw)
-                            out.append(m)
+                    _emit_memo(
+                        out, row_start, path, memo_states, url,
+                        (int(pc), url_full, bindings_json, method, cj_in),
+                    )
             if len(pdf):
                 last_url = pdf["url_canon"].iloc[-1]
                 carry = (
                     {last_url: fetched[last_url]} if last_url in fetched else {}
                 )
-            if timing:
-                _t_add("fused.eval", _time.time() - _t0)
-                _t0 = _time.time()
             if store_dir is not None and store_rows:
                 _write_store_batch(store_dir, store_rows, batch_idx)
-                if timing:
-                    _t_add("fused.store_write", _time.time() - _t0)
-                    _t0 = _time.time()
-            f = _frame(out)
-            if timing:
-                _t_add("fused.frame", _time.time() - _t0)
-            yield f
+            yield _frame(out)
 
     return fused
 
 
 def make_replay_fn(node_table: dict[int, NodeSpec], emit_memo: bool = False):
-    """Cogrouped store replay — the cache-hit half of a crawl round.
+    """Batched store replay — the cache-hit half of a crawl round.
 
-    ``replay_slim.groupby(url).cogroup(store.groupby(url)).applyInPandas``:
-    each group is ONE url — left = its slim replay request rows (no
-    bodies), right = its single store row (body + head + status). The page
-    body therefore crosses exactly one shuffle (the cogroup exchange of the
-    store's one-row-per-url side) and is evaluated in place against every
-    replaying branch — zero body amplification. The previous shape
-    (dropDuplicates over the body-carrying store, a body join against every
-    replay row, then a sortWithinPartitions of body×paths rows) moved each
-    body through three body-heavy operators and multiplied it per path;
-    at 63 KB mean pages that sort alone spilled gigabytes per round.
+    One ``mapInPandas`` over the union of the slim replay request rows
+    (``_src=1``, no body) and each replayed url's single store row
+    (``_src=0``: body + head), repartitioned by url_canon and sorted by
+    (url_canon, _src, pc, bindings), so every url arrives as its body row
+    followed by its replay rows. The page body crosses exactly one shuffle
+    (the store side of that exchange is pre-filtered to the replayed urls)
+    and one Arrow boundary, and is evaluated in place against every
+    replaying branch — never joined per path, never copied per path. The
+    Python cost is paid per Arrow batch, not per url group: the current
+    url's body, head and eval memo carry across batch boundaries (a url
+    may straddle one) and reset when the url changes. A url with no store
+    row (seen but never stored) replays an empty body.
 
     Semantics identical to the fan-out cascade over store-joined bodies
     (the memoized replay of browser-services.rkt:36-40): robots-blocked
-    branches (left._blk) see an empty body and no head; the store head's
+    branches (``_blk``) see an empty body and no head; the store head's
     Set-Cookie folds into each branch's jar before its children run.
 
     With ``emit_memo`` (memo-joinable programs), every state this replay
@@ -547,85 +513,57 @@ def make_replay_fn(node_table: dict[int, NodeSpec], emit_memo: bool = False):
     emit memo rows (their empty-body outputs would poison the unblocked
     join, whose key does not carry the blocked bit)."""
 
-    def replay(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        import time as _time
-
+    def replay(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..kernel.cookies import jar_fold_head, jar_from_json, jar_to_json
 
-        timing = _timing_enabled()
-        _t0 = _time.time()
-        out: list[dict] = []
-        if not len(left):
-            return _frame(out)
-        body = ""
-        head_json = None
-        if len(right):
-            b = right["body"].iloc[0]
-            body = b if isinstance(b, str) else ""
-            if "head" in right.columns:
-                h = right["head"].iloc[0]
-                head_json = h if isinstance(h, str) else None
+        cur_url = None
+        body, head = "", None
         memo: dict = {}
         memo_states: set = set()
-        cookies_col = (
-            left["cookies"] if "cookies" in left.columns else [None] * len(left)
-        )
-        blk_col = left["_blk"] if "_blk" in left.columns else [False] * len(left)
-        for pc, url, url_full, bindings_json, path, method, cj, blk in zip(
-            left["pc"], left["url_canon"], left["url_full"], left["bindings"],
-            left["path_key"], left["method"], cookies_col, blk_col,
-        ):
-            pc = int(pc)
-            url_full = url_full if isinstance(url_full, str) else None
-            bindings_json = (
-                bindings_json if isinstance(bindings_json, str) else None
-            )
-            method = method if isinstance(method, str) else "GET"
-            cj = cj if isinstance(cj, str) else None
-            path = path or ""
-            blk = bool(blk)
-            b = "" if blk else body
-            hj = None if blk else head_json
-            head = tuple(json.loads(hj)) if hj else None
-            cj_in = cj  # pre-fold jar: the memo key replay rows carry
-            if head is not None:
-                cj = jar_to_json(
-                    jar_fold_head(jar_from_json(cj), head, url_full or url)
+        for pdf in batches:
+            out: list[dict] = []
+            for src, pc, url, url_full, bindings_json, path, method, cj, blk, b, h in zip(
+                pdf["_src"], pdf["pc"], pdf["url_canon"], pdf["url_full"],
+                pdf["bindings"], pdf["path_key"], pdf["method"],
+                pdf["cookies"], pdf["_blk"], pdf["body"], pdf["head"],
+            ):
+                if url != cur_url:
+                    cur_url, body, head = url, "", None
+                    memo.clear()
+                    memo_states.clear()
+                if src == 0:
+                    body = b if isinstance(b, str) else ""
+                    head = tuple(json.loads(h)) if isinstance(h, str) and h else None
+                    continue
+                pc = int(pc)
+                url_full = url_full if isinstance(url_full, str) else None
+                bindings_json = (
+                    bindings_json if isinstance(bindings_json, str) else None
                 )
-            row_start = len(out)
-            for j, child in enumerate(node_table[pc].child_ids):
-                _eval_memo(
-                    memo, (child, url_full, bindings_json, method, cj, blk),
-                    node_table[child], node_table, child,
-                    url, url_full, b, bindings_json, path + _hx(j), out,
-                    head=head, method=method, cookies_json=cj,
-                )
-            if emit_memo and not blk:
-                skey = (pc, url_full, bindings_json, method, cj_in)
-                if skey not in memo_states:
-                    memo_states.add(skey)
-                    n_out = len(out)
-                    mk_kw = dict(
-                        cur_url=url, mk_pc=pc, mk_full=url_full,
-                        mk_method=method, mk_bindings=bindings_json,
-                        mk_cookies=cj_in,
+                method = method if isinstance(method, str) else "GET"
+                cj = cj if isinstance(cj, str) else None
+                path = path or ""
+                blk = bool(blk)
+                rb, rh = ("", None) if blk else (body, head)
+                cj_in = cj  # pre-fold jar: the memo key replay rows carry
+                if rh is not None:
+                    cj = jar_to_json(
+                        jar_fold_head(jar_from_json(cj), rh, url_full or url)
                     )
-                    out.append(_out_row("memo", mk="mark", **mk_kw))
-                    for r in out[row_start:n_out]:
-                        m = dict(r)
-                        m["kind"] = "memo"
-                        m["mk"] = r["kind"]
-                        m["path_key"] = r["path_key"][len(path):]
-                        m.update(mk_kw)
-                        out.append(m)
-        if timing:
-            _t_add("replay.eval", _time.time() - _t0)
-            _t_add("replay.groups", 1e-9)
-            _t0 = _time.time()
-        f = _frame(out)
-        if timing:
-            _t_add("replay.frame", _time.time() - _t0)
-        return f
+                row_start = len(out)
+                for j, child in enumerate(node_table[pc].child_ids):
+                    _eval_memo(
+                        memo, (child, url_full, bindings_json, method, cj, blk),
+                        node_table[child], node_table, child,
+                        url, url_full, rb, bindings_json, path + _hx(j), out,
+                        head=rh, method=method, cookies_json=cj,
+                    )
+                if emit_memo and not blk:
+                    _emit_memo(
+                        out, row_start, path, memo_states, url,
+                        (pc, url_full, bindings_json, method, cj_in),
+                    )
+            yield _frame(out)
 
     return replay
 

@@ -536,6 +536,41 @@ def test_fetch_once_across_arrow_batches(spark, tmp_path):
     assert eng.results_df().count() == 41
 
 
+def test_replay_across_arrow_batches(spark, corpus, tmp_path):
+    """The batched cache-hit replay keeps a url's body, head and eval memo
+    across Arrow batch boundaries (udfs.py make_replay_fn). With
+    maxRecordsPerBatch=1 every replayed url's body row sits in a different
+    batch from each of its replay rows, so a replay that lost the carried
+    body would extract from an empty page and break parity."""
+    _, pages_dict = corpus
+
+    def fetch_fn(urls):
+        return [
+            (pages_dict.get(u), 200 if u in pages_dict else 404) for u in urls
+        ]
+
+    seeds = webgen.seeds_for(N_PAGES, SEED)
+    program = flagship_program(seeds)
+    oracle = spider(program, SnapshotFetcher(pages_dict))
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1")
+    try:
+        eng = CrawlEngine(
+            spark, None, str(tmp_path / "work"), politeness_k=None,
+            fetch_mode="callable", fetch_fn=fetch_fn,
+        )
+        eng.run(program, max_rounds=50)
+        assert_parity(oracle, eng)
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+    # the batched Python replay really ran
+    replayed = [
+        eng.table.round_metrics(r).get("py_replay_rows") or 0
+        for r in eng.table.committed_rounds()
+    ]
+    assert sum(replayed) > 0, replayed
+
+
 def test_parity_forced_distributed_paths(spark, corpus, tmp_path):
     """broadcast_seen_limit=0 forces every at-scale branch the sandbox's
     small rounds normally skip: the Bloom-prefilter + shuffle anti-join
@@ -635,6 +670,56 @@ def test_empty_replay_skips_store_scan(spark, tmp_path):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "isFinalPlan=true" in plan, plan
     assert "EmptyRelation" in plan, plan
+
+
+def test_empty_replay_prunes_store_scan(spark, tmp_path):
+    """The same backstop for the engine's batched replay shape (crawler.py
+    _replay: slim replay rows unioned with the semi-joined store rows, one
+    url_canon exchange, url-sorted mapInPandas). With an empty probe side
+    AQE turns the broadcast semi-join into an empty relation and drops it
+    from the union, so the final plan holds no store scan at all and the
+    store's body chunks are never decompressed."""
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    store_path = str(tmp_path / "store")
+    spark.range(2000).select(
+        F.concat(F.lit("u"), F.col("id")).alias("url_canon"),
+        F.expr("repeat('x', 500)").alias("body"),
+    ).write.parquet(store_path)
+    store = spark.read.parquet(store_path)
+
+    empty = spark.range(0).select(
+        F.concat(F.lit("u"), F.col("id")).alias("url_canon"),
+        F.lit("pk").alias("path_key"),
+        F.lit(1).alias("_src"),
+    )
+    store_src = store.join(
+        F.broadcast(empty.select("url_canon").distinct()),
+        "url_canon", "left_semi",
+    ).select("url_canon", "body", F.lit(0).alias("_src"))
+
+    def rep(batches):
+        for _ in batches:
+            yield pd.DataFrame({"url_canon": pd.Series(dtype="object"),
+                                "n": pd.Series(dtype="int64")})
+
+    replayed = (
+        empty.unionByName(store_src, allowMissingColumns=True)
+        .repartition(4, "url_canon")
+        .sortWithinPartitions("url_canon", "_src", "path_key")
+        .mapInPandas(rep, "url_canon string, n long")
+    )
+    fresh = spark.range(5).select(
+        F.concat(F.lit("z"), F.col("id")).alias("url_canon"),
+        F.lit(1).cast("long").alias("n"),
+    )
+    out = fresh.unionByName(replayed)
+    assert len(out.collect()) == 5
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan, plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert "FileScan" not in final, plan
 
 
 def test_webgen_uniform_host_dist(monkeypatch):
