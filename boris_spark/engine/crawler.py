@@ -24,10 +24,14 @@ interpreter, /root/reference/boris/interpreter.rkt:54-59 — see SURVEY.md §3):
    (broadcast join against the tiny node table), then non-fetch nodes
    (extract/bind/jump) evaluate in Arrow batches until only new fetch
    requests remain;
-7. sinks + checkpoint: results/seen deltas append as parquet
-   "snapshots" with a per-round JSON manifest carrying per-partition lineage
-   and fetch/extract metrics — the crawl is resumable from any round
-   (the reference's fs-dict persistence, /root/reference/persistent/main.rkt:37-67).
+7. sinks + checkpoint: every sink delta is committed by ADOPTING data
+   files the round's own tasks already wrote (Iceberg add-files
+   fast-append) — the fused stage's workers write the store and seen
+   deltas, the cascade generations the results and the next frontier —
+   plus a per-round JSON manifest carrying per-partition lineage and
+   fetch/extract metrics. A callable-mode round is a route job plus an
+   eval job; the crawl is resumable from any round (the reference's
+   fs-dict persistence, /root/reference/persistent/main.rkt:37-67).
 
 Parquet + manifest stands in for Iceberg snapshots in this sandbox (no
 Iceberg runtime jar is available); the table layout (append-only deltas +
@@ -76,6 +80,8 @@ _REQ_COLS = [
     "pc", "url_canon", "url_full", "url_hash", "host",
     "referer", "method", "payload", "bindings", "path_key", "cookies",
 ]
+# write tasks of the routing job (see _round_fused)
+_ROUTE_PARTS = 4
 
 
 @dataclass
@@ -169,11 +175,6 @@ class CrawlEngine:
     def _append(self, df: DataFrame, sink: str, rnd: int) -> None:
         self.table.write_delta(df, sink, rnd)
 
-    def _drain_commits(self) -> None:
-        pending, self._pending_commits = self._pending_commits, []
-        for f in pending:
-            f.result()  # re-raise any commit failure on the driver thread
-
     def _read_sink(self, sink: str) -> DataFrame | None:
         return self.table.read_sink(sink, self._SINK_SCHEMAS.get(sink))
 
@@ -226,8 +227,10 @@ class CrawlEngine:
         # finish faster, the per-stage driver barrier doesn't), which was
         # most of the control tier's anti-scaling. BORIS_CRAWL_AQE=1
         # re-enables it (A/B lever, or clusters wanting runtime skew
-        # splitting on top of the static salting).
+        # splitting on top of the static salting). Each round also sets the
+        # shuffle width to its own (see _round); both are restored here.
         _aqe_prev = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
+        _shuffle_prev = self.spark.conf.get("spark.sql.shuffle.partitions")
         _keep_aqe = os.environ.get("BORIS_CRAWL_AQE", "0") == "1"
         if not _keep_aqe:
             self.spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -236,6 +239,7 @@ class CrawlEngine:
         finally:
             if not _keep_aqe:
                 self.spark.conf.set("spark.sql.adaptive.enabled", _aqe_prev)
+            self.spark.conf.set("spark.sql.shuffle.partitions", _shuffle_prev)
 
     def _run_inner(
         self,
@@ -246,30 +250,11 @@ class CrawlEngine:
     ) -> CrawlSummary:
         t0 = time.time()
         self._tmp_sink_paths: list[str] = []
-        # Commit pool: durable-sink appends that nothing later in the round
-        # reads (the column-pruned cascade history) and the end-of-round
-        # seen/frontier commits run as CONCURRENT Spark jobs from driver
-        # threads instead of serializing — per-round fixed cost that doesn't
-        # shrink with cores otherwise. Futures drain before the manifest.
-        from concurrent.futures import ThreadPoolExecutor
-
-        self._commit_pool = ThreadPoolExecutor(
-            max_workers=3, thread_name_prefix="boris-commit",
-            # scheduler-pool assignment is thread-local: every job a commit
-            # thread submits lands in the FAIR "commits" pool (session.py
-            # sets spark.scheduler.mode=FAIR) so commit tasks get task
-            # slots immediately instead of queueing behind the round's
-            # eval/write stage under FIFO
-            initializer=lambda: self.spark.sparkContext.setLocalProperty(
-                "spark.scheduler.pool", "commits"
-            ),
-        )
-        self._pending_commits: list = []
         # leftover transients from a killed run are junk (the durable sinks
         # and manifests are the resume state)
         import shutil
 
-        for junk in ("cascade_tmp", "store_inbox"):
+        for junk in ("cascade_tmp", "store_inbox", "seen_inbox"):
             p = self._path(junk)
             if os.path.isdir(p):
                 shutil.rmtree(p, ignore_errors=True)
@@ -292,19 +277,17 @@ class CrawlEngine:
             emit_memo=self._memo_joinable and self.fetch_mode == "callable",
         )
         if self.fetch_mode == "callable":
-            # Worker-direct store write (default): fetched bodies are
-            # parquet'd by the Python workers into the inbox dir and the
-            # directory is ADOPTED as the round's store delta — bodies
-            # never cross Arrow, never enter the JVM writer, hit disk
-            # exactly once. BORIS_JVM_STORE_WRITE=1 restores the
-            # body-through-Arrow path (A/B lever).
-            self._store_inbox = (
-                None if os.environ.get("BORIS_JVM_STORE_WRITE")
-                else self._path("store_inbox")
-            )
+            # Worker-direct sink writes: the Python workers parquet each
+            # fetched url's store row (body) and seen row into these inbox
+            # dirs, which are ADOPTED as the round's store and seen deltas —
+            # bodies never cross Arrow or enter the JVM writer, and neither
+            # sink costs a commit job
+            self._store_inbox = self._path("store_inbox")
+            self._seen_inbox = self._path("seen_inbox")
             self._fused_fn = make_fused_fn(
-                self.node_table, self.fetch_fn, emit_memo=self._memo_joinable,
-                store_dir=self._store_inbox,
+                self.node_table, self.fetch_fn,
+                store_dir=self._store_inbox, seen_dir=self._seen_inbox,
+                n_buckets=self.n_buckets, emit_memo=self._memo_joinable,
             )
 
         # driver-tracked seen-set size (accumulated from the per-round delta
@@ -333,10 +316,14 @@ class CrawlEngine:
                 [(root.node_id, None, None, None, "", None)],
                 APPLY_SCHEMA + ", body string",
             )
-            requests, n_init_results, _ = self._cascade(init, rnd=0)
+            # the round-0 frontier is ADOPTED like every later one: the
+            # init cascade's kind=request files (+ the written seed rows)
+            _, _, gen_paths = self._cascade(init, rnd=0)
+            parts = [os.path.join(gp, "kind=request") for gp in gen_paths]
             if seed_frontier is not None:
                 ns = lambda: F.lit(None).cast("string")  # noqa: E731
-                requests = requests.unionByName(
+                seed_path = self._path("cascade_tmp", "seed_frontier")
+                (
                     seed_frontier.select(
                         F.lit(root.node_id).alias("pc"),
                         "url_canon", "url_full", "url_hash", "host",
@@ -349,37 +336,37 @@ class CrawlEngine:
                         ),
                         ns().alias("cookies"),
                     )
+                    .write.mode("overwrite").parquet(seed_path)
                 )
-            self._checkpoint_frontier(requests, 0)
-            self._drain_commits()
+                parts.append(seed_path)
+            self.table.adopt_parts(parts, "frontier", 0, REQUEST_SCHEMA)
             self._drop_tmp_sinks()
         rnd = start_round
         total_fetched = 0
         total_results = 0
-        try:
-            while rnd < max_rounds:
-                # frontier row count from delta metadata — no Spark job
-                n_req = self.table.delta_rows("frontier", rnd)
-                if n_req == 0:
-                    break
-                # project to the request columns: part-structured deltas
-                # surface their fsrc partition column on read
-                requests = self.table.delta_df(
-                    "frontier", rnd, REQUEST_SCHEMA
-                ).select(*_REQ_COLS)
-                rt0 = time.time()
-                _, fetched, n_results, metrics = self._round(
-                    requests, rnd, n_req
-                )
-                total_fetched += fetched
-                total_results += n_results
-                metrics.update(
-                    round=rnd, requests=n_req, wall_s=round(time.time() - rt0, 3)
-                )
-                self._write_manifest(rnd, metrics)
-                rnd += 1
-        finally:
-            self._commit_pool.shutdown(wait=True)
+        while rnd < max_rounds:
+            # frontier row count from delta metadata — no Spark job
+            n_req = self.table.delta_rows("frontier", rnd)
+            if n_req == 0:
+                break
+            # project to the request columns: part-structured deltas
+            # surface their fsrc partition column on read
+            requests = self.table.delta_df(
+                "frontier", rnd, REQUEST_SCHEMA
+            ).select(*_REQ_COLS)
+            rt0 = time.time()
+            _, fetched, n_results, metrics = self._round(
+                requests, rnd, n_req
+            )
+            total_fetched += fetched
+            total_results += n_results
+            metrics.update(
+                round=rnd, requests=n_req,
+                politeness_window=self._politeness_window,
+                wall_s=round(time.time() - rt0, 3),
+            )
+            self._write_manifest(rnd, metrics)
+            rnd += 1
 
         wall = time.time() - t0
         return CrawlSummary(
@@ -404,7 +391,7 @@ class CrawlEngine:
             return full
         return max(1, min(full, (n_rows + rows_per_part - 1) // rows_per_part))
 
-    def _round(self, requests: DataFrame, rnd: int, n_req: int | None = None):
+    def _round(self, requests: DataFrame, rnd: int, n_req: int):
         import time as _t
         _marks = [("start", _t.time())]
         _mark = lambda label: _marks.append((label, _t.time()))  # noqa: E731
@@ -419,9 +406,13 @@ class CrawlEngine:
         # per stage per round, a per-round fixed cost that GROWS with cores
         # (the round-4 bench flagged exactly this as anti-scaling on
         # crawl_depth_histogram: 23.0s @ 8 cores → 32.5s @ 32). Large
-        # rounds (≥64 rows/core) still get the full width.
+        # rounds (≥64 rows/core) still get the full width. Every implicit
+        # exchange of the round (joins, the politeness window, distinct)
+        # runs at the same width — and, co-partitioned with `requests`,
+        # the url_canon joins need no exchange on that side at all.
         n_part = self._round_parts(n_req)
         self._cur_round_parts = n_part
+        self.spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
         requests = requests.repartition(n_part, "url_canon").persist()
 
         # one fetch candidate per distinct url, priority = lex-min path_key
@@ -465,8 +456,14 @@ class CrawlEngine:
         # (skew-safe). The budget is per-host (broadcast budgets table,
         # north star: "per-host politeness budgets") with politeness_k as
         # the default; phase 1 bounds any hot host to salts × max-budget
-        # survivors before the exact per-host window.
-        if self.politeness_k is not None or self.host_budgets is not None:
+        # survivors before the exact per-host window. Without per-host
+        # budgets the window cannot bind when the round holds ≤ k request
+        # rows (a host's distinct urls ≤ the round's rows ≤ k), so it is
+        # skipped exactly.
+        self._politeness_window = self.host_budgets is not None or (
+            self.politeness_k is not None and n_req > self.politeness_k
+        )
+        if self._politeness_window:
             k = self.politeness_k if self.politeness_k is not None else (1 << 30)
             salted = unseen.withColumn(
                 "salt", F.pmod(F.col("url_hash"), F.lit(self.salt_parts))
@@ -566,7 +563,6 @@ class CrawlEngine:
         self._checkpoint_frontier(frontier_next, rnd + 1)
         _mark("frontier_ckpt")
 
-        self._drain_commits()
         requests.unpersist()
         urls.unpersist()
         fetched.unpersist()
@@ -590,15 +586,15 @@ class CrawlEngine:
     ):
         """Callable-mode round middle. FRESH urls run through the fused
         fetch+extract mapInPandas stage (fetch_fn called exactly once per
-        url per crawl); their bodies come back once on the ``fetched`` rows
-        and persist to the store sink — the crash-resumable page cache.
+        url per crawl), whose workers write the bodies to the store sink —
+        the crash-resumable page cache — and the round's seen delta.
         CACHE-HIT traversals (urls fetched in an earlier round, or
         robots-blocked replays) never reach fetch_fn: they evaluate through
         the batched store replay (``_replay``) — the memoized replay of
         browser-services.rkt:36-40, correct for live/non-deterministic
         fetchers (round 1 re-fetched cache hits, bypassing the politeness
         budget). All routing frames are slim; body bytes flow
-        fetch→Arrow→store once, and per replaying round each body crosses
+        fetch→store once, and per replaying round each body crosses
         one url_canon exchange + one Arrow boundary — never a per-path
         join or a dedup shuffle."""
         decided = selected.select(
@@ -622,8 +618,8 @@ class CrawlEngine:
         # the batched Python replay: memo miss or robots-blocked), or
         # deferred (over budget, back to the frontier) — and the whole
         # tagged frame is written once, hive-partitioned by ``seg``. The
-        # rest of the round (eval job, seen chain, frontier checkpoint)
-        # reads plain columnar scans of its subdir; per-segment row counts
+        # rest of the round (eval job, frontier adoption) reads plain
+        # columnar scans of its subdirs; per-segment row counts
         # come free from the parquet footers, so empty branches are PRUNED
         # DRIVER-SIDE (no count() jobs, no reliance on AQE empty-relation
         # propagation for the body-bearing store scan). Before this, the
@@ -721,9 +717,8 @@ class CrawlEngine:
         # shuffle_partitions × segs tiny files + footers per round — at
         # politeness-bound (many-round, few-rows) tiers this is a per-round
         # fixed cost that doesn't shrink with cores
-        route_parts = int(os.environ.get("BORIS_ROUTE_PARTS", "4"))
         base.withColumn("seg", seg_col).drop("_fresh", "_hit").repartition(
-            route_parts
+            _ROUTE_PARTS
         ).write.partitionBy("seg").mode("overwrite").parquet(routed_path)
         self._tmp_sink_paths.append(routed_path)
         segs = {
@@ -826,99 +821,38 @@ class CrawlEngine:
         )
         _mark("fused_cascade")
 
-        # persist this round's fetched bodies to the store sink (the page
-        # cache future rounds replay from) by ADOPTING the worker-written
-        # inbox (default: bodies parquet'd inside the Python workers, never
-        # crossing Arrow) or, on the A/B fallback path, the kind=fetched
-        # partition of the gen-1 snapshot — either way bodies hit disk
-        # exactly once and are committed by directory rename
-        # (adopt_delta = Iceberg add-files fast-append, tableformat.py)
-        fetched_dir = (
-            self._store_inbox
-            if self._store_inbox is not None
-            else os.path.join(gen_paths[0], "kind=fetched")
-        )
-        if self.table.adopt_delta(fetched_dir, "store", rnd):
-            fetched_rows = self.table.delta_df("store", rnd, STORE_SCHEMA)
-        else:
-            fetched_rows = self._empty(STORE_SCHEMA)
+        # Commit this round's sinks by ADOPTING files its own tasks already
+        # wrote (adopt_delta/adopt_parts = Iceberg add-files fast-append,
+        # tableformat.py) — no commit job re-reads or re-encodes a byte:
+        # - store: the fused stage's workers parquet'd each fetched url's
+        #   body into the store inbox (the page cache replays read);
+        # - memo: the gen-1 snapshot's kind=memo partition (slim rows);
+        # - seen: the workers also wrote each fetched url's seen row (keys,
+        #   status, bucket, DFS-min path over the url's rows this round —
+        #   the pre-politeness `urls` aggregate's pk) into the seen inbox;
+        #   robots-blocked urls are the only seen rows no worker writes,
+        #   so robots crawls append them to the same inbox first (kept one
+        #   flat directory: compact_sink dissolves any sub-level, which
+        #   would then clash with uncompacted rounds on read);
+        # - frontier (rnd+1): this round's DEFERRED rows (the routing job's
+        #   seg=deferred partition) + the cascade's NEW request rows (each
+        #   generation's kind=request partition) — directory renames
+        #   instead of a full frontier rewrite, which in politeness-bound
+        #   regimes (the deferred rows often >80% of the frontier) was the
+        #   biggest per-round fixed cost. The adopted kind=request files
+        #   carry the full cascade schema; frontier readers project to
+        #   REQUEST_SCHEMA.
+        self.table.adopt_delta(self._store_inbox, "store", rnd)
         if self._memo_joinable:
-            # the eval-output cache rides the same snapshot: adopt its
-            # kind=memo partition (slim rows — no bodies by construction)
             self.table.adopt_delta(
                 os.path.join(gen_paths[0], "kind=memo"), "memo", rnd
             )
-        _mark("store_write")
-
-        # the round's seen delta: per-url keys + DFS-min path re-derived
-        # from the parquet-pinned seg=fresh rows (min path over ALL of the
-        # url's request paths this round — identical to the pre-politeness
-        # `urls` aggregate's pk, computed JVM-side; deriving from the
-        # routed parquet instead of `selected` keeps the seen-filter/
-        # politeness lineage out of the commit job's plan, so the commit
-        # does one slim scan + groupBy instead of re-running the routing
-        # tree); the store contributes only status, via a column-pruned
-        # read of its duplicate-free one-row-per-url delta
-        seen_delta = (
-            (_seg("fresh") if segs.get("fresh", 0) else self._empty(_ROUTED_SCHEMA))
-            .groupBy("url_canon")
-            .agg(
-                F.first("url_hash").alias("url_hash"),
-                F.first("host").alias("host"),
-                F.min("path_key").alias("path_first"),
-            )
-            .join(fetched_rows.select("url_canon", "status"), "url_canon")
-            .withColumn(
-                "bucket", F.pmod(F.col("url_hash"), F.lit(self.n_buckets)).cast("int")
-            )
-            .select(
-                "url_hash", "url_canon", "host", "bucket", "status", "path_first"
-            )
-        )
         if blocked is not None:
-            seen_delta = seen_delta.unionByName(
-                blocked.select(
-                    "url_hash", "url_canon", "host", "bucket", "status",
-                    F.col("pk").alias("path_first"),
-                )
-            )
-        # end-of-round commits OVERLAPPED: the seen chain (delta write +
-        # bloom fold readback) and the frontier checkpoint are independent
-        # Spark jobs — run them concurrently from the pool (with the tail
-        # cascade-history commit usually still draining alongside). Serial,
-        # these were 2-6s of per-round fixed cost that never shrank with
-        # cores.
-        _commit_walls: dict[str, float] = {}
-
-        def _timed(label, fn, *a):
-            def run():
-                t0 = time.time()
-                try:
-                    return fn(*a)
-                finally:
-                    _commit_walls[label] = round(time.time() - t0, 2)
-            return run
-
-        def _seen_chain():
-            t0 = time.time()
-            self._append(seen_delta, "seen", rnd)
-            _commit_walls["seen_write"] = round(time.time() - t0, 2)
-            return self._fold_seen_delta(rnd)
-
-        f_seen = self._commit_pool.submit(_timed("seen_chain", _seen_chain))
-        # Next round's frontier = this round's DEFERRED rows (already on
-        # disk: the routing job's seg=deferred partition) + the cascade's
-        # NEW request rows (already on disk: each generation's
-        # kind=request partition). ADOPT those directories as the round-
-        # (rnd+1) frontier delta — directory renames / one add_files
-        # commit, replacing a full frontier rewrite job per round. In
-        # politeness-bound regimes (many small rounds over a large pending
-        # set) that rewrite was the single biggest per-round fixed cost:
-        # the deferred rows — often >80% of the frontier — were parquet-
-        # encoded twice per round (once by the routing write, once by the
-        # checkpoint). The adopted kind=request files carry the full
-        # cascade schema; frontier readers project to REQUEST_SCHEMA.
-        t_adopt = time.time()
+            blocked.select(
+                "url_hash", "url_canon", "host", "bucket", "status",
+                F.col("pk").alias("path_first"),
+            ).write.mode("append").parquet(self._seen_inbox)
+        self.table.adopt_delta(self._seen_inbox, "seen", rnd)
         frontier_parts = []
         if segs.get("deferred", 0):
             frontier_parts.append(os.path.join(routed_path, "seg=deferred"))
@@ -928,10 +862,9 @@ class CrawlEngine:
         self.table.adopt_parts(
             frontier_parts, "frontier", rnd + 1, REQUEST_SCHEMA
         )
-        _commit_walls["frontier_adopt"] = round(time.time() - t_adopt, 2)
-        n_fetched, lineage = f_seen.result()
-        self._drain_commits()
-        _mark("commits_overlapped")
+        _mark("commits")
+        n_fetched, lineage = self._fold_seen_delta(rnd)
+        _mark("seen_fold")
 
         requests.unpersist()
         urls.unpersist()
@@ -947,7 +880,6 @@ class CrawlEngine:
                 b: round(tb - ta, 2)
                 for (a, ta), (b, tb) in zip(_marks, _marks[1:])
             },
-            "commit_walls": _commit_walls,
         }
         return None, n_fetched, n_results, metrics
 
@@ -1139,6 +1071,8 @@ class CrawlEngine:
         """
         n_delta = self.table.delta_rows("seen", rnd)
         self._n_seen = getattr(self, "_n_seen", 0) + n_delta
+        if n_delta == 0:
+            return 0, []  # the round adopted no seen delta
         if n_delta <= self.broadcast_seen_limit:
             delta_pdf = self.table.read_delta_pandas(
                 "seen", rnd,
@@ -1203,13 +1137,12 @@ class CrawlEngine:
         hive-partitioned by ``kind`` (full union schema; apply rows carry
         page bodies). Durable consumers ADOPT their kind= partition by
         directory rename — result rows → ``results`` sink, download rows →
-        ``downloads`` (and the fused round adopts fetched→store,
-        memo→memo) — so every output byte is parquet-encoded exactly once
-        (Iceberg add_files: data files written by the generation's tasks,
-        committed by reference). Request rows get no durable copy: the
-        frontier checkpoints already carry every (url, path) request row.
-        Body-bearing kinds (apply; fetched in JVM-store mode) stay
-        transient and are deleted at the end of the round
+        ``downloads``, memo rows → ``memo`` and request rows → the next
+        frontier delta (both adopted by the caller) — so every output
+        byte is parquet-encoded exactly once (Iceberg add_files: data
+        files written by the generation's tasks, committed by reference).
+        The body-bearing apply kind stays transient and is deleted at the
+        end of the round
         (``_drop_tmp_sinks``), after every consumer has executed.
         Generation row counts come from the parquet kind-column statistics
         driver-side (no Spark jobs)."""
@@ -1242,9 +1175,7 @@ class CrawlEngine:
             key = rnd * 1000 + gen
             path = self._path("cascade_tmp", f"round={key}")
             # hive-partitioned by kind: ONE execution of the Python stage,
-            # and each consumer reads (or renames) exactly its subdir —
-            # kind=fetched (the only body-heavy durable need) is MOVED into
-            # the store sink with os.rename, so page bodies hit disk once
+            # and each consumer reads (or renames) exactly its subdir
             out_raw.write.partitionBy("kind").mode("overwrite").parquet(path)
             self._tmp_sink_paths.append(path)
             gen_paths.append(path)
@@ -1270,15 +1201,16 @@ class CrawlEngine:
                     self.table.adopt_delta(
                         os.path.join(path, f"kind={k}"), sink, key
                     )
+            # explicit schemas: parquet schema inference is a Spark job
             if kinds.get("request", 0):
                 requests_acc = requests_acc.unionByName(
-                    self.spark.read.parquet(
+                    self.spark.read.schema(REQUEST_SCHEMA).parquet(
                         os.path.join(path, "kind=request")
-                    ).select(*_REQ_COLS)
+                    )
                 )
             if int(kinds.get("apply", 0)) == 0:
                 break
-            apply_df = self.spark.read.parquet(
+            apply_df = self.spark.read.schema(MEMO_SINK_SCHEMA).parquet(
                 os.path.join(path, "kind=apply")
             ).select(
                 "pc", "cur_url", "cur_full", "bindings", "path_key", "body",
@@ -1335,13 +1267,12 @@ class CrawlEngine:
         # outputs (adopt_parts below) — every delta must share the layout.
         # Width: the next round re-partitions adaptively on read (see
         # _round), so the old propagate-narrow-partitioning concern is
-        # handled there; here the width only sets write-task + file count.
-        # Scale with the current round (next frontier ≈ branching × it),
-        # full width when unknown (round-0 init).
-        w = self.spark.sparkContext.defaultParallelism
-        cur = getattr(self, "_cur_round_parts", None)
-        if cur is not None:
-            w = min(w, max(1, 2 * cur))
+        # handled there; here the width only sets write-task + file count,
+        # scaled with the current round (next frontier ≈ branching × it).
+        w = min(
+            self.spark.sparkContext.defaultParallelism,
+            max(1, 2 * self._cur_round_parts),
+        )
         self.table.write_delta(
             df.repartition(w),
             "frontier", rnd, part="full",
@@ -1425,7 +1356,8 @@ class CrawlEngine:
         (url, path) pair passes through a frontier round), so no separate
         discoveries sink is written."""
         disc = self._read_sink("frontier")
-        assert disc is not None
+        if disc is None:  # the program never navigated
+            return self._empty("url_canon string, first_path string")
         return (
             disc.groupBy("url_canon")
             .agg(F.min("path_key").alias("first_path"))

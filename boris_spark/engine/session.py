@@ -68,14 +68,6 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        # FAIR job scheduling: the crawl round's commit-pool jobs (seen
-        # delta, frontier checkpoint) run from driver threads concurrently
-        # with the round's heavy eval/write job. Under FIFO their tasks
-        # queue behind the big stage's long task waves (profiled: 1-3 s
-        # commits stretched to 15-35 s of slot starvation); FAIR gives the
-        # "commits" pool a share of task slots immediately. Single-job
-        # workloads (the query suite) are unaffected — one pool, one job.
-        .config("spark.scheduler.mode", "FAIR")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Dio.netty.tryReflectionSetAccessible=true")
     )

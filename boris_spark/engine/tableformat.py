@@ -148,11 +148,11 @@ class ParquetManifestFormat(TableFormat):
         import shutil
 
         dst = self._path(sink, f"round={rnd}")
-        os.makedirs(self._path(sink), exist_ok=True)
         if os.path.isdir(dst):
             shutil.rmtree(dst)  # re-run of an interrupted round
         if not os.path.isdir(src_dir):
             return False
+        os.makedirs(self._path(sink), exist_ok=True)
         os.rename(src_dir, dst)
         return True
 

@@ -180,13 +180,27 @@ def _eval_node(
 
 
 
-def _write_store_batch(store_dir: str, rows: list[tuple], batch_idx: int) -> None:
-    """Worker-side store write: one parquet file per (partition, batch),
-    STORE_SCHEMA columns, snappy. tmp-name + ``os.replace`` makes task
-    retries atomic; names are deterministic in (partitionId, batch index)
-    — a re-run attempt overwrites with byte-identical content, so
+# worker-written sink files: (column, arrow type) in the sink schema's
+# order (crawler.py STORE_SCHEMA / SEEN_SCHEMA)
+_STORE_FILE_COLS = (
+    ("url_canon", "string"), ("body", "string"), ("status", "int32"),
+    ("head", "string"),
+)
+_SEEN_FILE_COLS = (
+    ("url_hash", "int64"), ("url_canon", "string"), ("host", "string"),
+    ("bucket", "int32"), ("status", "int32"), ("path_first", "string"),
+)
+
+
+def _write_batch(
+    out_dir: str, cols: tuple, rows: list[tuple], batch_idx: int
+) -> None:
+    """Worker-side sink write: one parquet file per (partition, batch),
+    *cols* columns, snappy. tmp-name + ``os.replace`` makes task retries
+    atomic; names are deterministic in (partitionId, batch index) — a
+    re-run attempt overwrites with byte-identical content, so
     last-writer-wins is consistent. The engine adopts the directory as the
-    round's store delta without rewriting a byte (Iceberg add_files)."""
+    round's sink delta without rewriting a byte (Iceberg add_files)."""
     import os
 
     import pyarrow as pa
@@ -195,17 +209,15 @@ def _write_store_batch(store_dir: str, rows: list[tuple], batch_idx: int) -> Non
 
     tc = TaskContext.get()
     pid = tc.partitionId() if tc is not None else 0
-    os.makedirs(store_dir, exist_ok=True)
+    os.makedirs(out_dir, exist_ok=True)
     name = f"part-{pid:05d}-{batch_idx:04d}.parquet"
-    tmp = os.path.join(store_dir, f".{name}.tmp-{os.getpid()}")
+    tmp = os.path.join(out_dir, f".{name}.tmp-{os.getpid()}")
     tbl = pa.table({
-        "url_canon": pa.array([r[0] for r in rows], pa.string()),
-        "body": pa.array([r[1] for r in rows], pa.string()),
-        "status": pa.array([r[2] for r in rows], pa.int32()),
-        "head": pa.array([r[3] for r in rows], pa.string()),
+        c: pa.array([r[i] for r in rows], pa.type_for_alias(t))
+        for i, (c, t) in enumerate(cols)
     })
     pq.write_table(tbl, tmp, compression="snappy")
-    os.replace(tmp, os.path.join(store_dir, name))
+    os.replace(tmp, os.path.join(out_dir, name))
 
 
 _INT_COLS = ("pc", "url_hash", "status", "mk_pc")
@@ -302,8 +314,10 @@ def _emit_memo(
 def make_fused_fn(
     node_table: dict[int, NodeSpec],
     fetch_fn,
+    store_dir: str,
+    seen_dir: str,
+    n_buckets: int,
     emit_memo: bool = False,
-    store_dir: str | None = None,
 ):
     """Fused fetch+extract: ONE mapInPandas stage per crawl round.
 
@@ -317,26 +331,29 @@ def make_fused_fn(
     /root/reference/boris/interpreter/services.rkt:14-15) — a deterministic
     closed-form page function in the bench, a live HTTP batch fetcher at
     deploy. Page bodies are materialized INSIDE the Python worker and
-    evaluated there (fan-out to the navigate node's children); each body
-    crosses the Arrow boundary exactly once, on the ``kind='fetched'`` row
-    that the crawler persists to the store sink (the crash-resumable page
-    cache that also feeds cache-hit replays), and bodies never enter a
-    shuffle or the block cache.
+    evaluated there (fan-out to the navigate node's children); bodies never
+    cross the Arrow boundary, enter a shuffle or the block cache.
 
-    Emits one ``kind='fetched'`` row per distinct url per batch (body +
-    status + head, min batch path in ``path_key``); the JVM aggregates
-    batches into the round's seen delta + store delta.
+    Rows arrive url-partitioned and url-sorted, so a url's rows are
+    consecutive: the url is complete once the next url starts (the
+    partition's last url carries across batches, like the fetch memo).
+    Per url, the worker keeps exactly one row for each of two sinks and
+    writes them per batch as parquet via pyarrow (``_write_batch`` —
+    tmp-name + ``os.replace``, so task retries are atomic and
+    deterministic):
 
-    With *store_dir* set (the default engine path), page bodies NEVER
-    cross the Arrow boundary at all: each worker writes its own store
-    parquet files (url_canon, body, status, head) straight into
-    *store_dir* via pyarrow — tmp-name + ``os.replace`` so task retries
-    are atomic and deterministic — and the ``fetched`` rows it emits are
-    SLIM (status + keys, no body). The crawler adopts the directory as the
-    round's store delta (``TableFormat.adopt_delta`` — Iceberg add_files:
-    data files written by tasks, committed by reference). This is the
-    10^10-scale shape: ~60 KB × millions of bodies per round would
-    otherwise pay Arrow encode + JVM decode + JVM parquet re-encode on a
+    - *store_dir*: (url_canon, body, status, head) — the crash-resumable
+      page cache that also feeds cache-hit replays;
+    - *seen_dir*: (url_hash, url_canon, host, bucket, status, path_first)
+      — the round's seen delta, ``bucket = url_hash % n_buckets`` (Python
+      ``%`` equals ``pmod`` for a positive modulus) and ``path_first`` the
+      min ``path_key`` over the url's rows.
+
+    The crawler adopts both directories as the round's deltas
+    (``TableFormat.adopt_delta`` — Iceberg add_files: data files written
+    by tasks, committed by reference), so neither sink costs a Spark job.
+    At 10^10 scale ~60 KB × millions of bodies per round would otherwise
+    pay Arrow encode + JVM decode + JVM parquet re-encode on a
     memory-bandwidth-bound path that profiling showed does not scale with
     cores on one box."""
 
@@ -369,9 +386,13 @@ def make_fused_fn(
         # crawl" true across Arrow batch boundaries in O(1) memory (a url
         # spanning 3+ batches chains through, it is last in each).
         carry: dict[str, tuple] = {}
+        # the seen row of the url in progress: [url_hash, url, host,
+        # bucket, status, path_first], final once the next url starts
+        seen_row = None
         for batch_idx, pdf in enumerate(batches):
             out: list[dict] = []
             store_rows: list[tuple] = []
+            seen_rows: list[tuple] = []
             cookies_col = (
                 pdf["cookies"] if "cookies" in pdf.columns else [None] * len(pdf)
             )
@@ -400,7 +421,6 @@ def make_fused_fn(
                 resps = fetch_fn(need) if need else []
             fetched = dict(zip(need, resps))
             fetched.update(carry)
-            emitted: dict[str, int] = {}
             for pc, url, url_full, url_hash, host, bindings_json, path, method, cj in zip(
                 pdf["pc"], pdf["url_canon"], pdf["url_full"], pdf["url_hash"],
                 pdf["host"], pdf["bindings"], pdf["path_key"], pdf["method"],
@@ -412,33 +432,23 @@ def make_fused_fn(
                 if body is None:
                     body = ""
                 path = path or ""
-                i = emitted.get(url)
-                if i is None and url not in carry:
-                    # exactly ONE fetched row per url per crawl — a url
-                    # straddling into later batches is in `carry` and was
-                    # already emitted, so the store sink is duplicate-free
-                    # by construction (its path_key is informational; the
-                    # seen delta's path_first is computed JVM-side from the
-                    # round's request frame)
-                    emitted[url] = len(out)
+                if seen_row is None or seen_row[1] != url:
+                    # the url's first row (a url straddling into this batch
+                    # continues seen_row): exactly ONE store row and ONE
+                    # seen row per url per crawl, so both sinks are
+                    # duplicate-free by construction
+                    if seen_row is not None:
+                        seen_rows.append(tuple(seen_row))
                     head_json = (
                         json.dumps(list(head)) if head is not None else None
                     )
-                    if store_dir is not None:
-                        # body goes straight to the worker-written store
-                        # file; the emitted row stays SLIM (keys + status)
-                        store_rows.append((url, body, int(status), head_json))
-                        row_body = None
-                    else:
-                        row_body = body
-                    out.append(_out_row(
-                        "fetched", url_canon=url, url_hash=url_hash,
-                        host=host, path_key=path, status=int(status),
-                        body=row_body,
-                        head=head_json,
-                    ))
-                elif i is not None and path < out[i]["path_key"]:
-                    out[i]["path_key"] = path
+                    store_rows.append((url, body, int(status), head_json))
+                    seen_row = [
+                        int(url_hash), url, host, int(url_hash) % n_buckets,
+                        int(status), path,
+                    ]
+                elif path < seen_row[5]:
+                    seen_row[5] = path
                 bindings_json = (
                     bindings_json if isinstance(bindings_json, str) else None
                 )
@@ -475,9 +485,16 @@ def make_fused_fn(
                 carry = (
                     {last_url: fetched[last_url]} if last_url in fetched else {}
                 )
-            if store_dir is not None and store_rows:
-                _write_store_batch(store_dir, store_rows, batch_idx)
+            if store_rows:
+                _write_batch(store_dir, _STORE_FILE_COLS, store_rows, batch_idx)
+            if seen_rows:
+                _write_batch(seen_dir, _SEEN_FILE_COLS, seen_rows, batch_idx)
             yield _frame(out)
+        if seen_row is not None:
+            # the partition's last url is complete once its input ends
+            _write_batch(
+                seen_dir, _SEEN_FILE_COLS, [tuple(seen_row)], batch_idx + 1
+            )
 
     return fused
 

@@ -746,3 +746,127 @@ def test_webgen_uniform_host_dist(monkeypatch):
     links_z = [webgen.page_of_url(u, n, 42) for u in webgen.out_links(1234, n, 42)]
     assert links_u == links_z
     assert webgen.page_html(1234, n, 42) != html_u  # host name differs
+
+
+def _page_fetch_fn(pages_dict):
+    def fetch_fn(urls):
+        return [
+            (pages_dict.get(u), 200 if u in pages_dict else 404) for u in urls
+        ]
+
+    return fetch_fn
+
+
+def test_politeness_window_recorded_only_when_it_can_bind(spark, corpus, tmp_path):
+    """The round manifest records whether the two-phase politeness window
+    ran. Without per-host budgets it runs only when the round holds more
+    request rows than the budget: never at a budget no round reaches, and
+    on every larger round at k=3. Oracle parity holds either way."""
+    seeds = webgen.seeds_for(N_PAGES, SEED)
+    for k, name in ((100_000, "loose"), (3, "tight")):
+        oracle, eng, _ = run_both(
+            spark, corpus, flagship_program(seeds), tmp_path / name,
+            politeness_k=k,
+        )
+        assert_parity(oracle, eng)
+        windows = [
+            (m["requests"] > k, m["politeness_window"])
+            for m in map(eng.table.round_metrics, eng.table.committed_rounds())
+        ]
+        assert all(binding == ran for binding, ran in windows), windows
+        assert any(ran for _, ran in windows) == (k == 3), windows
+
+
+def test_worker_seen_delta_matches_jvm_aggregate(spark, corpus, tmp_path):
+    """The fused stage's workers write each fetched url's seen row. With
+    maxRecordsPerBatch=1 every url's rows straddle Arrow batches, and each
+    round's seen delta must still equal the JVM aggregate it replaces: a
+    groupBy over frontier delta r restricted to the urls fetched in r —
+    min path_key, pmod(url_hash, n_buckets), and the store delta's
+    status."""
+    from pyspark.sql import functions as F
+
+    from boris_spark.engine.crawler import (
+        REQUEST_SCHEMA, SEEN_SCHEMA, STORE_SCHEMA,
+    )
+
+    _, pages_dict = corpus
+    program = flagship_program(webgen.seeds_for(N_PAGES, SEED))
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1")
+    try:
+        eng = CrawlEngine(
+            spark, None, str(tmp_path / "work"), politeness_k=None,
+            n_buckets=7, fetch_mode="callable",
+            fetch_fn=_page_fetch_fn(pages_dict),
+        )
+        eng.run(program, max_rounds=50)
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+    cols = ["url_hash", "url_canon", "host", "bucket", "status", "path_first"]
+    n_checked = 0
+    for r in eng.table.committed_rounds():
+        got = []
+        if eng.table.delta_rows("seen", r):
+            got = eng.table.delta_df("seen", r, SEEN_SCHEMA).select(*cols).collect()
+        want = []
+        if eng.table.delta_rows("store", r):
+            store = eng.table.delta_df("store", r, STORE_SCHEMA)
+            want = (
+                eng.table.delta_df("frontier", r, REQUEST_SCHEMA)
+                .join(store.select("url_canon", "status"), "url_canon")
+                .groupBy("url_canon")
+                .agg(
+                    F.first("url_hash").alias("url_hash"),
+                    F.first("host").alias("host"),
+                    F.first("status").alias("status"),
+                    F.min("path_key").alias("path_first"),
+                )
+                .withColumn("bucket", F.pmod("url_hash", F.lit(7)).cast("int"))
+                .select(*cols).collect()
+            )
+        assert len(got) == len({row["url_canon"] for row in got})
+        assert sorted(map(tuple, got)) == sorted(map(tuple, want)), r
+        n_checked += len(want)
+    assert n_checked == eng.seen_df().count() > 20
+
+
+def test_resume_sweeps_stale_inboxes(spark, corpus, tmp_path):
+    """A round killed after its workers wrote inbox files leaves them
+    behind. Resuming must discard them (the durable sinks and manifests
+    are the resume state): a stale seen row for an already-seen url and a
+    stale store body would otherwise be adopted into the next round."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    _, pages_dict = corpus
+    program = flagship_program(webgen.seeds_for(N_PAGES, SEED))
+    oracle = spider(program, SnapshotFetcher(pages_dict))
+    work = tmp_path / "work"
+    mk = lambda: CrawlEngine(  # noqa: E731
+        spark, None, str(work), politeness_k=4, fetch_mode="callable",
+        fetch_fn=_page_fetch_fn(pages_dict),
+    )
+    mk().run(program, max_rounds=1)
+    url, url_h, host = (
+        mk().seen_df().select("url_canon", "url_hash", "host").first()
+    )
+    for inbox, tbl in (
+        ("seen_inbox", pa.table({
+            "url_hash": pa.array([url_h], pa.int64()), "url_canon": [url],
+            "host": [host], "bucket": pa.array([0], pa.int32()),
+            "status": pa.array([500], pa.int32()), "path_first": ["0"],
+        })),
+        ("store_inbox", pa.table({
+            "url_canon": [url], "body": ["<p>stale</p>"],
+            "status": pa.array([500], pa.int32()), "head": [None],
+        })),
+    ):
+        (work / inbox).mkdir()
+        pq.write_table(tbl, str(work / inbox / "part-99999-0000.parquet"))
+    eng = mk()
+    eng.run(program, max_rounds=50, resume=True)
+    assert_parity(oracle, eng)
+    seen = eng.seen_df()
+    assert seen.count() == seen.select("url_canon").distinct().count()
+    assert seen.where("status = 500").count() == 0
