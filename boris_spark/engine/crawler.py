@@ -20,14 +20,17 @@ interpreter, /root/reference/boris/interpreter.rkt:54-59 — see SURVEY.md §3):
    analogue of request->response, /root/reference/hypertext-browser/http.rkt:124-136);
    over-budget URLs defer to the next round — ordering parity is unaffected
    because results order is path_key order, which is budget-invariant;
-6. fan-out + apply cascade: fetched states fan to child program nodes
-   (broadcast join against the tiny node table), then non-fetch nodes
-   (extract/bind/jump) evaluate in Arrow batches until only new fetch
-   requests remain;
+6. evaluate in place: each fetched (or replayed) state fans to the
+   navigate node's children, and the Python function that holds the page
+   evaluates every non-fetch node (extract/bind/jump) on it to fixpoint
+   (``udfs.eval_to_fixpoint``, interpreter.rkt:54-59) — only new fetch
+   requests, results, downloads and memo rows leave the worker, in ONE
+   output write per round (the root's own evaluation runs on the driver,
+   before round 0, with no Spark job);
 7. sinks + checkpoint: every sink delta is committed by ADOPTING data
    files the round's own tasks already wrote (Iceberg add-files
    fast-append) — the fused stage's workers write the store and seen
-   deltas, the cascade generations the results and the next frontier —
+   deltas, the round's output write the results and the next frontier —
    plus a per-round JSON manifest carrying per-partition lineage and
    fetch/extract metrics. A callable-mode round is a route job plus an
    eval job; the crawl is resumable from any round (the reference's
@@ -52,10 +55,10 @@ from pyspark.sql import functions as F
 from ..oracle import program as P
 from .bloom import BloomShardStore
 from .compiler import NodeSpec, compile_program
-from .tableformat import ParquetManifestFormat, TableFormat
+from .tableformat import ParquetManifestFormat, TableFormat, write_json_atomic
 from .udfs import (
-    CASCADE_SCHEMA, MEMO_JOINABLE_KINDS, make_cascade_fn, make_fused_fn,
-    make_replay_fn,
+    CASCADE_SCHEMA, MEMO_JOINABLE_KINDS, eval_to_fixpoint, make_fused_fn,
+    make_replay_fn, write_by_kind,
 )
 
 REQUEST_SCHEMA = (
@@ -63,7 +66,6 @@ REQUEST_SCHEMA = (
     "referer string, method string, payload string, bindings string, path_key string, "
     "cookies string"
 )
-APPLY_SCHEMA = "pc long, cur_url string, cur_full string, bindings string, path_key string"
 
 # durable-sink schemas, passed to the TableFormat reads so no round ever
 # pays a parquet schema-inference job
@@ -72,8 +74,8 @@ SEEN_SCHEMA = (
     "path_first string"
 )
 STORE_SCHEMA = "url_canon string, body string, status int, head string"
-# results/downloads/memo sinks = kind= partitions adopted out of generation
-# snapshots by rename: every CASCADE column except the partition column
+# results/downloads/memo sinks = kind= partitions adopted out of the round's
+# output write by rename: every CASCADE column except the partition column
 MEMO_SINK_SCHEMA = CASCADE_SCHEMA.split(", ", 1)[1]
 
 _REQ_COLS = [
@@ -114,7 +116,7 @@ class CrawlEngine:
     ):
         self.spark = spark
         self.workdir = workdir
-        # the Iceberg seam: all durable sinks (frontier/seen/store/cascade)
+        # the Iceberg seam: all durable sinks (frontier/seen/store/results)
         # and round commits go through this interface (tableformat.py);
         # parquet+manifests by default, IcebergFormat on a real cluster
         self.table = table_format or ParquetManifestFormat(spark, workdir)
@@ -163,8 +165,8 @@ class CrawlEngine:
     _SINK_SCHEMAS = {
         "seen": SEEN_SCHEMA,
         "store": STORE_SCHEMA,
-        # results/downloads = kind= partitions adopted out of generation
-        # snapshots (same file schema as the memo sink: every CASCADE
+        # results/downloads = kind= partitions adopted out of the round's
+        # output write (same file schema as the memo sink: every CASCADE
         # column except the partition column itself)
         "results": MEMO_SINK_SCHEMA,
         "downloads": MEMO_SINK_SCHEMA,
@@ -183,7 +185,7 @@ class CrawlEngine:
 
     @staticmethod
     def _pq_rows(path: str) -> int:
-        """Row count from parquet footers (transient cascade dirs) — no
+        """Row count from parquet footers (transient round outputs) — no
         Spark job."""
         import pyarrow.parquet as pq
 
@@ -225,20 +227,15 @@ class CrawlEngine:
         # pages, local[32]): 113.9 s with AQE on vs 81.6 s off, identical
         # outputs — and the sync latency GROWS with core count (task waves
         # finish faster, the per-stage driver barrier doesn't), which was
-        # most of the control tier's anti-scaling. BORIS_CRAWL_AQE=1
-        # re-enables it (A/B lever, or clusters wanting runtime skew
-        # splitting on top of the static salting). Each round also sets the
+        # most of the control tier's anti-scaling. Each round also sets the
         # shuffle width to its own (see _round); both are restored here.
         _aqe_prev = self.spark.conf.get("spark.sql.adaptive.enabled", "true")
         _shuffle_prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        _keep_aqe = os.environ.get("BORIS_CRAWL_AQE", "0") == "1"
-        if not _keep_aqe:
-            self.spark.conf.set("spark.sql.adaptive.enabled", "false")
+        self.spark.conf.set("spark.sql.adaptive.enabled", "false")
         try:
             return self._run_inner(root, max_rounds, resume, seed_frontier)
         finally:
-            if not _keep_aqe:
-                self.spark.conf.set("spark.sql.adaptive.enabled", _aqe_prev)
+            self.spark.conf.set("spark.sql.adaptive.enabled", _aqe_prev)
             self.spark.conf.set("spark.sql.shuffle.partitions", _shuffle_prev)
 
     def _run_inner(
@@ -259,8 +256,6 @@ class CrawlEngine:
             if os.path.isdir(p):
                 shutil.rmtree(p, ignore_errors=True)
         self.node_table = compile_program(root)
-        self._cascade_fn = make_cascade_fn(self.node_table)
-        self._fanout_fn = make_cascade_fn(self.node_table, fanout=True)
         # eval-output-cache replays (JVM join instead of Python re-eval)
         # are exact only for straight navigate/extract programs — see
         # MEMO_JOINABLE_KINDS
@@ -298,6 +293,16 @@ class CrawlEngine:
         start_round = 0
         if resume:
             start_round = self._resume_round()
+            # a round killed after adopting deltas but before its manifest
+            # committed: roll them back, or the rerun would take its own
+            # stale seen rows as "already seen" and never record them.
+            # Round r writes seen/store/memo delta r and frontier/results/
+            # downloads delta r+1
+            for sink, first in (
+                ("seen", 0), ("store", 0), ("memo", 0),
+                ("frontier", 1), ("results", 1), ("downloads", 1),
+            ):
+                self.table.rollback(sink, start_round + first)
             self._n_seen = self.table.sink_rows("seen")
             if self.bloom is not None and start_round > 0:
                 # Bloom shards are in-memory state: rebuild from the seen
@@ -312,14 +317,19 @@ class CrawlEngine:
                 if seen is not None:
                     self._fold_seen_frame(seen.select("bucket", "url_hash"))
         if start_round == 0:
-            init = self.spark.createDataFrame(
-                [(root.node_id, None, None, None, "", None)],
-                APPLY_SCHEMA + ", body string",
+            # the root evaluates on the driver (no page yet: empty body, no
+            # url), written per kind with pyarrow — no Spark job — and its
+            # outputs are adopted like a round's: results/downloads as
+            # delta 0, kind=request (+ the written seed rows) as frontier 0
+            out: list[dict] = []
+            eval_to_fixpoint(
+                self.node_table, root.node_id, None, None, "", None, out
             )
-            # the round-0 frontier is ADOPTED like every later one: the
-            # init cascade's kind=request files (+ the written seed rows)
-            _, _, gen_paths = self._cascade(init, rnd=0)
-            parts = [os.path.join(gp, "kind=request") for gp in gen_paths]
+            init_path = self._path("cascade_tmp", "round=0")
+            write_by_kind(init_path, out)
+            self._tmp_sink_paths.append(init_path)
+            self._adopt_outputs(init_path, 0)
+            parts = [os.path.join(init_path, "kind=request")]
             if seed_frontier is not None:
                 ns = lambda: F.lit(None).cast("string")  # noqa: E731
                 seed_path = self._path("cascade_tmp", "seed_frontier")
@@ -552,11 +562,16 @@ class CrawlEngine:
             ok = ok.withColumn("_blk", F.lit(False))
         out1 = self._replay(ok, self._cur_round_parts)
 
-        # results-sink keys: (rnd+1)*1000+gen — the pre-round init cascade
-        # owns the 0..999 key space
+        # results/downloads delta rnd+1: the root's driver-side evaluation
+        # owns delta 0
         _mark("pre_cascade")
-        new_requests, n_results, _ = self._cascade(None, rnd + 1, first_out=out1)
+        n_results, out_path = self._cascade(out1, rnd + 1)
         _mark("cascade")
+        req_dir = os.path.join(out_path, "kind=request")
+        new_requests = (
+            self.spark.read.schema(REQUEST_SCHEMA).parquet(req_dir)
+            if os.path.isdir(req_dir) else self._empty(REQUEST_SCHEMA)
+        )
         frontier_next = new_requests.unionByName(
             deferred.select(*_REQ_COLS)
         )
@@ -787,7 +802,6 @@ class CrawlEngine:
                     memo_f["mk"].alias("kind"),
                     memo_f["pc"].alias("pc"),
                     nl("string").alias("cur_url"),
-                    nl("string").alias("cur_full"),
                     memo_f["bindings"].alias("bindings"),
                     F.concat(jr["path_key"], memo_f["path_key"]).alias("path_key"),
                     memo_f["url_canon"].alias("url_canon"),
@@ -799,9 +813,6 @@ class CrawlEngine:
                     memo_f["payload"].alias("payload"),
                     memo_f["value"].alias("value"),
                     memo_f["vkind"].alias("vkind"),
-                    nl("string").alias("body"),
-                    memo_f["status"].alias("status"),
-                    nl("string").alias("head"),
                     memo_f["cookies"].alias("cookies"),
                     nl("string").alias("mk"),
                     nl("long").alias("mk_pc"),
@@ -814,11 +825,8 @@ class CrawlEngine:
         first_out = outs[0] if outs else self._empty(CASCADE_SCHEMA)
         for o in outs[1:]:
             first_out = first_out.unionByName(o)
-        # the cascade's kind=request partitions are ADOPTED into the next
-        # frontier delta below — the returned lazy union is not used here
-        _, n_results, gen_paths = self._cascade(
-            None, rnd + 1, first_out=first_out
-        )
+        # the output's kind=request/kind=memo partitions are ADOPTED below
+        n_results, out_path = self._cascade(first_out, rnd + 1)
         _mark("fused_cascade")
 
         # Commit this round's sinks by ADOPTING files its own tasks already
@@ -826,7 +834,7 @@ class CrawlEngine:
         # tableformat.py) — no commit job re-reads or re-encodes a byte:
         # - store: the fused stage's workers parquet'd each fetched url's
         #   body into the store inbox (the page cache replays read);
-        # - memo: the gen-1 snapshot's kind=memo partition (slim rows);
+        # - memo: the round output's kind=memo partition (slim rows);
         # - seen: the workers also wrote each fetched url's seen row (keys,
         #   status, bucket, DFS-min path over the url's rows this round —
         #   the pre-politeness `urls` aggregate's pk) into the seen inbox;
@@ -835,17 +843,17 @@ class CrawlEngine:
         #   flat directory: compact_sink dissolves any sub-level, which
         #   would then clash with uncompacted rounds on read);
         # - frontier (rnd+1): this round's DEFERRED rows (the routing job's
-        #   seg=deferred partition) + the cascade's NEW request rows (each
-        #   generation's kind=request partition) — directory renames
+        #   seg=deferred partition) + its NEW request rows (the round
+        #   output's kind=request partition) — directory renames
         #   instead of a full frontier rewrite, which in politeness-bound
         #   regimes (the deferred rows often >80% of the frontier) was the
         #   biggest per-round fixed cost. The adopted kind=request files
-        #   carry the full cascade schema; frontier readers project to
+        #   carry the full output schema; frontier readers project to
         #   REQUEST_SCHEMA.
         self.table.adopt_delta(self._store_inbox, "store", rnd)
         if self._memo_joinable:
             self.table.adopt_delta(
-                os.path.join(gen_paths[0], "kind=memo"), "memo", rnd
+                os.path.join(out_path, "kind=memo"), "memo", rnd
             )
         if blocked is not None:
             blocked.select(
@@ -856,9 +864,7 @@ class CrawlEngine:
         frontier_parts = []
         if segs.get("deferred", 0):
             frontier_parts.append(os.path.join(routed_path, "seg=deferred"))
-        frontier_parts += [
-            os.path.join(gp, "kind=request") for gp in gen_paths
-        ]
+        frontier_parts.append(os.path.join(out_path, "kind=request"))
         self.table.adopt_parts(
             frontier_parts, "frontier", rnd + 1, REQUEST_SCHEMA
         )
@@ -888,11 +894,11 @@ class CrawlEngine:
         (missing page → 404, empty body). HTTP mode fetches in mapInPandas
         batches (the distributed request->response,
         /root/reference/hypertext-browser/http.rkt:124-136) and persists
-        bodies to the store sink for the cascade's body joins."""
+        bodies to the store sink, which the batched replay reads."""
         if self.fetch_mode == "snapshot":
             # status probe against page KEYS only — bodies stay out of the
-            # persisted fetch frame and are joined in later, directly into
-            # the cascade's Arrow batches
+            # persisted fetch frame and reach Python once, through the
+            # batched replay (_replay)
             page_keys = self.pages.select(
                 "url_canon", F.lit(True).alias("_hit")
             )
@@ -921,8 +927,8 @@ class CrawlEngine:
         self._append(
             fetched.select("url_canon", "body", "status", "head"), "store", rnd
         )
-        # slim return: bodies live in the store sink (= the body source for
-        # the cascade's attach join); only keys + status flow onward
+        # slim return: bodies live in the store sink (= the replay's body
+        # source); only keys + status flow onward
         return self.table.delta_df("store", rnd).select(
             "url_canon", "status"
         ).join(
@@ -1125,98 +1131,36 @@ class CrawlEngine:
         ]
         return sum(r["fetched"] for r in rows), lineage
 
-    def _cascade(
-        self,
-        apply_df: DataFrame | None,
-        rnd: int,
-        fanout: bool = False,
-        first_out: DataFrame | None = None,
-    ):
-        """Evaluate non-fetch generations to fixpoint. Each generation is
-        materialized ONCE, into the TRANSIENT sink ``cascade_tmp``,
-        hive-partitioned by ``kind`` (full union schema; apply rows carry
-        page bodies). Durable consumers ADOPT their kind= partition by
-        directory rename — result rows → ``results`` sink, download rows →
-        ``downloads``, memo rows → ``memo`` and request rows → the next
-        frontier delta (both adopted by the caller) — so every output
-        byte is parquet-encoded exactly once (Iceberg add_files: data
-        files written by the generation's tasks, committed by reference).
-        The body-bearing apply kind stays transient and is deleted at the
-        end of the round
-        (``_drop_tmp_sinks``), after every consumer has executed.
-        Generation row counts come from the parquet kind-column statistics
-        driver-side (no Spark jobs)."""
-        requests_acc = self._empty(REQUEST_SCHEMA)
-        n_results = 0
-        gen = 0
-        gen_paths: list[str] = []
-        while True:
-            gen += 1
-            if gen > 200:
-                raise RuntimeError("cascade depth exceeded (fetch-free recur loop?)")
-            if first_out is not None and gen == 1:
-                out_raw = first_out
-            else:
-                # bodies were attached once at fan-out and are carried
-                # forward by the cascade itself — no per-generation join;
-                # url-sorted partitions make the eval memo O(1)
-                cols = ["pc", "cur_url", "cur_full",
-                        F.coalesce("body", F.lit("")).alias("body"),
-                        "bindings", "path_key"]
-                for opt in ("head", "method", "cookies"):
-                    if opt in apply_df.columns:
-                        cols.append(opt)
-                out_raw = apply_df.select(*cols).sortWithinPartitions(
-                    "cur_url", "pc", "bindings"
-                ).mapInPandas(
-                    self._fanout_fn if (fanout and gen == 1) else self._cascade_fn,
-                    CASCADE_SCHEMA,
-                )
-            key = rnd * 1000 + gen
-            path = self._path("cascade_tmp", f"round={key}")
-            # hive-partitioned by kind: ONE execution of the Python stage,
-            # and each consumer reads (or renames) exactly its subdir
-            out_raw.write.partitionBy("kind").mode("overwrite").parquet(path)
-            self._tmp_sink_paths.append(path)
-            gen_paths.append(path)
-            kinds = {
-                d[5:]: self._pq_rows(os.path.join(path, d))
-                for d in os.listdir(path) if d.startswith("kind=")
-            }
-            n_results += int(kinds.get("result", 0))
-            # Durable result/download history: ADOPT the generation's
-            # kind= partitions by directory rename (Iceberg add_files —
-            # data files written once by the generation's own tasks,
-            # committed by reference). The previous shape re-read the tmp
-            # snapshot and RE-ENCODED it into a durable copy — with ~80 KB
-            # extracted-text values that second encode was 300-550
-            # CPU-seconds per big round, and as a concurrent commit-pool
-            # job it sat on task slots that starved the round's other
-            # commits (profiled: 14-33 s async walls). Request rows get no
-            # durable copy at all: the frontier checkpoints already carry
-            # every (url, path) request row, so a durable request history
-            # was pure duplication.
-            for k, sink in (("result", "results"), ("download", "downloads")):
-                if kinds.get(k, 0):
-                    self.table.adopt_delta(
-                        os.path.join(path, f"kind={k}"), sink, key
-                    )
-            # explicit schemas: parquet schema inference is a Spark job
-            if kinds.get("request", 0):
-                requests_acc = requests_acc.unionByName(
-                    self.spark.read.schema(REQUEST_SCHEMA).parquet(
-                        os.path.join(path, "kind=request")
-                    )
-                )
-            if int(kinds.get("apply", 0)) == 0:
-                break
-            apply_df = self.spark.read.schema(MEMO_SINK_SCHEMA).parquet(
-                os.path.join(path, "kind=apply")
-            ).select(
-                "pc", "cur_url", "cur_full", "bindings", "path_key", "body",
-                "head", "method", "cookies",
-            )
-        return requests_acc, n_results, gen_paths
+    def _cascade(self, out_df: DataFrame, rnd: int) -> tuple[int, str]:
+        """Write a round's evaluation output ONCE, into the TRANSIENT sink
+        ``cascade_tmp/round=rnd``, hive-partitioned by ``kind``, and adopt
+        its result/download partitions (``_adopt_outputs``). The workers
+        already evaluated every state to fixpoint, so no kind here carries
+        a page body and nothing is read back to evaluate again. The caller
+        adopts ``kind=memo`` and ``kind=request`` (or reads the latter);
+        the rest is deleted at the end of the round (``_drop_tmp_sinks``).
+        Returns (result rows, output path)."""
+        path = self._path("cascade_tmp", f"round={rnd}")
+        out_df.write.partitionBy("kind").mode("overwrite").parquet(path)
+        self._tmp_sink_paths.append(path)
+        return self._adopt_outputs(path, rnd), path
+
+    def _adopt_outputs(self, path: str, rnd: int) -> int:
+        """Durable result/download history: ADOPT *path*'s kind=result and
+        kind=download partitions as delta *rnd* of the ``results`` and
+        ``downloads`` sinks by directory rename (Iceberg add_files — data
+        files written once, committed by reference). Request rows get no
+        durable copy: the frontier deltas already carry every (url, path)
+        request row. Returns the result row count, from parquet footers
+        (no Spark job)."""
+        kinds = {
+            d[5:]: self._pq_rows(os.path.join(path, d))
+            for d in os.listdir(path) if d.startswith("kind=")
+        }
+        for k, sink in (("result", "results"), ("download", "downloads")):
+            if kinds.get(k, 0):
+                self.table.adopt_delta(os.path.join(path, f"kind={k}"), sink, rnd)
+        return kinds.get("result", 0)
 
     # ------------------------------------------------------- checkpointing
 
@@ -1258,13 +1202,13 @@ class CrawlEngine:
         # The parquet round-trip is the lineage break. Repartitioning here is
         # load-bearing twice over: request rows are tiny (no bodies), the
         # frontier's file count sets the probe-side partitioning of next
-        # round's broadcast joins (without it a narrow init cascade
+        # round's broadcast joins (without it a narrow round output
         # propagates 1-2 partitions into the CPU-heavy python stages), and it
         # must be ROUND-ROBIN — partitioning by host would put the Zipf hot
         # host's half of the frontier into one straggler task.
         # part="full": the frontier sink's deltas are part-structured
-        # because callable rounds ADOPT theirs from the routing/cascade
-        # outputs (adopt_parts below) — every delta must share the layout.
+        # because callable rounds ADOPT theirs from the routing/eval
+        # outputs (adopt_parts) — every delta must share the layout.
         # Width: the next round re-partitions adaptively on read (see
         # _round), so the old propagate-narrow-partitioning concern is
         # handled there; here the width only sets write-task + file count,
@@ -1279,9 +1223,9 @@ class CrawlEngine:
         )
 
     def _drop_tmp_sinks(self) -> None:
-        """Delete the round's transient cascade generations (the only sink
-        that holds body bytes besides the store); called after every
-        consumer of them has executed."""
+        """Delete the round's transient outputs (routing segments and the
+        evaluation output); called after every consumer of them has
+        executed."""
         import shutil
 
         for p in self._tmp_sink_paths:
@@ -1310,8 +1254,6 @@ class CrawlEngine:
         boundary, including mid-crawl before a resume: rewrites preserve
         rows and the round column exactly (pinned by
         tests/test_tableformat.py::test_compact_mid_crawl_resume)."""
-        import json as _json
-
         report = {}
         for sink in sinks:
             report[sink] = self.table.compact_sink(sink, target_bytes)
@@ -1319,10 +1261,9 @@ class CrawlEngine:
         after = done[-1] if done else -1
         rounds_dir = os.path.join(self.workdir, "rounds")
         os.makedirs(rounds_dir, exist_ok=True)
-        with open(
-            os.path.join(rounds_dir, f"compact_after_{after}.json"), "w"
-        ) as f:
-            _json.dump(report, f)
+        write_json_atomic(
+            os.path.join(rounds_dir, f"compact_after_{after}.json"), report
+        )
         return report
 
     # ------------------------------------------------------------ readers

@@ -40,16 +40,10 @@ def get_spark(
         b.appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.session.timeZone", "UTC")
-        # BORIS_AQE=0 disables adaptive execution for A/B profiling: each
-        # AQE query stage is a separate job with a driver sync point, and
-        # the crawl round's slim routing subtree has ~10 of them — in
-        # local mode that materialization latency is pure per-round fixed
-        # cost. Default stays ON (the 100 TB design point wants runtime
-        # re-planning + skew-join splitting on real clusters).
-        .config(
-            "spark.sql.adaptive.enabled",
-            "false" if os.environ.get("BORIS_AQE", "1") == "0" else "true",
-        )
+        # AQE ON for ad-hoc queries (the 100 TB design point wants runtime
+        # re-planning + skew-join splitting); CrawlEngine.run turns it off
+        # for the crawl loop, whose joins are statically pinned
+        .config("spark.sql.adaptive.enabled", "true")
         # coalescing OFF: AQE sizes partitions by bytes, which serializes the
         # CPU-heavy Arrow/pandas stages downstream of small-byte shuffles
         # (observed: a 60k-row join coalesced to 2 tasks before mapInPandas).
@@ -57,10 +51,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "false")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.join.preferSortMergeJoin", "false")
-        # dynamic-partition writes (the crawl's partitionBy('kind')
-        # snapshots) must NOT sort rows by partition column first: the
-        # cascade output carries page bodies, and the planned-write sort
-        # buffers/spills gigabytes per round for a 4-value partition key.
+        # dynamic-partition writes (the crawl round's partitionBy('kind')
+        # output) must NOT sort rows by partition column first: result and
+        # download values can be page-sized, and the planned-write sort
+        # buffers/spills them per round for a 4-value partition key.
         # With the sort off each task keeps ≤4 open writers instead.
         .config("spark.sql.optimizer.plannedWrite.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

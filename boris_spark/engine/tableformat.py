@@ -22,6 +22,7 @@ read_delta_pandas    incremental scan between snapshot N-1 and N
 commit_round         snapshot commit carrying summary metadata (lineage +
                      fetch/extract metrics ride the snapshot summary map)
 committed_rounds     snapshot history (inspect ``table.history()``)
+rollback             ``rollback_to_snapshot`` (drop uncommitted appends)
 ===================  ====================================================
 """
 
@@ -31,6 +32,16 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+def write_json_atomic(path: str, obj) -> None:
+    """Write *obj* as JSON to *path* all-or-nothing: a tmp name, then
+    ``os.replace`` — a kill mid-write leaves no torn ``N.json`` for
+    ``committed_rounds`` to count as a commit."""
+    tmp = f"{path}.tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f)
+    os.replace(tmp, path)
 
 
 class TableFormat:
@@ -90,6 +101,11 @@ class TableFormat:
         raise NotImplementedError
 
     def committed_rounds(self) -> list[int]:
+        raise NotImplementedError
+
+    def rollback(self, sink: str, first_round: int) -> None:
+        """Drop every delta of *sink* whose round is >= *first_round* —
+        what a killed round adopted before its manifest committed."""
         raise NotImplementedError
 
     def round_metrics(self, rnd: int) -> dict:
@@ -232,8 +248,7 @@ class ParquetManifestFormat(TableFormat):
 
     def commit_round(self, rnd: int, metrics: dict) -> None:
         os.makedirs(self._path("rounds"), exist_ok=True)
-        with open(self._path("rounds", f"{rnd}.json"), "w") as f:
-            json.dump(metrics, f)
+        write_json_atomic(self._path("rounds", f"{rnd}.json"), metrics)
 
     def committed_rounds(self) -> list[int]:
         rounds_dir = self._path("rounds")
@@ -251,13 +266,26 @@ class ParquetManifestFormat(TableFormat):
         with open(self._path("rounds", f"{rnd}.json")) as f:
             return json.load(f)
 
+    def rollback(self, sink: str, first_round: int) -> None:
+        import shutil
+
+        top = self._path(sink)
+        if not os.path.isdir(top):
+            return
+        for d in os.listdir(top):
+            if d.startswith("round=") and int(d[6:]) >= first_round:
+                shutil.rmtree(os.path.join(top, d))
+
     def compact_sink(self, sink: str, target_bytes: int = 64 << 20) -> dict:
         """Per-round binpack rewrite + atomic directory swap. Each round
         delta whose file count exceeds its binpack group count is read
         back, coalesced to ``ceil(bytes/target)`` outputs, written to a
-        hidden staging dir, and swapped in with two renames (crash at any
-        point leaves either the old or the new complete delta; stale
-        ``.compact_*`` dirs from a killed pass are swept on entry). The
+        hidden staging dir, and swapped in with two renames. A crash at
+        any point leaves either the old or the new complete delta, and
+        the entry pass recovers from it: a ``round=N`` missing beside its
+        ``.compact_old_round=N`` (killed between the renames) is renamed
+        back; other ``.compact_*`` dirs are deleted only once their
+        ``round=N`` exists. The
         ``fsrc`` adoption sub-partitioning is dissolved by the rewrite —
         it is projection-away lineage metadata; every reader selects
         explicit columns. The round column itself lives in the directory
@@ -269,9 +297,15 @@ class ParquetManifestFormat(TableFormat):
                  "rounds_rewritten": 0}
         if not os.path.isdir(top):
             return stats
-        # sweep debris from a previously killed compaction pass
-        for d in list(os.listdir(top)):
-            if ".compact_" in d:
+        # recover from a previously killed compaction pass; sorted, so
+        # .compact_old_X is restored before .compact_tmp_X is judged
+        for d in sorted(os.listdir(top)):
+            if not d.startswith(".compact_"):
+                continue
+            rdir = os.path.join(top, d.split("_", 2)[2])
+            if not os.path.isdir(rdir) and d.startswith(".compact_old_"):
+                os.rename(os.path.join(top, d), rdir)
+            elif os.path.isdir(rdir):
                 shutil.rmtree(os.path.join(top, d), ignore_errors=True)
 
         def _files(rdir: str) -> list[tuple[str, int]]:
@@ -485,6 +519,15 @@ class LocalCatalogFormat(TableFormat):
         if not rows:
             raise KeyError(f"round {rnd} has no committed snapshot")
         return json.loads(rows[-1]["metrics"])
+
+    def rollback(self, sink: str, first_round: int) -> None:
+        if not self._exists(sink):
+            return
+        t = self._tbl(sink)
+        for (spec,) in self.spark.sql(f"SHOW PARTITIONS {t}").collect():
+            rnd = int(spec.split("=")[1])
+            if rnd >= first_round:
+                self.spark.sql(f"ALTER TABLE {t} DROP PARTITION (round={rnd})")
 
     def drop(self) -> None:
         """Drop every sink table + the database (test cleanup)."""

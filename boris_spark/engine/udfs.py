@@ -1,16 +1,18 @@
 """Arrow-batched executor-side program evaluation.
 
-One ``mapInPandas`` function evaluates every non-fetch program node over a
-batch of frontier rows (the reference's per-branch closure application,
-/root/reference/boris/semantics.rkt:52-92, vectorized per Arrow batch).
-Output is a single union schema split by ``kind`` on the JVM side:
+The ``mapInPandas`` functions here hold a page and evaluate every non-fetch
+program node on it to fixpoint (``eval_to_fixpoint`` — the reference's
+per-branch closure application, /root/reference/boris/semantics.rkt:52-92,
+and interpreter.rkt:54-59, which applies let/for/label/recur/show to the
+page it already holds). Output is a single union schema split by ``kind``
+on the JVM side:
 
 - ``request``  → a navigate fan-out (semantics.rkt:52-57): resolved +
   canonicalized + hashed target, path extended with the fan-out index;
-- ``apply``    → a next-state × child-web row (interpreter.rkt:57-58);
 - ``result``   → an extraction fly (semantics.rkt:61-66), #f/void suppressed
   (browser-services.rkt:50-53);
-- ``download`` → a body sink row (syntax/io.rkt:27-36).
+- ``download`` → a body sink row (syntax/io.rkt:27-36);
+- ``memo``     → an eval-output cache row (``_emit_memo``).
 
 All string work (xpath/links/forms/canonicalize/hash) is the shared pure
 kernel — identical bytes to the oracle by construction.
@@ -28,33 +30,35 @@ from ..kernel import host_of, resolve2, url_hash
 from ..oracle import program as P
 from .compiler import NodeSpec
 
-CASCADE_SCHEMA = (
-    "kind string, pc long, cur_url string, cur_full string, bindings string, path_key string, "
-    "url_canon string, url_full string, url_hash long, host string, "
-    "referer string, method string, payload string, value string, vkind string, body string, status int, head string, "
-    "cookies string, "
+# every evaluation output row, as (column, arrow type); the kind column
+# becomes the hive partition of the round's single output write
+_OUT_COLS = (
+    ("kind", "string"), ("pc", "int64"), ("cur_url", "string"),
+    ("bindings", "string"), ("path_key", "string"), ("url_canon", "string"),
+    ("url_full", "string"), ("url_hash", "int64"), ("host", "string"),
+    ("referer", "string"), ("method", "string"), ("payload", "string"),
+    ("value", "string"), ("vkind", "string"), ("cookies", "string"),
     # memo columns (kind='memo' rows — the eval-output cache that lets later
     # rounds replay a cached url as a pure JVM join, see make_fused_fn):
     # mk = the output row's real kind ('request'/'result', or 'mark' for the
     # state-evaluated marker), mk_* = the INPUT-state key the outputs were
     # computed under (parent pc, full url, bindings, method, pre-fold jar)
-    "mk string, mk_pc long, mk_full string, mk_method string, "
-    "mk_bindings string, mk_cookies string"
+    ("mk", "string"), ("mk_pc", "int64"), ("mk_full", "string"),
+    ("mk_method", "string"), ("mk_bindings", "string"),
+    ("mk_cookies", "string"),
 )
-
-_COLS = [
-    "kind", "pc", "cur_url", "cur_full", "bindings", "path_key", "url_canon",
-    "url_full", "url_hash", "host", "referer", "method", "payload", "value",
-    "vkind", "body", "status", "head", "cookies",
-    "mk", "mk_pc", "mk_full", "mk_method", "mk_bindings", "mk_cookies",
-]
+_COLS = [c for c, _ in _OUT_COLS]
+_INT_COLS = tuple(c for c, t in _OUT_COLS if t == "int64")
+CASCADE_SCHEMA = ", ".join(
+    f"{c} {'long' if t == 'int64' else t}" for c, t in _OUT_COLS
+)
 
 # programs built only from these node kinds have outputs that are a pure
 # function of (pc, url, url_full, bindings, method, cookies) with
 # path_key = input_path + constant_suffix and NO body-carrying or
-# multi-generation outputs — exactly the class whose cache-hit replays can
+# nested-state outputs — exactly the class whose cache-hit replays can
 # run as a JVM join against the memo sink instead of re-evaluating bodies
-# in Python (let/for/label/recur/show produce 'apply' generations and
+# in Python (let/for/label/recur/show evaluate nested states in place and
 # download emits the body itself, so they take the batched Python replay)
 MEMO_JOINABLE_KINDS = frozenset(
     {"go", "click", "submit", "extract", "extract_list"}
@@ -78,7 +82,6 @@ def encode_value(v: Any) -> str:
 
 
 def _eval_node(
-    spec: NodeSpec,
     node_table: dict[int, NodeSpec],
     pc: int,
     cur_url: str | None,
@@ -91,11 +94,11 @@ def _eval_node(
     method: str = "GET",
     cookies_json: str | None = None,
 ) -> None:
+    spec = node_table[pc]
     bindings = P.bindings_from_json(bindings_json)
     base = cur_full or cur_url
     ctx = P.EvalCtx(body or "", base, bindings, head=head, method=method)
     kind = spec.kind
-    head_json = json.dumps(list(head)) if head is not None else None
 
     if kind in ("go", "click"):
         urls = P.ensure_list(spec.urls.eval(ctx))
@@ -141,34 +144,29 @@ def _eval_node(
             nb = P.bindings_to_json({**bindings, **bset})
             for j, child in enumerate(spec.child_ids):
                 out.append(_out_row(
-                    "apply", pc=child, cur_url=cur_url, cur_full=cur_full, bindings=nb,
-                    path_key=path + _hx(i) + _hx(j), body=body,
-                    head=head_json, method=method, cookies=cookies_json,
+                    "apply", pc=child, bindings=nb,
+                    path_key=path + _hx(i) + _hx(j),
                 ))
     elif kind == "label":
         nb = P.bindings_to_json({**bindings, P.LABEL_PREFIX + spec.name: pc})
         for j, child in enumerate(spec.child_ids):
             out.append(_out_row(
-                "apply", pc=child, cur_url=cur_url, cur_full=cur_full, bindings=nb,
-                path_key=path + _hx(0) + _hx(j), body=body,
-                head=head_json, method=method, cookies=cookies_json,
+                "apply", pc=child, bindings=nb, path_key=path + _hx(0) + _hx(j),
             ))
     elif kind == "recur":
         target = node_table[int(bindings[P.LABEL_PREFIX + spec.name])]
         for j, child in enumerate(target.child_ids):
             out.append(_out_row(
-                "apply", pc=child, cur_url=cur_url, cur_full=cur_full, bindings=bindings_json,
-                path_key=path + _hx(0) + _hx(j), body=body,
-                head=head_json, method=method, cookies=cookies_json,
+                "apply", pc=child, bindings=bindings_json,
+                path_key=path + _hx(0) + _hx(j),
             ))
     elif kind == "show":
         if spec.value is not None:
             spec.value.eval(ctx)  # effect parity only
         for j, child in enumerate(spec.child_ids):
             out.append(_out_row(
-                "apply", pc=child, cur_url=cur_url, cur_full=cur_full, bindings=bindings_json,
-                path_key=path + _hx(0) + _hx(j), body=body,
-                head=head_json, method=method, cookies=cookies_json,
+                "apply", pc=child, bindings=bindings_json,
+                path_key=path + _hx(0) + _hx(j),
             ))
     elif kind == "download":
         out.append(_out_row(
@@ -178,6 +176,51 @@ def _eval_node(
     else:  # pragma: no cover
         raise ValueError(f"unknown node kind {kind}")
 
+
+# deepest chain of nested states one page may evaluate in place: a
+# fetch-free label/recur loop would otherwise never return
+_MAX_DEPTH = 200
+
+
+def eval_to_fixpoint(
+    node_table: dict[int, NodeSpec],
+    pc: int,
+    cur_url: str | None,
+    cur_full: str | None,
+    body: str,
+    bindings_json: str | None,
+    out: list[dict],
+    head: tuple | None = None,
+    method: str = "GET",
+    cookies_json: str | None = None,
+    depth: int = 0,
+) -> None:
+    """Evaluate node *pc* on the page in hand, then every next state it
+    emits (let/for/label/recur/show ``apply`` rows) in place — same body,
+    head, method and jar, that row's bindings and path prefix — until
+    only request/result/download rows remain (interpreter.rkt:54-59: a
+    non-fetch node applies to the page the branch already holds). Path
+    keys appended to *out* are relative to this state's path; order lives
+    in them, so nesting cannot reorder anything."""
+    if depth > _MAX_DEPTH:
+        raise RuntimeError("cascade depth exceeded (fetch-free recur loop?)")
+    rows: list[dict] = []
+    _eval_node(
+        node_table, pc, cur_url, cur_full, body, bindings_json, "", rows,
+        head=head, method=method, cookies_json=cookies_json,
+    )
+    for r in rows:
+        if r["kind"] != "apply":
+            out.append(r)
+            continue
+        start = len(out)
+        eval_to_fixpoint(
+            node_table, r["pc"], cur_url, cur_full, body, r["bindings"],
+            out, head=head, method=method, cookies_json=cookies_json,
+            depth=depth + 1,
+        )
+        for o in out[start:]:
+            o["path_key"] = r["path_key"] + o["path_key"]
 
 
 # worker-written sink files: (column, arrow type) in the sink schema's
@@ -220,7 +263,23 @@ def _write_batch(
     os.replace(tmp, os.path.join(out_dir, name))
 
 
-_INT_COLS = ("pc", "url_hash", "status", "mk_pc")
+def write_by_kind(out_dir: str, out: list[dict]) -> None:
+    """Driver-side twin of the rounds' ``partitionBy("kind")`` output
+    write: *out*'s rows as one parquet file per ``kind=`` subdirectory of
+    *out_dir*, with the output columns' exact types (the sinks that adopt
+    these files mix them with Spark-written ones)."""
+    import os
+
+    os.makedirs(out_dir, exist_ok=True)
+    by_kind: dict[str, list[tuple]] = {}
+    for r in out:
+        by_kind.setdefault(r["kind"], []).append(
+            tuple(r[c] for c, _ in _OUT_COLS[1:])
+        )
+    for kind, rows in by_kind.items():
+        _write_batch(
+            os.path.join(out_dir, f"kind={kind}"), _OUT_COLS[1:], rows, 0
+        )
 
 
 def _frame(out: list[dict]) -> pd.DataFrame:
@@ -244,7 +303,6 @@ def _frame(out: list[dict]) -> pd.DataFrame:
 def _eval_memo(
     memo: dict,
     key: tuple,
-    spec: NodeSpec,
     node_table: dict[int, NodeSpec],
     pc: int,
     cur_url,
@@ -257,11 +315,12 @@ def _eval_memo(
     method: str = "GET",
     cookies_json: str | None = None,
 ) -> None:
-    """Evaluate a node once per (pc, url, cur_full, bindings) and replay the
-    cached output rows for every further path that reaches the same state —
-    exact because node evaluation is a pure function of that key (+ the
-    body, itself a function of the url within a round) and every emitted
-    path is ``input_path + constant_suffix``. Callers keep rows of one url
+    """Evaluate a node to fixpoint (``eval_to_fixpoint``) once per (pc,
+    url, cur_full, bindings) and replay the cached output rows for every
+    further path that reaches the same state — exact because evaluation is
+    a pure function of that key (+ the body, itself a function of the url
+    within a round) and every emitted path is
+    ``input_path + constant_suffix``. Callers keep rows of one url
     consecutive (sortWithinPartitions) and clear the memo on url change, so
     memory stays O(paths-per-url). The reference evaluates per crawl branch
     (interpreter.rkt:54-59); values are identical by purity, this just
@@ -269,9 +328,9 @@ def _eval_memo(
     ent = memo.get(key)
     if ent is None:
         ent = []
-        _eval_node(
-            spec, node_table, pc, cur_url, cur_full, body, bindings_json,
-            "", ent, head=head, method=method, cookies_json=cookies_json,
+        eval_to_fixpoint(
+            node_table, pc, cur_url, cur_full, body, bindings_json, ent,
+            head=head, method=method, cookies_json=cookies_json,
         )
         memo[key] = ent
     for r in ent:
@@ -471,7 +530,7 @@ def make_fused_fn(
                 for j, child in enumerate(node_table[int(pc)].child_ids):
                     _eval_memo(
                         memo, (child, url_full, bindings_json, method, cj),
-                        node_table[child], node_table, child,
+                        node_table, child,
                         url, url_full, body, bindings_json, path + _hx(j), out,
                         head=head, method=method, cookies_json=cj,
                     )
@@ -515,7 +574,7 @@ def make_replay_fn(node_table: dict[int, NodeSpec], emit_memo: bool = False):
     may straddle one) and reset when the url changes. A url with no store
     row (seen but never stored) replays an empty body.
 
-    Semantics identical to the fan-out cascade over store-joined bodies
+    Semantics identical to evaluating a fresh fetch of the stored body
     (the memoized replay of browser-services.rkt:36-40): robots-blocked
     branches (``_blk``) see an empty body and no head; the store head's
     Set-Cookie folds into each branch's jar before its children run.
@@ -571,7 +630,7 @@ def make_replay_fn(node_table: dict[int, NodeSpec], emit_memo: bool = False):
                 for j, child in enumerate(node_table[pc].child_ids):
                     _eval_memo(
                         memo, (child, url_full, bindings_json, method, cj, blk),
-                        node_table[child], node_table, child,
+                        node_table, child,
                         url, url_full, rb, bindings_json, path + _hx(j), out,
                         head=rh, method=method, cookies_json=cj,
                     )
@@ -583,75 +642,3 @@ def make_replay_fn(node_table: dict[int, NodeSpec], emit_memo: bool = False):
             yield _frame(out)
 
     return replay
-
-
-def make_cascade_fn(node_table: dict[int, NodeSpec], fanout: bool = False):
-    """mapInPandas fn over rows (pc, cur_url, body, bindings, path_key).
-
-    With ``fanout=False`` each row's own node ``pc`` is evaluated. With
-    ``fanout=True`` the rows are *completed fetches* whose ``pc`` is the
-    navigate node that requested them: the row fans to each child of ``pc``
-    (path extended with the child index) and evaluates the child in place —
-    the interpreter's next-state × child-subweb recursion
-    (/root/reference/boris/interpreter.rkt:57-58) done inside the Arrow
-    batch, so the page body crosses the JVM↔Python boundary exactly once
-    per fetched page instead of once per (page, child) join row."""
-
-    def cascade(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernel.cookies import jar_fold_head, jar_from_json, jar_to_json
-
-        memo: dict = {}
-        memo_url = None
-        for pdf in batches:
-            out: list[dict] = []
-            heads = pdf["head"] if "head" in pdf.columns else [None] * len(pdf)
-            methods = pdf["method"] if "method" in pdf.columns else ["GET"] * len(pdf)
-            cookies_col = (
-                pdf["cookies"] if "cookies" in pdf.columns else [None] * len(pdf)
-            )
-            for pc, cur_url, cur_full, body, bindings_json, path, head_json, method, cj in zip(
-                pdf["pc"], pdf["cur_url"], pdf["cur_full"], pdf["body"],
-                pdf["bindings"], pdf["path_key"], heads, methods, cookies_col,
-            ):
-                pc = int(pc)
-                cur_url = cur_url if isinstance(cur_url, str) else None
-                cur_full = cur_full if isinstance(cur_full, str) else None
-                body = body if isinstance(body, str) else ""
-                bindings_json = (
-                    bindings_json if isinstance(bindings_json, str) else None
-                )
-                head = (
-                    tuple(json.loads(head_json))
-                    if isinstance(head_json, str) else None
-                )
-                method = method if isinstance(method, str) else "GET"
-                cj = cj if isinstance(cj, str) else None
-                path = path or ""
-                if fanout and head is not None:
-                    # completed fetch (or store replay): fold the response's
-                    # Set-Cookie into this branch's jar before its children
-                    cj = jar_to_json(
-                        jar_fold_head(jar_from_json(cj), head, cur_full or cur_url)
-                    )
-                if cur_url != memo_url:
-                    memo.clear()
-                    memo_url = cur_url
-                if fanout:
-                    for j, child in enumerate(node_table[pc].child_ids):
-                        _eval_memo(
-                            memo, (child, cur_full, bindings_json, method, cj),
-                            node_table[child], node_table, child,
-                            cur_url, cur_full, body, bindings_json,
-                            path + _hx(j), out, head=head, method=method,
-                            cookies_json=cj,
-                        )
-                else:
-                    _eval_memo(
-                        memo, (pc, cur_full, bindings_json, method, cj),
-                        node_table[pc], node_table, pc,
-                        cur_url, cur_full, body, bindings_json, path, out,
-                        head=head, method=method, cookies_json=cj,
-                    )
-            yield _frame(out)
-
-    return cascade

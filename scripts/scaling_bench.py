@@ -390,7 +390,7 @@ depths and memoized cache-hit replays re-emit their extractions:
 fetches). That work factor is identical at both levels, so it cancels in
 the N→4N ratio; what does NOT cancel is per-round fixed cost. Round 4 cut
 that from ~25-35 s/crawl to ~2 s/round of commit tail + ~12 s/crawl of
-routing-job wall (profiled per-round in scripts/profile_crawl.py: route
+routing-job wall (per-round manifest phase walls: route
 1.4-6 s/round, overlapped commits ~1 s/round, fused eval = the remaining
 ~85%), which is the measured residual between the normalized efficiency
 and 1.0.
@@ -516,7 +516,7 @@ tests/test_entry_queries.py::test_ann_ivf_recall_clustered.
 The round-4 flag (23.0 s @ local[8] → 32.5 s @ local[32]) measures an
 UNBUDGETED doc crawl whose rounds are the BFS levels of a binary link
 tree: 12 rounds sized 1, 2, 4, … 1024 — every round far below one batch
-per core. Per-round phase walls (scripts/profile_doc_crawl.py, fresh JVM
+per core. Per-round phase walls (round manifests, fresh JVM
 per level, sf0.1) attribute the wall to per-round fixed cost, not work:
 ~1.4 s/round executing the cascade DAG (pages-table scan + cogroup replay
 + seg-routing lineage-break write), ~0.6 s/round seen-delta commit,

@@ -11,6 +11,7 @@ reproduce the reference semantics (via the oracle, which implements
 """
 
 import json
+import os
 
 import pytest
 
@@ -870,3 +871,84 @@ def test_resume_sweeps_stale_inboxes(spark, corpus, tmp_path):
     seen = eng.seen_df()
     assert seen.count() == seen.select("url_canon").distinct().count()
     assert seen.where("status = 500").count() == 0
+
+
+def test_fetch_free_recur_loop_raises_on_driver_and_worker(spark, corpus, tmp_path):
+    """A label/recur loop with no fetch in it never reaches a fixpoint.
+    The depth guard must stop it both where the root evaluates (the
+    driver, before round 0) and where a fetched page evaluates (the
+    Python worker of the fused stage)."""
+    _, pages_dict = corpus
+    seed = webgen.page_url(0, N_PAGES, SEED)
+    for i, program in enumerate((
+        Label("l", Recur("l")),
+        Go(seed, Label("l", Recur("l"))),
+    )):
+        eng = CrawlEngine(
+            spark, None, str(tmp_path / f"work{i}"), politeness_k=None,
+            fetch_mode="callable", fetch_fn=_page_fetch_fn(pages_dict),
+        )
+        with pytest.raises(Exception, match="cascade depth exceeded"):
+            eng.run(program, max_rounds=5)
+
+
+def test_pagination_results_one_delta_per_round(spark, corpus, tmp_path):
+    """Nested states (let/label/recur) evaluate in place, so a round's
+    results land in ONE results delta, keyed by the round alone (round r
+    → delta r+1; the root's own evaluation owns delta 0) — never one
+    delta per nesting level."""
+    seed_url = webgen.page_url(0, N_PAGES, SEED)
+    oracle, eng, _ = run_both(
+        spark, corpus, pagination_program(seed_url), tmp_path, politeness_k=None
+    )
+    assert_parity(oracle, eng)
+    deltas = sorted(
+        int(d.split("=")[1])
+        for d in os.listdir(tmp_path / "work" / "results")
+        if d.startswith("round=")
+    )
+    with_results = [
+        r + 1 for r in eng.table.committed_rounds()
+        if eng.table.round_metrics(r)["results"] > 0
+    ]
+    assert with_results and deltas == with_results
+
+
+def test_torn_round_manifest_is_not_committed(spark, corpus, tmp_path, monkeypatch):
+    """A kill while round N's manifest is being written must not leave a
+    torn ``N.json`` that counts as committed: the manifest is written to a
+    tmp name and renamed into place, so resume reruns round N. The deltas
+    round N adopted before the kill are rolled back first, so the rerun
+    records the same seen rows (round, path_first) as an unkilled crawl."""
+    from boris_spark.engine import tableformat
+
+    _, pages_dict = corpus
+    program = flagship_program(webgen.seeds_for(N_PAGES, SEED))
+    oracle = spider(program, SnapshotFetcher(pages_dict))
+    mk = lambda work: CrawlEngine(  # noqa: E731
+        spark, None, str(work), politeness_k=None, fetch_mode="callable",
+        fetch_fn=_page_fetch_fn(pages_dict),
+    )
+    clean = mk(tmp_path / "clean")
+    clean.run(program, max_rounds=50)
+    work = tmp_path / "work"
+    real_dump = json.dump
+
+    def torn_dump(obj, f, *a, **kw):
+        if not os.path.basename(f.name).startswith("1.json"):
+            return real_dump(obj, f, *a, **kw)
+        f.write('{"fetched": ')  # half of round 1's manifest, then the kill
+        raise OSError("killed mid-write")
+
+    monkeypatch.setattr(tableformat.json, "dump", torn_dump)
+    with pytest.raises(OSError, match="killed mid-write"):
+        mk(work).run(program, max_rounds=50)
+    monkeypatch.undo()
+    eng = mk(work)
+    assert eng.table.committed_rounds() == [0]
+    eng.run(program, max_rounds=50, resume=True)
+    assert_parity(oracle, eng)
+    cols = ["url_canon", "status", "round", "path_first"]
+    assert sorted(eng.seen_df().select(*cols).collect()) == sorted(
+        clean.seen_df().select(*cols).collect()
+    )

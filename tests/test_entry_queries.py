@@ -214,10 +214,8 @@ def test_cascade_int64_hash_exact():
     """Regression: mixed result/request batches must not let pandas infer
     float64 for url_hash (53-bit mantissa would truncate 64-bit hashes,
     breaking the seen anti-join and refetching seen URLs)."""
-    import pandas as pd
-
     from boris_spark.engine.compiler import compile_program
-    from boris_spark.engine.udfs import make_cascade_fn
+    from boris_spark.engine.udfs import _frame, eval_to_fixpoint
     from boris_spark.kernel import url_hash
     from boris_spark.oracle.program import Extract, Go, Lit, UrlE
 
@@ -225,12 +223,12 @@ def test_cascade_int64_hash_exact():
     assert abs(url_hash(url)) > (1 << 53)  # meaningful low bits
     program = Go(Lit([url]), Extract(UrlE()), Go(Lit([url])))
     nt = compile_program(program)
-    fan = make_cascade_fn(nt, fanout=True)
-    pdf = pd.DataFrame([
-        dict(pc=program.node_id, cur_url=url, cur_full=url, body="<html></html>",
-             bindings=None, path_key="00000000"),
-    ])
-    (out,) = list(fan(iter([pdf])))
+    rows: list[dict] = []
+    # the fetched page fans to the navigate node's children: one result
+    # row and one request row in the same batch
+    for child in nt[program.node_id].child_ids:
+        eval_to_fixpoint(nt, child, url, url, "<html></html>", None, rows)
+    out = _frame(rows)
     req = out[out["kind"] == "request"]
     assert len(req) == 1
     assert int(req["url_hash"].iloc[0]) == url_hash(url)

@@ -405,3 +405,29 @@ def test_compact_mid_crawl_resume(spark, tmp_path):
     assert (
         store.groupBy("url_canon").count().where("count > 1").count() == 0
     )
+
+
+def test_compact_recovers_kill_between_swap_renames(spark, tmp_path):
+    """A compaction pass killed between its two renames leaves no
+    ``round=N``: the original delta sits in ``.compact_old_round=N`` and
+    the rewrite (here: half-written) in ``.compact_tmp_round=N``. The next
+    pass must restore the original, not sweep both copies away."""
+    tf = ParquetManifestFormat(spark, str(tmp_path))
+    df = spark.createDataFrame(
+        [(i, f"v{i}") for i in range(32)], "id long, v string"
+    )
+    tf.write_delta(df.repartition(4), "seen", 0)
+    tf.write_delta(
+        spark.createDataFrame([(99, "x")], "id long, v string").coalesce(1),
+        "seen", 1,
+    )
+    key = lambda r: (r["id"], r["v"], r["round"])  # noqa: E731
+    before = sorted(map(key, tf.read_sink("seen", "id long, v string").collect()))
+    top = tmp_path / "seen"
+    os.rename(top / "round=0", top / ".compact_old_round=0")
+    (top / ".compact_tmp_round=0").mkdir()
+    (top / ".compact_tmp_round=0" / "part-00000.parquet").write_bytes(b"PAR1")
+    tf.compact_sink("seen", target_bytes=1 << 30)
+    assert not any(".compact_" in d for d in os.listdir(top))
+    after = sorted(map(key, tf.read_sink("seen", "id long, v string").collect()))
+    assert after == before
