@@ -125,8 +125,9 @@ def build_corpus(spark, n_pages: int, seed: int, path: str, weight: int):
 def live_http_bench(
     spark, n_hosts: int = 64, pages_per_host: int = 78, budget: int = 25
 ) -> dict:
-    """Live-HTTP crawl tier: the mapInPandas HTTP fetcher (engine/fetch.py)
-    driven at bench scale against a local multi-host server. Hosts are the
+    """Live-HTTP crawl tier: the HTTP batch fetch_fn (engine/fetch.py),
+    called from the crawl's fused fetch+extract stage, driven at bench
+    scale against a local multi-host server. Hosts are the
     loopback /8 addresses 127.0.0.{1..n} (each resolves locally and is a
     distinct politeness host to the engine); one ThreadingHTTPServer on
     0.0.0.0 serves a deterministic binary-tree web per host. The per-host
@@ -359,7 +360,8 @@ def crawl_bench(spark, n_pages: int, workdir: str) -> dict:
     materialized inside the Python workers and never cross the JVM
     boundary; only extracted features, discovered links, and statuses
     return. Set BORIS_FETCH_MODE=snapshot to instead benchmark the
-    pages-table-driven snapshot mode (bodies joined from parquet)."""
+    pages-table-driven snapshot mode (each url's page row joined from
+    parquet into the same fused stage; counts must be identical)."""
     import shutil
     import tempfile
 
@@ -541,7 +543,7 @@ def main():
     # ingest headline (one task per archive = the real CC parallelism unit)
     warc = warc_bench(spark, sf_dir)
 
-    # live-HTTP tier: real sockets through the mapInPandas fetcher against
+    # live-HTTP tier: real sockets through the HTTP batch fetch_fn against
     # a local multi-host server, politeness budget binding (see docstring)
     live = live_http_bench(spark)
 

@@ -16,10 +16,17 @@ interpreter, /root/reference/boris/interpreter.rkt:54-59 — see SURVEY.md §3):
    window (phase 1 bounds any hot host to salt×k survivors, phase 2 is the
    exact top-k) — skew-safe where a naive ``Window.partitionBy(host)`` would
    funnel the hottest host through one task;
-5. fetch: snapshot fetch = join against the pages table (the deterministic
-   analogue of request->response, /root/reference/hypertext-browser/http.rkt:124-136);
-   over-budget URLs defer to the next round — ordering parity is unaffected
-   because results order is path_key order, which is budget-invariant;
+5. fetch, inside the fused fetch+extract stage: each fresh url's DFS-min
+   request goes to the one ``fetch_fn`` contract (a callable, or the live
+   HTTP fetcher of fetch.py — the reference's swappable request service,
+   boris/interpreter/services.rkt:14-15); a snapshot crawl
+   instead joins the pages table's row ahead of the url's requests (the
+   deterministic analogue of request->response,
+   hypertext-browser/http.rkt:124-136; no row = 404).
+   Cache hits replay through the eval-output memo join or the batched body
+   replay, never fetching again. Over-budget URLs defer to the next round —
+   ordering parity is unaffected because results order is path_key order,
+   which is budget-invariant;
 6. evaluate in place: each fetched (or replayed) state fans to the
    navigate node's children, and the Python function that holds the page
    evaluates every non-fetch node (extract/bind/jump) on it to fixpoint
@@ -32,9 +39,11 @@ interpreter, /root/reference/boris/interpreter.rkt:54-59 — see SURVEY.md §3):
    fast-append) — the fused stage's workers write the store and seen
    deltas, the round's output write the results and the next frontier —
    plus a per-round JSON manifest carrying per-partition lineage and
-   fetch/extract metrics. A callable-mode round is a route job plus an
-   eval job; the crawl is resumable from any round (the reference's
-   fs-dict persistence, /root/reference/persistent/main.rkt:37-67).
+   fetch/extract metrics and the round's routing counts. Every round, in
+   every fetch mode, is a route job plus an eval job (a snapshot round
+   also broadcasts its fresh url list to pick their pages); the crawl is
+   resumable from any round (the reference's fs-dict persistence,
+   persistent/main.rkt:37-67).
 
 Parquet + manifest stands in for Iceberg snapshots in this sandbox (no
 Iceberg runtime jar is available); the table layout (append-only deltas +
@@ -82,7 +91,7 @@ _REQ_COLS = [
     "pc", "url_canon", "url_full", "url_hash", "host",
     "referer", "method", "payload", "bindings", "path_key", "cookies",
 ]
-# write tasks of the routing job (see _round_fused)
+# write tasks of the routing job (see _round)
 _ROUTE_PARTS = 4
 
 
@@ -110,7 +119,7 @@ class CrawlEngine:
         host_budgets: DataFrame | None = None,  # (host, budget): per-host k
         fetch_mode: str = "snapshot",  # "snapshot" | "http" | "callable"
         http_timeout: float = 10.0,
-        fetch_fn=None,  # callable mode: list[url] -> list[(body, status)]
+        fetch_fn=None,  # callable mode: see udfs.make_fused_fn's contract
         broadcast_seen_limit: int = 2_000_000,  # max `maybe` rows to broadcast
         table_format: TableFormat | None = None,
     ):
@@ -118,7 +127,8 @@ class CrawlEngine:
         self.workdir = workdir
         # the Iceberg seam: all durable sinks (frontier/seen/store/results)
         # and round commits go through this interface (tableformat.py);
-        # parquet+manifests by default, IcebergFormat on a real cluster
+        # parquet+manifests by default — an Iceberg implementation of the
+        # same interface plugs in here on a real cluster
         self.table = table_format or ParquetManifestFormat(spark, workdir)
         self.politeness_k = politeness_k
         self.n_buckets = n_buckets
@@ -129,18 +139,20 @@ class CrawlEngine:
         self.broadcast_seen_limit = broadcast_seen_limit
         self.robots = robots_rules
         self.host_budgets = host_budgets
-        self.fetch_mode = fetch_mode
-        self.http_timeout = http_timeout
         os.makedirs(workdir, exist_ok=True)
+        # the mode only picks the fetcher: every mode runs the same round
+        # (one fused fetch+extract stage), differing in where responses
+        # come from — fetch_fn, or (snapshot) the pages table's rows
+        # joined ahead of the stage's requests
         self.pages = None
-        if pages_df is not None:
-            # snapshot "fetcher": pages keyed by canonical url
+        if fetch_mode == "snapshot":
+            if pages_df is None:
+                raise ValueError("snapshot mode requires a pages_df")
             html_col = pages_df.schema["html"].dataType.simpleString()
             body = F.col("html").cast("string") if html_col == "binary" else F.col("html")
-            # pre-partitioned by the fetch-join key: the per-round join
-            # against dequeued URLs re-shuffles only the (small) probe side,
-            # never the page bodies — the cached partitioning satisfies the
-            # join's distribution requirement every round
+            # cached once, spread over the cores: every round semi-joins it
+            # in place against a broadcast of the (slim) url list it needs,
+            # so page bodies cross only the eval stage's own exchange
             self.pages = (
                 pages_df.select(
                     F.col("url").alias("url_canon"),
@@ -151,11 +163,14 @@ class CrawlEngine:
                 )
                 .persist()
             )
-        elif fetch_mode == "snapshot":
-            raise ValueError("snapshot mode requires a pages_df")
-        self.fetch_fn = fetch_fn
-        if fetch_mode == "callable" and fetch_fn is None:
+            fetch_fn = None
+        elif fetch_mode == "http":
+            from .fetch import make_http_fetch_fn
+
+            fetch_fn = make_http_fetch_fn(http_timeout)
+        elif fetch_fn is None:
             raise ValueError("callable mode requires a fetch_fn")
+        self.fetch_fn = fetch_fn
 
     # ------------------------------------------------------------ helpers
 
@@ -173,9 +188,6 @@ class CrawlEngine:
         "frontier": REQUEST_SCHEMA,
         "memo": MEMO_SINK_SCHEMA,
     }
-
-    def _append(self, df: DataFrame, sink: str, rnd: int) -> None:
-        self.table.write_delta(df, sink, rnd)
 
     def _read_sink(self, sink: str) -> DataFrame | None:
         return self.table.read_sink(sink, self._SINK_SCHEMAS.get(sink))
@@ -267,23 +279,22 @@ class CrawlEngine:
         # a hub url re-linked at the same depth round after round pays the
         # Python replay once, then joins JVM-side forever after
         self._replay_fn = make_replay_fn(
-            self.node_table,
-            # snapshot mode has no memo sink/adopt — don't emit dead rows
-            emit_memo=self._memo_joinable and self.fetch_mode == "callable",
+            self.node_table, emit_memo=self._memo_joinable
         )
-        if self.fetch_mode == "callable":
-            # Worker-direct sink writes: the Python workers parquet each
-            # fetched url's store row (body) and seen row into these inbox
-            # dirs, which are ADOPTED as the round's store and seen deltas —
-            # bodies never cross Arrow or enter the JVM writer, and neither
-            # sink costs a commit job
-            self._store_inbox = self._path("store_inbox")
-            self._seen_inbox = self._path("seen_inbox")
-            self._fused_fn = make_fused_fn(
-                self.node_table, self.fetch_fn,
-                store_dir=self._store_inbox, seen_dir=self._seen_inbox,
-                n_buckets=self.n_buckets, emit_memo=self._memo_joinable,
-            )
+        # Worker-direct sink writes: the Python workers parquet each fetched
+        # url's store row (body) and seen row into these inbox dirs, which
+        # are ADOPTED as the round's store and seen deltas — bodies never
+        # cross Arrow or enter the JVM writer, and neither sink costs a
+        # commit job. A snapshot crawl writes no store rows: its pages
+        # table already is the body source (_body_source)
+        self._store_inbox = self._path("store_inbox")
+        self._seen_inbox = self._path("seen_inbox")
+        self._fused_fn = make_fused_fn(
+            self.node_table, self.fetch_fn,
+            store_dir=self._store_inbox if self.pages is None else None,
+            seen_dir=self._seen_inbox,
+            n_buckets=self.n_buckets, emit_memo=self._memo_joinable,
+        )
 
         # driver-tracked seen-set size (accumulated from the per-round delta
         # footer counts — no jobs): picks the seen-filter strategy each
@@ -365,7 +376,7 @@ class CrawlEngine:
                 "frontier", rnd, REQUEST_SCHEMA
             ).select(*_REQ_COLS)
             rt0 = time.time()
-            _, fetched, n_results, metrics = self._round(
+            fetched, n_results, metrics = self._round(
                 requests, rnd, n_req
             )
             total_fetched += fetched
@@ -402,6 +413,20 @@ class CrawlEngine:
         return max(1, min(full, (n_rows + rows_per_part - 1) // rows_per_part))
 
     def _round(self, requests: DataFrame, rnd: int, n_req: int):
+        """One crawl round, the same in every fetch mode. FRESH urls run
+        through the fused fetch+extract mapInPandas stage (fetch_fn called
+        exactly once per url per crawl, or the snapshot's page row joined
+        ahead of the url's requests), whose workers write the round's seen
+        delta and — when a fetcher ran — the bodies to the store sink, the
+        crash-resumable page cache. CACHE-HIT traversals (urls fetched in
+        an earlier round, or robots-blocked replays) never reach fetch_fn:
+        they take the JVM memo join or the batched body replay
+        (``_replay``) — the memoized replay of browser-services.rkt:36-40,
+        correct for live/non-deterministic fetchers and never bypassing
+        the politeness budget. All routing frames are slim; body bytes flow
+        fetch→store once, and per replaying round each body crosses one
+        url_canon exchange + one Arrow boundary — never a per-path join or
+        a dedup shuffle. Returns (fetched, results, manifest metrics)."""
         import time as _t
         _marks = [("start", _t.time())]
         _mark = lambda label: _marks.append((label, _t.time()))  # noqa: E731
@@ -421,23 +446,16 @@ class CrawlEngine:
         # runs at the same width — and, co-partitioned with `requests`,
         # the url_canon joins need no exchange on that side at all.
         n_part = self._round_parts(n_req)
-        self._cur_round_parts = n_part
         self.spark.conf.set("spark.sql.shuffle.partitions", str(n_part))
         requests = requests.repartition(n_part, "url_canon").persist()
 
         # one fetch candidate per distinct url, priority = lex-min path_key
-        # url_hash/host are pure functions of url_canon (any row works);
-        # url_full/method/payload belong to the DFS-min request — min_by on
-        # the path key makes the fetch's request deterministic when e.g. a
-        # GET link and a POST form target the same url in one round
+        # (url_hash/host are pure functions of url_canon: any row works);
+        # the fused stage fetches with the url's DFS-min request row
         urls = requests.groupBy("url_canon").agg(
             F.min("path_key").alias("pk"),
             F.first("url_hash").alias("url_hash"),
             F.first("host").alias("host"),
-            F.min_by("url_full", "path_key").alias("url_full"),
-            F.min_by("method", "path_key").alias("method"),
-            F.min_by("payload", "path_key").alias("payload"),
-            F.min_by("cookies", "path_key").alias("cookies"),
         ).persist()
 
         _mark("requests_shuffle")
@@ -496,122 +514,6 @@ class CrawlEngine:
         else:
             selected = unseen
 
-        if self.fetch_mode == "callable":
-            return self._round_fused(
-                requests, urls, unseen, seen_hits, blocked, selected,
-                rnd, _mark, _marks,
-            )
-
-        fetched = self._fetch(selected, rnd).persist()
-
-        seen_delta = fetched.select(
-            "url_hash", "url_canon", "host", "bucket", "status",
-            F.col("pk").alias("path_first"),
-        )
-        if blocked is not None:
-            seen_delta = seen_delta.unionByName(
-                blocked.select(
-                    "url_hash", "url_canon", "host", "bucket", "status",
-                    F.col("pk").alias("path_first"),
-                )
-            )
-        self._append(seen_delta, "seen", rnd)
-        _mark("fetch+seen_write")
-
-        n_fetched, lineage = self._fold_seen_delta(rnd)
-        _mark("delta_readback")
-
-        # requests whose url is now fetched/blocked/previously-seen proceed;
-        # the rest (over politeness budget) defer to the next round. Routing
-        # is decided on SLIM key frames (no bodies): every persisted frame in
-        # the round carries keys and metadata only, and page bodies flow
-        # exactly once per round along cache -> join -> Arrow -> Python,
-        # never through a persist or an extra shuffle (the property that
-        # matters at 100 TB: body bytes move once).
-        decided = (
-            fetched.select("url_canon")
-            .unionByName(seen_hits.select("url_canon"))
-        )
-        if blocked is not None:
-            decided = decided.unionByName(blocked.select("url_canon"))
-        routed = requests.join(
-            decided.withColumn("_ok", F.lit(True)), "url_canon", "left"
-        ).persist()
-        self._round_persists.append(routed)
-        ok = routed.where(F.col("_ok"))
-        deferred = routed.where(F.col("_ok").isNull())
-
-        # attach bodies via the batched replay (_replay): slim request rows
-        # url-sorted behind the pages table's single row per url — each
-        # page body crosses one exchange and one Arrow boundary, never a
-        # per-path join. Missing page (404) => empty body; robots-blocked
-        # urls (any round's block: the seen sink already holds this round's
-        # delta) traverse with an empty body even when the snapshot table
-        # has content for them.
-        if self.robots is not None:
-            blocked_all = self._read_sink("seen").where(F.col("status") == 999)
-            ok = (
-                ok.join(
-                    blocked_all.select("url_canon", F.lit(True).alias("_pblk")),
-                    "url_canon", "left",
-                )
-                .withColumn("_blk", F.coalesce(F.col("_pblk"), F.lit(False)))
-                .drop("_pblk")
-            )
-        else:
-            ok = ok.withColumn("_blk", F.lit(False))
-        out1 = self._replay(ok, self._cur_round_parts)
-
-        # results/downloads delta rnd+1: the root's driver-side evaluation
-        # owns delta 0
-        _mark("pre_cascade")
-        n_results, out_path = self._cascade(out1, rnd + 1)
-        _mark("cascade")
-        req_dir = os.path.join(out_path, "kind=request")
-        new_requests = (
-            self.spark.read.schema(REQUEST_SCHEMA).parquet(req_dir)
-            if os.path.isdir(req_dir) else self._empty(REQUEST_SCHEMA)
-        )
-        frontier_next = new_requests.unionByName(
-            deferred.select(*_REQ_COLS)
-        )
-        self._checkpoint_frontier(frontier_next, rnd + 1)
-        _mark("frontier_ckpt")
-
-        requests.unpersist()
-        urls.unpersist()
-        fetched.unpersist()
-        for df in self._round_persists:
-            df.unpersist()
-        self._drop_tmp_sinks()
-        metrics = {
-            "fetched": n_fetched,
-            "results": n_results,
-            "partitions": lineage,
-            "phases": {
-                b: round(tb - ta, 2)
-                for (a, ta), (b, tb) in zip(_marks, _marks[1:])
-            },
-        }
-        return frontier_next, n_fetched, n_results, metrics
-
-    def _round_fused(
-        self, requests, urls, unseen, seen_hits, blocked, selected,
-        rnd, _mark, _marks,
-    ):
-        """Callable-mode round middle. FRESH urls run through the fused
-        fetch+extract mapInPandas stage (fetch_fn called exactly once per
-        url per crawl), whose workers write the bodies to the store sink —
-        the crash-resumable page cache — and the round's seen delta.
-        CACHE-HIT traversals (urls fetched in an earlier round, or
-        robots-blocked replays) never reach fetch_fn: they evaluate through
-        the batched store replay (``_replay``) — the memoized replay of
-        browser-services.rkt:36-40, correct for live/non-deterministic
-        fetchers (round 1 re-fetched cache hits, bypassing the politeness
-        budget). All routing frames are slim; body bytes flow
-        fetch→store once, and per replaying round each body crosses
-        one url_canon exchange + one Arrow boundary — never a per-path
-        join or a dedup shuffle."""
         decided = selected.select(
             "url_canon", F.lit(True).alias("_fresh"), F.lit(False).alias("_blk")
         ).unionByName(
@@ -740,7 +642,6 @@ class CrawlEngine:
             d[4:]: self._pq_rows(os.path.join(routed_path, d))
             for d in os.listdir(routed_path) if d.startswith("seg=")
         }
-        self._n_py_replay = segs.get("pyrep", 0)
         _ROUTED_SCHEMA = REQUEST_SCHEMA + ", _blk boolean"
 
         def _seg(name):
@@ -750,26 +651,21 @@ class CrawlEngine:
 
         _mark("route")
 
-        # repartition restores the url_canon co-location the parquet
-        # round-trip may lose (a row-group split could put one url's paths
-        # in two read partitions — and fetch_fn MUST fire once per url);
-        # sortWithinPartitions then keeps all paths of one url consecutive,
-        # so the fused stage's eval memo is O(1): one fetch + one node eval
-        # per (url, pc, bindings), replayed for every further path
-        # (JVM-side sort of slim rows, one slim shuffle)
+        # the fused stage (_url_stage): one url_canon exchange restores the
+        # co-location the parquet round-trip may lose (fetch_fn MUST fire
+        # once per url), and the url sort keeps a url's paths consecutive,
+        # so its eval memo is O(1): one fetch + one node eval per (url, pc,
+        # bindings), replayed for every further path. A snapshot crawl's
+        # page rows lead their url's requests through the same exchange.
+        # Width follows the fresh row count (free, from the routed parquet
+        # footers): tiny rounds stop paying cores-many task launches for a
+        # handful of fetches
         outs = []
         if segs.get("fresh", 0):
-            outs.append(
-                _seg("fresh").select(*_REQ_COLS)
-                .repartition(
-                    # width follows the fresh row count (free, from the
-                    # routed parquet footers): tiny rounds stop paying
-                    # cores-many task launches for a handful of fetches
-                    self._round_parts(segs.get("fresh", 0)), "url_canon"
-                )
-                .sortWithinPartitions("url_canon", "pc", "bindings")
-                .mapInPandas(self._fused_fn, CASCADE_SCHEMA)
-            )
+            outs.append(self._url_stage(
+                _seg("fresh").select(*_REQ_COLS),
+                self._round_parts(segs["fresh"]), self._fused_fn, self.pages,
+            ))
         # cache-hit replay (_replay): the url's single store row leads its
         # slim replay rows through one batched Python stage — identical
         # semantics to a fresh fetch because fetch memoization replays the
@@ -833,7 +729,8 @@ class CrawlEngine:
         # wrote (adopt_delta/adopt_parts = Iceberg add-files fast-append,
         # tableformat.py) — no commit job re-reads or re-encodes a byte:
         # - store: the fused stage's workers parquet'd each fetched url's
-        #   body into the store inbox (the page cache replays read);
+        #   body into the store inbox (the page cache replays read; a
+        #   snapshot crawl writes none — its pages table is that cache);
         # - memo: the round output's kind=memo partition (slim rows);
         # - seen: the workers also wrote each fetched url's seen row (keys,
         #   status, bucket, DFS-min path over the url's rows this round —
@@ -880,62 +777,19 @@ class CrawlEngine:
         metrics = {
             "fetched": n_fetched,
             "results": n_results,
-            "py_replay_rows": getattr(self, "_n_py_replay", None),
+            # every request row's route this round (sums to `requests`)
+            "routed": {
+                k: segs.get(k, 0)
+                for k in ("fresh", "jvmrep", "pyrep", "deferred")
+            },
+            "py_replay_rows": segs.get("pyrep", 0),
             "partitions": lineage,
             "phases": {
                 b: round(tb - ta, 2)
                 for (a, ta), (b, tb) in zip(_marks, _marks[1:])
             },
         }
-        return None, n_fetched, n_results, metrics
-
-    def _fetch(self, selected: DataFrame, rnd: int) -> DataFrame:
-        """Fetch the dequeued URLs. Snapshot mode joins the pages table
-        (missing page → 404, empty body). HTTP mode fetches in mapInPandas
-        batches (the distributed request->response,
-        /root/reference/hypertext-browser/http.rkt:124-136) and persists
-        bodies to the store sink, which the batched replay reads."""
-        if self.fetch_mode == "snapshot":
-            # status probe against page KEYS only — bodies stay out of the
-            # persisted fetch frame and reach Python once, through the
-            # batched replay (_replay)
-            page_keys = self.pages.select(
-                "url_canon", F.lit(True).alias("_hit")
-            )
-            return (
-                selected.join(page_keys, "url_canon", "left")
-                .withColumn("status", F.when(F.col("_hit").isNull(), 404).otherwise(200))
-                .drop("_hit")
-                .withColumn(
-                    "bucket", F.pmod(F.col("url_hash"), F.lit(self.n_buckets)).cast("int")
-                )
-            )
-        from .fetch import make_http_fetch_fn
-
-        fetched = selected.repartition(
-            self.spark.sparkContext.defaultParallelism, "host"
-        ).mapInPandas(
-            make_http_fetch_fn(self.http_timeout),
-            "url_canon string, pk string, url_hash long, host string, "
-            "url_full string, method string, payload string, "
-            "body string, status int, head string",
-        ).withColumn(
-            "bucket", F.pmod(F.col("url_hash"), F.lit(self.n_buckets)).cast("int")
-        )
-        # bodies persist to the store sink (the crash-resumable page cache —
-        # the reference's fs-dict, persistent/main.rkt:37-67)
-        self._append(
-            fetched.select("url_canon", "body", "status", "head"), "store", rnd
-        )
-        # slim return: bodies live in the store sink (= the replay's body
-        # source); only keys + status flow onward
-        return self.table.delta_df("store", rnd).select(
-            "url_canon", "status"
-        ).join(
-            selected, "url_canon"
-        ).withColumn(
-            "bucket", F.pmod(F.col("url_hash"), F.lit(self.n_buckets)).cast("int")
-        )
+        return n_fetched, n_results, metrics
 
     def _filter_unseen(self, urls: DataFrame, n_candidates: int | None = None) -> DataFrame:
         seen = self._read_sink("seen")
@@ -1164,63 +1018,56 @@ class CrawlEngine:
 
     # ------------------------------------------------------- checkpointing
 
+    def _url_stage(
+        self, rows: DataFrame, width: int, fn, bodies: DataFrame | None
+    ) -> DataFrame:
+        """A url-sorted ``mapInPandas`` over *rows*: one url_canon exchange
+        of *width* partitions, then sorted so each url's rows are
+        consecutive. With *bodies*, the slim rows (``_src=1``, no body) are
+        unioned with each of their urls' single body row (``_src=0``),
+        semi-joined to the url set via a broadcast of the SLIM url list,
+        and sorted ahead of them — a page body crosses exactly one shuffle
+        and one Arrow boundary and is never copied per path."""
+        order = ["url_canon", "pc", "bindings"]
+        if bodies is not None:
+            # body rows fill the int64 columns with 0: a null would make
+            # pandas widen the column to float64, truncating url hashes
+            zeros = [
+                F.lit(0).cast("long").alias(f.name) for f in rows.schema.fields
+                if f.dataType.simpleString() == "bigint"
+            ]
+            rows = rows.withColumn("_src", F.lit(1)).unionByName(
+                bodies.join(
+                    F.broadcast(rows.select("url_canon").distinct()),
+                    "url_canon", "left_semi",
+                ).select("*", F.lit(0).alias("_src"), *zeros),
+                allowMissingColumns=True,
+            )
+            order.insert(1, "_src")
+        return (
+            rows.repartition(width, "url_canon")
+            .sortWithinPartitions(*order)
+            .mapInPandas(fn, CASCADE_SCHEMA)
+        )
+
     def _replay(self, rows: DataFrame, width: int) -> DataFrame:
-        """Batched cache-hit replay (make_replay_fn): the slim replay rows
-        (``_src=1``, no body) unioned with each replayed url's single body
-        row from ``_body_source`` (``_src=0``), semi-joined to the replay
-        url set via a broadcast of the SLIM url list. One url_canon
-        exchange of *width* partitions, then url-sorted so each url's body
-        row leads its replay rows into one ``mapInPandas`` — a page body
-        crosses exactly one shuffle and one Arrow boundary and is never
-        copied per path."""
+        """Batched cache-hit replay (make_replay_fn): each replayed url's
+        body row from ``_body_source`` leads its slim replay rows."""
         rows = rows.select(
             "pc", "url_canon", "url_full", "bindings", "path_key",
-            "method", "cookies", "_blk", F.lit(1).alias("_src"),
+            "method", "cookies", "_blk",
         )
-        bodies = self._body_source().join(
-            F.broadcast(rows.select("url_canon").distinct()),
-            "url_canon", "left_semi",
-        ).withColumn("_src", F.lit(0))
-        return (
-            rows.unionByName(bodies, allowMissingColumns=True)
-            .repartition(width, "url_canon")
-            .sortWithinPartitions("url_canon", "_src", "pc", "bindings")
-            .mapInPandas(self._replay_fn, CASCADE_SCHEMA)
-        )
+        return self._url_stage(rows, width, self._replay_fn, self._body_source())
 
     def _body_source(self) -> DataFrame:
         """(url_canon, body, head) for the cache-hit replay: the pages
-        table (no head) in snapshot mode, the fetched store otherwise."""
-        if self.fetch_mode == "snapshot":
+        table (no head) in a snapshot crawl, the fetched store otherwise."""
+        if self.pages is not None:
             return self.pages.withColumn("head", F.lit(None).cast("string"))
         store = self._read_sink("store")
         if store is None:
             return self._empty("url_canon string, body string, head string")
         return store.select("url_canon", "body", "head")
-
-    def _checkpoint_frontier(self, df: DataFrame, rnd: int) -> None:
-        # The parquet round-trip is the lineage break. Repartitioning here is
-        # load-bearing twice over: request rows are tiny (no bodies), the
-        # frontier's file count sets the probe-side partitioning of next
-        # round's broadcast joins (without it a narrow round output
-        # propagates 1-2 partitions into the CPU-heavy python stages), and it
-        # must be ROUND-ROBIN — partitioning by host would put the Zipf hot
-        # host's half of the frontier into one straggler task.
-        # part="full": the frontier sink's deltas are part-structured
-        # because callable rounds ADOPT theirs from the routing/eval
-        # outputs (adopt_parts) — every delta must share the layout.
-        # Width: the next round re-partitions adaptively on read (see
-        # _round), so the old propagate-narrow-partitioning concern is
-        # handled there; here the width only sets write-task + file count,
-        # scaled with the current round (next frontier ≈ branching × it).
-        w = min(
-            self.spark.sparkContext.defaultParallelism,
-            max(1, 2 * self._cur_round_parts),
-        )
-        self.table.write_delta(
-            df.repartition(w),
-            "frontier", rnd, part="full",
-        )
 
     def _drop_tmp_sinks(self) -> None:
         """Delete the round's transient outputs (routing segments and the

@@ -1,4 +1,4 @@
-"""Live HTTP fetcher: distributed request->response in mapInPandas batches.
+"""Live HTTP fetcher: a batch ``fetch_fn`` for the crawl's fused stage.
 
 Reproduces the reference's fetch semantics
 (/root/reference/hypertext-browser/http.rkt:79-136) per URL:
@@ -10,12 +10,14 @@ Reproduces the reference's fetch semantics
 - the response body decoded as text (the reference's body is a string,
   hypertext-browser/base.rkt:30).
 
-The reference fetches one URL at a time on one thread; here each executor
-fetches its Arrow batch concurrently via a small thread pool (network-bound
-work — threads, not processes), and the engine's per-host politeness budget
-upstream bounds the per-round load per site. Rows are pre-partitioned by
-host so one executor talks to one host's sites per task, and connection
-reuse is local to the task.
+The reference fetches one URL at a time on one thread. Here the fetcher is
+a plain ``fetch_fn`` like any other (the reference's swappable request
+service, boris/interpreter/services.rkt:14-15): the crawl's fused
+fetch+extract ``mapInPandas`` stage calls it once per Arrow batch with the
+batch's fresh urls and their DFS-min requests, and it fetches them
+concurrently on a small thread pool (network-bound work — threads, not
+processes). The engine's per-host politeness budget upstream bounds the
+per-round load per site.
 
 Exercised end-to-end against a local HTTP server in
 tests/test_http_fetch.py (the reference tests the same way via its
@@ -28,10 +30,7 @@ import json
 import urllib.error
 import urllib.parse
 import urllib.request
-from collections.abc import Iterator
 from concurrent.futures import ThreadPoolExecutor
-
-import pandas as pd
 
 MAX_REDIRECTS = 8
 
@@ -126,34 +125,25 @@ def fetch_one(
 
 
 def make_http_fetch_fn(timeout: float = 10.0, threads: int = 8):
-    def fetch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """A batch ``fetch_fn(urls, requests)`` over :func:`fetch_one`: each
+    request is the url's ``(url_full, method, payload, cookies_json)``.
+    It fetches ``url_full`` (the canonical key drops the port), sends the
+    fetching branch's jar (matching cookies go out and Set-Cookie folds
+    across the redirect chain, head.rkt:87-98), and returns ``(body,
+    status, head)`` per url."""
+
+    def fetch(urls: list[str], requests: list[tuple]) -> list[tuple]:
         from ..kernel.cookies import jar_from_json
 
+        def one(req):
+            full, method, payload, cookies_json = req
+            status, body, head = fetch_one(
+                full, method, payload, None, timeout,
+                jar=jar_from_json(cookies_json),
+            )
+            return body, status, head
+
         with ThreadPoolExecutor(max_workers=threads) as pool:
-            for pdf in batches:
-                cookies_col = (
-                    pdf["cookies"] if "cookies" in pdf.columns else [None] * len(pdf)
-                )
-                results = list(
-                    pool.map(
-                        # the fetching branch's jar rides in: matching
-                        # cookies are sent and Set-Cookie folds across the
-                        # redirect chain (head.rkt:87-98)
-                        lambda r: fetch_one(
-                            r[0], r[1] or "GET", r[2], None, timeout,
-                            jar=jar_from_json(r[3]),
-                        ),
-                        zip(pdf["url_full"], pdf["method"], pdf["payload"],
-                            cookies_col),
-                    )
-                )
-                out = pdf.copy()
-                out["status"] = [r[0] for r in results]
-                out["body"] = [r[1] for r in results]
-                out["head"] = [json.dumps(list(r[2])) for r in results]
-                yield out[
-                    ["url_canon", "pk", "url_hash", "host", "url_full",
-                     "method", "payload", "body", "status", "head"]
-                ]
+            return list(pool.map(one, requests))
 
     return fetch

@@ -5,9 +5,13 @@ store / results sinks. This sandbox ships no Iceberg runtime jar, so the
 engine runs against a :class:`TableFormat` interface whose default
 implementation (:class:`ParquetManifestFormat`) is append-only parquet
 deltas partitioned by ``round`` plus one JSON manifest per committed round —
-and every method documents its 1:1 Iceberg counterpart. Swapping
-:class:`IcebergFormat` in on a real cluster changes no engine logic: the
-engine never touches paths or manifests directly, only this seam.
+and every method maps 1:1 onto an Iceberg operation (table below). The
+seam is where an Iceberg implementation plugs in on a real cluster (the
+``iceberg-spark-runtime`` jar plus a configured catalog,
+``spark.sql.catalog.<name>=org.apache.iceberg.spark.SparkCatalog``), with
+no engine change: the engine never touches paths or manifests directly,
+only this seam. :class:`LocalCatalogFormat` runs the catalog-table shape of
+that contract here.
 
 Mapping (ParquetManifestFormat → Iceberg):
 
@@ -16,6 +20,8 @@ seam method          Iceberg counterpart
 ===================  ====================================================
 write_delta          ``df.writeTo(table).append()`` (one snapshot)
 adopt_delta          ``add_files`` / fast-append of pre-written data files
+adopt_parts          ONE transaction ``add_files``-importing every source
+                     directory, committed as a single fast-append snapshot
 read_sink            table scan (all snapshots)
 delta_rows           snapshot summary ``added-records``
 read_delta_pandas    incremental scan between snapshot N-1 and N
@@ -47,15 +53,8 @@ def write_json_atomic(path: str, obj) -> None:
 class TableFormat:
     """Durable-sink operations a crawl round needs; see module docstring."""
 
-    def write_delta(
-        self, df: DataFrame, sink: str, rnd: int, part: str | None = None
-    ) -> None:
-        """Write sink's round-``rnd`` delta. *part* names a sub-delta
-        component: a sink whose deltas are ever composed from multiple
-        adopted directories (``adopt_parts``) must write its job-produced
-        deltas under a part name too, so every delta of that sink has the
-        same one-level layout (Spark's partition discovery rejects mixed
-        depths). Formats without a directory layout ignore *part*."""
+    def write_delta(self, df: DataFrame, sink: str, rnd: int) -> None:
+        """Write *df* as sink's round-``rnd`` delta (a rerun replaces it)."""
         raise NotImplementedError
 
     def adopt_delta(self, src_dir: str, sink: str, rnd: int) -> bool:
@@ -141,24 +140,8 @@ class ParquetManifestFormat(TableFormat):
     def _path(self, *parts: str) -> str:
         return os.path.join(self.workdir, *parts)
 
-    def write_delta(
-        self, df: DataFrame, sink: str, rnd: int, part: str | None = None
-    ) -> None:
-        if part is None:
-            df.write.mode("overwrite").parquet(self._path(sink, f"round={rnd}"))
-            return
-        # part-structured sink: clear the WHOLE round delta first (a rerun
-        # of an interrupted round must not leave stale sibling parts from
-        # the previous attempt's adopt_parts), then write under fsrc=part
-        # so every delta of the sink has the same one-level layout
-        import shutil
-
-        rdir = self._path(sink, f"round={rnd}")
-        if os.path.isdir(rdir):
-            shutil.rmtree(rdir)
-        df.write.mode("overwrite").parquet(
-            os.path.join(rdir, f"fsrc={part}")
-        )
+    def write_delta(self, df: DataFrame, sink: str, rnd: int) -> None:
+        df.write.mode("overwrite").parquet(self._path(sink, f"round={rnd}"))
 
     def adopt_delta(self, src_dir: str, sink: str, rnd: int) -> bool:
         import shutil
@@ -358,8 +341,8 @@ class LocalCatalogFormat(TableFormat):
     catalog resolves parquet tables as V1 at write time ("Cannot write
     into v1 table") and no V2 file catalog ships with PySpark — so
     :meth:`_append_table` routes through ``insertInto`` (same append
-    semantics) unless ``v2_appends`` is set, which is exactly what
-    :class:`IcebergFormat` does on a cluster with a real catalog.
+    semantics) unless ``v2_appends`` is set, which is exactly what an
+    Iceberg implementation does on a cluster with a real catalog.
     """
 
     def __init__(
@@ -397,11 +380,7 @@ class LocalCatalogFormat(TableFormat):
             cols = self.spark.table(t).columns
             df.select(*cols).write.mode("overwrite").insertInto(t)
 
-    def write_delta(
-        self, df: DataFrame, sink: str, rnd: int, part: str | None = None
-    ) -> None:
-        # *part* is a directory-layout concern; a catalog table has rows,
-        # not directories, so it is ignored (Iceberg likewise)
+    def write_delta(self, df: DataFrame, sink: str, rnd: int) -> None:
         from pyspark.sql import functions as F
 
         df = df.withColumn("round", F.lit(rnd))
@@ -532,29 +511,3 @@ class LocalCatalogFormat(TableFormat):
     def drop(self) -> None:
         """Drop every sink table + the database (test cleanup)."""
         self.spark.sql(f"DROP DATABASE IF EXISTS {self.db} CASCADE")
-
-
-class IcebergFormat(TableFormat):
-    """The real-cluster implementation: each sink is an Iceberg table, each
-    crawl round one snapshot commit (module docstring table). Requires the
-    ``iceberg-spark-runtime`` jar + a configured catalog, neither of which
-    exists in this sandbox — constructing it here raises, which IS the
-    documented boundary: the engine is Iceberg-ready at the interface, the
-    jar is the only missing piece.
-
-    Frontier-delta mapping: ``write_delta(part=...)`` is a plain append
-    (rows, not directories — *part* is ignored, as in
-    :class:`LocalCatalogFormat`); ``adopt_parts`` is ONE transaction that
-    ``add_files``-imports every source directory and commits a single
-    fast-append snapshot — the data files written by the routing /
-    cascade stages' own tasks become the next round's frontier without a
-    byte rewritten."""
-
-    def __init__(self, spark: SparkSession, catalog: str, namespace: str):
-        raise NotImplementedError(
-            "IcebergFormat needs the iceberg-spark-runtime jar and a "
-            "catalog; this sandbox has neither. On a real cluster: "
-            "spark.sql.catalog.<name>=org.apache.iceberg.spark.SparkCatalog,"
-            " then each seam method maps as documented in "
-            "boris_spark/engine/tableformat.py's module docstring."
-        )

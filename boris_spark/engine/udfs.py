@@ -373,7 +373,7 @@ def _emit_memo(
 def make_fused_fn(
     node_table: dict[int, NodeSpec],
     fetch_fn,
-    store_dir: str,
+    store_dir: str | None,
     seen_dir: str,
     n_buckets: int,
     emit_memo: bool = False,
@@ -385,13 +385,24 @@ def make_fused_fn(
     the crawler instead (they never reach fetch_fn, so a live fetcher is
     called exactly once per url per crawl and the per-host politeness budget
     is never bypassed — the memoized replay of browser-services.rkt:36-40).
-    ``fetch_fn(urls: list[str]) -> list[(body, status)]`` is the pluggable
-    fetcher (the reference's swappable request service,
+    ``fetch_fn(urls: list[str]) -> list[(body, status[, head])]`` (head =
+    (status line, header alist); without one, file-style) is the
+    pluggable fetcher (the reference's swappable request service,
     /root/reference/boris/interpreter/services.rkt:14-15) — a deterministic
-    closed-form page function in the bench, a live HTTP batch fetcher at
-    deploy. Page bodies are materialized INSIDE the Python worker and
-    evaluated there (fan-out to the navigate node's children); bodies never
-    cross the Arrow boundary, enter a shuffle or the block cache.
+    closed-form page function in the bench, ``fetch.make_http_fetch_fn``
+    for live HTTP. Extra inputs are declared by parameter NAME, never by
+    arity (which would feed them into an unrelated optional parameter,
+    e.g. batch_size=100): ``cookie_headers`` gets each url's Cookie header
+    value, ``requests`` each url's ``(url_full, method, payload,
+    cookies_json)`` — both taken from the url's DFS-min request row (the
+    branch the reference would fetch with first; later branches replay the
+    memoized response with their own jars). With ``fetch_fn=None`` the
+    responses arrive IN-BAND instead (the pages-table snapshot): each url's
+    single page row (``_src=0``, ``body``) leads its request rows
+    (``_src=1``), status 200, and a url with no page row is ``("", 404)``.
+    Page bodies are materialized INSIDE the Python worker and evaluated
+    there (fan-out to the navigate node's children); a fetched body never
+    crosses the Arrow boundary, enters a shuffle or the block cache.
 
     Rows arrive url-partitioned and url-sorted, so a url's rows are
     consecutive: the url is complete once the next url starts (the
@@ -402,7 +413,8 @@ def make_fused_fn(
     deterministic):
 
     - *store_dir*: (url_canon, body, status, head) — the crash-resumable
-      page cache that also feeds cache-hit replays;
+      page cache that also feeds cache-hit replays (None for the snapshot,
+      whose pages table already is that cache);
     - *seen_dir*: (url_hash, url_canon, host, bucket, status, path_first)
       — the round's seen delta, ``bucket = url_hash % n_buckets`` (Python
       ``%`` equals ``pmod`` for a positive modulus) and ``path_first`` the
@@ -418,23 +430,54 @@ def make_fused_fn(
 
     import inspect
 
-    # Cookie support is declared EXPLICITLY: either an attribute flag
-    # (``fetch_fn.wants_cookies = True``) or a parameter literally named
-    # ``cookie_headers``. Arity-sniffing would silently feed the header list
-    # into an unrelated optional second parameter (e.g. batch_size=100).
     try:
-        _params = inspect.signature(fetch_fn).parameters
+        _params = inspect.signature(fetch_fn).parameters if fetch_fn else {}
     except (TypeError, ValueError):
         _params = {}
-    fetch_wants_cookies = bool(
-        getattr(fetch_fn, "wants_cookies", False) or "cookie_headers" in _params
-    )
+    wants_cookies = "cookie_headers" in _params
+    wants_requests = "requests" in _params
+
+    def fetch(pdf: pd.DataFrame, carry: dict) -> dict[str, tuple]:
+        """This batch's responses for the urls *carry* does not hold."""
+        from ..kernel.cookies import cookies_ref, cookies_to_header, jar_from_json
+
+        if fetch_fn is None:
+            page = pdf["_src"] == 0
+            return {
+                u: (b if isinstance(b, str) else "", 200)
+                for u, b in zip(pdf["url_canon"][page], pdf["body"][page])
+            }
+        # per url, the DFS-min request row: (path, url_full, method,
+        # payload, jar)
+        fetch_row: dict[str, tuple] = {}
+        for url, full, path, method, payload, cj in zip(
+            pdf["url_canon"], pdf["url_full"], pdf["path_key"], pdf["method"],
+            pdf["payload"], pdf["cookies"],
+        ):
+            cur = fetch_row.get(url)
+            if cur is None or (path or "") < cur[0]:
+                fetch_row[url] = (path or "", full, method, payload, cj)
+        need = sorted(u for u in fetch_row if u not in carry)
+        if not need:
+            return {}
+        kw = {}
+        if wants_requests:
+            kw["requests"] = [
+                (fetch_row[u][1] or u, fetch_row[u][2] or "GET",
+                 fetch_row[u][3], fetch_row[u][4])
+                for u in need
+            ]
+        if wants_cookies:
+            kw["cookie_headers"] = [
+                cookies_to_header(
+                    cookies_ref(jar_from_json(fetch_row[u][4]), fetch_row[u][1] or u)
+                )
+                for u in need
+            ]
+        return dict(zip(need, fetch_fn(need, **kw)))
 
     def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernel.cookies import (
-            cookies_ref, cookies_to_header, jar_fold_head, jar_from_json,
-            jar_to_json,
-        )
+        from ..kernel.cookies import jar_fold_head, jar_from_json, jar_to_json
 
         memo: dict = {}
         memo_states: set = set()
@@ -452,38 +495,15 @@ def make_fused_fn(
             out: list[dict] = []
             store_rows: list[tuple] = []
             seen_rows: list[tuple] = []
-            cookies_col = (
-                pdf["cookies"] if "cookies" in pdf.columns else [None] * len(pdf)
-            )
-            # the fetch uses the DFS-min request's jar per url (the branch
-            # the reference would fetch with first); later branches replay
-            # the memoized response with their own jars
-            fetch_row: dict[str, tuple] = {}
-            for url, full, path, cj in zip(
-                pdf["url_canon"], pdf["url_full"], pdf["path_key"], cookies_col
-            ):
-                cur = fetch_row.get(url)
-                if cur is None or (path or "") < cur[0]:
-                    fetch_row[url] = (path or "", full, cj)
-            need = sorted(u for u in fetch_row if u not in carry)
-            if fetch_wants_cookies:
-                headers = [
-                    cookies_to_header(
-                        cookies_ref(jar_from_json(fetch_row[u][2]), fetch_row[u][1] or u)
-                    )
-                    for u in need
-                ]
-                resps = fetch_fn(need, headers) if need else []
-            else:
-                # fetch_fn returns (body, status) — file-style empty head —
-                # or (body, status, head), head = (status line, header alist)
-                resps = fetch_fn(need) if need else []
-            fetched = dict(zip(need, resps))
+            last_url = pdf["url_canon"].iloc[-1] if len(pdf) else None
+            fetched = fetch(pdf, carry)
             fetched.update(carry)
+            if fetch_fn is None:
+                pdf = pdf[pdf["_src"] == 1]
             for pc, url, url_full, url_hash, host, bindings_json, path, method, cj in zip(
                 pdf["pc"], pdf["url_canon"], pdf["url_full"], pdf["url_hash"],
                 pdf["host"], pdf["bindings"], pdf["path_key"], pdf["method"],
-                cookies_col,
+                pdf["cookies"],
             ):
                 resp = fetched.get(url, ("", 404))
                 body, status = resp[0], resp[1]
@@ -498,10 +518,11 @@ def make_fused_fn(
                     # duplicate-free by construction
                     if seen_row is not None:
                         seen_rows.append(tuple(seen_row))
-                    head_json = (
-                        json.dumps(list(head)) if head is not None else None
-                    )
-                    store_rows.append((url, body, int(status), head_json))
+                    if store_dir is not None:
+                        head_json = (
+                            json.dumps(list(head)) if head is not None else None
+                        )
+                        store_rows.append((url, body, int(status), head_json))
                     seen_row = [
                         int(url_hash), url, host, int(url_hash) % n_buckets,
                         int(status), path,
@@ -539,8 +560,7 @@ def make_fused_fn(
                         out, row_start, path, memo_states, url,
                         (int(pc), url_full, bindings_json, method, cj_in),
                     )
-            if len(pdf):
-                last_url = pdf["url_canon"].iloc[-1]
+            if last_url is not None:
                 carry = (
                     {last_url: fetched[last_url]} if last_url in fetched else {}
                 )

@@ -629,7 +629,7 @@ def test_empty_replay_skips_store_scan(spark, tmp_path):
     an empty probe side to an EmptyRelation, so a body-bearing scan behind
     it never runs. The engine's primary gate is now driver-side (the fused
     round prunes the cogroup branch when the seg=pyrep parquet footers say
-    0 rows, crawler.py _round_fused); this pins the Spark behavior that
+    0 rows, crawler.py _round); this pins the Spark behavior that
     backstops it — a non-empty pyrep segment whose url set happens to miss
     the store entirely still never decompresses store body chunks."""
     import pandas as pd
@@ -952,3 +952,55 @@ def test_torn_round_manifest_is_not_committed(spark, corpus, tmp_path, monkeypat
     assert sorted(eng.seen_df().select(*cols).collect()) == sorted(
         clean.seen_df().select(*cols).collect()
     )
+
+
+def test_routed_counts_in_every_mode(spark, corpus, tmp_path):
+    """Every round manifest records how its request rows were routed
+    (fresh / jvmrep / pyrep / deferred), the routes cover every row, and
+    snapshot and callable crawls route identically — one round path. The
+    snapshot crawl runs at two records per Arrow batch: batches mix page
+    rows with request rows (whose 64-bit url hashes must survive the
+    union into pandas), and a url's page row often ends a batch apart
+    from its requests. It writes no store delta (its pages table is the
+    body source)."""
+    pages_df, pages_dict = corpus
+
+    def fetch_fn(urls):
+        return [
+            (pages_dict.get(u), 200 if u in pages_dict else 404) for u in urls
+        ]
+
+    program = flagship_program(webgen.seeds_for(N_PAGES, SEED))
+    oracle = spider(program, SnapshotFetcher(pages_dict))
+    prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "2")
+    try:
+        snap = CrawlEngine(spark, pages_df, str(tmp_path / "s"), politeness_k=7)
+        snap.run(program, max_rounds=50)
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
+    call = CrawlEngine(
+        spark, None, str(tmp_path / "c"), politeness_k=7,
+        fetch_mode="callable", fetch_fn=fetch_fn,
+    )
+    call.run(program, max_rounds=50)
+    routes = []
+    for eng in (snap, call):
+        assert_parity(oracle, eng)
+        per_round = []
+        for r in eng.table.committed_rounds():
+            m = eng.table.round_metrics(r)
+            assert sorted(m["routed"]) == ["deferred", "fresh", "jvmrep", "pyrep"]
+            assert sum(m["routed"].values()) == m["requests"], (r, m)
+            per_round.append(m["routed"])
+        routes.append(per_round)
+    assert routes[0] == routes[1]
+    # the same seen rows, 64-bit url hashes and buckets included
+    cols = ["url_hash", "url_canon", "bucket", "status", "round", "path_first"]
+    assert sorted(snap.seen_df().select(*cols).collect()) == sorted(
+        call.seen_df().select(*cols).collect()
+    )
+    for seg in ("fresh", "jvmrep", "pyrep", "deferred"):
+        assert any(r[seg] for r in routes[0]), (seg, routes[0])
+    assert snap.table.sink_rows("store") == 0
+    assert call.table.sink_rows("store") > 0

@@ -2,9 +2,11 @@
 reference tests its fetch layer the same way (echo-server/main.rkt:34-59,
 used in hypertext-browser/http.rkt:145-166 for redirect round-trips).
 
-Exercises: distributed mapInPandas fetching, redirect following, the
-canonical-key-vs-full-url split (the canonical cache key DROPS the port,
-url.rkt:37-38, but the fetch must keep it), and store-sink body joins."""
+Exercises: the HTTP batch fetch_fn inside the crawl's fused fetch+extract
+stage, redirect following, form POSTs, fetch-once across cache-hit
+replays, the canonical-key-vs-full-url split (the canonical cache key
+DROPS the port, url.rkt:37-38, but the fetch must keep it), and store-sink
+body replays."""
 
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
@@ -155,3 +157,101 @@ def test_live_http_bench_tier_politeness(spark):
     assert out["politeness_held"] is True
     assert out["max_host_round_fetches"] <= 3
     assert out["rounds"] >= 5  # budget binds: 1,2,3,3,3,3 per host
+
+
+FORM_PAGES = {
+    "/": "<form action='/post' method='post'><input name='q' value='x'></form>"
+         "<td class='title'><a href='/shared'>s</a></td>"
+         "<td class='title'><a href='/b'>b</a></td>",
+    "/b": "<p>page b</p><td class='title'><a href='/shared'>s</a></td>",
+    "/shared": "<p>shared page</p>",
+}
+
+
+@pytest.fixture(scope="module")
+def form_server():
+    """Serves FORM_PAGES plus a POST echo at /post, and counts the
+    requests it answers per (method, path) in ``srv.hits``."""
+    import collections
+    import urllib.parse
+
+    hits: collections.Counter = collections.Counter()
+
+    class FormHandler(BaseHTTPRequestHandler):
+        def _send(self, body):
+            self.send_response(200 if body is not None else 404)
+            self.send_header("Content-Type", "text/html")
+            self.end_headers()
+            self.wfile.write((body or "").encode())
+
+        def do_GET(self):  # noqa: N802
+            hits[("GET", self.path)] += 1
+            self._send(FORM_PAGES.get(self.path))
+
+        def do_POST(self):  # noqa: N802
+            hits[("POST", self.path)] += 1
+            n = int(self.headers.get("Content-Length") or 0)
+            form = urllib.parse.parse_qs(self.rfile.read(n).decode())
+            self._send(f"<p>posted q={form.get('q', [''])[0]}</p>")
+
+        def log_message(self, *a):
+            pass
+
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), FormHandler)
+    srv.hits = hits
+    threading.Thread(target=srv.serve_forever, daemon=True).start()
+    yield srv
+    srv.shutdown()
+
+
+class OracleFormFetcher:
+    """The oracle's live fetcher: POSTs carry the form fields, encoded the
+    way the engine's request rows carry them."""
+
+    def fetch(self, url_canon, method="GET", form_data=None, url_full=None, jar=None):
+        import json as _json
+
+        payload = (
+            _json.dumps([list(f) for f in form_data]) if form_data else None
+        )
+        return fetch_one(url_full or url_canon, method, payload)
+
+
+def test_http_mode_post_form_and_fetch_once(spark, form_server, tmp_path):
+    """http mode over real sockets: a method='post' form Submit and a page
+    linked from two parents (/shared, from / and from /b). The engine
+    matches the oracle, and every url reaches the server exactly once —
+    the cache-hit replay of /shared and the politeness-deferred url never
+    fetch again."""
+    import json as _json
+
+    from boris_spark.oracle.program import FormsE, Lit, Submit
+
+    base = f"http://127.0.0.1:{form_server.server_port}"
+    links = XpathE("//td[@class='title']/a/@href/text()")
+    program = Go(
+        base + "/",
+        Submit(FormsE([("q", Lit("boris"))]), Extract(XpathTextE("//p"))),
+        Go(links, Extract(XpathTextE("//p")), Go(links, Extract(XpathTextE("//p")))),
+    )
+    oracle = Spider(program, OracleFormFetcher()).run()
+    assert ["posted q=boris"] in oracle.fly_values
+    form_server.hits.clear()
+    eng = CrawlEngine(
+        spark, None, str(tmp_path / "w"), politeness_k=2, fetch_mode="http",
+    )
+    summary = eng.run(program, max_rounds=10)
+    got = [
+        _json.loads(r["value"])
+        for r in eng.results_df().select("value").collect()
+    ]
+    assert got == oracle.fly_values
+    seen = {r["url_canon"] for r in eng.seen_df().select("url_canon").collect()}
+    assert seen == oracle.seen
+    assert [r["url_canon"] for r in eng.visit_order_df().collect()] == oracle.visits
+    assert dict(form_server.hits) == {
+        ("GET", "/"): 1, ("POST", "/post"): 1, ("GET", "/b"): 1,
+        ("GET", "/shared"): 1,
+    }
+    # the politeness budget deferred a url: the fetch-once check spans rounds
+    assert summary.rounds >= 4

@@ -6,9 +6,7 @@ import os
 
 import pytest
 
-from boris_spark.engine.tableformat import (
-    IcebergFormat, ParquetManifestFormat,
-)
+from boris_spark.engine.tableformat import ParquetManifestFormat
 
 
 def test_write_read_delta_roundtrip(spark, tmp_path):
@@ -97,26 +95,6 @@ def test_adopt_parts_multi_source_delta(spark, tmp_path):
     assert tf.delta_rows("frontier", 6) == 0
 
 
-def test_write_delta_part_matches_adopted_layout(spark, tmp_path):
-    """write_delta(part=...) and adopt_parts produce the SAME one-level
-    layout, so a sink mixing both (frontier round 0 = checkpoint write,
-    rounds 1+ = adoption) stays readable via read_sink's glob."""
-    tf = ParquetManifestFormat(spark, str(tmp_path))
-    tf.write_delta(
-        spark.createDataFrame([(1, "s")], "id long, v string"),
-        "frontier", 0, part="full",
-    )
-    src = str(tmp_path / "staged")
-    spark.createDataFrame(
-        [(2, "t", True)], "id long, v string, _blk boolean"
-    ).write.parquet(src)
-    tf.adopt_parts([src], "frontier", 1, "id long, v string")
-    full = tf.read_sink("frontier", "id long, v string")
-    assert {(r["id"], r["round"]) for r in full.collect()} == {(1, 0), (2, 1)}
-    assert tf.delta_rows("frontier", 0) == 1
-    assert tf.sink_rows("frontier") == 2
-
-
 def test_commit_and_resume_rounds(spark, tmp_path):
     tf = ParquetManifestFormat(spark, str(tmp_path))
     assert tf.committed_rounds() == []
@@ -128,11 +106,6 @@ def test_commit_and_resume_rounds(spark, tmp_path):
     assert tf.round_metrics(2) == {"fetched": 1}
     with pytest.raises(FileNotFoundError):
         tf.round_metrics(9)
-
-
-def test_iceberg_format_documents_its_requirements(spark):
-    with pytest.raises(NotImplementedError, match="iceberg-spark-runtime"):
-        IcebergFormat(spark, "cat", "ns")
 
 
 # ---- LocalCatalogFormat: the executable catalog-table seam ---------------
