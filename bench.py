@@ -448,23 +448,23 @@ def crawl_bench(spark, n_pages: int, workdir: str) -> dict:
         # paired bare-metal probe: measured in the SAME host-contention
         # window as this run, at the same cpu count — the denominator for
         # engine-vs-hardware efficiency (scripts/scaling_bench.py)
+        from boris_spark.engine.session import default_cores
         from boris_spark.synth.ceiling import probe
 
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        out["ceiling_pages_per_sec"] = probe(cpus)
+        out["ceiling_pages_per_sec"] = probe(default_cores())
     return out
 
 
 def main():
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     n_pages = int(os.environ.get("BORIS_BENCH_PAGES", "60000"))
 
-    from boris_spark.engine.session import get_spark
+    from boris_spark.engine.session import default_cores, get_spark
     from boris_spark.ops import kernel_gates as _kg  # noqa: F401 — registers gates
     from boris_spark.ops import warc_gate as _wg  # noqa: F401 — registers gates
     from boris_spark.ops.queries import QUERIES
 
+    cpus = default_cores()
     spark = get_spark("boris-bench", cores=cpus)
     t_total = time.time()
 

@@ -16,32 +16,36 @@ interpreter, /root/reference/boris/interpreter.rkt:54-59 — see SURVEY.md §3):
    window (phase 1 bounds any hot host to salt×k survivors, phase 2 is the
    exact top-k) — skew-safe where a naive ``Window.partitionBy(host)`` would
    funnel the hottest host through one task;
-5. fetch, inside the fused fetch+extract stage: each fresh url's DFS-min
-   request goes to the one ``fetch_fn`` contract (a callable, or the live
-   HTTP fetcher of fetch.py — the reference's swappable request service,
-   boris/interpreter/services.rkt:14-15); a snapshot crawl
-   instead joins the pages table's row ahead of the url's requests (the
-   deterministic analogue of request->response,
-   hypertext-browser/http.rkt:124-136; no row = 404).
-   Cache hits replay through the eval-output memo join or the batched body
-   replay, never fetching again. Over-budget URLs defer to the next round —
-   ordering parity is unaffected because results order is path_key order,
-   which is budget-invariant;
-6. evaluate in place: each fetched (or replayed) state fans to the
-   navigate node's children, and the Python function that holds the page
-   evaluates every non-fetch node (extract/bind/jump) on it to fixpoint
+5. respond, inside the round's ONE Python stage: fresh urls and the
+   cache hits the memo join cannot serve share one url-sorted
+   ``mapInPandas`` and differ only in where a url's response comes from
+   (the reference's request service: replay on a hit, fetch on a miss,
+   browser-services.rkt:35-47). A fresh url's DFS-min request goes to the
+   one ``fetch_fn`` contract (a callable, or the live HTTP fetcher of
+   fetch.py — the swappable request service,
+   boris/interpreter/services.rkt:14-15); a snapshot crawl instead joins
+   the pages table's row ahead of the url's requests (the deterministic
+   analogue of request->response, hypertext-browser/http.rkt:124-136; no
+   row = 404); a cache hit gets its stored body row the same way and never
+   fetches again — or, when its exact input state is in the eval-output
+   memo, skips Python altogether through a JVM join. Over-budget URLs
+   defer to the next round — ordering parity is unaffected because
+   results order is path_key order, which is budget-invariant;
+6. evaluate in place: in that same stage each state fans to the navigate
+   node's children, and the worker that holds the page evaluates every
+   non-fetch node (extract/bind/jump) on it to fixpoint
    (``udfs.eval_to_fixpoint``, interpreter.rkt:54-59) — only new fetch
    requests, results, downloads and memo rows leave the worker, in ONE
    output write per round (the root's own evaluation runs on the driver,
    before round 0, with no Spark job);
 7. sinks + checkpoint: every sink delta is committed by ADOPTING data
    files the round's own tasks already wrote (Iceberg add-files
-   fast-append) — the fused stage's workers write the store and seen
+   fast-append) — the Python stage's workers write the store and seen
    deltas, the round's output write the results and the next frontier —
    plus a per-round JSON manifest carrying per-partition lineage and
    fetch/extract metrics and the round's routing counts. Every round, in
    every fetch mode, is a route job plus an eval job (a snapshot round
-   also broadcasts its fresh url list to pick their pages); the crawl is
+   also broadcasts the url list that picks its pages); the crawl is
    resumable from any round (the reference's fs-dict persistence,
    persistent/main.rkt:37-67).
 
@@ -66,8 +70,8 @@ from .bloom import BloomShardStore
 from .compiler import NodeSpec, compile_program
 from .tableformat import ParquetManifestFormat, TableFormat, write_json_atomic
 from .udfs import (
-    CASCADE_SCHEMA, MEMO_JOINABLE_KINDS, eval_to_fixpoint, make_fused_fn,
-    make_replay_fn, write_by_kind,
+    CASCADE_SCHEMA, MEMO_JOINABLE_KINDS, eval_to_fixpoint, make_round_fn,
+    write_by_kind,
 )
 
 REQUEST_SCHEMA = (
@@ -119,7 +123,7 @@ class CrawlEngine:
         host_budgets: DataFrame | None = None,  # (host, budget): per-host k
         fetch_mode: str = "snapshot",  # "snapshot" | "http" | "callable"
         http_timeout: float = 10.0,
-        fetch_fn=None,  # callable mode: see udfs.make_fused_fn's contract
+        fetch_fn=None,  # callable mode: see udfs.make_round_fn's contract
         broadcast_seen_limit: int = 2_000_000,  # max `maybe` rows to broadcast
         table_format: TableFormat | None = None,
     ):
@@ -141,9 +145,9 @@ class CrawlEngine:
         self.host_budgets = host_budgets
         os.makedirs(workdir, exist_ok=True)
         # the mode only picks the fetcher: every mode runs the same round
-        # (one fused fetch+extract stage), differing in where responses
-        # come from — fetch_fn, or (snapshot) the pages table's rows
-        # joined ahead of the stage's requests
+        # (one Python stage), differing in where responses come from —
+        # fetch_fn, or (snapshot) the pages table's rows joined ahead of
+        # the stage's requests
         self.pages = None
         if fetch_mode == "snapshot":
             if pages_df is None:
@@ -275,12 +279,6 @@ class CrawlEngine:
             spec.kind in MEMO_JOINABLE_KINDS
             for spec in self.node_table.values()
         )
-        # memo-on-miss: replay-evaluated states feed the memo sink too, so
-        # a hub url re-linked at the same depth round after round pays the
-        # Python replay once, then joins JVM-side forever after
-        self._replay_fn = make_replay_fn(
-            self.node_table, emit_memo=self._memo_joinable
-        )
         # Worker-direct sink writes: the Python workers parquet each fetched
         # url's store row (body) and seen row into these inbox dirs, which
         # are ADOPTED as the round's store and seen deltas — bodies never
@@ -289,7 +287,10 @@ class CrawlEngine:
         # table already is the body source (_body_source)
         self._store_inbox = self._path("store_inbox")
         self._seen_inbox = self._path("seen_inbox")
-        self._fused_fn = make_fused_fn(
+        # memo-on-miss: replay-evaluated states feed the memo sink too, so
+        # a hub url re-linked at the same depth round after round pays the
+        # Python replay once, then joins JVM-side forever after
+        self._round_fn = make_round_fn(
             self.node_table, self.fetch_fn,
             store_dir=self._store_inbox if self.pages is None else None,
             seen_dir=self._seen_inbox,
@@ -413,20 +414,17 @@ class CrawlEngine:
         return max(1, min(full, (n_rows + rows_per_part - 1) // rows_per_part))
 
     def _round(self, requests: DataFrame, rnd: int, n_req: int):
-        """One crawl round, the same in every fetch mode. FRESH urls run
-        through the fused fetch+extract mapInPandas stage (fetch_fn called
-        exactly once per url per crawl, or the snapshot's page row joined
-        ahead of the url's requests), whose workers write the round's seen
-        delta and — when a fetcher ran — the bodies to the store sink, the
-        crash-resumable page cache. CACHE-HIT traversals (urls fetched in
-        an earlier round, or robots-blocked replays) never reach fetch_fn:
-        they take the JVM memo join or the batched body replay
-        (``_replay``) — the memoized replay of browser-services.rkt:36-40,
-        correct for live/non-deterministic fetchers and never bypassing
-        the politeness budget. All routing frames are slim; body bytes flow
-        fetch→store once, and per replaying round each body crosses one
-        url_canon exchange + one Arrow boundary — never a per-path join or
-        a dedup shuffle. Returns (fetched, results, manifest metrics)."""
+        """One crawl round, the same in every fetch mode: a route job, then
+        an eval job whose ONE Python stage (``_url_stage``) evaluates every
+        fresh url and every cache hit the memo join cannot serve. Fresh
+        urls are fetched exactly once per crawl (or take the snapshot's
+        page row), and the workers write the round's seen delta and the
+        fetched bodies (the store sink, the crash-resumable page cache).
+        Cache hits never reach fetch_fn: they replay the stored response
+        (browser-services.rkt:36-40), so live fetchers are hit once and the
+        politeness budget is never bypassed. All routing frames are slim;
+        each body crosses one url_canon exchange + one Arrow boundary per
+        round that evaluates it. Returns (fetched, results, metrics)."""
         import time as _t
         _marks = [("start", _t.time())]
         _mark = lambda label: _marks.append((label, _t.time()))  # noqa: E731
@@ -451,7 +449,7 @@ class CrawlEngine:
 
         # one fetch candidate per distinct url, priority = lex-min path_key
         # (url_hash/host are pure functions of url_canon: any row works);
-        # the fused stage fetches with the url's DFS-min request row
+        # the Python stage fetches with the url's DFS-min request row
         urls = requests.groupBy("url_canon").agg(
             F.min("path_key").alias("pk"),
             F.first("url_hash").alias("url_hash"),
@@ -529,10 +527,10 @@ class CrawlEngine:
                 )
             )
         # ONE lineage-break job per round: every request row is routed into
-        # a segment — fresh (politeness winner, gets the fused fetch+eval),
+        # a segment — fresh (politeness winner, gets fetched + evaluated),
         # jvmrep (cache hit whose exact input state is in the eval-output
         # memo: replayed by a pure JVM join), pyrep (cache hit that needs
-        # the batched Python replay: memo miss or robots-blocked), or
+        # the Python replay: memo miss or robots-blocked), or
         # deferred (over budget, back to the frontier) — and the whole
         # tagged frame is written once, hive-partitioned by ``seg``. The
         # rest of the round (eval job, frontier adoption) reads plain
@@ -578,7 +576,7 @@ class CrawlEngine:
         # dominant wasted work, and this removes it entirely. Misses
         # (states never evaluated at fetch time, e.g. a branch arriving
         # with a different cookie jar) and robots-blocked branches fall
-        # back to the batched Python replay, which is always exact.
+        # back to the Python replay, which is always exact.
         # Hit-detection happens HERE, in the routing job, against the
         # DISTINCT memo input-state keys (filtered to this round's
         # candidate urls — a superset of the replay urls is safe: fresh and
@@ -651,31 +649,30 @@ class CrawlEngine:
 
         _mark("route")
 
-        # the fused stage (_url_stage): one url_canon exchange restores the
-        # co-location the parquet round-trip may lose (fetch_fn MUST fire
-        # once per url), and the url sort keeps a url's paths consecutive,
-        # so its eval memo is O(1): one fetch + one node eval per (url, pc,
-        # bindings), replayed for every further path. A snapshot crawl's
-        # page rows lead their url's requests through the same exchange.
-        # Width follows the fresh row count (free, from the routed parquet
-        # footers): tiny rounds stop paying cores-many task launches for a
-        # handful of fetches
+        # the round's ONE Python stage (_url_stage): fresh and pyrep rows,
+        # tagged _fresh, share one url_canon exchange (fetch_fn MUST fire
+        # once per url) and one url sort (a url's paths consecutive: its
+        # eval memo is O(1)). A url's body row leads its requests through
+        # the same exchange: its pages row in a snapshot crawl, else a
+        # replayed url's store row. The store side exists ONLY when the
+        # footers say there are pyrep rows, so memo-covered rounds never
+        # plan the body-bearing store scan. Width follows the stage's row
+        # count (free, from the routed footers)
         outs = []
-        if segs.get("fresh", 0):
-            outs.append(self._url_stage(
-                _seg("fresh").select(*_REQ_COLS),
-                self._round_parts(segs["fresh"]), self._fused_fn, self.pages,
-            ))
-        # cache-hit replay (_replay): the url's single store row leads its
-        # slim replay rows through one batched Python stage — identical
-        # semantics to a fresh fetch because fetch memoization replays the
-        # SAME response per url (browser-services.rkt:36-40). The branch
-        # exists ONLY when the footers say there are pyrep rows —
-        # memo-covered rounds never plan the body-bearing store scan at
-        # all; its width follows the pyrep row count like the fresh stage.
-        if segs.get("pyrep", 0):
+        n_py = segs.get("fresh", 0) + segs.get("pyrep", 0)
+        if n_py:
+            rows = None
+            for name in ("fresh", "pyrep"):
+                if segs.get(name, 0):
+                    seg = _seg(name).withColumn("_fresh", F.lit(name == "fresh"))
+                    rows = seg if rows is None else rows.unionByName(seg)
+            bodies = None
+            if self.pages is not None:
+                bodies = self._body_source(rows)
+            elif segs.get("pyrep", 0):
+                bodies = self._body_source(_seg("pyrep"))
             outs.append(
-                self._replay(_seg("pyrep"), self._round_parts(segs["pyrep"]))
+                self._url_stage(rows, self._round_parts(n_py), bodies)
             )
         if memo_f is not None and segs.get("jvmrep", 0):
             jr = _seg("jvmrep")
@@ -728,7 +725,7 @@ class CrawlEngine:
         # Commit this round's sinks by ADOPTING files its own tasks already
         # wrote (adopt_delta/adopt_parts = Iceberg add-files fast-append,
         # tableformat.py) — no commit job re-reads or re-encodes a byte:
-        # - store: the fused stage's workers parquet'd each fetched url's
+        # - store: the Python stage's workers parquet'd each fetched url's
         #   body into the store inbox (the page cache replays read; a
         #   snapshot crawl writes none — its pages table is that cache);
         # - memo: the round output's kind=memo partition (slim rows);
@@ -1019,55 +1016,53 @@ class CrawlEngine:
     # ------------------------------------------------------- checkpointing
 
     def _url_stage(
-        self, rows: DataFrame, width: int, fn, bodies: DataFrame | None
+        self, rows: DataFrame, width: int, bodies: DataFrame | None
     ) -> DataFrame:
-        """A url-sorted ``mapInPandas`` over *rows*: one url_canon exchange
-        of *width* partitions, then sorted so each url's rows are
-        consecutive. With *bodies*, the slim rows (``_src=1``, no body) are
-        unioned with each of their urls' single body row (``_src=0``),
-        semi-joined to the url set via a broadcast of the SLIM url list,
-        and sorted ahead of them — a page body crosses exactly one shuffle
-        and one Arrow boundary and is never copied per path."""
+        """The round's Python stage (udfs.make_round_fn) over *rows*: one
+        url_canon exchange of *width* partitions, then sorted so each url's
+        rows are consecutive. With *bodies* (``_body_source``), each url's
+        single body row (``_src=0``) is unioned with its request rows
+        (``_src=1``, no body) and sorted ahead of them — a page body
+        crosses exactly one shuffle and one Arrow boundary and is never
+        copied per path."""
         order = ["url_canon", "pc", "bindings"]
         if bodies is not None:
-            # body rows fill the int64 columns with 0: a null would make
-            # pandas widen the column to float64, truncating url hashes
-            zeros = [
-                F.lit(0).cast("long").alias(f.name) for f in rows.schema.fields
-                if f.dataType.simpleString() == "bigint"
+            # body rows fill the int64 and flag columns: a null would make
+            # pandas widen int64 to float64 (truncating url hashes) and
+            # booleans to objects
+            fill = {"bigint": F.lit(0).cast("long"), "boolean": F.lit(False)}
+            pads = [
+                fill[f.dataType.simpleString()].alias(f.name)
+                for f in rows.schema.fields
+                if f.dataType.simpleString() in fill
             ]
             rows = rows.withColumn("_src", F.lit(1)).unionByName(
-                bodies.join(
-                    F.broadcast(rows.select("url_canon").distinct()),
-                    "url_canon", "left_semi",
-                ).select("*", F.lit(0).alias("_src"), *zeros),
+                bodies.select("*", F.lit(0).alias("_src"), *pads),
                 allowMissingColumns=True,
             )
             order.insert(1, "_src")
         return (
             rows.repartition(width, "url_canon")
             .sortWithinPartitions(*order)
-            .mapInPandas(fn, CASCADE_SCHEMA)
+            .mapInPandas(self._round_fn, CASCADE_SCHEMA)
         )
 
-    def _replay(self, rows: DataFrame, width: int) -> DataFrame:
-        """Batched cache-hit replay (make_replay_fn): each replayed url's
-        body row from ``_body_source`` leads its slim replay rows."""
-        rows = rows.select(
-            "pc", "url_canon", "url_full", "bindings", "path_key",
-            "method", "cookies", "_blk",
-        )
-        return self._url_stage(rows, width, self._replay_fn, self._body_source())
-
-    def _body_source(self) -> DataFrame:
-        """(url_canon, body, head) for the cache-hit replay: the pages
-        table (no head) in a snapshot crawl, the fetched store otherwise."""
+    def _body_source(self, rows: DataFrame) -> DataFrame | None:
+        """(url_canon, body, head) for *rows*' urls: the pages table (no
+        head) in a snapshot crawl, the fetched store otherwise (None when
+        nothing was stored yet) — cut to those urls by a semi-join against
+        a broadcast of the SLIM url list."""
         if self.pages is not None:
-            return self.pages.withColumn("head", F.lit(None).cast("string"))
-        store = self._read_sink("store")
-        if store is None:
-            return self._empty("url_canon string, body string, head string")
-        return store.select("url_canon", "body", "head")
+            src = self.pages.withColumn("head", F.lit(None).cast("string"))
+        else:
+            src = self._read_sink("store")
+            if src is None:
+                return None
+            src = src.select("url_canon", "body", "head")
+        return src.join(
+            F.broadcast(rows.select("url_canon").distinct()),
+            "url_canon", "left_semi",
+        )
 
     def _drop_tmp_sinks(self) -> None:
         """Delete the round's transient outputs (routing segments and the

@@ -19,6 +19,11 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """Local task slots: ``$SPARK_GRAFT_CPUS``, else the host's cpu count."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
+
+
 def get_spark(
     app: str = "boris-spark",
     cores: int | None = None,
@@ -29,7 +34,7 @@ def get_spark(
     """master="local" (default) pins local[cores]; master=None inherits the
     master from spark-submit — the cluster path (scripts/submit_crawl.py via
     spark-submit --py-files dist/boris_spark.zip)."""
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or default_cores()
     shuffle_partitions = shuffle_partitions or max(cores, 32)
     b = SparkSession.builder
     if master == "local":

@@ -1,11 +1,15 @@
 """Arrow-batched executor-side program evaluation.
 
-The ``mapInPandas`` functions here hold a page and evaluate every non-fetch
-program node on it to fixpoint (``eval_to_fixpoint`` — the reference's
-per-branch closure application, /root/reference/boris/semantics.rkt:52-92,
-and interpreter.rkt:54-59, which applies let/for/label/recur/show to the
-page it already holds). Output is a single union schema split by ``kind``
-on the JVM side:
+A crawl round runs ONE Python stage (``make_round_fn``): a url-sorted
+``mapInPandas`` whose worker holds each url's page and evaluates every
+non-fetch program node on it to fixpoint (``eval_to_fixpoint`` — the
+reference's per-branch closure application,
+/root/reference/boris/semantics.rkt:52-92, and interpreter.rkt:54-59,
+which applies let/for/label/recur/show to the page it already holds).
+Fresh urls and cache-hit replays share that stage; a url's response comes
+from ``fetch_fn``, its pages-table row (snapshot) or its store row
+(replay). Output is a single union schema split by ``kind`` on the JVM
+side:
 
 - ``request``  → a navigate fan-out (semantics.rkt:52-57): resolved +
   canonicalized + hashed target, path extended with the fan-out index;
@@ -39,7 +43,7 @@ _OUT_COLS = (
     ("referer", "string"), ("method", "string"), ("payload", "string"),
     ("value", "string"), ("vkind", "string"), ("cookies", "string"),
     # memo columns (kind='memo' rows — the eval-output cache that lets later
-    # rounds replay a cached url as a pure JVM join, see make_fused_fn):
+    # rounds replay a cached url as a pure JVM join, see make_round_fn):
     # mk = the output row's real kind ('request'/'result', or 'mark' for the
     # state-evaluated marker), mk_* = the INPUT-state key the outputs were
     # computed under (parent pc, full url, bindings, method, pre-fold jar)
@@ -370,7 +374,12 @@ def _emit_memo(
         out.append(m)
 
 
-def make_fused_fn(
+# output rows per yielded frame: result values are page-sized, so a
+# worker's output buffer is bounded by rows, not by its input batch
+_FRAME_ROWS = 1024
+
+
+def make_round_fn(
     node_table: dict[int, NodeSpec],
     fetch_fn,
     store_dir: str | None,
@@ -378,43 +387,56 @@ def make_fused_fn(
     n_buckets: int,
     emit_memo: bool = False,
 ):
-    """Fused fetch+extract: ONE mapInPandas stage per crawl round.
+    """The crawl round's one Python worker: a ``mapInPandas`` over every
+    request row the round evaluates in Python — fresh urls and cache-hit
+    replays alike, since the two differ only in where a url's response
+    comes from (the reference's request service replays a memoized
+    response on a hit and fetches on a miss, browser-services.rkt:35-47).
 
-    Input rows are the round's FRESH request rows only (REQUEST cols) —
-    cache hits and robots-blocked replays take the store-sink replay path in
-    the crawler instead (they never reach fetch_fn, so a live fetcher is
-    called exactly once per url per crawl and the per-host politeness budget
-    is never bypassed — the memoized replay of browser-services.rkt:36-40).
+    Input rows carry the REQUEST columns + ``_fresh`` + ``_blk``, plus
+    ``_src``/``body``/``head`` when a body source is joined in; they
+    arrive url-partitioned and sorted by (url_canon, _src, pc, bindings),
+    so a url's rows are consecutive and its body row (``_src=0``), if any,
+    leads its request rows (``_src=1``). Per url there is ONE response
+    (body, status, head):
+
+    - the url's body row, if it has one: its pages-table row in a snapshot
+      crawl, or its store row for a cache-hit replay (status 200);
+    - else, for a fresh url, ``fetch_fn``'s answer — one batch call per
+      Arrow batch;
+    - else ``("", 404)`` with no head.
+
+    A robots-blocked url (``_blk``) evaluates on an empty body with no
+    head. The url's response, seen row and eval memo carry across Arrow
+    batches (the partition is url-sorted, so only the last url of a batch
+    can straddle into the next, and a url spanning 3+ batches chains
+    through) and reset when the url changes — O(1) memory, and fetch_fn is
+    called exactly once per url per crawl.
+
     ``fetch_fn(urls: list[str]) -> list[(body, status[, head])]`` (head =
-    (status line, header alist); without one, file-style) is the
-    pluggable fetcher (the reference's swappable request service,
-    /root/reference/boris/interpreter/services.rkt:14-15) — a deterministic
-    closed-form page function in the bench, ``fetch.make_http_fetch_fn``
-    for live HTTP. Extra inputs are declared by parameter NAME, never by
-    arity (which would feed them into an unrelated optional parameter,
-    e.g. batch_size=100): ``cookie_headers`` gets each url's Cookie header
+    (status line, header alist); without one, file-style) is the pluggable
+    fetcher (the reference's swappable request service,
+    /root/reference/boris/interpreter/services.rkt:14-15) — a
+    deterministic closed-form page function in the bench,
+    ``fetch.make_http_fetch_fn`` for live HTTP, None for the snapshot.
+    Extra inputs are declared by parameter NAME, never by arity (which
+    would feed them into an unrelated optional parameter, e.g.
+    batch_size=100): ``cookie_headers`` gets each url's Cookie header
     value, ``requests`` each url's ``(url_full, method, payload,
     cookies_json)`` — both taken from the url's DFS-min request row (the
     branch the reference would fetch with first; later branches replay the
-    memoized response with their own jars). With ``fetch_fn=None`` the
-    responses arrive IN-BAND instead (the pages-table snapshot): each url's
-    single page row (``_src=0``, ``body``) leads its request rows
-    (``_src=1``), status 200, and a url with no page row is ``("", 404)``.
-    Page bodies are materialized INSIDE the Python worker and evaluated
-    there (fan-out to the navigate node's children); a fetched body never
-    crosses the Arrow boundary, enters a shuffle or the block cache.
+    memoized response with their own jars). A fetched body is evaluated
+    where it lands; it never crosses the Arrow boundary, a shuffle or the
+    block cache.
 
-    Rows arrive url-partitioned and url-sorted, so a url's rows are
-    consecutive: the url is complete once the next url starts (the
-    partition's last url carries across batches, like the fetch memo).
-    Per url, the worker keeps exactly one row for each of two sinks and
-    writes them per batch as parquet via pyarrow (``_write_batch`` —
-    tmp-name + ``os.replace``, so task retries are atomic and
-    deterministic):
+    Only fresh urls write sink rows: exactly one row per url for each of
+    two sinks, written per batch as parquet via pyarrow (``_write_batch``
+    — tmp-name + ``os.replace``, so task retries are atomic and
+    deterministic). Cache-hit urls never reach fetch_fn and write neither.
 
     - *store_dir*: (url_canon, body, status, head) — the crash-resumable
-      page cache that also feeds cache-hit replays (None for the snapshot,
-      whose pages table already is that cache);
+      page cache that later replays read (None for the snapshot, whose
+      pages table already is that cache);
     - *seen_dir*: (url_hash, url_canon, host, bucket, status, path_first)
       — the round's seen delta, ``bucket = url_hash % n_buckets`` (Python
       ``%`` equals ``pmod`` for a positive modulus) and ``path_first`` the
@@ -423,10 +445,14 @@ def make_fused_fn(
     The crawler adopts both directories as the round's deltas
     (``TableFormat.adopt_delta`` — Iceberg add_files: data files written
     by tasks, committed by reference), so neither sink costs a Spark job.
-    At 10^10 scale ~60 KB × millions of bodies per round would otherwise
-    pay Arrow encode + JVM decode + JVM parquet re-encode on a
-    memory-bandwidth-bound path that profiling showed does not scale with
-    cores on one box."""
+
+    With ``emit_memo`` (memo-joinable programs), every state evaluated
+    here also emits eval-output-cache rows (``_emit_memo``), whether it
+    was fetched or replayed: a state that structurally missed the memo
+    (url fetched at node A, replayed at node B) is evaluated in Python
+    once, and later rounds join it JVM-side. Robots-blocked states never
+    emit memo rows (their empty-body outputs would poison the unblocked
+    join, whose key does not carry the blocked bit)."""
 
     import inspect
 
@@ -437,27 +463,26 @@ def make_fused_fn(
     wants_cookies = "cookie_headers" in _params
     wants_requests = "requests" in _params
 
-    def fetch(pdf: pd.DataFrame, carry: dict) -> dict[str, tuple]:
-        """This batch's responses for the urls *carry* does not hold."""
+    def fetch(pdf: pd.DataFrame, cur) -> dict[str, tuple]:
+        """This batch's fetched responses: its fresh urls bar *cur*, the
+        url in progress, whose response is already held."""
         from ..kernel.cookies import cookies_ref, cookies_to_header, jar_from_json
 
         if fetch_fn is None:
-            page = pdf["_src"] == 0
-            return {
-                u: (b if isinstance(b, str) else "", 200)
-                for u, b in zip(pdf["url_canon"][page], pdf["body"][page])
-            }
-        # per url, the DFS-min request row: (path, url_full, method,
+            return {}
+        # per fresh url, the DFS-min request row: (path, url_full, method,
         # payload, jar)
         fetch_row: dict[str, tuple] = {}
-        for url, full, path, method, payload, cj in zip(
-            pdf["url_canon"], pdf["url_full"], pdf["path_key"], pdf["method"],
-            pdf["payload"], pdf["cookies"],
+        for fresh, url, full, path, method, payload, cj in zip(
+            pdf["_fresh"], pdf["url_canon"], pdf["url_full"], pdf["path_key"],
+            pdf["method"], pdf["payload"], pdf["cookies"],
         ):
-            cur = fetch_row.get(url)
-            if cur is None or (path or "") < cur[0]:
+            if not fresh:
+                continue
+            row = fetch_row.get(url)
+            if row is None or (path or "") < row[0]:
                 fetch_row[url] = (path or "", full, method, payload, cj)
-        need = sorted(u for u in fetch_row if u not in carry)
+        need = sorted(u for u in fetch_row if u != cur)
         if not need:
             return {}
         kw = {}
@@ -476,161 +501,63 @@ def make_fused_fn(
             ]
         return dict(zip(need, fetch_fn(need, **kw)))
 
-    def fused(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..kernel.cookies import jar_fold_head, jar_from_json, jar_to_json
 
+        # the url in progress: its response, its seen row ([url_hash, url,
+        # host, bucket, status, path_first], fresh urls only, final once the
+        # next url starts) and its eval memo
+        cur = None
+        body, status, head = "", 404, None
+        seen_row = None
         memo: dict = {}
         memo_states: set = set()
-        memo_url = None
-        # cross-batch fetch memo: the partition is url-sorted, so only the
-        # LAST url of a batch can straddle into the next one — carrying that
-        # single response keeps "fetch_fn called exactly once per url per
-        # crawl" true across Arrow batch boundaries in O(1) memory (a url
-        # spanning 3+ batches chains through, it is last in each).
-        carry: dict[str, tuple] = {}
-        # the seen row of the url in progress: [url_hash, url, host,
-        # bucket, status, path_first], final once the next url starts
-        seen_row = None
         for batch_idx, pdf in enumerate(batches):
+            if "_src" not in pdf:  # no body source joined in
+                pdf = pdf.assign(_src=1, body=None, head=None)
             out: list[dict] = []
             store_rows: list[tuple] = []
             seen_rows: list[tuple] = []
-            last_url = pdf["url_canon"].iloc[-1] if len(pdf) else None
-            fetched = fetch(pdf, carry)
-            fetched.update(carry)
-            if fetch_fn is None:
-                pdf = pdf[pdf["_src"] == 1]
-            for pc, url, url_full, url_hash, host, bindings_json, path, method, cj in zip(
-                pdf["pc"], pdf["url_canon"], pdf["url_full"], pdf["url_hash"],
+            fetched = fetch(pdf, cur)
+            for src, fresh, blk, pc, url, url_full, uhash, host, bindings_json, path, method, cj, b, h in zip(
+                pdf["_src"], pdf["_fresh"], pdf["_blk"], pdf["pc"],
+                pdf["url_canon"], pdf["url_full"], pdf["url_hash"],
                 pdf["host"], pdf["bindings"], pdf["path_key"], pdf["method"],
-                pdf["cookies"],
+                pdf["cookies"], pdf["body"], pdf["head"],
             ):
-                resp = fetched.get(url, ("", 404))
-                body, status = resp[0], resp[1]
-                head = resp[2] if len(resp) > 2 else None
-                if body is None:
-                    body = ""
-                path = path or ""
-                if seen_row is None or seen_row[1] != url:
-                    # the url's first row (a url straddling into this batch
-                    # continues seen_row): exactly ONE store row and ONE
-                    # seen row per url per crawl, so both sinks are
-                    # duplicate-free by construction
+                if url != cur:
                     if seen_row is not None:
                         seen_rows.append(tuple(seen_row))
-                    if store_dir is not None:
-                        head_json = (
-                            json.dumps(list(head)) if head is not None else None
-                        )
-                        store_rows.append((url, body, int(status), head_json))
-                    seen_row = [
-                        int(url_hash), url, host, int(url_hash) % n_buckets,
-                        int(status), path,
-                    ]
-                elif path < seen_row[5]:
-                    seen_row[5] = path
-                bindings_json = (
-                    bindings_json if isinstance(bindings_json, str) else None
-                )
-                url_full = url_full if isinstance(url_full, str) else None
-                method = method if isinstance(method, str) else "GET"
-                cj = cj if isinstance(cj, str) else None
-                cj_in = cj  # the memo key jar: pre-fold, what replays carry
-                # per-branch cookie fold: the response's Set-Cookie enters
-                # THIS branch's jar before its children run
-                # (hypertext-browser/base.rkt:78-94)
-                if head is not None:
-                    cj = jar_to_json(
-                        jar_fold_head(jar_from_json(cj), head, url_full or url)
-                    )
-                if url != memo_url:
+                        seen_row = None
+                    cur = url
                     memo.clear()
                     memo_states.clear()
-                    memo_url = url
-                row_start = len(out)
-                for j, child in enumerate(node_table[int(pc)].child_ids):
-                    _eval_memo(
-                        memo, (child, url_full, bindings_json, method, cj),
-                        node_table, child,
-                        url, url_full, body, bindings_json, path + _hx(j), out,
-                        head=head, method=method, cookies_json=cj,
-                    )
-                if emit_memo:
-                    _emit_memo(
-                        out, row_start, path, memo_states, url,
-                        (int(pc), url_full, bindings_json, method, cj_in),
-                    )
-            if last_url is not None:
-                carry = (
-                    {last_url: fetched[last_url]} if last_url in fetched else {}
-                )
-            if store_rows:
-                _write_batch(store_dir, _STORE_FILE_COLS, store_rows, batch_idx)
-            if seen_rows:
-                _write_batch(seen_dir, _SEEN_FILE_COLS, seen_rows, batch_idx)
-            yield _frame(out)
-        if seen_row is not None:
-            # the partition's last url is complete once its input ends
-            _write_batch(
-                seen_dir, _SEEN_FILE_COLS, [tuple(seen_row)], batch_idx + 1
-            )
-
-    return fused
-
-
-def make_replay_fn(node_table: dict[int, NodeSpec], emit_memo: bool = False):
-    """Batched store replay — the cache-hit half of a crawl round.
-
-    One ``mapInPandas`` over the union of the slim replay request rows
-    (``_src=1``, no body) and each replayed url's single store row
-    (``_src=0``: body + head), repartitioned by url_canon and sorted by
-    (url_canon, _src, pc, bindings), so every url arrives as its body row
-    followed by its replay rows. The page body crosses exactly one shuffle
-    (the store side of that exchange is pre-filtered to the replayed urls)
-    and one Arrow boundary, and is evaluated in place against every
-    replaying branch — never joined per path, never copied per path. The
-    Python cost is paid per Arrow batch, not per url group: the current
-    url's body, head and eval memo carry across batch boundaries (a url
-    may straddle one) and reset when the url changes. A url with no store
-    row (seen but never stored) replays an empty body.
-
-    Semantics identical to evaluating a fresh fetch of the stored body
-    (the memoized replay of browser-services.rkt:36-40): robots-blocked
-    branches (``_blk``) see an empty body and no head; the store head's
-    Set-Cookie folds into each branch's jar before its children run.
-
-    With ``emit_memo`` (memo-joinable programs), every state this replay
-    evaluates ALSO emits eval-output-cache rows, exactly like the fused
-    stage does at fetch time: a state that structurally missed the memo
-    (url fetched at node A, replayed at node B — the misses are round-
-    recurring for hub pages that are re-linked every round at the same
-    depth) is evaluated in Python ONCE; every later round joins it
-    JVM-side instead of re-reading the body. Robots-blocked branches never
-    emit memo rows (their empty-body outputs would poison the unblocked
-    join, whose key does not carry the blocked bit)."""
-
-    def replay(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ..kernel.cookies import jar_fold_head, jar_from_json, jar_to_json
-
-        cur_url = None
-        body, head = "", None
-        memo: dict = {}
-        memo_states: set = set()
-        for pdf in batches:
-            out: list[dict] = []
-            for src, pc, url, url_full, bindings_json, path, method, cj, blk, b, h in zip(
-                pdf["_src"], pdf["pc"], pdf["url_canon"], pdf["url_full"],
-                pdf["bindings"], pdf["path_key"], pdf["method"],
-                pdf["cookies"], pdf["_blk"], pdf["body"], pdf["head"],
-            ):
-                if url != cur_url:
-                    cur_url, body, head = url, "", None
-                    memo.clear()
-                    memo_states.clear()
+                    resp = fetched.get(url, ("", 404))
+                    body = "" if resp[0] is None else resp[0]
+                    status = resp[1]
+                    head = resp[2] if len(resp) > 2 else None
                 if src == 0:
                     body = b if isinstance(b, str) else ""
+                    status = 200
                     head = tuple(json.loads(h)) if isinstance(h, str) and h else None
                     continue
+                path = path or ""
+                if fresh:
+                    if seen_row is None:
+                        # the url's first request row: exactly ONE store
+                        # row and ONE seen row per url per crawl, so both
+                        # sinks are duplicate-free by construction
+                        if store_dir is not None:
+                            head_json = (
+                                json.dumps(list(head)) if head is not None else None
+                            )
+                            store_rows.append((url, body, int(status), head_json))
+                        seen_row = [
+                            int(uhash), url, host, int(uhash) % n_buckets,
+                            int(status), path,
+                        ]
+                    elif path < seen_row[5]:
+                        seen_row[5] = path
                 pc = int(pc)
                 url_full = url_full if isinstance(url_full, str) else None
                 bindings_json = (
@@ -638,10 +565,12 @@ def make_replay_fn(node_table: dict[int, NodeSpec], emit_memo: bool = False):
                 )
                 method = method if isinstance(method, str) else "GET"
                 cj = cj if isinstance(cj, str) else None
-                path = path or ""
                 blk = bool(blk)
                 rb, rh = ("", None) if blk else (body, head)
-                cj_in = cj  # pre-fold jar: the memo key replay rows carry
+                cj_in = cj  # the memo key jar: pre-fold, what replays carry
+                # per-branch cookie fold: the response's Set-Cookie enters
+                # THIS branch's jar before its children run
+                # (hypertext-browser/base.rkt:78-94)
                 if rh is not None:
                     cj = jar_to_json(
                         jar_fold_head(jar_from_json(cj), rh, url_full or url)
@@ -659,6 +588,18 @@ def make_replay_fn(node_table: dict[int, NodeSpec], emit_memo: bool = False):
                         out, row_start, path, memo_states, url,
                         (pc, url_full, bindings_json, method, cj_in),
                     )
+                if len(out) >= _FRAME_ROWS:
+                    yield _frame(out)
+                    out = []
+            if store_rows:
+                _write_batch(store_dir, _STORE_FILE_COLS, store_rows, batch_idx)
+            if seen_rows:
+                _write_batch(seen_dir, _SEEN_FILE_COLS, seen_rows, batch_idx)
             yield _frame(out)
+        if seen_row is not None:
+            # the partition's last fresh url is complete once its input ends
+            _write_batch(
+                seen_dir, _SEEN_FILE_COLS, [tuple(seen_row)], batch_idx + 1
+            )
 
-    return replay
+    return evaluate

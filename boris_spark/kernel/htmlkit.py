@@ -610,13 +610,6 @@ def xpath_nodes(html: str, query: str) -> list[Node]:
     return out
 
 
-def _kernel_xpath_str(html: str, query: str) -> list[str]:
-    return [
-        n.data if isinstance(n, Text) else serialize(n)
-        for n in xpath_nodes(html, query)
-    ]
-
-
 def xpath(html: str | list[str], query: str) -> list[str]:
     """xpath.rkt:41-45 — matches re-serialized as HTML strings; list input
     recurses per element, flattening."""
@@ -625,11 +618,10 @@ def xpath(html: str | list[str], query: str) -> list[str]:
         for sub in html:
             out.extend(xpath(sub, query))
         return out
-    if _fast_enabled():
-        fast = _fast_xpath(html, query.strip(), _kernel_xpath_str)
-        if fast is not None:
-            return list(fast)
-    return _kernel_xpath_str(html, query)
+    return [
+        n.data if isinstance(n, Text) else serialize(n)
+        for n in xpath_nodes(html, query)
+    ]
 
 
 _TRIM_CHARS = " \t\n\r\f\v"
@@ -650,16 +642,6 @@ def xpath_text(html: str | list[str], query: str) -> list[str]:
         for sub in html:
             out.extend(xpath_text(sub, query))
         return out
-    if _fast_enabled() and query.strip() == "//p":
-        fast = _fast_xpath(html, "p_texts", _kernel_xpath_text_str)
-        if fast is not None:
-            return list(fast)
-    return _kernel_xpath_text_str(html, query)
-
-
-def _kernel_xpath_text_str(html: str, query: str) -> list[str]:
-    if query == "p_texts":  # parity callback from the fused walk
-        query = "//p"
     out = []
     for n in xpath_nodes(html, query):
         if isinstance(n, Element):
@@ -747,121 +729,6 @@ def _form_to_list(form_html: str) -> Form:
         value = _car_or(xpath(inp, "/input/@value/text()"), "")
         fields.append((name[0].data if isinstance(name[0], Text) else serialize(name[0]), value))
     return ("" if action is None else action, method, fields)
-
-
-# ----------------------------------------- opt-in fused fast path (A/B)
-#
-# BORIS_FAST_HTML=1 enables a FUSED single-BFS-walk evaluator for the four
-# hot selector shapes of the crawl's fetch+extract stage:
-#
-#     //a/@href/text()                         (link harvest)
-#     //td[@class='title']/a/@href/text()      (the bench program's links)
-#     //title/text()                           (title)
-#     //p                                      (xpath_text → page text)
-#
-# It reuses the EXACT kernel parse tree (_parse_cached — entity handling,
-# void tags, permissive close all identical by construction) and only
-# fuses the four per-query BFS traversals + serializations into one
-# level-order walk whose collection order replicates _step_desc /
-# _step_child exactly (per level, per parent, per child; child steps map
-# per context node in order). Safety is layered: (1) same parse tree, so
-# only traversal-order bugs are possible; (2) a deterministic 1-in-64
-# page sample (crc32 of the html head) cross-checks fast vs kernel
-# answers and on ANY mismatch disables the fast path process-wide and
-# returns the kernel result; (3) tests/test_kernel_golden.py runs the
-# full golden suite + a corpus sweep with the flag forced on. Off by
-# default — the A/B lever the scaling bench flips.
-
-_FAST_HTML = None  # resolved lazily so executor workers read their env
-_FAST_STATS = {"pages": 0, "checked": 0, "mismatch": 0}
-
-
-def _fast_enabled() -> bool:
-    global _FAST_HTML
-    if _FAST_HTML is None:
-        import os
-
-        _FAST_HTML = bool(os.environ.get("BORIS_FAST_HTML"))
-    return _FAST_HTML
-
-
-def fast_html_stats() -> dict:
-    return dict(_FAST_STATS, enabled=bool(_FAST_HTML))
-
-
-@_lru_cache(maxsize=256)
-def _fast_walk(html: str) -> dict:
-    """One BFS level-order walk collecting the four hot shapes.
-
-    Collection order == _step_desc(root, step): per level, per parent,
-    matching children in child order — each list below is exactly what
-    the kernel's own evaluator returns for its query."""
-    root = _parse_cached(html)
-    a_hrefs: list[str] = []
-    td_title_hrefs: list[str] = []
-    title_texts: list[str] = []
-    p_texts: list[str] = []
-    level: list[Element] = [root]
-    while level:
-        nxt: list[Element] = []
-        for parent in level:
-            for c in parent.children:
-                if not isinstance(c, Element):
-                    continue
-                nxt.append(c)
-                tag = c.tag
-                if tag == "a":
-                    # //a/@href/text(): per a (BFS), per href attr (attrs
-                    # keep duplicates), the value — "" included
-                    for k, v in c.attrs:
-                        if k == "href":
-                            a_hrefs.append(v)
-                elif tag == "td":
-                    if any(k == "class" and v == "title" for k, v in c.attrs):
-                        # /a then /@href/text(): direct a children in order
-                        for cc in c.children:
-                            if isinstance(cc, Element) and cc.tag == "a":
-                                for k, v in cc.attrs:
-                                    if k == "href":
-                                        td_title_hrefs.append(v)
-                elif tag == "title":
-                    for cc in c.children:
-                        if isinstance(cc, Text):
-                            title_texts.append(cc.data)
-                elif tag == "p":
-                    p_texts.append(
-                        "".join(
-                            cc.data for cc in c.children if isinstance(cc, Text)
-                        ).strip(_TRIM_CHARS)
-                    )
-        level = nxt
-    return {
-        "//a/@href/text()": a_hrefs,
-        "//td[@class='title']/a/@href/text()": td_title_hrefs,
-        "//title/text()": title_texts,
-        "p_texts": p_texts,
-    }
-
-
-def _fast_xpath(html: str, query: str, kernel_fn) -> list[str] | None:
-    """Fast answer for *query* if it is a fused shape, else None. Runs the
-    sampled parity check; a mismatch disables the path process-wide."""
-    global _FAST_HTML
-    walk = _fast_walk(html)
-    if query not in walk:
-        return None
-    got = walk[query]
-    _FAST_STATS["pages"] += 1
-    import zlib
-
-    if zlib.crc32(html[:128].encode()) % 64 == 0:
-        _FAST_STATS["checked"] += 1
-        want = kernel_fn(html, query)
-        if got != want:
-            _FAST_STATS["mismatch"] += 1
-            _FAST_HTML = False  # correctness wins: kernel-only from here
-            return want
-    return got
 
 
 # ------------------------------------------------------- page-level kernel

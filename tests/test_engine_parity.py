@@ -503,9 +503,10 @@ def test_resume_callable_mode_with_store(spark, corpus, tmp_path):
 
 def test_fetch_once_across_arrow_batches(spark, tmp_path):
     """A url whose request rows straddle an Arrow batch boundary is still
-    fetched exactly once: the fused stage carries the partition-tail url's
-    response across batches (udfs.py `carry`). 41 branches reach one url
-    with maxRecordsPerBatch=2, so its rows span ~20 batches."""
+    fetched exactly once: the round's Python stage carries the response of
+    the url in progress across batches (udfs.py make_round_fn). 41
+    branches reach one url with maxRecordsPerBatch=2, so its rows span ~20
+    batches."""
     log = tmp_path / "calls"
     log.mkdir()
 
@@ -537,15 +538,24 @@ def test_fetch_once_across_arrow_batches(spark, tmp_path):
     assert eng.results_df().count() == 41
 
 
-def test_replay_across_arrow_batches(spark, corpus, tmp_path):
-    """The batched cache-hit replay keeps a url's body, head and eval memo
-    across Arrow batch boundaries (udfs.py make_replay_fn). With
-    maxRecordsPerBatch=1 every replayed url's body row sits in a different
-    batch from each of its replay rows, so a replay that lost the carried
-    body would extract from an empty page and break parity."""
-    _, pages_dict = corpus
+@pytest.mark.parametrize("mode", ["callable", "snapshot"])
+def test_replay_across_arrow_batches(spark, corpus, tmp_path, mode):
+    """The round's one Python stage keeps a url's response, seen row and
+    eval memo across Arrow batch boundaries and resets them when the url
+    changes (udfs.py make_round_fn). With maxRecordsPerBatch=1 every body
+    row (a replayed url's store row, or a snapshot page row) sits in a
+    different batch from each of its request rows, and fresh and replayed
+    urls share partitions, so a worker that lost the carried response, or
+    leaked one url's response into the next, would break parity; and a
+    replayed url must never reach fetch_fn again."""
+    pages_df, pages_dict = corpus
+    log = tmp_path / "calls"
+    log.mkdir()
 
     def fetch_fn(urls):
+        import uuid as _uuid
+
+        (log / _uuid.uuid4().hex).write_text("\n".join(urls))
         return [
             (pages_dict.get(u), 200 if u in pages_dict else 404) for u in urls
         ]
@@ -556,20 +566,29 @@ def test_replay_across_arrow_batches(spark, corpus, tmp_path):
     prev = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "1")
     try:
-        eng = CrawlEngine(
-            spark, None, str(tmp_path / "work"), politeness_k=None,
-            fetch_mode="callable", fetch_fn=fetch_fn,
-        )
+        if mode == "callable":
+            eng = CrawlEngine(
+                spark, None, str(tmp_path / "work"), politeness_k=None,
+                fetch_mode="callable", fetch_fn=fetch_fn,
+            )
+        else:
+            eng = CrawlEngine(
+                spark, pages_df, str(tmp_path / "work"), politeness_k=None,
+            )
         eng.run(program, max_rounds=50)
         assert_parity(oracle, eng)
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
-    # the batched Python replay really ran
+    # the Python replay really ran
     replayed = [
         eng.table.round_metrics(r).get("py_replay_rows") or 0
         for r in eng.table.committed_rounds()
     ]
     assert sum(replayed) > 0, replayed
+    fetched = [
+        u for p in log.iterdir() for u in p.read_text().splitlines() if u
+    ]
+    assert len(fetched) == len(set(fetched))
 
 
 def test_parity_forced_distributed_paths(spark, corpus, tmp_path):
@@ -622,105 +641,6 @@ def test_resume_bloom_rebuild_is_distributed_and_complete(spark, corpus, tmp_pat
     assert len(seen) > 0
     flags = eng2.bloom.filter_frame(seen)
     assert bool(flags.all()), "resume bloom has false negatives"
-
-
-def test_empty_replay_skips_store_scan(spark, tmp_path):
-    """AQE's empty-relation propagation rewrites a broadcast semi-join with
-    an empty probe side to an EmptyRelation, so a body-bearing scan behind
-    it never runs. The engine's primary gate is now driver-side (the fused
-    round prunes the cogroup branch when the seg=pyrep parquet footers say
-    0 rows, crawler.py _round); this pins the Spark behavior that
-    backstops it — a non-empty pyrep segment whose url set happens to miss
-    the store entirely still never decompresses store body chunks."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    store_path = str(tmp_path / "store")
-    spark.range(2000).select(
-        F.concat(F.lit("u"), F.col("id")).alias("url_canon"),
-        F.expr("repeat('x', 500)").alias("body"),
-    ).write.parquet(store_path)
-    store = spark.read.parquet(store_path)
-
-    empty = spark.range(0).select(
-        F.concat(F.lit("u"), F.col("id")).alias("url_canon"),
-        F.lit("pk").alias("path_key"),
-    )
-    store_src = store.join(
-        F.broadcast(empty.select("url_canon").distinct()),
-        "url_canon", "left_semi",
-    )
-
-    def rep(lk, rk):
-        return pd.DataFrame({"url_canon": pd.Series(dtype="object"),
-                             "n": pd.Series(dtype="int64")})
-
-    replayed = (
-        empty.groupby("url_canon")
-        .cogroup(store_src.groupby("url_canon"))
-        .applyInPandas(rep, "url_canon string, n long")
-    )
-    fresh = spark.range(5).select(
-        F.concat(F.lit("z"), F.col("id")).alias("url_canon"),
-        F.lit(1).cast("long").alias("n"),
-    )
-    out = fresh.unionByName(replayed)
-    # collect() drives THIS DataFrame's own query execution, so the
-    # inspected plan below is the final adaptive plan of the same run
-    assert len(out.collect()) == 5
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "isFinalPlan=true" in plan, plan
-    assert "EmptyRelation" in plan, plan
-
-
-def test_empty_replay_prunes_store_scan(spark, tmp_path):
-    """The same backstop for the engine's batched replay shape (crawler.py
-    _replay: slim replay rows unioned with the semi-joined store rows, one
-    url_canon exchange, url-sorted mapInPandas). With an empty probe side
-    AQE turns the broadcast semi-join into an empty relation and drops it
-    from the union, so the final plan holds no store scan at all and the
-    store's body chunks are never decompressed."""
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    store_path = str(tmp_path / "store")
-    spark.range(2000).select(
-        F.concat(F.lit("u"), F.col("id")).alias("url_canon"),
-        F.expr("repeat('x', 500)").alias("body"),
-    ).write.parquet(store_path)
-    store = spark.read.parquet(store_path)
-
-    empty = spark.range(0).select(
-        F.concat(F.lit("u"), F.col("id")).alias("url_canon"),
-        F.lit("pk").alias("path_key"),
-        F.lit(1).alias("_src"),
-    )
-    store_src = store.join(
-        F.broadcast(empty.select("url_canon").distinct()),
-        "url_canon", "left_semi",
-    ).select("url_canon", "body", F.lit(0).alias("_src"))
-
-    def rep(batches):
-        for _ in batches:
-            yield pd.DataFrame({"url_canon": pd.Series(dtype="object"),
-                                "n": pd.Series(dtype="int64")})
-
-    replayed = (
-        empty.unionByName(store_src, allowMissingColumns=True)
-        .repartition(4, "url_canon")
-        .sortWithinPartitions("url_canon", "_src", "path_key")
-        .mapInPandas(rep, "url_canon string, n long")
-    )
-    fresh = spark.range(5).select(
-        F.concat(F.lit("z"), F.col("id")).alias("url_canon"),
-        F.lit(1).cast("long").alias("n"),
-    )
-    out = fresh.unionByName(replayed)
-    assert len(out.collect()) == 5
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "isFinalPlan=true" in plan, plan
-    final = plan.split("== Initial Plan ==")[0]
-    assert "FileScan" not in final, plan
 
 
 def test_webgen_uniform_host_dist(monkeypatch):

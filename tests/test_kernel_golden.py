@@ -478,7 +478,7 @@ def test_main_text_edge_cases():
     ) == ""
 
 
-# --------------------------------------------- fused fast path (BORIS_FAST_HTML)
+# ------------------------------------------------------------- page profile
 
 
 def test_page_profile_scalar_parity():
@@ -536,74 +536,3 @@ def test_ws_normalize_matches_regex_sub():
     for _ in range(3000):
         s = "".join(rng.choice(chars) for _ in range(rng.randint(0, 40)))
         assert _ws_normalize(s) == re.sub(r"\s+", " ", s), repr(s)
-
-
-def test_fast_html_walk_parity(monkeypatch):
-    """The fused single-BFS-walk evaluator answers the four hot shapes
-    byte-identically to the kernel evaluator — including the BFS-order
-    traps (matches at different depths, nested <a>, duplicate attrs,
-    multi-valued class) — and the sampled parity guard trips and disables
-    the path on an injected mismatch."""
-    from boris_spark.kernel import htmlkit
-    from boris_spark.synth import webgen
-
-    monkeypatch.setattr(htmlkit, "_FAST_HTML", True)
-    htmlkit._fast_walk.cache_clear()
-
-    queries = [
-        "//a/@href/text()",
-        "//td[@class='title']/a/@href/text()",
-        "//title/text()",
-    ]
-    cases = [
-        # BFS order: deep link (table) after shallow sibling link
-        "<html><body><table><tr><td class='title'><a href='deep'>t</a>"
-        "</td></tr></table><a href='shallow'>s</a></body></html>",
-        # nested <a> at different depths
-        "<div><a href='d1'><span><a href='d2'>x</a></span></a></div>",
-        # only DIRECT a children of td.title count for the child step
-        "<table><td class='title'><div><a href='no'>n</a></div>"
-        "<a href='yes'>y</a></td></table>",
-        # empty + duplicate href attrs are kept, missing href skipped
-        "<a>nohref</a><a href=''>e</a><a href='v' href='w'>d</a>",
-        # multiple titles, mixed children
-        "<title>t1</title><div><title>t2<b>x</b>t3</title></div>",
-        # class must equal 'title' exactly
-        "<td class='title other'><a href='nomatch'>n</a></td>",
-        # case-insensitive tags/attr names
-        "<TD CLASS='title'><A HREF='case'>c</A></TD>",
-        "<p>one<b>bold</b>two</p><div><p> three </p></div>",
-    ] + [
-        (lambda h: h.decode() if isinstance(h, (bytes, bytearray)) else h)(
-            webgen.page_row(i, 2000, 7, 4)["html"]
-        )
-        for i in range(30)
-    ]
-    for h in cases:
-        for q in queries:
-            assert htmlkit.xpath(h, q) == htmlkit._kernel_xpath_str(h, q), (
-                h[:60], q,
-            )
-        assert htmlkit.xpath_text(h, "//p") == htmlkit._kernel_xpath_text_str(
-            h, "//p"
-        ), h[:60]
-    assert htmlkit._FAST_HTML is True  # no mismatch tripped the guard
-
-    # guard trip: corrupt a cached walk entry for a page whose crc puts it
-    # in the 1/64 parity sample, then query through the public API
-    probe = None
-    import zlib
-
-    for i in range(3000):
-        h = f"<html><body><a href='u{i}'>x</a></body></html>"
-        if zlib.crc32(h[:128].encode()) % 64 == 0:
-            probe = h
-            break
-    assert probe is not None
-    htmlkit._fast_walk.cache_clear()
-    bad = dict(htmlkit._fast_walk(probe))
-    bad["//a/@href/text()"] = ["WRONG"]
-    monkeypatch.setattr(htmlkit, "_fast_walk", lambda html: bad)
-    got = htmlkit.xpath(probe, "//a/@href/text()")
-    assert got == htmlkit._kernel_xpath_str(probe, "//a/@href/text()")
-    assert htmlkit._FAST_HTML is False  # disabled process-wide
