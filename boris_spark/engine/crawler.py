@@ -16,26 +16,25 @@ interpreter, /root/reference/boris/interpreter.rkt:54-59 — see SURVEY.md §3):
    window (phase 1 bounds any hot host to salt×k survivors, phase 2 is the
    exact top-k) — skew-safe where a naive ``Window.partitionBy(host)`` would
    funnel the hottest host through one task;
-5. respond, inside the round's ONE Python stage: fresh urls and the
-   cache hits the memo join cannot serve share one url-sorted
-   ``mapInPandas`` and differ only in where a url's response comes from
-   (the reference's request service: replay on a hit, fetch on a miss,
-   browser-services.rkt:35-47). A fresh url's DFS-min request goes to the
-   one ``fetch_fn`` contract (a callable, or the live HTTP fetcher of
-   fetch.py — the swappable request service,
-   boris/interpreter/services.rkt:14-15); a snapshot crawl instead joins
-   the pages table's row ahead of the url's requests (the deterministic
-   analogue of request->response, hypertext-browser/http.rkt:124-136; no
-   row = 404); a cache hit gets its stored body row the same way and never
-   fetches again — or, when its exact input state is in the eval-output
-   memo, skips Python altogether through a JVM join. Over-budget URLs
+5. respond, inside the round's ONE Python stage: fresh urls and every
+   cache hit share one url-sorted ``mapInPandas`` and differ only in
+   where a url's response comes from (the reference's request service:
+   replay on a hit, fetch on a miss, browser-services.rkt:35-47). A fresh
+   url's DFS-min request goes to the one ``fetch_fn`` contract (a
+   callable, or the live HTTP fetcher of fetch.py — the swappable request
+   service, boris/interpreter/services.rkt:14-15); a snapshot crawl
+   instead joins the pages table's row ahead of the url's requests (the
+   deterministic analogue of request->response,
+   hypertext-browser/http.rkt:124-136; no row = 404); a cache hit gets its
+   stored body row the same way, never fetches again, and is evaluated
+   again on that stored response, as the reference does. Over-budget URLs
    defer to the next round — ordering parity is unaffected because
    results order is path_key order, which is budget-invariant;
 6. evaluate in place: in that same stage each state fans to the navigate
    node's children, and the worker that holds the page evaluates every
    non-fetch node (extract/bind/jump) on it to fixpoint
    (``udfs.eval_to_fixpoint``, interpreter.rkt:54-59) — only new fetch
-   requests, results, downloads and memo rows leave the worker, in ONE
+   requests, results and downloads leave the worker, in ONE
    output write per round (the root's own evaluation runs on the driver,
    before round 0, with no Spark job);
 7. sinks + checkpoint: every sink delta is committed by ADOPTING data
@@ -70,8 +69,7 @@ from .bloom import BloomShardStore
 from .compiler import NodeSpec, compile_program
 from .tableformat import ParquetManifestFormat, TableFormat, write_json_atomic
 from .udfs import (
-    CASCADE_SCHEMA, MEMO_JOINABLE_KINDS, eval_to_fixpoint, make_round_fn,
-    write_by_kind,
+    CASCADE_SCHEMA, eval_to_fixpoint, make_round_fn, write_by_kind,
 )
 
 REQUEST_SCHEMA = (
@@ -87,9 +85,9 @@ SEEN_SCHEMA = (
     "path_first string"
 )
 STORE_SCHEMA = "url_canon string, body string, status int, head string"
-# results/downloads/memo sinks = kind= partitions adopted out of the round's
+# results/downloads sinks = kind= partitions adopted out of the round's
 # output write by rename: every CASCADE column except the partition column
-MEMO_SINK_SCHEMA = CASCADE_SCHEMA.split(", ", 1)[1]
+OUTPUT_SINK_SCHEMA = CASCADE_SCHEMA.split(", ", 1)[1]
 
 _REQ_COLS = [
     "pc", "url_canon", "url_full", "url_hash", "host",
@@ -97,6 +95,10 @@ _REQ_COLS = [
 ]
 # write tasks of the routing job (see _round)
 _ROUTE_PARTS = 4
+# salts of the politeness window's first phase (see _round)
+_SALT_PARTS = 8
+# bits per Bloom shard of the seen-set prefilter
+_BLOOM_BITS = 1 << 17
 
 
 @dataclass
@@ -116,9 +118,7 @@ class CrawlEngine:
         workdir: str,
         politeness_k: int | None = 64,
         n_buckets: int = 32,
-        salt_parts: int = 8,
         use_bloom: bool = True,
-        bloom_bits: int = 1 << 17,
         robots_rules: DataFrame | None = None,
         host_budgets: DataFrame | None = None,  # (host, budget): per-host k
         fetch_mode: str = "snapshot",  # "snapshot" | "http" | "callable"
@@ -136,9 +136,8 @@ class CrawlEngine:
         self.table = table_format or ParquetManifestFormat(spark, workdir)
         self.politeness_k = politeness_k
         self.n_buckets = n_buckets
-        self.salt_parts = salt_parts
         self.use_bloom = use_bloom
-        self.bloom = BloomShardStore(n_buckets, bloom_bits) if use_bloom else None
+        self.bloom = BloomShardStore(n_buckets, _BLOOM_BITS) if use_bloom else None
         self._bloom_bc = None
         self.broadcast_seen_limit = broadcast_seen_limit
         self.robots = robots_rules
@@ -184,13 +183,9 @@ class CrawlEngine:
     _SINK_SCHEMAS = {
         "seen": SEEN_SCHEMA,
         "store": STORE_SCHEMA,
-        # results/downloads = kind= partitions adopted out of the round's
-        # output write (same file schema as the memo sink: every CASCADE
-        # column except the partition column itself)
-        "results": MEMO_SINK_SCHEMA,
-        "downloads": MEMO_SINK_SCHEMA,
+        "results": OUTPUT_SINK_SCHEMA,
+        "downloads": OUTPUT_SINK_SCHEMA,
         "frontier": REQUEST_SCHEMA,
-        "memo": MEMO_SINK_SCHEMA,
     }
 
     def _read_sink(self, sink: str) -> DataFrame | None:
@@ -234,7 +229,7 @@ class CrawlEngine:
         deterministic across parallelism levels)."""
         # Adaptive execution OFF for the crawl loop (restored on exit, the
         # session default stays on for ad-hoc queries): every join in a
-        # round has a statically pinned strategy (broadcast memo-key/budget
+        # round has a statically pinned strategy (broadcast seen-key/budget
         # dims, shuffle-hash on unique 64-bit url hashes) and host skew is
         # handled explicitly by the two-phase salted window, so AQE cannot
         # improve a round's plan — but each AQE query stage is a separate
@@ -272,13 +267,6 @@ class CrawlEngine:
             if os.path.isdir(p):
                 shutil.rmtree(p, ignore_errors=True)
         self.node_table = compile_program(root)
-        # eval-output-cache replays (JVM join instead of Python re-eval)
-        # are exact only for straight navigate/extract programs — see
-        # MEMO_JOINABLE_KINDS
-        self._memo_joinable = all(
-            spec.kind in MEMO_JOINABLE_KINDS
-            for spec in self.node_table.values()
-        )
         # Worker-direct sink writes: the Python workers parquet each fetched
         # url's store row (body) and seen row into these inbox dirs, which
         # are ADOPTED as the round's store and seen deltas — bodies never
@@ -287,14 +275,10 @@ class CrawlEngine:
         # table already is the body source (_body_source)
         self._store_inbox = self._path("store_inbox")
         self._seen_inbox = self._path("seen_inbox")
-        # memo-on-miss: replay-evaluated states feed the memo sink too, so
-        # a hub url re-linked at the same depth round after round pays the
-        # Python replay once, then joins JVM-side forever after
         self._round_fn = make_round_fn(
             self.node_table, self.fetch_fn,
             store_dir=self._store_inbox if self.pages is None else None,
-            seen_dir=self._seen_inbox,
-            n_buckets=self.n_buckets, emit_memo=self._memo_joinable,
+            seen_dir=self._seen_inbox, n_buckets=self.n_buckets,
         )
 
         # driver-tracked seen-set size (accumulated from the per-round delta
@@ -308,10 +292,10 @@ class CrawlEngine:
             # a round killed after adopting deltas but before its manifest
             # committed: roll them back, or the rerun would take its own
             # stale seen rows as "already seen" and never record them.
-            # Round r writes seen/store/memo delta r and frontier/results/
+            # Round r writes seen/store delta r and frontier/results/
             # downloads delta r+1
             for sink, first in (
-                ("seen", 0), ("store", 0), ("memo", 0),
+                ("seen", 0), ("store", 0),
                 ("frontier", 1), ("results", 1), ("downloads", 1),
             ):
                 self.table.rollback(sink, start_round + first)
@@ -416,12 +400,12 @@ class CrawlEngine:
     def _round(self, requests: DataFrame, rnd: int, n_req: int):
         """One crawl round, the same in every fetch mode: a route job, then
         an eval job whose ONE Python stage (``_url_stage``) evaluates every
-        fresh url and every cache hit the memo join cannot serve. Fresh
-        urls are fetched exactly once per crawl (or take the snapshot's
-        page row), and the workers write the round's seen delta and the
-        fetched bodies (the store sink, the crash-resumable page cache).
-        Cache hits never reach fetch_fn: they replay the stored response
-        (browser-services.rkt:36-40), so live fetchers are hit once and the
+        fresh url and every cache hit. Fresh urls are fetched exactly once
+        per crawl (or take the snapshot's page row), and the workers write
+        the round's seen delta and the fetched bodies (the store sink, the
+        crash-resumable page cache). Cache hits never reach fetch_fn: they
+        replay the stored response (browser-services.rkt:36-40) and are
+        evaluated on it again, so live fetchers are hit once and the
         politeness budget is never bypassed. All routing frames are slim;
         each body crosses one url_canon exchange + one Arrow boundary per
         round that evaluates it. Returns (fetched, results, metrics)."""
@@ -492,7 +476,7 @@ class CrawlEngine:
         if self._politeness_window:
             k = self.politeness_k if self.politeness_k is not None else (1 << 30)
             salted = unseen.withColumn(
-                "salt", F.pmod(F.col("url_hash"), F.lit(self.salt_parts))
+                "salt", F.pmod(F.col("url_hash"), F.lit(_SALT_PARTS))
             )
             if self.host_budgets is not None:
                 salted = salted.join(
@@ -528,21 +512,20 @@ class CrawlEngine:
             )
         # ONE lineage-break job per round: every request row is routed into
         # a segment — fresh (politeness winner, gets fetched + evaluated),
-        # jvmrep (cache hit whose exact input state is in the eval-output
-        # memo: replayed by a pure JVM join), pyrep (cache hit that needs
-        # the Python replay: memo miss or robots-blocked), or
-        # deferred (over budget, back to the frontier) — and the whole
-        # tagged frame is written once, hive-partitioned by ``seg``. The
-        # rest of the round (eval job, frontier adoption) reads plain
-        # columnar scans of its subdirs; per-segment row counts
-        # come free from the parquet footers, so empty branches are PRUNED
+        # replay (cache hit or robots-blocked: evaluated on its stored
+        # response, or an empty body), or deferred (over budget, back to
+        # the frontier) — and the whole tagged frame is written once,
+        # hive-partitioned by ``seg``. The rest of the round (eval job,
+        # frontier adoption) reads plain columnar scans of its subdirs;
+        # per-segment row counts come free from the parquet footers, so
+        # empty branches are PRUNED
         # DRIVER-SIDE (no count() jobs, no reliance on AQE empty-relation
         # propagation for the body-bearing store scan). Before this, the
         # eval query inlined the requests→seen-filter→politeness→route
         # lineage once per reference (~190 KB plan text), Catalyst + AQE
         # re-optimization cost seconds of driver time per round, and the
         # broadcast-subquery threads raced the unmaterialized persists,
-        # re-EXECUTING the routing/memo subtrees concurrently (profiled:
+        # re-EXECUTING the routing subtrees concurrently (profiled:
         # one politeness-bound round burned 298 CPU-s of JVM time on <10 MB
         # of data).
         base = requests.join(decided, "url_canon", "left")
@@ -566,73 +549,19 @@ class CrawlEngine:
                     .drop("_pblk")
                 )
 
-        # eval-output-cache replay: for memo-joinable programs (straight
-        # navigate/extract — the dominant crawl shape), a cached url's
-        # replay is a pure JVM JOIN against the memo sink: match the input
-        # state (url, pc, url_full, bindings, method, pre-fold jar), emit
-        # the cached request/result rows with path_key = prefix ++ suffix.
-        # No page body is read, parsed, or re-evaluated — at 10^10 URLs,
-        # re-extracting a hub page once per new referring path is the
-        # dominant wasted work, and this removes it entirely. Misses
-        # (states never evaluated at fetch time, e.g. a branch arriving
-        # with a different cookie jar) and robots-blocked branches fall
-        # back to the Python replay, which is always exact.
-        # Hit-detection happens HERE, in the routing job, against the
-        # DISTINCT memo input-state keys (filtered to this round's
-        # candidate urls — a superset of the replay urls is safe: fresh and
-        # deferred urls were never fetched, so they cannot appear among the
-        # memo's cur_urls), so the segment tag already encodes the
-        # miss/hit split and the eval job never re-plans the anti-join.
-        memo = self._read_sink("memo") if self._memo_joinable else None
-        memo_f = None
-        if memo is not None:
-            cand_urls = urls.select("url_canon")
-            memo_f = memo.join(
-                F.broadcast(cand_urls),
-                memo["cur_url"] == cand_urls["url_canon"], "left_semi",
-            ).persist()  # reused by the eval job's hit join
-            self._round_persists.append(memo_f)
-            memo_keys = memo_f.select(
-                "cur_url", "mk_pc", "mk_full", "mk_bindings",
-                "mk_method", "mk_cookies",
-            ).distinct()
-            hit_cond = (
-                (base["url_canon"] == memo_keys["cur_url"])
-                & (base["pc"] == memo_keys["mk_pc"])
-                & base["url_full"].eqNullSafe(memo_keys["mk_full"])
-                & base["bindings"].eqNullSafe(memo_keys["mk_bindings"])
-                & (
-                    F.coalesce(base["method"], F.lit("GET"))
-                    == F.coalesce(memo_keys["mk_method"], F.lit("GET"))
-                )
-                & base["cookies"].eqNullSafe(memo_keys["mk_cookies"])
-            )
-            # memo_keys is DISTINCT on exactly the join keys → ≤1 match per
-            # row: the left join marks without duplicating
-            base = base.join(F.broadcast(memo_keys), hit_cond, "left").withColumn(
-                "_hit", memo_keys["cur_url"].isNotNull()
-            ).drop(
-                "cur_url", "mk_pc", "mk_full", "mk_bindings",
-                "mk_method", "mk_cookies",
-            )
-        else:
-            base = base.withColumn("_hit", F.lit(False))
-
         seg_col = (
             F.when(F.col("_fresh").isNull(), F.lit("deferred"))
             .when(F.col("_fresh"), F.lit("fresh"))
-            .when(F.col("_blk") | ~F.col("_hit"), F.lit("pyrep"))
-            .otherwise(F.lit("jvmrep"))
+            .otherwise(F.lit("replay"))
         )
         routed_path = self._path("cascade_tmp", f"routed={rnd}")
-        # the routed rows are SLIM (no bodies) and every downstream consumer
-        # re-partitions for its own needs (fresh → url_canon co-location,
-        # pyrep → replay exchange), so the write's partitioning is pure
-        # task/file overhead: collapse to a few write tasks instead of
-        # shuffle_partitions × segs tiny files + footers per round — at
-        # politeness-bound (many-round, few-rows) tiers this is a per-round
-        # fixed cost that doesn't shrink with cores
-        base.withColumn("seg", seg_col).drop("_fresh", "_hit").repartition(
+        # the routed rows are SLIM (no bodies) and the Python stage
+        # re-partitions fresh and replay rows by url_canon itself, so the
+        # write's partitioning is pure task/file overhead: collapse to a few
+        # write tasks instead of shuffle_partitions × segs tiny files +
+        # footers per round — at politeness-bound (many-round, few-rows)
+        # tiers this is a per-round fixed cost that doesn't shrink with cores
+        base.withColumn("seg", seg_col).drop("_fresh").repartition(
             _ROUTE_PARTS
         ).write.partitionBy("seg").mode("overwrite").parquet(routed_path)
         self._tmp_sink_paths.append(routed_path)
@@ -649,77 +578,32 @@ class CrawlEngine:
 
         _mark("route")
 
-        # the round's ONE Python stage (_url_stage): fresh and pyrep rows,
+        # the round's ONE Python stage (_url_stage): fresh and replay rows,
         # tagged _fresh, share one url_canon exchange (fetch_fn MUST fire
         # once per url) and one url sort (a url's paths consecutive: its
         # eval memo is O(1)). A url's body row leads its requests through
         # the same exchange: its pages row in a snapshot crawl, else a
         # replayed url's store row. The store side exists ONLY when the
-        # footers say there are pyrep rows, so memo-covered rounds never
+        # footers say there are replay rows, so all-fresh rounds never
         # plan the body-bearing store scan. Width follows the stage's row
         # count (free, from the routed footers)
-        outs = []
-        n_py = segs.get("fresh", 0) + segs.get("pyrep", 0)
-        if n_py:
+        n_py = segs.get("fresh", 0) + segs.get("replay", 0)
+        if not n_py:
+            out_df = self._empty(CASCADE_SCHEMA)
+        else:
             rows = None
-            for name in ("fresh", "pyrep"):
+            for name in ("fresh", "replay"):
                 if segs.get(name, 0):
                     seg = _seg(name).withColumn("_fresh", F.lit(name == "fresh"))
                     rows = seg if rows is None else rows.unionByName(seg)
             bodies = None
             if self.pages is not None:
                 bodies = self._body_source(rows)
-            elif segs.get("pyrep", 0):
-                bodies = self._body_source(_seg("pyrep"))
-            outs.append(
-                self._url_stage(rows, self._round_parts(n_py), bodies)
-            )
-        if memo_f is not None and segs.get("jvmrep", 0):
-            jr = _seg("jvmrep")
-            cond = (
-                (jr["url_canon"] == memo_f["cur_url"])
-                & (jr["pc"] == memo_f["mk_pc"])
-                & jr["url_full"].eqNullSafe(memo_f["mk_full"])
-                & jr["bindings"].eqNullSafe(memo_f["mk_bindings"])
-                & (
-                    F.coalesce(jr["method"], F.lit("GET"))
-                    == F.coalesce(memo_f["mk_method"], F.lit("GET"))
-                )
-                & jr["cookies"].eqNullSafe(memo_f["mk_cookies"])
-            )
-            nl = lambda t: F.lit(None).cast(t)  # noqa: E731
-            outs.append(
-                jr.join(memo_f, cond, "inner")
-                .where(memo_f["mk"].isin("request", "result"))
-                .select(
-                    memo_f["mk"].alias("kind"),
-                    memo_f["pc"].alias("pc"),
-                    nl("string").alias("cur_url"),
-                    memo_f["bindings"].alias("bindings"),
-                    F.concat(jr["path_key"], memo_f["path_key"]).alias("path_key"),
-                    memo_f["url_canon"].alias("url_canon"),
-                    memo_f["url_full"].alias("url_full"),
-                    memo_f["url_hash"].alias("url_hash"),
-                    memo_f["host"].alias("host"),
-                    memo_f["referer"].alias("referer"),
-                    memo_f["method"].alias("method"),
-                    memo_f["payload"].alias("payload"),
-                    memo_f["value"].alias("value"),
-                    memo_f["vkind"].alias("vkind"),
-                    memo_f["cookies"].alias("cookies"),
-                    nl("string").alias("mk"),
-                    nl("long").alias("mk_pc"),
-                    nl("string").alias("mk_full"),
-                    nl("string").alias("mk_method"),
-                    nl("string").alias("mk_bindings"),
-                    nl("string").alias("mk_cookies"),
-                )
-            )
-        first_out = outs[0] if outs else self._empty(CASCADE_SCHEMA)
-        for o in outs[1:]:
-            first_out = first_out.unionByName(o)
-        # the output's kind=request/kind=memo partitions are ADOPTED below
-        n_results, out_path = self._cascade(first_out, rnd + 1)
+            elif segs.get("replay", 0):
+                bodies = self._body_source(_seg("replay"))
+            out_df = self._url_stage(rows, self._round_parts(n_py), bodies)
+        # the output's kind=request partition is ADOPTED below
+        n_results, out_path = self._cascade(out_df, rnd + 1)
         _mark("fused_cascade")
 
         # Commit this round's sinks by ADOPTING files its own tasks already
@@ -728,7 +612,6 @@ class CrawlEngine:
         # - store: the Python stage's workers parquet'd each fetched url's
         #   body into the store inbox (the page cache replays read; a
         #   snapshot crawl writes none — its pages table is that cache);
-        # - memo: the round output's kind=memo partition (slim rows);
         # - seen: the workers also wrote each fetched url's seen row (keys,
         #   status, bucket, DFS-min path over the url's rows this round —
         #   the pre-politeness `urls` aggregate's pk) into the seen inbox;
@@ -745,10 +628,6 @@ class CrawlEngine:
         #   carry the full output schema; frontier readers project to
         #   REQUEST_SCHEMA.
         self.table.adopt_delta(self._store_inbox, "store", rnd)
-        if self._memo_joinable:
-            self.table.adopt_delta(
-                os.path.join(out_path, "kind=memo"), "memo", rnd
-            )
         if blocked is not None:
             blocked.select(
                 "url_hash", "url_canon", "host", "bucket", "status",
@@ -776,10 +655,8 @@ class CrawlEngine:
             "results": n_results,
             # every request row's route this round (sums to `requests`)
             "routed": {
-                k: segs.get(k, 0)
-                for k in ("fresh", "jvmrep", "pyrep", "deferred")
+                k: segs.get(k, 0) for k in ("fresh", "replay", "deferred")
             },
-            "py_replay_rows": segs.get("pyrep", 0),
             "partitions": lineage,
             "phases": {
                 b: round(tb - ta, 2)
@@ -801,8 +678,7 @@ class CrawlEngine:
         # which cost two sequential broadcast-build sub-jobs per round —
         # pure driver-sync fixed cost at local/bench scale. At 10^10 the
         # seen set blows the cap and the later tiers take over.
-        n_seen = getattr(self, "_n_seen", None)
-        if n_seen is not None and n_seen <= self.broadcast_seen_limit:
+        if self._n_seen <= self.broadcast_seen_limit:
             return urls.join(
                 F.broadcast(seen_keys.select("url_canon")),
                 "url_canon", "left_anti",
@@ -927,7 +803,7 @@ class CrawlEngine:
           on the driver. The driver only ORs pre-built bitsets.
         """
         n_delta = self.table.delta_rows("seen", rnd)
-        self._n_seen = getattr(self, "_n_seen", 0) + n_delta
+        self._n_seen += n_delta
         if n_delta == 0:
             return 0, []  # the round adopted no seen delta
         if n_delta <= self.broadcast_seen_limit:
@@ -988,8 +864,7 @@ class CrawlEngine:
         its result/download partitions (``_adopt_outputs``). The workers
         already evaluated every state to fixpoint, so no kind here carries
         a page body and nothing is read back to evaluate again. The caller
-        adopts ``kind=memo`` and ``kind=request`` (or reads the latter);
-        the rest is deleted at the end of the round (``_drop_tmp_sinks``).
+        adopts ``kind=request`` as the next frontier; the rest is deleted at the end of the round (``_drop_tmp_sinks``).
         Returns (result rows, output path)."""
         path = self._path("cascade_tmp", f"round={rnd}")
         out_df.write.partitionBy("kind").mode("overwrite").parquet(path)

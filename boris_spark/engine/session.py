@@ -24,6 +24,17 @@ def default_cores() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 
+def default_driver_mem() -> str:
+    """Driver heap: ``$SPARK_DRIVER_MEM``, else a quarter of the host's
+    physical memory and at least 1 GiB — so two local sessions on one host
+    cannot each claim more heap than the host has."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    phys_mb = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") >> 20
+    return f"{max(1024, phys_mb // 4)}m"
+
+
 def get_spark(
     app: str = "boris-spark",
     cores: int | None = None,
@@ -65,7 +76,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", default_driver_mem())
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.driver.extraJavaOptions", "-Dio.netty.tryReflectionSetAccessible=true")

@@ -15,8 +15,7 @@ side:
   canonicalized + hashed target, path extended with the fan-out index;
 - ``result``   → an extraction fly (semantics.rkt:61-66), #f/void suppressed
   (browser-services.rkt:50-53);
-- ``download`` → a body sink row (syntax/io.rkt:27-36);
-- ``memo``     → an eval-output cache row (``_emit_memo``).
+- ``download`` → a body sink row (syntax/io.rkt:27-36).
 
 All string work (xpath/links/forms/canonicalize/hash) is the shared pure
 kernel — identical bytes to the oracle by construction.
@@ -42,30 +41,11 @@ _OUT_COLS = (
     ("url_full", "string"), ("url_hash", "int64"), ("host", "string"),
     ("referer", "string"), ("method", "string"), ("payload", "string"),
     ("value", "string"), ("vkind", "string"), ("cookies", "string"),
-    # memo columns (kind='memo' rows — the eval-output cache that lets later
-    # rounds replay a cached url as a pure JVM join, see make_round_fn):
-    # mk = the output row's real kind ('request'/'result', or 'mark' for the
-    # state-evaluated marker), mk_* = the INPUT-state key the outputs were
-    # computed under (parent pc, full url, bindings, method, pre-fold jar)
-    ("mk", "string"), ("mk_pc", "int64"), ("mk_full", "string"),
-    ("mk_method", "string"), ("mk_bindings", "string"),
-    ("mk_cookies", "string"),
 )
 _COLS = [c for c, _ in _OUT_COLS]
 _INT_COLS = tuple(c for c, t in _OUT_COLS if t == "int64")
 CASCADE_SCHEMA = ", ".join(
     f"{c} {'long' if t == 'int64' else t}" for c, t in _OUT_COLS
-)
-
-# programs built only from these node kinds have outputs that are a pure
-# function of (pc, url, url_full, bindings, method, cookies) with
-# path_key = input_path + constant_suffix and NO body-carrying or
-# nested-state outputs — exactly the class whose cache-hit replays can
-# run as a JVM join against the memo sink instead of re-evaluating bodies
-# in Python (let/for/label/recur/show evaluate nested states in place and
-# download emits the body itself, so they take the batched Python replay)
-MEMO_JOINABLE_KINDS = frozenset(
-    {"go", "click", "submit", "extract", "extract_list"}
 )
 
 
@@ -343,37 +323,6 @@ def _eval_memo(
         out.append(r2)
 
 
-def _emit_memo(
-    out: list[dict], row_start: int, path: str, memo_states: set,
-    url: str, skey: tuple,
-) -> None:
-    """Eval-output cache: once per distinct input state *skey* = (pc,
-    url_full, bindings, method, pre-fold jar) per url, duplicate the
-    state's outputs ``out[row_start:]`` as ``kind='memo'`` rows with
-    suffix-only paths + the state key — the memo sink later rounds JOIN
-    against (JVM concat of path prefixes) instead of re-running the page
-    through Python per replay branch. The 'mark' row records states with
-    ZERO outputs, so a join miss means "state never evaluated", not "state
-    evaluated to nothing"."""
-    if skey in memo_states:
-        return
-    memo_states.add(skey)
-    pc, url_full, bindings_json, method, cj_in = skey
-    n_out = len(out)
-    mk_kw = dict(
-        cur_url=url, mk_pc=pc, mk_full=url_full, mk_method=method,
-        mk_bindings=bindings_json, mk_cookies=cj_in,
-    )
-    out.append(_out_row("memo", mk="mark", **mk_kw))
-    for r in out[row_start:n_out]:
-        m = dict(r)
-        m["kind"] = "memo"
-        m["mk"] = r["kind"]
-        m["path_key"] = r["path_key"][len(path):]
-        m.update(mk_kw)
-        out.append(m)
-
-
 # output rows per yielded frame: result values are page-sized, so a
 # worker's output buffer is bounded by rows, not by its input batch
 _FRAME_ROWS = 1024
@@ -385,13 +334,15 @@ def make_round_fn(
     store_dir: str | None,
     seen_dir: str,
     n_buckets: int,
-    emit_memo: bool = False,
 ):
     """The crawl round's one Python worker: a ``mapInPandas`` over every
-    request row the round evaluates in Python — fresh urls and cache-hit
-    replays alike, since the two differ only in where a url's response
-    comes from (the reference's request service replays a memoized
-    response on a hit and fetches on a miss, browser-services.rkt:35-47).
+    request row the round evaluates — fresh urls and cache-hit replays
+    alike, since the two differ only in where a url's response comes from
+    (the reference's request service replays a memoized response on a hit
+    and fetches on a miss, browser-services.rkt:35-47). Every cache hit
+    replays here: its stored response is evaluated again, as the
+    reference does, and the url-sorted input lets the eval memo
+    (``_eval_memo``) evaluate each distinct state of a url once.
 
     Input rows carry the REQUEST columns + ``_fresh`` + ``_blk``, plus
     ``_src``/``body``/``head`` when a body source is joined in; they
@@ -444,15 +395,7 @@ def make_round_fn(
 
     The crawler adopts both directories as the round's deltas
     (``TableFormat.adopt_delta`` — Iceberg add_files: data files written
-    by tasks, committed by reference), so neither sink costs a Spark job.
-
-    With ``emit_memo`` (memo-joinable programs), every state evaluated
-    here also emits eval-output-cache rows (``_emit_memo``), whether it
-    was fetched or replayed: a state that structurally missed the memo
-    (url fetched at node A, replayed at node B) is evaluated in Python
-    once, and later rounds join it JVM-side. Robots-blocked states never
-    emit memo rows (their empty-body outputs would poison the unblocked
-    join, whose key does not carry the blocked bit)."""
+    by tasks, committed by reference), so neither sink costs a Spark job."""
 
     import inspect
 
@@ -511,7 +454,6 @@ def make_round_fn(
         body, status, head = "", 404, None
         seen_row = None
         memo: dict = {}
-        memo_states: set = set()
         for batch_idx, pdf in enumerate(batches):
             if "_src" not in pdf:  # no body source joined in
                 pdf = pdf.assign(_src=1, body=None, head=None)
@@ -531,7 +473,6 @@ def make_round_fn(
                         seen_row = None
                     cur = url
                     memo.clear()
-                    memo_states.clear()
                     resp = fetched.get(url, ("", 404))
                     body = "" if resp[0] is None else resp[0]
                     status = resp[1]
@@ -567,7 +508,6 @@ def make_round_fn(
                 cj = cj if isinstance(cj, str) else None
                 blk = bool(blk)
                 rb, rh = ("", None) if blk else (body, head)
-                cj_in = cj  # the memo key jar: pre-fold, what replays carry
                 # per-branch cookie fold: the response's Set-Cookie enters
                 # THIS branch's jar before its children run
                 # (hypertext-browser/base.rkt:78-94)
@@ -575,18 +515,12 @@ def make_round_fn(
                     cj = jar_to_json(
                         jar_fold_head(jar_from_json(cj), rh, url_full or url)
                     )
-                row_start = len(out)
                 for j, child in enumerate(node_table[pc].child_ids):
                     _eval_memo(
                         memo, (child, url_full, bindings_json, method, cj, blk),
                         node_table, child,
                         url, url_full, rb, bindings_json, path + _hx(j), out,
                         head=rh, method=method, cookies_json=cj,
-                    )
-                if emit_memo and not blk:
-                    _emit_memo(
-                        out, row_start, path, memo_states, url,
-                        (pc, url_full, bindings_json, method, cj_in),
                     )
                 if len(out) >= _FRAME_ROWS:
                     yield _frame(out)

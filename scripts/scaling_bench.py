@@ -333,22 +333,26 @@ Control-tier raw N→4N efficiency = **{ct_eff:.2f}**, ceiling-normalized
         f"from the server's own log."
         if lv else "(not captured in this sample)"
     )
-    # both tiers' walls are ~2 s, so scheduler/steal noise dominates the
-    # ratio; take the min-ratio sample across levels — the same min-wall
-    # uncontended-cost estimator as best-of-N, applied to the pair
-    ics = [d.get("incremental") for d in (lo, hi) if d.get("incremental")]
-    ic = min(ics, key=lambda d: d["ratio"]) if ics else None
+    incr_rows = "\n".join(
+        f"| {level} | {ic['index_docs_1x']} / {ic['index_docs_10x']} | "
+        f"{ic['matches_1x']} / {ic['matches_10x']} | "
+        f"{ic['wall_1x_s']} / {ic['wall_10x_s']} | {ic['ratio']} |"
+        for level, ic in (
+            ("local[8]", lo.get("incremental")),
+            ("local[32]", hi.get("incremental")),
+        )
+        if ic
+    )
     incr_md = (
-        f"Same incoming batch admitted against a pre-materialized standing "
-        f"band index at {ic['index_docs_1x']} and {ic['index_docs_10x']} "
-        f"docs (extra index docs carry perturbed shingles — matched work "
-        f"identical: {ic['matches_1x']} vs {ic['matches_10x']} matches): "
-        f"wall {ic['wall_1x_s']} s vs {ic['wall_10x_s']} s, **ratio "
-        f"{ic['ratio']} (bar ≤ 1.3)** — per-generation cost scales with "
-        f"the batch, not the corpus (min-ratio sample across the two "
-        f"levels; both walls are ~2 s, so window noise dominates a single "
-        f"pair)."
-        if ic else "(not captured in this sample)"
+        "Same incoming batch admitted against a pre-materialized standing "
+        "band index at 1× and 10× the docs (extra index docs carry perturbed "
+        "shingles, so the matched work is identical). The bar is a 10×/1× "
+        "wall ratio ≤ 1.3: per-generation cost scales with the batch, not "
+        "the corpus. Both levels' raw ratios; both walls are ~2 s, so "
+        "window noise moves either.\n\n"
+        "| level | index docs (1× / 10×) | matches (1× / 10×) | "
+        "wall s (1× / 10×) | ratio |\n|---|---|---|---|---|\n" + incr_rows
+        if incr_rows else "(not captured in this sample)"
     )
     md = f"""# BENCH baseline — two-parallelism-level scaling proxy
 

@@ -579,9 +579,9 @@ def test_replay_across_arrow_batches(spark, corpus, tmp_path, mode):
         assert_parity(oracle, eng)
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
-    # the Python replay really ran
+    # the replay really ran
     replayed = [
-        eng.table.round_metrics(r).get("py_replay_rows") or 0
+        eng.table.round_metrics(r)["routed"]["replay"]
         for r in eng.table.committed_rounds()
     ]
     assert sum(replayed) > 0, replayed
@@ -876,16 +876,22 @@ def test_torn_round_manifest_is_not_committed(spark, corpus, tmp_path, monkeypat
 
 def test_routed_counts_in_every_mode(spark, corpus, tmp_path):
     """Every round manifest records how its request rows were routed
-    (fresh / jvmrep / pyrep / deferred), the routes cover every row, and
+    (fresh / replay / deferred), the routes cover every row, and
     snapshot and callable crawls route identically — one round path. The
     snapshot crawl runs at two records per Arrow batch: batches mix page
     rows with request rows (whose 64-bit url hashes must survive the
     union into pandas), and a url's page row often ends a batch apart
     from its requests. It writes no store delta (its pages table is the
-    body source)."""
+    body source). The politeness budget binds, so cache hits replay in
+    many rounds, and the callable crawl never fetches a url twice."""
     pages_df, pages_dict = corpus
+    log = tmp_path / "calls"
+    log.mkdir()
 
     def fetch_fn(urls):
+        import uuid as _uuid
+
+        (log / _uuid.uuid4().hex).write_text("\n".join(urls))
         return [
             (pages_dict.get(u), 200 if u in pages_dict else 404) for u in urls
         ]
@@ -910,7 +916,7 @@ def test_routed_counts_in_every_mode(spark, corpus, tmp_path):
         per_round = []
         for r in eng.table.committed_rounds():
             m = eng.table.round_metrics(r)
-            assert sorted(m["routed"]) == ["deferred", "fresh", "jvmrep", "pyrep"]
+            assert sorted(m["routed"]) == ["deferred", "fresh", "replay"]
             assert sum(m["routed"].values()) == m["requests"], (r, m)
             per_round.append(m["routed"])
         routes.append(per_round)
@@ -920,7 +926,11 @@ def test_routed_counts_in_every_mode(spark, corpus, tmp_path):
     assert sorted(snap.seen_df().select(*cols).collect()) == sorted(
         call.seen_df().select(*cols).collect()
     )
-    for seg in ("fresh", "jvmrep", "pyrep", "deferred"):
+    for seg in ("fresh", "replay", "deferred"):
         assert any(r[seg] for r in routes[0]), (seg, routes[0])
     assert snap.table.sink_rows("store") == 0
     assert call.table.sink_rows("store") > 0
+    fetched = [
+        u for p in log.iterdir() for u in p.read_text().splitlines() if u
+    ]
+    assert len(fetched) == len(set(fetched))
