@@ -48,10 +48,10 @@ interpreter, /root/reference/boris/interpreter.rkt:54-59 — see SURVEY.md §3):
    resumable from any round (the reference's fs-dict persistence,
    persistent/main.rkt:37-67).
 
-Parquet + manifest stands in for Iceberg snapshots in this sandbox (no
-Iceberg runtime jar is available); the table layout (append-only deltas +
-round manifests, partition column ``round``) maps 1:1 onto Iceberg
-snapshot/lineage semantics on a real cluster.
+Every sink read, adoption and round commit goes through the crawl's table,
+``tableformat.ParquetManifestFormat``: append-only parquet deltas
+partitioned by ``round`` plus round manifests, a layout that maps 1:1
+onto Iceberg snapshots (that module's docstring has the mapping).
 """
 
 from __future__ import annotations
@@ -67,7 +67,7 @@ from pyspark.sql import functions as F
 from ..oracle import program as P
 from .bloom import BloomShardStore
 from .compiler import NodeSpec, compile_program
-from .tableformat import ParquetManifestFormat, TableFormat, write_json_atomic
+from .tableformat import ParquetManifestFormat, footer_rows
 from .udfs import (
     CASCADE_SCHEMA, eval_to_fixpoint, make_round_fn, write_by_kind,
 )
@@ -78,7 +78,7 @@ REQUEST_SCHEMA = (
     "cookies string"
 )
 
-# durable-sink schemas, passed to the TableFormat reads so no round ever
+# durable-sink schemas, passed to the table's reads so no round ever
 # pays a parquet schema-inference job
 SEEN_SCHEMA = (
     "url_hash long, url_canon string, host string, bucket int, status int, "
@@ -125,14 +125,14 @@ class CrawlEngine:
         http_timeout: float = 10.0,
         fetch_fn=None,  # callable mode: see udfs.make_round_fn's contract
         broadcast_seen_limit: int = 2_000_000,  # max `maybe` rows to broadcast
-        table_format: TableFormat | None = None,
+        # the crawl's table; a subclass may stand in (e.g. one that times
+        # its calls)
+        table_format: ParquetManifestFormat | None = None,
     ):
         self.spark = spark
         self.workdir = workdir
-        # the Iceberg seam: all durable sinks (frontier/seen/store/results)
-        # and round commits go through this interface (tableformat.py);
-        # parquet+manifests by default — an Iceberg implementation of the
-        # same interface plugs in here on a real cluster
+        # every durable sink (frontier/seen/store/results/downloads) and
+        # round commit goes through the crawl's table (tableformat.py)
         self.table = table_format or ParquetManifestFormat(spark, workdir)
         self.politeness_k = politeness_k
         self.n_buckets = n_buckets
@@ -193,17 +193,6 @@ class CrawlEngine:
 
     def _empty(self, schema: str) -> DataFrame:
         return self.spark.createDataFrame([], schema)
-
-    @staticmethod
-    def _pq_rows(path: str) -> int:
-        """Row count from parquet footers (transient round outputs) — no
-        Spark job."""
-        import pyarrow.parquet as pq
-
-        return sum(
-            pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-            for f in os.listdir(path) if f.endswith(".parquet")
-        )
 
     # -------------------------------------------------------------- run
 
@@ -288,7 +277,8 @@ class CrawlEngine:
         self._n_seen = 0
         start_round = 0
         if resume:
-            start_round = self._resume_round()
+            done = self.table.committed_rounds()
+            start_round = (done[-1] + 1) if done else 0
             # a round killed after adopting deltas but before its manifest
             # committed: roll them back, or the rerun would take its own
             # stale seen rows as "already seen" and never record them.
@@ -311,7 +301,7 @@ class CrawlEngine:
                 # driver, which a toPandas() here would require.
                 seen = self._read_sink("seen")
                 if seen is not None:
-                    self._fold_seen_frame(seen.select("bucket", "url_hash"))
+                    self._fold_buckets(seen)
         if start_round == 0:
             # the root evaluates on the driver (no page yet: empty body, no
             # url), written per kind with pyarrow — no Spark job — and its
@@ -371,7 +361,7 @@ class CrawlEngine:
                 politeness_window=self._politeness_window,
                 wall_s=round(time.time() - rt0, 3),
             )
-            self._write_manifest(rnd, metrics)
+            self.table.commit_round(rnd, metrics)
             rnd += 1
 
         wall = time.time() - t0
@@ -566,7 +556,7 @@ class CrawlEngine:
         ).write.partitionBy("seg").mode("overwrite").parquet(routed_path)
         self._tmp_sink_paths.append(routed_path)
         segs = {
-            d[4:]: self._pq_rows(os.path.join(routed_path, d))
+            d[4:]: footer_rows(os.path.join(routed_path, d))
             for d in os.listdir(routed_path) if d.startswith("seg=")
         }
         _ROUTED_SCHEMA = REQUEST_SCHEMA + ", _blk boolean"
@@ -665,7 +655,7 @@ class CrawlEngine:
         }
         return n_fetched, n_results, metrics
 
-    def _filter_unseen(self, urls: DataFrame, n_candidates: int | None = None) -> DataFrame:
+    def _filter_unseen(self, urls: DataFrame, n_candidates: int) -> DataFrame:
         seen = self._read_sink("seen")
         if seen is None:
             return urls
@@ -690,10 +680,7 @@ class CrawlEngine:
         # roundtrip + a persist to the round's critical path. Skip it; the
         # shards still fold every round (_fold_seen_delta), so the prefilter
         # is warm the moment a round's frontier exceeds the cap.
-        if (
-            n_candidates is not None
-            and n_candidates <= self.broadcast_seen_limit
-        ):
+        if n_candidates <= self.broadcast_seen_limit:
             matched = seen_keys.select("url_canon").join(
                 F.broadcast(urls.select("url_canon")), "url_canon", "left_semi"
             )
@@ -733,16 +720,9 @@ class CrawlEngine:
             # shuffled) is only safe below a size cap. Above it, fall back to
             # the shuffle anti-join — at design scale that path is a
             # co-partitioned join against the bucket-partitioned seen sink.
-            # `maybe` ⊆ this round's distinct urls ⊆ the frontier rows, so
-            # when the frontier row count (free, from parquet footers) is
-            # already under the cap, skip the counting job entirely
-            n_maybe = (
-                n_candidates
-                if n_candidates is not None
-                and n_candidates <= self.broadcast_seen_limit
-                else maybe.count()
-            )
-            if n_maybe <= self.broadcast_seen_limit:
+            # (Tier 2 returned above whenever the frontier itself fits the
+            # cap, so here only a count of `maybe` can tell.)
+            if maybe.count() <= self.broadcast_seen_limit:
                 # both joins broadcast the small side; the growing seen table
                 # is only ever scanned (two slim columns, partition-prunable).
                 # url_canon alone is the join key (url_hash is a pure
@@ -758,69 +738,16 @@ class CrawlEngine:
             return definitely_new.unionByName(checked)
         return urls.join(seen_keys, ["url_hash", "url_canon"], "left_anti")
 
-    def _fold_seen_frame(self, df: DataFrame) -> None:
-        """Fold an arbitrarily large (bucket, url_hash) frame into the Bloom
-        shards without the frame ever reaching the driver: one
-        ``applyInPandas`` per bucket builds that bucket's bitset
-        executor-side; the driver collects exactly ``n_buckets`` rows of
-        (bucket, bitset) and ORs them in. This is the resume-path rebuild
-        (reference semantics: cache reopen,
-        /root/reference/persistent/main.rkt:63-67) and the same shape
-        ``_fold_seen_delta`` uses for over-gate round deltas."""
-        from .bloom import build_bitset
-
-        m_bits, k = self.bloom.m_bits, self.bloom.k
-
-        def fold(pdf):
-            import numpy as np
-            import pandas as pd
-
-            return pd.DataFrame([{
-                "bucket": int(pdf["bucket"].iloc[0]),
-                "bits": build_bitset(
-                    pdf["url_hash"].to_numpy().astype(np.uint64), m_bits, k
-                ),
-            }])
-
-        rows = (
-            df.groupBy("bucket")
-            .applyInPandas(fold, "bucket int, bits binary")
-            .collect()
-        )
-        for r in rows:
-            self.bloom.merge_shard(r["bucket"], bytes(r["bits"]))
-
-    def _fold_seen_delta(self, rnd: int) -> tuple[int, list[dict]]:
-        """Fold this round's seen delta into the Bloom shards and compute
-        the fetch metrics + per-partition lineage, gated by delta size:
-
-        - delta ≤ broadcast_seen_limit: ONE driver-side columnar read of the
-          (slim) delta, pandas fold — zero Spark jobs;
-        - above the gate: a distributed ``applyInPandas`` over the delta
-          builds per-bucket bitsets AND the lineage counters in one pass,
-          and only ``n_buckets`` rows of (bucket, bitset, counters) reach
-          the driver — the 10^10-URL form, where a round's delta never fits
-          on the driver. The driver only ORs pre-built bitsets.
-        """
-        n_delta = self.table.delta_rows("seen", rnd)
-        self._n_seen += n_delta
-        if n_delta == 0:
-            return 0, []  # the round adopted no seen delta
-        if n_delta <= self.broadcast_seen_limit:
-            delta_pdf = self.table.read_delta_pandas(
-                "seen", rnd,
-                columns=["bucket", "url_hash", "host", "status"],
-            )
-            if self.bloom is not None:
-                self.bloom.add_delta(delta_pdf[["bucket", "url_hash"]])
-            n_fetched = int((delta_pdf["status"] != 999).sum())
-            lineage = [
-                {"bucket": int(b), "fetched": int(g["status"].ne(999).sum()),
-                 "hosts": int(g["host"].nunique())}
-                for b, g in delta_pdf.groupby("bucket")
-            ]
-            return n_fetched, lineage
-
+    def _fold_buckets(self, seen: DataFrame) -> list:
+        """Fold an arbitrarily large seen frame into the Bloom shards
+        without it ever reaching the driver: one ``applyInPandas`` per
+        bucket builds that bucket's bitset AND its lineage counters
+        executor-side, and the driver collects exactly ``n_buckets`` rows
+        of (bucket, bits, fetched, hosts) and ORs the bitsets in. Used by
+        the resume rebuild (reference semantics: cache reopen,
+        persistent/main.rkt:63-67) and by
+        ``_fold_seen_delta`` for an over-gate round delta. Returns the
+        rows."""
         from .bloom import build_bitset
 
         with_bits = self.bloom is not None
@@ -844,7 +771,7 @@ class CrawlEngine:
             }])
 
         rows = (
-            self.table.delta_df("seen", rnd, SEEN_SCHEMA)
+            seen.select("bucket", "url_hash", "host", "status")
             .groupBy("bucket")
             .applyInPandas(fold, "bucket int, bits binary, fetched long, hosts long")
             .collect()
@@ -852,6 +779,40 @@ class CrawlEngine:
         if with_bits:
             for r in rows:
                 self.bloom.merge_shard(r["bucket"], bytes(r["bits"]))
+        return rows
+
+    def _fold_seen_delta(self, rnd: int) -> tuple[int, list[dict]]:
+        """Fold this round's seen delta into the Bloom shards and compute
+        the fetch metrics + per-partition lineage, gated by delta size:
+
+        - delta ≤ broadcast_seen_limit: ONE driver-side columnar read of the
+          (slim) delta, pandas fold — zero Spark jobs;
+        - above the gate: the distributed per-bucket fold
+          (``_fold_buckets``) — the 10^10-URL form, where a round's delta
+          never fits on the driver.
+        """
+        n_delta = self.table.delta_rows("seen", rnd)
+        self._n_seen += n_delta
+        if n_delta == 0:
+            return 0, []  # the round adopted no seen delta
+        if n_delta <= self.broadcast_seen_limit:
+            delta_pdf = self.table.read_delta_pandas(
+                "seen", rnd,
+                columns=["bucket", "url_hash", "host", "status"],
+            )
+            if self.bloom is not None:
+                self.bloom.add_delta(delta_pdf[["bucket", "url_hash"]])
+            n_fetched = int((delta_pdf["status"] != 999).sum())
+            lineage = [
+                {"bucket": int(b), "fetched": int(g["status"].ne(999).sum()),
+                 "hosts": int(g["host"].nunique())}
+                for b, g in delta_pdf.groupby("bucket")
+            ]
+            return n_fetched, lineage
+
+        rows = self._fold_buckets(
+            self.table.delta_df("seen", rnd, SEEN_SCHEMA)
+        )
         lineage = [
             {"bucket": r["bucket"], "fetched": r["fetched"], "hosts": r["hosts"]}
             for r in sorted(rows, key=lambda r: r["bucket"])
@@ -880,7 +841,7 @@ class CrawlEngine:
         request row. Returns the result row count, from parquet footers
         (no Spark job)."""
         kinds = {
-            d[5:]: self._pq_rows(os.path.join(path, d))
+            d[5:]: footer_rows(os.path.join(path, d))
             for d in os.listdir(path) if d.startswith("kind=")
         }
         for k, sink in (("result", "results"), ("download", "downloads")):
@@ -949,20 +910,13 @@ class CrawlEngine:
             shutil.rmtree(p, ignore_errors=True)
         self._tmp_sink_paths.clear()
 
-    def _write_manifest(self, rnd: int, metrics: dict) -> None:
-        self.table.commit_round(rnd, metrics)
-
-    def _resume_round(self) -> int:
-        done = self.table.committed_rounds()
-        return (done[-1] + 1) if done else 0
-
     def compact(
         self,
         sinks: tuple[str, ...] = ("seen", "store", "results"),
         target_bytes: int = 64 << 20,
     ) -> dict:
         """Table maintenance between crawls/rounds: execute the binpack
-        rewrite (TableFormat.compact_sink) on the fast-append sinks and
+        rewrite (``compact_sink``) on the fast-append sinks and
         record file-count before/after per sink in a maintenance manifest
         next to the round manifests (``rounds/compact_after_<N>.json``) —
         the continuous small-file upkeep a long-running crawl table needs
@@ -971,16 +925,10 @@ class CrawlEngine:
         boundary, including mid-crawl before a resume: rewrites preserve
         rows and the round column exactly (pinned by
         tests/test_tableformat.py::test_compact_mid_crawl_resume)."""
-        report = {}
-        for sink in sinks:
-            report[sink] = self.table.compact_sink(sink, target_bytes)
-        done = self.table.committed_rounds()
-        after = done[-1] if done else -1
-        rounds_dir = os.path.join(self.workdir, "rounds")
-        os.makedirs(rounds_dir, exist_ok=True)
-        write_json_atomic(
-            os.path.join(rounds_dir, f"compact_after_{after}.json"), report
-        )
+        report = {
+            sink: self.table.compact_sink(sink, target_bytes) for sink in sinks
+        }
+        self.table.commit_compaction(report)
         return report
 
     # ------------------------------------------------------------ readers

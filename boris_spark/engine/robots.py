@@ -51,20 +51,14 @@ def split_blocked(urls: DataFrame, rules: DataFrame) -> tuple[DataFrame, DataFra
     Allow winning length ties; no matching rule → allowed.
 
     *urls* must carry (url_canon, host); *rules* is ``(host, rule_type,
-    path)`` (a legacy ``(host, disallow_prefix)`` frame is upcast). One
-    broadcast join; the big side is scanned once, and every rule evaluates
-    as a codegen'd ``LIKE ... ESCAPE``, never a regex or Python — a plain
-    prefix rule compiles to ``prefix%``, which keeps the pre-wildcard fast
-    path byte-identical."""
-    if "rule_type" not in rules.columns:  # legacy prefix-rules frame
-        rules = rules.select(
-            "host",
-            F.lit("disallow").alias("rule_type"),
-            F.col("disallow_prefix").alias("path"),
-        )
-    # rule path → LIKE pattern (rule_like_pattern, expressed JVM-side):
-    # strip a trailing '$' (anchor), escape LIKE metacharacters, '*' → '%',
-    # and append '%' when unanchored
+    path)`` (``robots_rules_df`` builds it). One broadcast join; the big
+    side is scanned once, and every rule evaluates as a codegen'd ``LIKE
+    ... ESCAPE``, never a regex or Python — a plain prefix rule compiles
+    to ``prefix%``, which keeps the pre-wildcard fast path
+    byte-identical."""
+    # rule path → the LIKE pattern with identical semantics, built
+    # JVM-side: strip a trailing '$' (anchor), escape LIKE metacharacters,
+    # '*' → '%', and append '%' when unanchored
     anchored = F.endswith(F.col("path"), F.lit("$"))
     base = F.when(
         anchored, F.expr("substring(path, 1, length(path) - 1)")
@@ -140,22 +134,6 @@ def parse_robots(text: str, agent: str = "*") -> list[str]:
     """The Disallow paths that apply to *agent* (the legacy prefix-rules
     view of :func:`parse_robots_rules`)."""
     return [p for t, p in parse_robots_rules(text, agent) if t == "disallow"]
-
-
-def rule_like_pattern(path: str) -> str:
-    """A robots rule path → the SQL ``LIKE ... ESCAPE '\\'`` pattern with
-    identical semantics: ``*`` → ``%``, a TRAILING ``$`` anchors the end
-    (no trailing ``%``), and LIKE metacharacters in the path are escaped.
-    This is what lets rule matching run whole-stage-codegen'd JVM-side in
-    :func:`split_blocked` — no regex compilation per row, no Python."""
-    anchored = path.endswith("$")
-    if anchored:
-        path = path[:-1]
-    esc = (
-        path.replace("\\", "\\\\").replace("%", "\\%").replace("_", "\\_")
-    )
-    pat = esc.replace("*", "%")
-    return pat if anchored else pat + "%"
 
 
 def _rule_regex(path: str):

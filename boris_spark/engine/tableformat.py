@@ -1,34 +1,39 @@
-"""Table-format seam between the crawl engine and its durable sinks.
+"""The crawl's table: every durable sink and round commit of a crawl.
 
-The north rule names Iceberg as the table format for the frontier / seen /
-store / results sinks. This sandbox ships no Iceberg runtime jar, so the
-engine runs against a :class:`TableFormat` interface whose default
-implementation (:class:`ParquetManifestFormat`) is append-only parquet
-deltas partitioned by ``round`` plus one JSON manifest per committed round —
-and every method maps 1:1 onto an Iceberg operation (table below). The
-seam is where an Iceberg implementation plugs in on a real cluster (the
-``iceberg-spark-runtime`` jar plus a configured catalog,
-``spark.sql.catalog.<name>=org.apache.iceberg.spark.SparkCatalog``), with
-no engine change: the engine never touches paths or manifests directly,
-only this seam. :class:`LocalCatalogFormat` runs the catalog-table shape of
-that contract here.
+A crawl's durable state (the frontier / seen / store / results /
+downloads sinks and the round history) lives in one class,
+:class:`ParquetManifestFormat`: append-only parquet deltas under
+``<workdir>/<sink>/round=N`` plus one JSON manifest per committed round
+under ``<workdir>/rounds``, beside the maintenance manifests that
+compaction writes there. The engine never touches sink paths or
+manifests directly, only these methods. The reference keeps its crawl
+state in one place the same way, the fs-dict cache
+(persistent/main.rkt:37-67).
 
-Mapping (ParquetManifestFormat → Iceberg):
+The north rule names Iceberg as the table format. A plain PySpark install
+ships no Iceberg runtime jar, so each method is written to map 1:1 onto
+an Iceberg operation; a port to a real cluster (``iceberg-spark-runtime``
+plus ``spark.sql.catalog.<name>=org.apache.iceberg.spark.SparkCatalog``)
+reimplements this one class:
 
 ===================  ====================================================
-seam method          Iceberg counterpart
+method               Iceberg counterpart
 ===================  ====================================================
-write_delta          ``df.writeTo(table).append()`` (one snapshot)
 adopt_delta          ``add_files`` / fast-append of pre-written data files
 adopt_parts          ONE transaction ``add_files``-importing every source
                      directory, committed as a single fast-append snapshot
 read_sink            table scan (all snapshots)
 delta_rows           snapshot summary ``added-records``
+sink_rows            snapshot summary ``total-records``
 read_delta_pandas    incremental scan between snapshot N-1 and N
+delta_df             the same incremental scan, distributed
 commit_round         snapshot commit carrying summary metadata (lineage +
                      fetch/extract metrics ride the snapshot summary map)
 committed_rounds     snapshot history (inspect ``table.history()``)
+round_metrics        one snapshot's summary map
 rollback             ``rollback_to_snapshot`` (drop uncommitted appends)
+compact_sink         ``rewrite_data_files(strategy='binpack')``
+commit_compaction    the maintenance snapshot a rewrite commits
 ===================  ====================================================
 """
 
@@ -50,87 +55,22 @@ def write_json_atomic(path: str, obj) -> None:
     os.replace(tmp, path)
 
 
-class TableFormat:
-    """Durable-sink operations a crawl round needs; see module docstring."""
+def footer_rows(path: str) -> int:
+    """Rows of every parquet file under *path*, from the footers — no
+    Spark job. A missing directory holds 0 rows."""
+    import pyarrow.parquet as pq
 
-    def write_delta(self, df: DataFrame, sink: str, rnd: int) -> None:
-        """Write *df* as sink's round-``rnd`` delta (a rerun replaces it)."""
-        raise NotImplementedError
-
-    def adopt_delta(self, src_dir: str, sink: str, rnd: int) -> bool:
-        """Adopt pre-written data files (e.g. a cascade output partition)
-        as sink's round-``rnd`` delta without rewriting bytes. Returns
-        False if *src_dir* does not exist (empty delta)."""
-        raise NotImplementedError
-
-    def adopt_parts(
-        self, src_dirs: list[str], sink: str, rnd: int, schema: str
-    ) -> int:
-        """Adopt SEVERAL pre-written directories as ONE round-``rnd``
-        delta of *sink*, committed atomically-enough for a crash-rerun of
-        the round to be idempotent (the whole previous round-``rnd`` delta
-        is replaced). The directories may carry different supersets of
-        *schema* (readers project to *schema*). Returns the number of
-        directories adopted (missing dirs are skipped). This is the
-        Iceberg fast-append shape: data files written by the producing
-        stages' own tasks, committed by reference in one snapshot — no
-        byte is re-encoded by a checkpoint job."""
-        raise NotImplementedError
-
-    def read_sink(self, sink: str, schema: str | None = None) -> DataFrame | None:
-        raise NotImplementedError
-
-    def delta_rows(self, sink: str, rnd: int) -> int:
-        raise NotImplementedError
-
-    def sink_rows(self, sink: str) -> int:
-        """Total rows across ALL committed deltas of *sink* — metadata
-        only (parquet footers / Iceberg snapshot summary total-records),
-        no Spark job. Used by the engine to pick the seen-filter strategy
-        on resume (the per-round count is accumulated driver-side)."""
-        raise NotImplementedError
-
-    def read_delta_pandas(self, sink: str, rnd: int, columns=None):
-        raise NotImplementedError
-
-    def delta_df(self, sink: str, rnd: int, schema: str | None = None) -> DataFrame:
-        raise NotImplementedError
-
-    def commit_round(self, rnd: int, metrics: dict) -> None:
-        raise NotImplementedError
-
-    def committed_rounds(self) -> list[int]:
-        raise NotImplementedError
-
-    def rollback(self, sink: str, first_round: int) -> None:
-        """Drop every delta of *sink* whose round is >= *first_round* —
-        what a killed round adopted before its manifest committed."""
-        raise NotImplementedError
-
-    def round_metrics(self, rnd: int) -> dict:
-        """The metrics payload committed with round *rnd*'s snapshot
-        (fetched/results counts + per-partition lineage) — the Iceberg
-        snapshot-summary read. Raises if the round was never committed."""
-        raise NotImplementedError
-
-    def compact_sink(self, sink: str, target_bytes: int = 64 << 20) -> dict:
-        """Execute small-file compaction on *sink*: bin-pack each round
-        delta's data files into ~``target_bytes`` outputs and atomically
-        swap them in (Iceberg ``rewrite_data_files(strategy='binpack')``
-        executed per-partition, with the round delta as the partition).
-        Rows, values, and the round column are preserved exactly; only
-        file layout changes. Returns ``{"files_before", "files_after",
-        "bytes", "rounds_rewritten"}``. A fast-append crawl table needs
-        this continuously: every round adopts cores-many small files and
-        read amplification grows without bound otherwise (the planning
-        half is the compact_plan query; this is the execute half)."""
-        raise NotImplementedError
+    return sum(
+        pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
+        for root, _dirs, files in os.walk(path)
+        for f in files if f.endswith(".parquet")
+    )
 
 
-class ParquetManifestFormat(TableFormat):
-    """Default impl: ``workdir/<sink>/round=N`` parquet deltas + JSON round
-    manifests under ``workdir/rounds`` — the sandbox stand-in whose layout
-    maps 1:1 onto Iceberg snapshots (module docstring table)."""
+class ParquetManifestFormat:
+    """``workdir/<sink>/round=N`` parquet deltas + JSON manifests under
+    ``workdir/rounds``; the layout maps 1:1 onto Iceberg snapshots
+    (module docstring table)."""
 
     def __init__(self, spark: SparkSession, workdir: str):
         self.spark = spark
@@ -140,10 +80,11 @@ class ParquetManifestFormat(TableFormat):
     def _path(self, *parts: str) -> str:
         return os.path.join(self.workdir, *parts)
 
-    def write_delta(self, df: DataFrame, sink: str, rnd: int) -> None:
-        df.write.mode("overwrite").parquet(self._path(sink, f"round={rnd}"))
-
     def adopt_delta(self, src_dir: str, sink: str, rnd: int) -> bool:
+        """Adopt the pre-written data files in *src_dir* (e.g. a round
+        output partition) as sink's round-``rnd`` delta by one rename,
+        without rewriting bytes. Returns False if *src_dir* does not exist
+        (empty delta)."""
         import shutil
 
         dst = self._path(sink, f"round={rnd}")
@@ -158,9 +99,13 @@ class ParquetManifestFormat(TableFormat):
     def adopt_parts(
         self, src_dirs: list[str], sink: str, rnd: int, schema: str
     ) -> int:
-        """Directory renames only — the producing stages already wrote the
-        data files; this is the Iceberg add_files/fast-append commit, with
-        the round directory standing in for the snapshot."""
+        """Adopt SEVERAL pre-written directories as ONE round-``rnd``
+        delta of *sink*, by directory renames only: the producing stages'
+        own tasks wrote the data files, and the round directory stands in
+        for the snapshot. A crash-rerun of the round replaces the whole
+        previous delta. The directories may carry different supersets of
+        *schema* (readers project to it). Returns the number of
+        directories adopted (missing ones are skipped)."""
         import shutil
 
         dst = self._path(sink, f"round={rnd}")
@@ -187,30 +132,19 @@ class ParquetManifestFormat(TableFormat):
         return reader.parquet(path + "/round=*")
 
     def delta_rows(self, sink: str, rnd: int) -> int:
-        """Row count from parquet footers — no Spark job (Iceberg: the
-        snapshot summary's added-records counter, also no job)."""
-        import pyarrow.parquet as pq
-
-        path = self._path(sink, f"round={rnd}")
-        if not os.path.isdir(path):
-            return 0  # a round that adopted zero parts has no delta dir
-        return sum(
-            pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-            for root, _dirs, files in os.walk(path)
-            for f in files if f.endswith(".parquet")
-        )
+        """Rows of sink's round-``rnd`` delta (0 when a round adopted no
+        parts and so has no delta dir)."""
+        return footer_rows(self._path(sink, f"round={rnd}"))
 
     def sink_rows(self, sink: str) -> int:
-        import pyarrow.parquet as pq
-
+        """Rows across ALL deltas of *sink* — what the engine restores its
+        driver-side seen-set size from on resume."""
         top = self._path(sink)
         if not os.path.isdir(top):
             return 0
         return sum(
-            pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
+            footer_rows(os.path.join(top, d))
             for d in os.listdir(top) if d.startswith("round=")
-            for root, _dirs, files in os.walk(os.path.join(top, d))
-            for f in files if f.endswith(".parquet")
         )
 
     def read_delta_pandas(self, sink: str, rnd: int, columns=None):
@@ -245,11 +179,27 @@ class ParquetManifestFormat(TableFormat):
             if f.endswith(".json") and f.split(".")[0].isdigit()
         )
 
+    def commit_compaction(self, report: dict) -> None:
+        """Record a compaction pass's per-sink report as a maintenance
+        manifest, ``rounds/compact_after_<N>.json`` with N the last
+        committed round (-1 before any)."""
+        done = self.committed_rounds()
+        after = done[-1] if done else -1
+        os.makedirs(self._path("rounds"), exist_ok=True)
+        write_json_atomic(
+            self._path("rounds", f"compact_after_{after}.json"), report
+        )
+
     def round_metrics(self, rnd: int) -> dict:
+        """The metrics payload committed with round *rnd* (fetch/result
+        counts + per-partition lineage). Raises if the round was never
+        committed."""
         with open(self._path("rounds", f"{rnd}.json")) as f:
             return json.load(f)
 
     def rollback(self, sink: str, first_round: int) -> None:
+        """Drop every delta of *sink* whose round is >= *first_round* —
+        what a killed round adopted before its manifest committed."""
         import shutil
 
         top = self._path(sink)
@@ -260,19 +210,21 @@ class ParquetManifestFormat(TableFormat):
                 shutil.rmtree(os.path.join(top, d))
 
     def compact_sink(self, sink: str, target_bytes: int = 64 << 20) -> dict:
-        """Per-round binpack rewrite + atomic directory swap. Each round
-        delta whose file count exceeds its binpack group count is read
-        back, coalesced to ``ceil(bytes/target)`` outputs, written to a
-        hidden staging dir, and swapped in with two renames. A crash at
-        any point leaves either the old or the new complete delta, and
-        the entry pass recovers from it: a ``round=N`` missing beside its
+        """Small-file compaction of *sink* (the execute half of the
+        compact_plan query): every round adopts cores-many small files, so
+        read amplification grows without it. Each round delta whose file
+        count exceeds its binpack group count is read back, coalesced to
+        ``ceil(bytes/target)`` outputs, written to a hidden staging dir,
+        and swapped in with two renames. Rows, values and the round
+        column (it lives in the directory name) are kept exactly; only the
+        file layout changes, and the ``fsrc`` adoption sub-partitioning,
+        projection-away lineage metadata, is dissolved. A crash at any
+        point leaves either the old or the new complete delta, and the
+        entry pass recovers from it: a ``round=N`` missing beside its
         ``.compact_old_round=N`` (killed between the renames) is renamed
         back; other ``.compact_*`` dirs are deleted only once their
-        ``round=N`` exists. The
-        ``fsrc`` adoption sub-partitioning is dissolved by the rewrite —
-        it is projection-away lineage metadata; every reader selects
-        explicit columns. The round column itself lives in the directory
-        name and is untouched."""
+        ``round=N`` exists. Returns ``{"files_before", "files_after",
+        "bytes", "rounds_rewritten"}``."""
         import shutil
 
         top = self._path(sink)
@@ -324,190 +276,3 @@ class ParquetManifestFormat(TableFormat):
             stats["files_after"] += len(_files(rdir))
             stats["rounds_rewritten"] += 1
         return stats
-
-
-class LocalCatalogFormat(TableFormat):
-    """Catalog-TABLE implementation of the seam, runnable in this sandbox:
-    every sink is a session-catalog table ``<db>.boris_<sink>``
-    partitioned by ``round``, created through the DataFrameWriterV2 API
-    (``df.writeTo(t).using('parquet').partitionedBy('round').create()``)
-    and appended per round with dynamic partition overwrite (idempotent
-    re-run of an interrupted round overwrites only that round's
-    partition). Round commits append to a ``boris_rounds`` history table —
-    the snapshot log — instead of JSON manifest files. This executes the
-    catalog-table contract end-to-end (tests drive a full kill+resume
-    crawl through it); the ONE call that cannot run here is
-    ``writeTo(t).append()`` itself, because Spark's built-in session
-    catalog resolves parquet tables as V1 at write time ("Cannot write
-    into v1 table") and no V2 file catalog ships with PySpark — so
-    :meth:`_append_table` routes through ``insertInto`` (same append
-    semantics) unless ``v2_appends`` is set, which is exactly what an
-    Iceberg implementation does on a cluster with a real catalog.
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        db: str = "boris",
-        location: str | None = None,
-        v2_appends: bool = False,
-    ):
-        self.spark = spark
-        self.db = db
-        self.v2_appends = v2_appends
-        loc = f" LOCATION '{location}'" if location else ""
-        spark.sql(f"CREATE DATABASE IF NOT EXISTS {db}{loc}")
-        # re-running an interrupted round must replace that round's
-        # partition only, not the whole sink
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    def _tbl(self, sink: str) -> str:
-        return f"{self.db}.boris_{sink}"
-
-    def _exists(self, sink: str) -> bool:
-        return self.spark.catalog.tableExists(self._tbl(sink))
-
-    def _append_table(self, df: DataFrame, sink: str) -> None:
-        """One seam point for the append call: V2 ``writeTo().append()``
-        when the catalog supports it (Iceberg), ``insertInto`` with
-        dynamic partition overwrite against the built-in session
-        catalog."""
-        t = self._tbl(sink)
-        if self.v2_appends:
-            df.writeTo(t).append()
-        else:
-            # insertInto is POSITIONAL: align to the table's column order
-            cols = self.spark.table(t).columns
-            df.select(*cols).write.mode("overwrite").insertInto(t)
-
-    def write_delta(self, df: DataFrame, sink: str, rnd: int) -> None:
-        from pyspark.sql import functions as F
-
-        df = df.withColumn("round", F.lit(rnd))
-        if not self._exists(sink):
-            (
-                df.writeTo(self._tbl(sink))
-                .using("parquet")
-                .partitionedBy(F.col("round"))
-                .create()
-            )
-        else:
-            self._append_table(df, sink)
-
-    def adopt_delta(self, src_dir: str, sink: str, rnd: int) -> bool:
-        # Iceberg: add_files — the pre-written data files are committed by
-        # reference. The session catalog has no add-files, so this path
-        # re-writes the bytes through the table append; the ENGINE-facing
-        # contract (directory in, committed delta out) is identical.
-        if not os.path.isdir(src_dir):
-            return False
-        import shutil
-
-        self.write_delta(self.spark.read.parquet(src_dir), sink, rnd)
-        shutil.rmtree(src_dir, ignore_errors=True)
-        return True
-
-    def adopt_parts(
-        self, src_dirs: list[str], sink: str, rnd: int, schema: str
-    ) -> int:
-        # Iceberg: ONE transaction of add_files over all directories. The
-        # session catalog has no add-files, so the parts are read (each
-        # projected to *schema* — they may carry different supersets of
-        # it) and committed in ONE dynamic-partition-overwrite append,
-        # which keeps the crash-rerun idempotency of the single-snapshot
-        # commit.
-        import shutil
-
-        present = [d for d in src_dirs if os.path.isdir(d)]
-        if not present:
-            return 0
-        parts = [
-            self.spark.read.schema(schema).parquet(d) for d in present
-        ]
-        union = parts[0]
-        for p in parts[1:]:
-            union = union.unionByName(p)
-        self.write_delta(union, sink, rnd)
-        for d in present:
-            shutil.rmtree(d, ignore_errors=True)
-        return len(present)
-
-    def read_sink(self, sink: str, schema: str | None = None) -> DataFrame | None:
-        if not self._exists(sink):
-            return None
-        return self.spark.table(self._tbl(sink))
-
-    def delta_rows(self, sink: str, rnd: int) -> int:
-        # Iceberg reads this from the snapshot summary without a job; a
-        # catalog count() with partition pruning stands in here
-        if not self._exists(sink):
-            return 0
-        return (
-            self.spark.table(self._tbl(sink))
-            .where(f"round = {int(rnd)}")
-            .count()
-        )
-
-    def sink_rows(self, sink: str) -> int:
-        # Iceberg: the current snapshot summary's total-records property —
-        # no job; a catalog count() stands in here
-        if not self._exists(sink):
-            return 0
-        return self.spark.table(self._tbl(sink)).count()
-
-    def read_delta_pandas(self, sink: str, rnd: int, columns=None):
-        df = self.spark.table(self._tbl(sink)).where(f"round = {int(rnd)}")
-        if columns is not None:
-            df = df.select(*columns)
-        return df.toPandas()
-
-    def delta_df(self, sink: str, rnd: int, schema: str | None = None) -> DataFrame:
-        return (
-            self.spark.table(self._tbl(sink))
-            .where(f"round = {int(rnd)}")
-            .drop("round")
-        )
-
-    def commit_round(self, rnd: int, metrics: dict) -> None:
-        df = self.spark.createDataFrame(
-            [(rnd, json.dumps(metrics))], "round int, metrics string"
-        )
-        if not self._exists("rounds"):
-            df.writeTo(self._tbl("rounds")).using("parquet").create()
-        else:
-            t = self._tbl("rounds")
-            df.select(*self.spark.table(t).columns).write.mode(
-                "append"
-            ).insertInto(t)
-
-    def committed_rounds(self) -> list[int]:
-        if not self._exists("rounds"):
-            return []
-        return sorted(
-            r["round"]
-            for r in self.spark.table(self._tbl("rounds"))
-            .select("round").collect()
-        )
-
-    def round_metrics(self, rnd: int) -> dict:
-        rows = (
-            self.spark.table(self._tbl("rounds"))
-            .where(f"round = {int(rnd)}")
-            .select("metrics").collect()
-        )
-        if not rows:
-            raise KeyError(f"round {rnd} has no committed snapshot")
-        return json.loads(rows[-1]["metrics"])
-
-    def rollback(self, sink: str, first_round: int) -> None:
-        if not self._exists(sink):
-            return
-        t = self._tbl(sink)
-        for (spec,) in self.spark.sql(f"SHOW PARTITIONS {t}").collect():
-            rnd = int(spec.split("=")[1])
-            if rnd >= first_round:
-                self.spark.sql(f"ALTER TABLE {t} DROP PARTITION (round={rnd})")
-
-    def drop(self) -> None:
-        """Drop every sink table + the database (test cleanup)."""
-        self.spark.sql(f"DROP DATABASE IF EXISTS {self.db} CASCADE")

@@ -394,8 +394,9 @@ def make_round_fn(
       min ``path_key`` over the url's rows.
 
     The crawler adopts both directories as the round's deltas
-    (``TableFormat.adopt_delta`` — Iceberg add_files: data files written
-    by tasks, committed by reference), so neither sink costs a Spark job."""
+    (``ParquetManifestFormat.adopt_delta`` — Iceberg add_files: data files
+    written by tasks, committed by reference), so neither sink costs a
+    Spark job."""
 
     import inspect
 

@@ -2821,9 +2821,9 @@ def crawl_round_metrics(spark, sf_dir):
     round manifests — the Iceberg snapshot-summary surface the north rule
     names ("every round commits a snapshot carrying per-partition lineage
     and fetch/extract metrics"). The gate runs the memoized doc crawl,
-    then reads each committed round's metrics through the TableFormat
-    seam (``round_metrics``, JSON manifests here / the snapshot log table
-    on LocalCatalogFormat / Iceberg snapshot summaries on a cluster) and
+    then reads each committed round's metrics through the crawl's table
+    (``ParquetManifestFormat.round_metrics``: the JSON round manifests,
+    Iceberg snapshot summaries on a cluster) and
     checks the recorded fetch counts against the closed-form BFS level
     sizes of the seed's binary subtree, and that every round's lineage
     list is non-empty. Metadata-only on the Spark side — round count is

@@ -445,8 +445,8 @@ rename (never crossing Arrow or the JVM writer); each round routes every
 request row through ONE seg-partitioned lineage-break write whose parquet
 footers replace all per-branch count() jobs; and the next round's frontier
 delta is ADOPTED from that routing write's seg=deferred partition plus the
-cascade's kind=request partitions (TableFormat.adopt_parts — directory
-renames standing in for one Iceberg add_files fast-append), so the
+cascade's kind=request partitions (ParquetManifestFormat.adopt_parts —
+directory renames standing in for one Iceberg add_files fast-append), so the
 frontier checkpoint JOB is gone and no frontier byte is parquet-encoded
 twice (20k-page quick bench: 33.6 → 18.5 s crawl wall, identical
 outputs). Together these moved the per-crawl fixed cost from ~25-35 s

@@ -1,6 +1,6 @@
-"""TableFormat seam (boris_spark/engine/tableformat.py): the engine-facing
-sink interface whose default impl is parquet deltas + JSON manifests and
-whose methods map 1:1 onto Iceberg snapshots (module docstring table)."""
+"""The crawl's table (boris_spark/engine/tableformat.py): parquet deltas +
+JSON manifests, whose methods map 1:1 onto Iceberg snapshots (module
+docstring table)."""
 
 import os
 
@@ -9,12 +9,21 @@ import pytest
 from boris_spark.engine.tableformat import ParquetManifestFormat
 
 
+def put_delta(df, workdir, sink: str, rnd: int) -> None:
+    """Write *df* as sink's round-``rnd`` delta straight into the table's
+    directory layout (the engine only ever adopts pre-written files)."""
+    df.write.mode("overwrite").parquet(
+        os.path.join(str(workdir), sink, f"round={rnd}")
+    )
+
+
 def test_write_read_delta_roundtrip(spark, tmp_path):
     tf = ParquetManifestFormat(spark, str(tmp_path))
     df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    tf.write_delta(df, "seen", 0)
-    tf.write_delta(
-        spark.createDataFrame([(3, "c")], "id long, v string"), "seen", 1
+    put_delta(df, tmp_path, "seen", 0)
+    put_delta(
+        spark.createDataFrame([(3, "c")], "id long, v string"),
+        tmp_path, "seen", 1,
     )
     assert tf.delta_rows("seen", 0) == 2
     assert tf.delta_rows("seen", 1) == 1
@@ -38,12 +47,13 @@ def test_sink_rows_spans_all_deltas(spark, tmp_path):
     # engine restores its driver-side seen-set counter from this on resume)
     tf = ParquetManifestFormat(spark, str(tmp_path))
     assert tf.sink_rows("seen") == 0  # missing sink = empty
-    tf.write_delta(
+    put_delta(
         spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string"),
-        "seen", 0,
+        tmp_path, "seen", 0,
     )
-    tf.write_delta(
-        spark.createDataFrame([(3, "c")], "id long, v string"), "seen", 1
+    put_delta(
+        spark.createDataFrame([(3, "c")], "id long, v string"),
+        tmp_path, "seen", 1,
     )
     assert tf.sink_rows("seen") == 3
 
@@ -108,165 +118,6 @@ def test_commit_and_resume_rounds(spark, tmp_path):
         tf.round_metrics(9)
 
 
-# ---- LocalCatalogFormat: the executable catalog-table seam ---------------
-
-
-@pytest.fixture()
-def catfmt(spark, tmp_path):
-    from boris_spark.engine.tableformat import LocalCatalogFormat
-
-    import uuid
-
-    tf = LocalCatalogFormat(
-        spark, db=f"tfdb_{uuid.uuid4().hex[:8]}", location=str(tmp_path / "wh")
-    )
-    yield tf
-    tf.drop()
-
-
-def test_catalog_write_read_delta_roundtrip(spark, catfmt):
-    df = spark.createDataFrame([(1, "a"), (2, "b")], "id long, v string")
-    catfmt.write_delta(df, "seen", 0)
-    catfmt.write_delta(
-        spark.createDataFrame([(3, "c")], "id long, v string"), "seen", 1
-    )
-    assert catfmt.delta_rows("seen", 0) == 2
-    assert catfmt.delta_rows("seen", 1) == 1
-    full = catfmt.read_sink("seen")
-    assert {(r["id"], r["round"]) for r in full.collect()} == {
-        (1, 0), (2, 0), (3, 1),
-    }
-    pdf = catfmt.read_delta_pandas("seen", 1, columns=["id"])
-    assert list(pdf["id"]) == [3]
-    # delta_df drops the partition column (engine expects the sink schema)
-    assert catfmt.delta_df("seen", 0).columns == ["id", "v"]
-    assert catfmt.sink_rows("seen") == 3
-    assert catfmt.sink_rows("absent") == 0
-
-
-def test_catalog_rerun_overwrites_only_its_round(spark, catfmt):
-    """An interrupted round's re-run must replace that round's partition
-    only (dynamic partition overwrite), leaving other rounds intact."""
-    mk = lambda rows: spark.createDataFrame(rows, "id long, v string")  # noqa: E731
-    catfmt.write_delta(mk([(1, "a")]), "frontier", 0)
-    catfmt.write_delta(mk([(2, "b")]), "frontier", 1)
-    catfmt.write_delta(mk([(9, "z"), (8, "y")]), "frontier", 1)  # re-run
-    assert catfmt.delta_rows("frontier", 0) == 1
-    assert {r["id"] for r in catfmt.delta_df("frontier", 1).collect()} == {8, 9}
-
-
-def test_catalog_adopt_and_rounds_history(spark, catfmt, tmp_path):
-    src = str(tmp_path / "staged")
-    spark.createDataFrame([(7,)], "id long").write.parquet(src)
-    assert catfmt.adopt_delta(src, "store", 3) is True
-    assert catfmt.delta_rows("store", 3) == 1
-    assert catfmt.adopt_delta(str(tmp_path / "missing"), "store", 4) is False
-    assert catfmt.committed_rounds() == []
-    catfmt.commit_round(0, {"fetched": 5})
-    catfmt.commit_round(2, {"fetched": 1})
-    catfmt.commit_round(1, {"fetched": 3})
-    assert catfmt.committed_rounds() == [0, 1, 2]
-    assert catfmt.round_metrics(2) == {"fetched": 1}
-    with pytest.raises(KeyError):
-        catfmt.round_metrics(9)
-
-
-def test_catalog_adopt_parts_single_commit(spark, catfmt, tmp_path):
-    """Catalog adopt_parts: several staged directories with different
-    schema supersets become ONE round partition in one idempotent
-    commit (the Iceberg one-transaction add_files shape)."""
-    a = str(tmp_path / "pa")
-    b = str(tmp_path / "pb")
-    spark.createDataFrame(
-        [(1, "x", True)], "id long, v string, _blk boolean"
-    ).write.parquet(a)
-    spark.createDataFrame(
-        [(2, "y", 0.5)], "id long, v string, extra double"
-    ).write.parquet(b)
-    assert catfmt.adopt_parts([a, b], "frontier", 4, "id long, v string") == 2
-    assert catfmt.delta_rows("frontier", 4) == 2
-    assert {tuple(r) for r in
-            catfmt.delta_df("frontier", 4).collect()} == {(1, "x"), (2, "y")}
-    # rerun replaces the round partition (dynamic overwrite)
-    c = str(tmp_path / "pc")
-    spark.createDataFrame([(9, "q", False)],
-                          "id long, v string, _blk boolean").write.parquet(c)
-    assert catfmt.adopt_parts([c], "frontier", 4, "id long, v string") == 1
-    assert catfmt.delta_rows("frontier", 4) == 1
-
-
-def test_catalog_format_drives_kill_resume_crawl(spark, tmp_path):
-    """North-rule seam exercise: a fused-mode crawl runs, is killed after 2
-    rounds, and RESUMES entirely through catalog tables — snapshot history
-    from the rounds table, store/seen/frontier deltas as table partitions —
-    with output identical to the oracle."""
-    import uuid
-
-    from boris_spark.engine.crawler import CrawlEngine
-    from boris_spark.engine.tableformat import LocalCatalogFormat
-    from boris_spark.oracle import SnapshotFetcher, spider
-    from boris_spark.oracle.program import (
-        Extract, First, Fmt, Go, Lit, UrlE, XpathE, XpathTextE,
-    )
-    from boris_spark.synth import webgen
-
-    n_pages, seed = 96, 7
-    pages = webgen.corpus_pages_dict(n_pages, seed)
-    seeds = webgen.seeds_for(n_pages, seed)
-    program = Go(
-        Lit(seeds),
-        Extract(Fmt("{}\t{}", [UrlE(), First(XpathTextE("//title"))])),
-        Go(XpathE("//td[@class='title']/a/@href/text()"),
-           Extract(Fmt("{}\t{}", [UrlE(), First(XpathTextE("//title"))]))),
-    )
-    oracle = spider(program, SnapshotFetcher(pages))
-
-    def fetch_fn(urls):
-        return [
-            (pages.get(u), 200) if u in pages else (None, 404) for u in urls
-        ]
-
-    db = f"tfdb_{uuid.uuid4().hex[:8]}"
-    mk_tf = lambda: LocalCatalogFormat(  # noqa: E731
-        spark, db=db, location=str(tmp_path / "wh")
-    )
-    try:
-        eng1 = CrawlEngine(
-            spark, None, str(tmp_path / "work"), politeness_k=4,
-            fetch_mode="callable", fetch_fn=fetch_fn, table_format=mk_tf(),
-        )
-        eng1.run(program, max_rounds=2)
-        eng2 = CrawlEngine(
-            spark, None, str(tmp_path / "work"), politeness_k=4,
-            fetch_mode="callable", fetch_fn=fetch_fn, table_format=mk_tf(),
-        )
-        eng2.run(program, max_rounds=50, resume=True)
-        import json as _json
-
-        from boris_spark.oracle.program import path_key_hex
-
-        got = [
-            (r["path_key"], r["value"])
-            for r in eng2.results_df().select("path_key", "value").collect()
-        ]
-        want = [
-            (path_key_hex(f.path),
-             _json.dumps(f.value, sort_keys=True, separators=(",", ":"),
-                         ensure_ascii=False))
-            for f in oracle.flies
-        ]
-        assert got == want
-        seen = {r["url_canon"] for r in eng2.seen_df().collect()}
-        assert seen == oracle.seen
-        # fetch-once across the kill, via catalog partitions
-        store = eng2._read_sink("store").select("url_canon", "round").distinct()
-        assert (
-            store.groupBy("url_canon").count().where("count > 1").count() == 0
-        )
-    finally:
-        mk_tf().drop()
-
-
 def test_compact_sink_binpack_and_atomicity(spark, tmp_path):
     """compact_sink bin-packs a many-file round delta into ceil(bytes/
     target) files, preserves the row multiset and the round column, leaves
@@ -277,10 +128,10 @@ def test_compact_sink_binpack_and_atomicity(spark, tmp_path):
     df = spark.createDataFrame(
         [(i, f"v{i}") for i in range(64)], "id long, v string"
     )
-    tf.write_delta(df.repartition(8), "seen", 0)
-    tf.write_delta(
+    put_delta(df.repartition(8), tmp_path, "seen", 0)
+    put_delta(
         spark.createDataFrame([(99, "x")], "id long, v string").coalesce(1),
-        "seen", 1,
+        tmp_path, "seen", 1,
     )
     # debris from a "killed" previous pass must be swept, not read
     os.makedirs(str(tmp_path / "seen" / ".compact_tmp_round=0"))
@@ -389,10 +240,10 @@ def test_compact_recovers_kill_between_swap_renames(spark, tmp_path):
     df = spark.createDataFrame(
         [(i, f"v{i}") for i in range(32)], "id long, v string"
     )
-    tf.write_delta(df.repartition(4), "seen", 0)
-    tf.write_delta(
+    put_delta(df.repartition(4), tmp_path, "seen", 0)
+    put_delta(
         spark.createDataFrame([(99, "x")], "id long, v string").coalesce(1),
-        "seen", 1,
+        tmp_path, "seen", 1,
     )
     key = lambda r: (r["id"], r["v"], r["round"])  # noqa: E731
     before = sorted(map(key, tf.read_sink("seen", "id long, v string").collect()))
