@@ -56,10 +56,13 @@ def write_json_atomic(path: str, obj) -> None:
 
 
 def footer_rows(path: str) -> int:
-    """Rows of every parquet file under *path*, from the footers — no
-    Spark job. A missing directory holds 0 rows."""
+    """Rows of the parquet file *path*, or of every parquet file under the
+    directory *path*, from the footers — no Spark job. A missing path
+    holds 0 rows."""
     import pyarrow.parquet as pq
 
+    if os.path.isfile(path):
+        return pq.ParquetFile(path).metadata.num_rows
     return sum(
         pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
         for root, _dirs, files in os.walk(path)

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..engine.crawler import CrawlEngine
+from ..engine.tableformat import footer_rows
 from ..oracle.program import (
     Extract, First, Go, Label, ListE, Recur, UrlE, XpathE, XpathTextE,
 )
@@ -44,15 +45,15 @@ def _pooled_persist(df: DataFrame) -> DataFrame:
 
 
 def release_persisted() -> None:
-    """Unpersist every query-held cache (incl. the cross-query shingle /
-    doc-set caches) — call once per suite, after results are materialized."""
+    """Unpersist every query-held cache and forget the cross-query ones
+    (the per-doc shingle sets, the dedup clusters), so the next query
+    rebuilds them — call once per suite, after results are materialized."""
     for df in _persist_pool:
         try:
             df.unpersist()
         except Exception:
             pass
     _persist_pool.clear()
-    _shingle_cache.clear()
     _doc_sets_cache.clear()
     _clusters_cache.clear()
 
@@ -63,15 +64,7 @@ def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def table_rows(sf_dir: str, name: str) -> int:
     """Row count from parquet footers — no Spark job at plan-build time."""
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(path):
-        return sum(
-            pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-            for f in os.listdir(path) if f.endswith(".parquet")
-        )
-    return pq.ParquetFile(path).metadata.num_rows
+    return footer_rows(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def q(name: str, sql: str | None = None):
@@ -474,75 +467,69 @@ WHERE CAST(i.c AS DOUBLE) / (sa.n + sb.n - i.c) >= 0.4
 )
 
 
-_shingle_cache: dict[str, DataFrame] = {}
-
-
-def _shingles_df(spark, sf_dir) -> DataFrame:
-    """Distinct (doc_id, 3-gram shingle) rows — built once per sf_dir and
-    persisted: ngram-jaccard and minhash-LSH both consume it, and the
-    tokenize+explode+distinct pass over the full text column is the most
-    expensive scan in the dedup family."""
-    key = os.path.abspath(sf_dir)
-    if key in _shingle_cache:
-        return _shingle_cache[key]
-    # small-file scan → 1-2 input partitions; spread the CPU-heavy
-    # tokenize+explode across the cluster before it runs
-    d = T(spark, sf_dir, "documents").repartition(
-        spark.sparkContext.defaultParallelism
-    )
-    toks = F.filter(
-        F.split(F.lower("text"), "[^a-z0-9]+"), lambda x: x != F.lit("")
-    )
-    sh = F.transform(
-        F.sequence(F.lit(1), F.size("t") - 2),
-        lambda i: F.concat_ws(
-            " ", F.element_at("t", i), F.element_at("t", i + 1), F.element_at("t", i + 2)
-        ),
-    )
-    out = (
-        d.select("doc_id", toks.alias("t"))
-        .where(F.size("t") >= 3)
-        .select("doc_id", F.explode(sh).alias("s"))
-        .distinct()
-    )
-    out = _pooled_persist(out)
-    _shingle_cache[key] = out
-    return out
-
+# Row-local SQL for the dedup family's per-document frame: tokens, the
+# distinct lex-sorted 3-gram set, 32 xxhash64 minhashes of it and their 16
+# two-row LSH bands. Every expression reads one row, so building the frame
+# is a narrow projection of `documents` — no (doc, shingle) rows are ever
+# formed, shuffled or grouped back.
+_TOKS_EXPR = "filter(split(lower(text), '[^a-z0-9]+'), x -> x <> '')"
+_SET_EXPR = (
+    "sort_array(array_distinct(transform(sequence(0, size(t) - 3), "
+    "i -> concat_ws(' ', t[i], t[i + 1], t[i + 2]))))"
+)
+_MINHASH_EXPR = (
+    "transform(sequence(0, 31), i -> array_min(transform(ss, "
+    "s -> xxhash64(concat(cast(i AS string), ':', s)))))"
+)
+_BANDS_EXPR = (
+    "transform(sequence(0, 15), b -> named_struct('band', b, 'band_sig', "
+    "xxhash64(concat_ws(',', cast(h[2 * b] AS string), "
+    "cast(h[2 * b + 1] AS string)))))"
+)
 
 _doc_sets_cache: dict[str, DataFrame] = {}
 
 
-def _doc_sets_df(shingles: DataFrame, cache_key: str | None = None) -> DataFrame:
-    """Per-doc shingle set as a lex-sorted array + its size — the
-    verification side of every near-dup query: candidates join against this
-    (one row per doc), never against the exploded shingle table. Persisted
-    per sf_dir: ngram-jaccard reads it twice (prefix + verify) and
-    minhash-LSH once more."""
-    if cache_key is not None and cache_key in _doc_sets_cache:
-        return _doc_sets_cache[cache_key]
-    out = shingles.groupBy("doc_id").agg(
-        F.sort_array(F.collect_list("s")).alias("ss"),
-        F.count("*").alias("n"),
+def _doc_sets_df(spark, sf_dir) -> DataFrame:
+    """(doc_id, ss, n): each document's distinct 3-gram shingles as a
+    lex-sorted array and their count, for every document with at least 3
+    tokens. One narrow projection of `documents` (no shuffle), persisted
+    per sf_dir: every near-dup query reads it — ngram-jaccard for its
+    prefixes and verification, minhash-LSH and incremental admission for
+    their band signatures (_band_sigs) and verification."""
+    key = os.path.abspath(sf_dir)
+    if key in _doc_sets_cache:
+        return _doc_sets_cache[key]
+    # small-file scan → 1-2 input partitions; spread the CPU-heavy
+    # tokenize+shingle projection across the cluster before it runs
+    d = T(spark, sf_dir, "documents").repartition(
+        spark.sparkContext.defaultParallelism
     )
-    if cache_key is not None:
-        out = _pooled_persist(out)
-        _doc_sets_cache[cache_key] = out
+    out = (
+        d.selectExpr("doc_id", f"{_TOKS_EXPR} AS t")
+        .where("size(t) >= 3")
+        .selectExpr("doc_id", f"{_SET_EXPR} AS ss")
+        .selectExpr("doc_id", "ss", "CAST(size(ss) AS BIGINT) AS n")
+    )
+    out = _pooled_persist(out)
+    _doc_sets_cache[key] = out
     return out
 
 
 def _verify_candidates(
-    cand: DataFrame, sets: DataFrame, threshold: float = 0.4
+    cand: DataFrame, sets: DataFrame, threshold: float = 0.4,
+    sets_b: DataFrame | None = None,
 ) -> DataFrame:
     """Exact Jaccard computed ONLY for candidate pairs: two equi-joins on
     doc_id pull each side's shingle array, ``array_intersect`` (codegen'd)
     gives the overlap. Cost is O(|candidates|·avg_set), not O(pairs-sharing-
     a-shingle) — the property that makes LSH/prefix-filtering actually prune
-    at 100 TB."""
+    at 100 TB. ``doc_b`` looks up ``sets_b`` when given (a batch checked
+    against a standing index), else ``sets``."""
     sa = sets.select(
         F.col("doc_id").alias("doc_a"), F.col("ss").alias("sa"), F.col("n").alias("na")
     )
-    sb = sets.select(
+    sb = (sets if sets_b is None else sets_b).select(
         F.col("doc_id").alias("doc_b"), F.col("ss").alias("sb"), F.col("n").alias("nb")
     )
     c = F.size(F.array_intersect("sa", "sb")).cast("double")
@@ -555,37 +542,16 @@ def _verify_candidates(
     )
 
 
-def _band_sigs(shingles: DataFrame, n_hashes: int = 32, rows_per_band: int = 2) -> DataFrame:
-    """(doc_id, band, band_sig) LSH band signatures: 32 xxhash64 minhash
-    permutations folded into 16 bands of 2 rows. One scan — the bands
-    explode from an array of structs instead of 16 re-aggregations of the
-    signature frame. Shared by the batch self-join (dedup_minhash_lsh)
-    and the incremental new-vs-index join (dedup_incremental)."""
-    sig = shingles.groupBy("doc_id").agg(
-        *[
-            F.min(F.xxhash64(F.concat(F.lit(f"{i}:"), F.col("s")))).alias(f"h{i}")
-            for i in range(n_hashes)
-        ]
-    )
-    band_structs = F.array(*[
-        F.struct(
-            F.lit(b).alias("band"),
-            F.xxhash64(
-                F.concat_ws(",", *[
-                    F.col(f"h{b * rows_per_band + r}").cast("string")
-                    for r in range(rows_per_band)
-                ])
-            ).alias("band_sig"),
-        )
-        for b in range(n_hashes // rows_per_band)
-    ])
+def _band_sigs(sets: DataFrame) -> DataFrame:
+    """(doc_id, band, band_sig) LSH band signatures of a (doc_id, ss) sets
+    frame: per document, 32 xxhash64 minhashes over its shingle array
+    (permutation i hashes ``"i:" || s``), folded into 16 bands of 2 rows
+    each hashed as ``"h[2b],h[2b+1]"``. Row-local projection + inline, no
+    shuffle. Shared by the batch self-join (dedup_minhash_lsh) and
+    incremental admission (_admit_batch)."""
     return (
-        sig.select("doc_id", F.explode(band_structs).alias("bs"))
-        .select(
-            "doc_id",
-            F.col("bs.band").alias("band"),
-            F.col("bs.band_sig").alias("band_sig"),
-        )
+        sets.selectExpr("doc_id", f"{_MINHASH_EXPR} AS h")
+        .selectExpr("doc_id", f"inline({_BANDS_EXPR})")
     )
 
 
@@ -604,12 +570,11 @@ def dedup_ngram_jaccard(spark, sf_dir):
     is O(|candidates|·avg_set). Output identical to the full self-join; no
     approximation anywhere."""
     tau = 0.4
-    shingles = _shingles_df(spark, sf_dir)
-    # ONE shuffle on doc_id builds the lex-sorted per-doc shingle array
-    # (persisted; the verify join reads the same frame). The prefix is a
-    # JVM-side slice of it — the theorem holds for ANY global total order,
-    # and lexicographic needs no document-frequency pass.
-    sets = _doc_sets_df(shingles, cache_key=os.path.abspath(sf_dir))
+    # the prefix is a JVM-side slice of the per-doc lex-sorted shingle
+    # array (the verify join reads the same frame) — the theorem holds for
+    # ANY global total order, and lexicographic needs no
+    # document-frequency pass
+    sets = _doc_sets_df(spark, sf_dir)
     plen = (F.col("n") - F.ceil(F.lit(tau) * F.col("n")) + 1).cast("int")
     prefix = sets.select(
         "doc_id", "n", F.explode(F.slice("ss", F.lit(1), plen)).alias("s")
@@ -639,10 +604,12 @@ def dedup_minhash_lsh(spark, sf_dir):
     (per-doc shingle arrays + array_intersect — see _verify_candidates).
     Output equals the exact query (the oracle) when LSH recall is 1 at this
     threshold/shape; the full shingle self-join exists ONLY in the DuckDB
-    oracle string, never in the physical plan. Minhash permutations are
-    xxhash64 with per-permutation prefixes — JVM-side, no UDF."""
-    shingles = _shingles_df(spark, sf_dir)
-    allb = _band_sigs(shingles)
+    oracle string, never in the physical plan. Signatures and bands are
+    row-local expressions over the persisted per-doc sets (_band_sigs):
+    the only exchanges are the band self-join, the candidate distinct and
+    the verify joins."""
+    sets = _doc_sets_df(spark, sf_dir)
+    allb = _band_sigs(sets)
     a, b2 = allb.alias("a"), allb.alias("b")
     cand = (
         a.join(
@@ -654,9 +621,7 @@ def dedup_minhash_lsh(spark, sf_dir):
         .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
         .distinct()
     )
-    return _verify_candidates(
-        cand, _doc_sets_df(shingles, cache_key=os.path.abspath(sf_dir))
-    )
+    return _verify_candidates(cand, sets)
 
 
 def connected_components(edges: DataFrame, max_iters: int = 30) -> DataFrame:
@@ -4161,6 +4126,25 @@ def redirect_resolve(spark, sf_dir):
 _INCR_MOD = 10  # doc_id % 10 == 9 -> the "new batch"; the rest are indexed
 
 
+def _admit_batch(
+    new_sets: DataFrame, idx_bands: DataFrame, idx_sets: DataFrame
+) -> DataFrame:
+    """Admission check of a new batch against a standing index: the
+    batch's band signatures (_band_sigs of its (doc_id, ss, n) sets) join
+    the index's (doc_id, band, band_sig) table on (band, band_sig); the
+    distinct (new, index) candidates verify by exact Jaccard ≥ 0.4, each
+    side looked up in its own sets frame. Returns (doc_a < doc_b,
+    jaccard) — new×index pairs only, never new×new or index×index."""
+    newb = _band_sigs(new_sets).withColumnRenamed("doc_id", "doc_a")
+    idxb = idx_bands.withColumnRenamed("doc_id", "doc_b")
+    cand = newb.join(idxb, ["band", "band_sig"]).select("doc_a", "doc_b").distinct()
+    return _verify_candidates(cand, new_sets, sets_b=idx_sets).select(
+        F.least("doc_a", "doc_b").alias("doc_a"),
+        F.greatest("doc_a", "doc_b").alias("doc_b"),
+        "jaccard",
+    )
+
+
 @q(
     "dedup_incremental",
     "WITH " + _TOKS_SQL + f"""
@@ -4179,46 +4163,33 @@ def dedup_incremental(spark, sf_dir):
     cost must scale with the NEW batch, not the corpus (re-running the
     full self-join per generation is quadratic in crawl lifetime). The
     synthetic split takes doc_id mod {_INCR_MOD} == 9 as the incoming
-    batch and the rest as the standing index. The new side's LSH band
-    signatures (same 32-hash/16-band scheme as dedup_minhash_lsh, shared
-    via _band_sigs) join the index's PRE-MATERIALIZED band table — a
-    new×index equi-join on (band, band_sig); index×index pairs are never
-    formed. Survivor pairs verify by exact Jaccard ≥ 0.4 over the cached
-    per-doc shingle arrays (candidate-bounded, as everywhere in the dedup
-    family). The oracle is the full exact-Jaccard join restricted to
-    mixed pairs — quadratic SQL that exists only oracle-side. Like
-    dedup_minhash_lsh (whose 32-hash/16-band scheme this shares), output
-    equals the exact oracle when LSH recall is 1 at this threshold/shape
-    — true on this corpus's high-Jaccard near-dups; a borderline pair
-    (J≈0.4) misses all 16 bands with probability ~6%, the standard LSH
-    recall trade the batch gate documents.
+    batch and the rest as the standing index; both sides come from the
+    one persisted per-doc sets frame (_doc_sets_df), and the index's band
+    table is built from it on every call. _admit_batch does the check:
+    new-side bands (same 32-hash/16-band scheme as dedup_minhash_lsh)
+    equi-join the index bands on (band, band_sig) — index×index pairs are
+    never formed — and survivors verify by exact Jaccard ≥ 0.4 against
+    each side's shingle arrays (candidate-bounded, as everywhere in the
+    dedup family). The oracle is the full exact-Jaccard join restricted
+    to mixed pairs — quadratic SQL that exists only oracle-side. Like
+    dedup_minhash_lsh, output equals the exact oracle when LSH recall is
+    1 at this threshold/shape — true on this corpus's high-Jaccard
+    near-dups; a borderline pair (J≈0.4) misses all 16 bands with
+    probability ~6%, the standard LSH recall trade the batch gate
+    documents.
 
     Scale design: at 10^10 indexed docs + 10^7-doc generations, the band
     table is a bucketed/partitioned standing table (16 band files per
-    shard); the join shuffles ONLY the new batch's signatures into the
-    index's partitioning (shuffle-hash, new side small per band bucket)
-    — index bytes move zero times. Verification joins pull only matched
-    index docs' shingle arrays."""
-    shingles = _shingles_df(spark, sf_dir)
-    allb = _band_sigs(shingles)
+    shard) maintained with the index, not rebuilt per call; the join
+    shuffles ONLY the new batch's signatures into the index's
+    partitioning (shuffle-hash, new side small per band bucket) — index
+    bytes move zero times. Verification joins pull only matched index
+    docs' shingle arrays. bench.incremental_bench times _admit_batch
+    against such materialized 1× and 10× indexes."""
+    sets = _doc_sets_df(spark, sf_dir)
     is_new = F.pmod("doc_id", F.lit(_INCR_MOD)) == (_INCR_MOD - 1)
-    newb = allb.where(is_new).alias("n")
-    oldb = allb.where(~is_new).alias("o")
-    cand = (
-        newb.join(
-            oldb,
-            (F.col("n.band") == F.col("o.band"))
-            & (F.col("n.band_sig") == F.col("o.band_sig")),
-        )
-        .select(
-            F.least(F.col("n.doc_id"), F.col("o.doc_id")).alias("doc_a"),
-            F.greatest(F.col("n.doc_id"), F.col("o.doc_id")).alias("doc_b"),
-        )
-        .distinct()
-    )
-    return _verify_candidates(
-        cand, _doc_sets_df(shingles, cache_key=os.path.abspath(sf_dir))
-    )
+    idx_sets = sets.where(~is_new)
+    return _admit_batch(sets.where(is_new), _band_sigs(idx_sets), idx_sets)
 
 
 # =====================================================================

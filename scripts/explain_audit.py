@@ -222,11 +222,17 @@ EXPECTATIONS = {
     "host_graph_triangles": ["HashAggregate", "ReadSchema: struct<doc_id:bigint>"],
 }
 
+# a shuffle keyed on (doc_id, s) would mean the per-document shingle set
+# is built as an exploded relation again (distinct + group-back) instead of
+# the row-local projection in _doc_sets_df
+_SHINGLE_DISTINCT = r"re:hashpartitioning\(doc_id#\d+L?, s#"
+
 # query → substrings that must NOT appear (the round-1 defect signatures)
 FORBIDDEN = {
     # a shuffle keyed on the raw shingle column would mean the full
     # all-shingle self-join is back in the physical plan
-    "dedup_minhash_lsh": ["hashpartitioning(s#"],
+    "dedup_minhash_lsh": ["hashpartitioning(s#", _SHINGLE_DISTINCT],
+    "dedup_ngram_jaccard": [_SHINGLE_DISTINCT],
     # a single-partition exchange here would mean the naive global-window
     # packing plan (whole corpus through one task) is back
     "pack_sequences": ["SinglePartition"],
@@ -280,7 +286,7 @@ FORBIDDEN = {
     "quality_logit_score": ["Exchange", "ArrowEvalPython", "BatchEvalPython"],
     "redirect_resolve": ["ArrowEvalPython", "BatchEvalPython", "CartesianProduct"],
     # the raw-shingle self-join must never reappear in the physical plan
-    "dedup_incremental": ["hashpartitioning(s#"],
+    "dedup_incremental": ["hashpartitioning(s#", _SHINGLE_DISTINCT],
     # the chunk-assembly agg must NOT re-shuffle on (doc_id, chunk_id) —
     # and chunking must stay off the Python path
     # a re-shuffle for the chunk-assembly agg would render as

@@ -6,7 +6,7 @@ import os
 
 import pytest
 
-from boris_spark.engine.tableformat import ParquetManifestFormat
+from boris_spark.engine.tableformat import ParquetManifestFormat, footer_rows
 
 
 def put_delta(df, workdir, sink: str, rnd: int) -> None:
@@ -15,6 +15,23 @@ def put_delta(df, workdir, sink: str, rnd: int) -> None:
     df.write.mode("overwrite").parquet(
         os.path.join(str(workdir), sink, f"round={rnd}")
     )
+
+
+def test_footer_rows_directory_file_and_missing(tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    parts = tmp_path / "t.parquet"
+    (parts / "round=1").mkdir(parents=True)
+    pq.write_table(pa.table({"id": [1, 2, 3]}), parts / "part-0.parquet")
+    pq.write_table(pa.table({"id": [4]}), parts / "round=1" / "part-0.parquet")
+    (parts / "_SUCCESS").write_text("")
+    single = tmp_path / "one.parquet"
+    pq.write_table(pa.table({"id": list(range(5))}), single)
+
+    assert footer_rows(str(parts)) == 4  # every part, nested ones too
+    assert footer_rows(str(single)) == 5  # a path that is one file
+    assert footer_rows(str(tmp_path / "missing")) == 0
 
 
 def test_write_read_delta_roundtrip(spark, tmp_path):
