@@ -45,24 +45,23 @@ def test_doc_sets_and_bands_match_reference(spark, tmp_path):
         }),
         sf / "documents.parquet",
     )
-    want_sets = {
+    want_sets = sorted(
         (d, tuple(ss), len(ss))
         for d, t in DOCS if (ss := _ref_set(t)) is not None
-    }
-    want_bands = {
+    )
+    want_bands = sorted(
         (d, b, sig)
         for d, ss, _n in want_sets for b, sig in _ref_bands(list(ss))
-    }
-    assert {d for d, _, _ in want_sets} == {1, 2, 5, 6}
+    )
+    assert [d for d, _, _ in want_sets] == [1, 2, 5, 6]
 
     try:
         sets = _doc_sets_df(spark, str(sf))
-        got_sets = {(r.doc_id, tuple(r.ss), r.n) for r in sets.collect()}
-        got_bands = {
+        got_sets = sorted((r.doc_id, tuple(r.ss), r.n) for r in sets.collect())
+        got_bands = sorted(
             (r.doc_id, r.band, r.band_sig) for r in _band_sigs(sets).collect()
-        }
+        )
     finally:
         release_persisted()
     assert got_sets == want_sets
     assert got_bands == want_bands
-    assert len(got_bands) == 16 * len(want_sets)
