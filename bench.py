@@ -459,7 +459,7 @@ def main():
     try:
         crawl = crawl_bench(spark, n_pages, workdir)
     finally:
-        # the store sink persists every fetched body — ~3 GB per 480k-page
+        # the seen sink persists every fetched body — ~3 GB per 480k-page
         # run; accumulated bench workdirs once filled the disk mid-run
         shutil.rmtree(workdir, ignore_errors=True)
 

@@ -8,10 +8,12 @@ interpreter, /root/reference/boris/interpreter.rkt:54-59 — see SURVEY.md §3):
 2. per-URL priority = min lexicographic ``path_key`` (DFS priority — the
    dequeue sequence equals the order the reference would first reach each
    URL);
-3. seen filter: Bloom-shard prefilter then exact anti-join on
-   ``(url_hash, url_canon)`` — the distributed form of the fetch-memoization
-   cache keyed by the canonical URL
-   (/root/reference/boris/interpreter/browser-services.rkt:35-47);
+3. seen lookup: each url's seen status, read once by one left join
+   against the seen sink (Bloom-shard prefilter at scale) — the
+   distributed form of the fetch-memoization cache keyed by the canonical
+   URL (/root/reference/boris/interpreter/browser-services.rkt:35-47). A
+   url never seen is fresh; a seen url is a cache hit, and a previous
+   robots block when its status says so;
 4. politeness dequeue: top-k per host per round via a two-phase salted
    window (phase 1 bounds any hot host to salt×k survivors, phase 2 is the
    exact top-k) — skew-safe where a naive ``Window.partitionBy(host)`` would
@@ -26,8 +28,10 @@ interpreter, /root/reference/boris/interpreter.rkt:54-59 — see SURVEY.md §3):
    instead joins the pages table's row ahead of the url's requests (the
    deterministic analogue of request->response,
    hypertext-browser/http.rkt:124-136; no row = 404); a cache hit gets its
-   stored body row the same way, never fetches again, and is evaluated
-   again on that stored response, as the reference does. Over-budget URLs
+   seen row's stored body the same way, never fetches again, and is
+   evaluated again on that stored response, as the reference does. A
+   first visit that robots blocks is fresh too, but never reaches the
+   fetcher: it evaluates on an empty body. Over-budget URLs
    defer to the next round — ordering parity is unaffected because
    results order is path_key order, which is budget-invariant;
 6. evaluate in place: in that same stage each state fans to the navigate
@@ -39,8 +43,9 @@ interpreter, /root/reference/boris/interpreter.rkt:54-59 — see SURVEY.md §3):
    before round 0, with no Spark job);
 7. sinks + checkpoint: every sink delta is committed by ADOPTING data
    files the round's own tasks already wrote (Iceberg add-files
-   fast-append) — the Python stage's workers write the store and seen
-   deltas, the round's output write the results and the next frontier —
+   fast-append) — the Python stage's workers write the seen delta (the
+   page cache: one row per url, with its body when fetch_fn produced it),
+   the round's output write the results and the next frontier —
    plus a per-round JSON manifest carrying per-partition lineage and
    fetch/extract metrics and the round's routing counts. Every round, in
    every fetch mode, is a route job plus an eval job (a snapshot round
@@ -67,6 +72,7 @@ from pyspark.sql import functions as F
 from ..oracle import program as P
 from .bloom import BloomShardStore
 from .compiler import NodeSpec, compile_program
+from .robots import ROBOTS_STATUS, split_blocked
 from .tableformat import ParquetManifestFormat, footer_rows
 from .udfs import (
     CASCADE_SCHEMA, eval_to_fixpoint, make_round_fn, write_by_kind,
@@ -79,12 +85,13 @@ REQUEST_SCHEMA = (
 )
 
 # durable-sink schemas, passed to the table's reads so no round ever
-# pays a parquet schema-inference job
+# pays a parquet schema-inference job. The seen sink is the page cache:
+# each url's seen row also stores the response fetch_fn gave it
 SEEN_SCHEMA = (
     "url_hash long, url_canon string, host string, bucket int, status int, "
     "path_first string"
 )
-STORE_SCHEMA = "url_canon string, body string, status int, head string"
+SEEN_SINK_SCHEMA = SEEN_SCHEMA + ", body string, head string"
 # results/downloads sinks = kind= partitions adopted out of the round's
 # output write by rename: every CASCADE column except the partition column
 OUTPUT_SINK_SCHEMA = CASCADE_SCHEMA.split(", ", 1)[1]
@@ -131,7 +138,7 @@ class CrawlEngine:
     ):
         self.spark = spark
         self.workdir = workdir
-        # every durable sink (frontier/seen/store/results/downloads) and
+        # every durable sink (frontier/seen/results/downloads) and
         # round commit goes through the crawl's table (tableformat.py)
         self.table = table_format or ParquetManifestFormat(spark, workdir)
         self.politeness_k = politeness_k
@@ -181,8 +188,7 @@ class CrawlEngine:
         return os.path.join(self.workdir, *parts)
 
     _SINK_SCHEMAS = {
-        "seen": SEEN_SCHEMA,
-        "store": STORE_SCHEMA,
+        "seen": SEEN_SINK_SCHEMA,
         "results": OUTPUT_SINK_SCHEMA,
         "downloads": OUTPUT_SINK_SCHEMA,
         "frontier": REQUEST_SCHEMA,
@@ -251,22 +257,20 @@ class CrawlEngine:
         # and manifests are the resume state)
         import shutil
 
-        for junk in ("cascade_tmp", "store_inbox", "seen_inbox"):
+        for junk in ("cascade_tmp", "seen_inbox"):
             p = self._path(junk)
             if os.path.isdir(p):
                 shutil.rmtree(p, ignore_errors=True)
         self.node_table = compile_program(root)
-        # Worker-direct sink writes: the Python workers parquet each fetched
-        # url's store row (body) and seen row into these inbox dirs, which
-        # are ADOPTED as the round's store and seen deltas — bodies never
-        # cross Arrow or enter the JVM writer, and neither sink costs a
-        # commit job. A snapshot crawl writes no store rows: its pages
-        # table already is the body source (_body_source)
-        self._store_inbox = self._path("store_inbox")
+        # Worker-direct sink writes: the Python workers parquet each fresh
+        # url's seen row (with the body fetch_fn gave it) into this inbox
+        # dir, which is ADOPTED as the round's seen delta — bodies never
+        # cross Arrow or enter the JVM writer, and the sink costs no commit
+        # job. A snapshot crawl stores no bodies: its pages table already
+        # is the body source (_body_source)
         self._seen_inbox = self._path("seen_inbox")
         self._round_fn = make_round_fn(
             self.node_table, self.fetch_fn,
-            store_dir=self._store_inbox if self.pages is None else None,
             seen_dir=self._seen_inbox, n_buckets=self.n_buckets,
         )
 
@@ -282,11 +286,10 @@ class CrawlEngine:
             # a round killed after adopting deltas but before its manifest
             # committed: roll them back, or the rerun would take its own
             # stale seen rows as "already seen" and never record them.
-            # Round r writes seen/store delta r and frontier/results/
-            # downloads delta r+1
+            # Round r writes seen delta r and frontier/results/downloads
+            # delta r+1
             for sink, first in (
-                ("seen", 0), ("store", 0),
-                ("frontier", 1), ("results", 1), ("downloads", 1),
+                ("seen", 0), ("frontier", 1), ("results", 1), ("downloads", 1),
             ):
                 self.table.rollback(sink, start_round + first)
             self._n_seen = self.table.sink_rows("seen")
@@ -391,12 +394,13 @@ class CrawlEngine:
         """One crawl round, the same in every fetch mode: a route job, then
         an eval job whose ONE Python stage (``_url_stage``) evaluates every
         fresh url and every cache hit. Fresh urls are fetched exactly once
-        per crawl (or take the snapshot's page row), and the workers write
-        the round's seen delta and the fetched bodies (the store sink, the
-        crash-resumable page cache). Cache hits never reach fetch_fn: they
-        replay the stored response (browser-services.rkt:36-40) and are
-        evaluated on it again, so live fetchers are hit once and the
-        politeness budget is never bypassed. All routing frames are slim;
+        per crawl (or take the snapshot's page row; a robots-blocked one is
+        never fetched), and the workers write the round's seen delta with
+        the fetched bodies (the seen sink is the crash-resumable page
+        cache). Cache hits never reach fetch_fn: they replay the stored
+        response (browser-services.rkt:36-40) and are evaluated on it
+        again, so live fetchers are hit once and the politeness budget is
+        never bypassed. All routing frames are slim;
         each body crosses one url_canon exchange + one Arrow boundary per
         round that evaluates it. Returns (fetched, results, metrics)."""
         import time as _t
@@ -431,26 +435,21 @@ class CrawlEngine:
         ).persist()
 
         _mark("requests_shuffle")
-        unseen = self._filter_unseen(urls, n_req).persist()
-        # handle kept BEFORE any rebinding (robots split below rebinds
-        # `unseen`); without it the cached original leaked for the rest of
-        # the crawl and the rebound, never-persisted frame got unpersisted
-        self._round_persists.append(unseen)
-        # urls already in the seen set: their requests proceed without a fetch
-        # (cache hits — browser-services.rkt:36-40); computed from in-flight
-        # frames, no rescan of the growing seen table
-        seen_hits = urls.join(unseen.select("url_canon"), "url_canon", "left_anti")
+        # each url's seen status, read ONCE (_lookup_seen): null for a url
+        # never seen; else a cache hit, whose requests proceed without a
+        # fetch (browser-services.rkt:36-40), blocked when ROBOTS_STATUS
+        looked = self._lookup_seen(urls, n_req).persist()
+        self._round_persists.append(looked)
+        unseen = looked.where(F.col("_st").isNull()).drop("_st")
+        hits = looked.where(F.col("_st").isNotNull())
 
-        # robots.txt: blocked URLs become seen(status=999, empty body) —
-        # they consume no politeness budget and the branch prunes naturally
+        # robots.txt: a blocked first visit is routed fresh with _blk — its
+        # worker writes its seen row (status ROBOTS_STATUS, no body) without
+        # fetching it; it consumes no politeness budget and the branch
+        # prunes naturally
         blocked = None
         if self.robots is not None:
-            from .robots import ROBOTS_STATUS, split_blocked
-
             unseen, blocked = split_blocked(unseen, self.robots)
-            blocked = blocked.withColumn(
-                "bucket", F.pmod(F.col("url_hash"), F.lit(self.n_buckets)).cast("int")
-            ).withColumn("status", F.lit(ROBOTS_STATUS))
 
         # politeness: top-budget per host per round, two-phase salted
         # (skew-safe). The budget is per-host (broadcast budgets table,
@@ -489,28 +488,30 @@ class CrawlEngine:
         decided = selected.select(
             "url_canon", F.lit(True).alias("_fresh"), F.lit(False).alias("_blk")
         ).unionByName(
-            seen_hits.select(
-                "url_canon", F.lit(False).alias("_fresh"), F.lit(False).alias("_blk")
+            hits.select(
+                "url_canon", F.lit(False).alias("_fresh"),
+                (F.col("_st") == ROBOTS_STATUS).alias("_blk"),
             )
         )
         if blocked is not None:
             decided = decided.unionByName(
                 blocked.select(
-                    "url_canon", F.lit(False).alias("_fresh"),
+                    "url_canon", F.lit(True).alias("_fresh"),
                     F.lit(True).alias("_blk"),
                 )
             )
         # ONE lineage-break job per round: every request row is routed into
-        # a segment — fresh (politeness winner, gets fetched + evaluated),
-        # replay (cache hit or robots-blocked: evaluated on its stored
-        # response, or an empty body), or deferred (over budget, back to
-        # the frontier) — and the whole tagged frame is written once,
+        # a segment — fresh (a first visit: a politeness winner, fetched +
+        # evaluated, or a robots block, evaluated on an empty body), replay
+        # (cache hit: evaluated on its stored response, or an empty body
+        # when blocked), or deferred (over budget, back to the frontier) —
+        # and the whole tagged frame is written once,
         # hive-partitioned by ``seg``. The rest of the round (eval job,
         # frontier adoption) reads plain columnar scans of its subdirs;
         # per-segment row counts come free from the parquet footers, so
         # empty branches are PRUNED
         # DRIVER-SIDE (no count() jobs, no reliance on AQE empty-relation
-        # propagation for the body-bearing store scan). Before this, the
+        # propagation for the body-bearing seen scan). Before this, the
         # eval query inlined the requests→seen-filter→politeness→route
         # lineage once per reference (~190 KB plan text), Catalyst + AQE
         # re-optimization cost seconds of driver time per round, and the
@@ -519,25 +520,6 @@ class CrawlEngine:
         # one politeness-bound round burned 298 CPU-s of JVM time on <10 MB
         # of data).
         base = requests.join(decided, "url_canon", "left")
-        if self.robots is not None:
-            # previously-blocked seen hits replay with an empty body (only
-            # replay rows can match: blocked urls are in the seen set)
-            seen_prev = self._read_sink("seen")
-            if seen_prev is not None:
-                blocked_prev = seen_prev.where(F.col("status") == 999)
-                base = (
-                    base.join(
-                        blocked_prev.select(
-                            "url_canon", F.lit(True).alias("_pblk")
-                        ),
-                        "url_canon", "left",
-                    )
-                    .withColumn(
-                        "_blk",
-                        F.col("_blk") | F.coalesce(F.col("_pblk"), F.lit(False)),
-                    )
-                    .drop("_pblk")
-                )
 
         seg_col = (
             F.when(F.col("_fresh").isNull(), F.lit("deferred"))
@@ -573,9 +555,9 @@ class CrawlEngine:
         # once per url) and one url sort (a url's paths consecutive: its
         # eval memo is O(1)). A url's body row leads its requests through
         # the same exchange: its pages row in a snapshot crawl, else a
-        # replayed url's store row. The store side exists ONLY when the
+        # replayed url's seen row. The seen side exists ONLY when the
         # footers say there are replay rows, so all-fresh rounds never
-        # plan the body-bearing store scan. Width follows the stage's row
+        # plan the body-bearing seen scan. Width follows the stage's row
         # count (free, from the routed footers)
         n_py = segs.get("fresh", 0) + segs.get("replay", 0)
         if not n_py:
@@ -599,16 +581,11 @@ class CrawlEngine:
         # Commit this round's sinks by ADOPTING files its own tasks already
         # wrote (adopt_delta/adopt_parts = Iceberg add-files fast-append,
         # tableformat.py) — no commit job re-reads or re-encodes a byte:
-        # - store: the Python stage's workers parquet'd each fetched url's
-        #   body into the store inbox (the page cache replays read; a
-        #   snapshot crawl writes none — its pages table is that cache);
-        # - seen: the workers also wrote each fetched url's seen row (keys,
-        #   status, bucket, DFS-min path over the url's rows this round —
-        #   the pre-politeness `urls` aggregate's pk) into the seen inbox;
-        #   robots-blocked urls are the only seen rows no worker writes,
-        #   so robots crawls append them to the same inbox first (kept one
-        #   flat directory: compact_sink dissolves any sub-level, which
-        #   would then clash with uncompacted rounds on read);
+        # - seen: the Python stage's workers wrote each fresh url's seen
+        #   row (keys, status, bucket, DFS-min path over the url's rows
+        #   this round, and the body + head when fetch_fn produced them:
+        #   the page cache replays read) into the seen inbox — the only
+        #   writer of seen rows, robots blocks included;
         # - frontier (rnd+1): this round's DEFERRED rows (the routing job's
         #   seg=deferred partition) + its NEW request rows (the round
         #   output's kind=request partition) — directory renames
@@ -617,12 +594,6 @@ class CrawlEngine:
         #   biggest per-round fixed cost. The adopted kind=request files
         #   carry the full output schema; frontier readers project to
         #   REQUEST_SCHEMA.
-        self.table.adopt_delta(self._store_inbox, "store", rnd)
-        if blocked is not None:
-            blocked.select(
-                "url_hash", "url_canon", "host", "bucket", "status",
-                F.col("pk").alias("path_first"),
-            ).write.mode("append").parquet(self._seen_inbox)
         self.table.adopt_delta(self._seen_inbox, "seen", rnd)
         frontier_parts = []
         if segs.get("deferred", 0):
@@ -655,36 +626,38 @@ class CrawlEngine:
         }
         return n_fetched, n_results, metrics
 
-    def _filter_unseen(self, urls: DataFrame, n_candidates: int) -> DataFrame:
+    def _lookup_seen(self, urls: DataFrame, n_candidates: int) -> DataFrame:
+        """*urls* plus ``_st``, each url's seen status: null for a url never
+        seen, else its seen row's status (``ROBOTS_STATUS`` for a robots
+        block). One left join whose strategy is picked per round by size,
+        the seen sink being scanned for two slim columns (never its
+        bodies)."""
         seen = self._read_sink("seen")
         if seen is None:
-            return urls
-        seen_keys = seen.select("url_hash", "url_canon")
+            return urls.withColumn("_st", F.lit(None).cast("int"))
+        seen_st = seen.select("url_canon", F.col("status").alias("_st"))
         # Adaptive, by DRIVER-KNOWN sizes (both free — footer/summary
         # metadata, no jobs). Tier 1: the whole seen set fits under the
-        # broadcast cap → ONE broadcast anti-join straight against the seen
-        # keys. This replaces the double-broadcast shape (broadcast the
-        # candidates, semi-join the seen scan, broadcast the matches back),
-        # which cost two sequential broadcast-build sub-jobs per round —
-        # pure driver-sync fixed cost at local/bench scale. At 10^10 the
-        # seen set blows the cap and the later tiers take over.
+        # broadcast cap → ONE broadcast left join straight against the seen
+        # (url, status) pairs. This replaces the double-broadcast shape
+        # (broadcast the candidates, semi-join the seen scan, broadcast the
+        # matches back), which cost two sequential broadcast-build sub-jobs
+        # per round — pure driver-sync fixed cost at local/bench scale. At
+        # 10^10 the seen set blows the cap and the later tiers take over.
         if self._n_seen <= self.broadcast_seen_limit:
-            return urls.join(
-                F.broadcast(seen_keys.select("url_canon")),
-                "url_canon", "left_anti",
-            )
+            return urls.join(F.broadcast(seen_st), "url_canon", "left")
         # Tier 2: this round's candidate set fits under the broadcast cap
         # (known free, from the frontier delta's row count) — the exact
-        # double-broadcast check covers EVERY candidate in one scan of the
+        # double-broadcast lookup covers EVERY candidate in one scan of the
         # seen sink — the Bloom prefilter stage would only add an Arrow
         # roundtrip + a persist to the round's critical path. Skip it; the
         # shards still fold every round (_fold_seen_delta), so the prefilter
         # is warm the moment a round's frontier exceeds the cap.
         if n_candidates <= self.broadcast_seen_limit:
-            matched = seen_keys.select("url_canon").join(
+            matched = seen_st.join(
                 F.broadcast(urls.select("url_canon")), "url_canon", "left_semi"
             )
-            return urls.join(F.broadcast(matched), "url_canon", "left_anti")
+            return urls.join(F.broadcast(matched), "url_canon", "left")
         if self.bloom is not None and self.bloom.shards:
             # ship the shard map as a proper broadcast variable, re-broadcast
             # per round as the shards grow (the closure-capture shortcut
@@ -711,14 +684,17 @@ class CrawlEngine:
                 + ", maybe_seen boolean",
             ).persist()
             self._round_persists.append(flagged)
-            definitely_new = flagged.where(~F.col("maybe_seen")).drop("maybe_seen")
+            definitely_new = (
+                flagged.where(~F.col("maybe_seen")).drop("maybe_seen")
+                .withColumn("_st", F.lit(None).cast("int"))
+            )
             maybe = flagged.where(F.col("maybe_seen")).drop("maybe_seen")
             # `maybe` holds this round's re-discovered duplicates + bloom
             # false positives. In a link graph true dupes dominate (hub pages
             # are re-linked constantly), so `maybe` can be large; the
-            # broadcast-driven exact check (seen table SCANNED, never
+            # broadcast-driven exact lookup (seen table SCANNED, never
             # shuffled) is only safe below a size cap. Above it, fall back to
-            # the shuffle anti-join — at design scale that path is a
+            # the shuffle left join — at design scale that path is a
             # co-partitioned join against the bucket-partitioned seen sink.
             # (Tier 2 returned above whenever the frontier itself fits the
             # cap, so here only a count of `maybe` can tell.)
@@ -727,16 +703,17 @@ class CrawlEngine:
                 # is only ever scanned (two slim columns, partition-prunable).
                 # url_canon alone is the join key (url_hash is a pure
                 # function of it).
-                matched = seen_keys.select("url_canon").join(
+                matched = seen_st.join(
                     F.broadcast(maybe.select("url_canon")), "url_canon", "left_semi"
                 )
-                checked = maybe.join(F.broadcast(matched), "url_canon", "left_anti")
+                checked = maybe.join(F.broadcast(matched), "url_canon", "left")
             else:
-                checked = maybe.join(
-                    seen_keys.select("url_canon"), "url_canon", "left_anti"
-                )
+                checked = maybe.join(seen_st, "url_canon", "left")
             return definitely_new.unionByName(checked)
-        return urls.join(seen_keys, ["url_hash", "url_canon"], "left_anti")
+        return urls.join(
+            seen.select("url_hash", "url_canon", F.col("status").alias("_st")),
+            ["url_hash", "url_canon"], "left",
+        )
 
     def _fold_buckets(self, seen: DataFrame) -> list:
         """Fold an arbitrarily large seen frame into the Bloom shards
@@ -766,7 +743,7 @@ class CrawlEngine:
                     )
                     if with_bits else b""
                 ),
-                "fetched": int((pdf["status"] != 999).sum()),
+                "fetched": int((pdf["status"] != ROBOTS_STATUS).sum()),
                 "hosts": int(pdf["host"].nunique()),
             }])
 
@@ -802,9 +779,10 @@ class CrawlEngine:
             )
             if self.bloom is not None:
                 self.bloom.add_delta(delta_pdf[["bucket", "url_hash"]])
-            n_fetched = int((delta_pdf["status"] != 999).sum())
+            n_fetched = int((delta_pdf["status"] != ROBOTS_STATUS).sum())
             lineage = [
-                {"bucket": int(b), "fetched": int(g["status"].ne(999).sum()),
+                {"bucket": int(b),
+                 "fetched": int(g["status"].ne(ROBOTS_STATUS).sum()),
                  "hosts": int(g["host"].nunique())}
                 for b, g in delta_pdf.groupby("bucket")
             ]
@@ -885,16 +863,19 @@ class CrawlEngine:
 
     def _body_source(self, rows: DataFrame) -> DataFrame | None:
         """(url_canon, body, head) for *rows*' urls: the pages table (no
-        head) in a snapshot crawl, the fetched store otherwise (None when
-        nothing was stored yet) — cut to those urls by a semi-join against
+        head) in a snapshot crawl, else the seen sink's stored responses
+        (None when nothing was seen yet; rows without a body, the robots
+        blocks, are left out) — cut to those urls by a semi-join against
         a broadcast of the SLIM url list."""
         if self.pages is not None:
             src = self.pages.withColumn("head", F.lit(None).cast("string"))
         else:
-            src = self._read_sink("store")
+            src = self._read_sink("seen")
             if src is None:
                 return None
-            src = src.select("url_canon", "body", "head")
+            src = src.where(F.col("body").isNotNull()).select(
+                "url_canon", "body", "head"
+            )
         return src.join(
             F.broadcast(rows.select("url_canon").distinct()),
             "url_canon", "left_semi",
@@ -912,7 +893,7 @@ class CrawlEngine:
 
     def compact(
         self,
-        sinks: tuple[str, ...] = ("seen", "store", "results"),
+        sinks: tuple[str, ...] = ("seen", "results"),
         target_bytes: int = 64 << 20,
     ) -> dict:
         """Table maintenance between crawls/rounds: execute the binpack
@@ -950,10 +931,11 @@ class CrawlEngine:
         return df.select("path_key", "value", "vkind", "pc").orderBy("path_key")
 
     def seen_df(self) -> DataFrame:
+        """The seen rows without their stored responses."""
         df = self._read_sink("seen")
-        return df if df is not None else self._empty(
-            "url_hash long, url_canon string, host string, bucket int, status int, path_first string"
-        )
+        if df is None:
+            return self._empty(SEEN_SCHEMA)
+        return df.drop("body", "head")
 
     def visit_order_df(self) -> DataFrame:
         """URLs in reference first-visit order: lex-min discovery path.

@@ -1,8 +1,9 @@
 """The crawl's table: every durable sink and round commit of a crawl.
 
-A crawl's durable state (the frontier / seen / store / results /
-downloads sinks and the round history) lives in one class,
-:class:`ParquetManifestFormat`: append-only parquet deltas under
+A crawl's durable state (the frontier / seen / results / downloads
+sinks, the seen sink doubling as the page cache, and the round history)
+lives in one class, :class:`ParquetManifestFormat`: append-only parquet
+deltas under
 ``<workdir>/<sink>/round=N`` plus one JSON manifest per committed round
 under ``<workdir>/rounds``, beside the maintenance manifests that
 compaction writes there. The engine never touches sink paths or

@@ -7,8 +7,8 @@ reference's per-branch closure application,
 /root/reference/boris/semantics.rkt:52-92, and interpreter.rkt:54-59,
 which applies let/for/label/recur/show to the page it already holds).
 Fresh urls and cache-hit replays share that stage; a url's response comes
-from ``fetch_fn``, its pages-table row (snapshot) or its store row
-(replay). Output is a single union schema split by ``kind`` on the JVM
+from ``fetch_fn``, its pages-table row (snapshot) or its seen row's stored
+body (replay). Output is a single union schema split by ``kind`` on the JVM
 side:
 
 - ``request``  → a navigate fan-out (semantics.rkt:52-57): resolved +
@@ -32,6 +32,7 @@ import pandas as pd
 from ..kernel import host_of, resolve2, url_hash
 from ..oracle import program as P
 from .compiler import NodeSpec
+from .robots import ROBOTS_STATUS
 
 # every evaluation output row, as (column, arrow type); the kind column
 # becomes the hive partition of the round's single output write
@@ -207,15 +208,12 @@ def eval_to_fixpoint(
             o["path_key"] = r["path_key"] + o["path_key"]
 
 
-# worker-written sink files: (column, arrow type) in the sink schema's
-# order (crawler.py STORE_SCHEMA / SEEN_SCHEMA)
-_STORE_FILE_COLS = (
-    ("url_canon", "string"), ("body", "string"), ("status", "int32"),
-    ("head", "string"),
-)
+# worker-written seen files: (column, arrow type) in the sink schema's
+# order (crawler.py SEEN_SINK_SCHEMA)
 _SEEN_FILE_COLS = (
     ("url_hash", "int64"), ("url_canon", "string"), ("host", "string"),
     ("bucket", "int32"), ("status", "int32"), ("path_first", "string"),
+    ("body", "string"), ("head", "string"),
 )
 
 
@@ -331,7 +329,6 @@ _FRAME_ROWS = 1024
 def make_round_fn(
     node_table: dict[int, NodeSpec],
     fetch_fn,
-    store_dir: str | None,
     seen_dir: str,
     n_buckets: int,
 ):
@@ -352,12 +349,14 @@ def make_round_fn(
     (body, status, head):
 
     - the url's body row, if it has one: its pages-table row in a snapshot
-      crawl, or its store row for a cache-hit replay (status 200);
-    - else, for a fresh url, ``fetch_fn``'s answer — one batch call per
-      Arrow batch;
+      crawl, or its seen row's stored body for a cache-hit replay (status
+      200);
+    - else, for a fresh url that robots does not block, ``fetch_fn``'s
+      answer — one batch call per Arrow batch;
     - else ``("", 404)`` with no head.
 
-    A robots-blocked url (``_blk``) evaluates on an empty body with no
+    A robots-blocked url (``_blk``: a first visit, or a replay of one)
+    never reaches ``fetch_fn`` and evaluates on an empty body with no
     head. The url's response, seen row and eval memo carry across Arrow
     batches (the partition is url-sorted, so only the last url of a batch
     can straddle into the next, and a url spanning 3+ batches chains
@@ -380,23 +379,23 @@ def make_round_fn(
     where it lands; it never crosses the Arrow boundary, a shuffle or the
     block cache.
 
-    Only fresh urls write sink rows: exactly one row per url for each of
-    two sinks, written per batch as parquet via pyarrow (``_write_batch``
-    — tmp-name + ``os.replace``, so task retries are atomic and
-    deterministic). Cache-hit urls never reach fetch_fn and write neither.
+    Only fresh urls write seen rows, exactly one per url, written per
+    batch into *seen_dir* as parquet via pyarrow (``_write_batch`` —
+    tmp-name + ``os.replace``, so task retries are atomic and
+    deterministic): (url_hash, url_canon, host, bucket, status,
+    path_first, body, head), ``bucket = url_hash % n_buckets`` (Python
+    ``%`` equals ``pmod`` for a positive modulus), ``path_first`` the min
+    ``path_key`` over the url's rows, status ``ROBOTS_STATUS`` for a
+    blocked url. The seen sink is the crawl's page cache, the reference's
+    url-keyed dict: ``body``/``head`` hold the response when ``fetch_fn``
+    produced it, and are null for a snapshot page (its pages row already
+    is the cache), a 404 with no fetch, and a robots block. Cache-hit urls
+    never reach fetch_fn and write no row.
 
-    - *store_dir*: (url_canon, body, status, head) — the crash-resumable
-      page cache that later replays read (None for the snapshot, whose
-      pages table already is that cache);
-    - *seen_dir*: (url_hash, url_canon, host, bucket, status, path_first)
-      — the round's seen delta, ``bucket = url_hash % n_buckets`` (Python
-      ``%`` equals ``pmod`` for a positive modulus) and ``path_first`` the
-      min ``path_key`` over the url's rows.
-
-    The crawler adopts both directories as the round's deltas
+    The crawler adopts *seen_dir* as the round's seen delta
     (``ParquetManifestFormat.adopt_delta`` — Iceberg add_files: data files
-    written by tasks, committed by reference), so neither sink costs a
-    Spark job."""
+    written by tasks, committed by reference), so the sink costs no Spark
+    job."""
 
     import inspect
 
@@ -417,11 +416,11 @@ def make_round_fn(
         # per fresh url, the DFS-min request row: (path, url_full, method,
         # payload, jar)
         fetch_row: dict[str, tuple] = {}
-        for fresh, url, full, path, method, payload, cj in zip(
-            pdf["_fresh"], pdf["url_canon"], pdf["url_full"], pdf["path_key"],
-            pdf["method"], pdf["payload"], pdf["cookies"],
+        for fresh, blk, url, full, path, method, payload, cj in zip(
+            pdf["_fresh"], pdf["_blk"], pdf["url_canon"], pdf["url_full"],
+            pdf["path_key"], pdf["method"], pdf["payload"], pdf["cookies"],
         ):
-            if not fresh:
+            if not fresh or blk:
                 continue
             row = fetch_row.get(url)
             if row is None or (path or "") < row[0]:
@@ -448,18 +447,18 @@ def make_round_fn(
     def evaluate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..kernel.cookies import jar_fold_head, jar_from_json, jar_to_json
 
-        # the url in progress: its response, its seen row ([url_hash, url,
-        # host, bucket, status, path_first], fresh urls only, final once the
-        # next url starts) and its eval memo
+        # the url in progress: its response (``kept``: fetch_fn's, so the
+        # seen row stores it), its seen row (fresh urls only, final once
+        # the next url starts) and its eval memo
         cur = None
         body, status, head = "", 404, None
+        kept = False
         seen_row = None
         memo: dict = {}
         for batch_idx, pdf in enumerate(batches):
             if "_src" not in pdf:  # no body source joined in
                 pdf = pdf.assign(_src=1, body=None, head=None)
             out: list[dict] = []
-            store_rows: list[tuple] = []
             seen_rows: list[tuple] = []
             fetched = fetch(pdf, cur)
             for src, fresh, blk, pc, url, url_full, uhash, host, bindings_json, path, method, cj, b, h in zip(
@@ -474,6 +473,7 @@ def make_round_fn(
                         seen_row = None
                     cur = url
                     memo.clear()
+                    kept = url in fetched
                     resp = fetched.get(url, ("", 404))
                     body = "" if resp[0] is None else resp[0]
                     status = resp[1]
@@ -482,21 +482,21 @@ def make_round_fn(
                     body = b if isinstance(b, str) else ""
                     status = 200
                     head = tuple(json.loads(h)) if isinstance(h, str) and h else None
+                    kept = False
                     continue
                 path = path or ""
+                blk = bool(blk)
                 if fresh:
                     if seen_row is None:
-                        # the url's first request row: exactly ONE store
-                        # row and ONE seen row per url per crawl, so both
-                        # sinks are duplicate-free by construction
-                        if store_dir is not None:
-                            head_json = (
-                                json.dumps(list(head)) if head is not None else None
-                            )
-                            store_rows.append((url, body, int(status), head_json))
+                        # the url's first request row: exactly ONE seen row
+                        # per url per crawl, so the sink is duplicate-free
+                        # by construction
                         seen_row = [
                             int(uhash), url, host, int(uhash) % n_buckets,
-                            int(status), path,
+                            ROBOTS_STATUS if blk else int(status), path,
+                            body if kept else None,
+                            json.dumps(list(head))
+                            if kept and head is not None else None,
                         ]
                     elif path < seen_row[5]:
                         seen_row[5] = path
@@ -507,7 +507,6 @@ def make_round_fn(
                 )
                 method = method if isinstance(method, str) else "GET"
                 cj = cj if isinstance(cj, str) else None
-                blk = bool(blk)
                 rb, rh = ("", None) if blk else (body, head)
                 # per-branch cookie fold: the response's Set-Cookie enters
                 # THIS branch's jar before its children run
@@ -526,8 +525,6 @@ def make_round_fn(
                 if len(out) >= _FRAME_ROWS:
                     yield _frame(out)
                     out = []
-            if store_rows:
-                _write_batch(store_dir, _STORE_FILE_COLS, store_rows, batch_idx)
             if seen_rows:
                 _write_batch(seen_dir, _SEEN_FILE_COLS, seen_rows, batch_idx)
             yield _frame(out)

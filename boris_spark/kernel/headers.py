@@ -8,7 +8,7 @@ from __future__ import annotations
 
 import re
 
-from .cookies import Cookie, cookies_set_star, cookies_to_header, set_cookie_to_cookie
+from .cookies import Cookie, cookies_set_star, set_cookie_to_cookie
 
 Headers = list[tuple[str, str]]
 
@@ -57,13 +57,6 @@ def headers_set_cookies(
         if c is not None
     ]
     return cookies_set_star(list(stale_cookies or []), fresh)
-
-
-def headers_cookie_set(headers: Headers, cookies: list[Cookie]) -> Headers:
-    """head.rkt:94-98."""
-    if not cookies:
-        return headers
-    return headers_set(headers, "Cookie", cookies_to_header(cookies))
 
 
 def headers_location(headers: Headers) -> str | None:

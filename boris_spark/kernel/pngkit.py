@@ -90,17 +90,6 @@ def png_encode(
     )
 
 
-def png_min_size(w: int, h: int) -> int:
-    """Lower bound on the level-0 encode's byte length (signature + chunk
-    framing + zlib header/adler + the n = h·(w+1) stored filtered bytes +
-    at least one stored-block header). zlib's stored-block segmentation is
-    an implementation detail, so the EXACT length is not closed-form —
-    the pytest pins the roundtrip instead; this bound guards against a
-    silently-truncated blob."""
-    n = h * (w + 1)
-    return len(_SIG) + (12 + 13) + (12 + 2 + 4 + n + 5) + 12
-
-
 def png_decode(data: bytes) -> np.ndarray:
     """PNG bytes → (h, w) uint8. 8-bit grayscale, filters 0-4, CRC
     validated on every chunk."""

@@ -415,16 +415,9 @@ def assign_ids(root: Node) -> dict[int, Node]:
 
 # ------------------------------------------------------------- path keys
 
-PATH_COMPONENT_HEX = 8  # components < 2^32, fixed width → string lex == tuple lex
-
-
 def path_key_hex(path: tuple[int, ...]) -> str:
+    # components < 2^32, fixed width → string lex == tuple lex
     return "".join(f"{c:08x}" for c in path)
-
-
-def path_key_tuple(hex_key: str) -> tuple[int, ...]:
-    w = PATH_COMPONENT_HEX
-    return tuple(int(hex_key[i : i + w], 16) for i in range(0, len(hex_key), w))
 
 
 # --------------------------------------------------- binding serialization

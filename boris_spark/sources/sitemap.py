@@ -30,8 +30,8 @@ def read_sitemaps(sitemaps: DataFrame, url_col: str = "url",
                   xml_col: str = "xml") -> DataFrame:
     """Parse a table of fetched sitemap documents into one row per entry.
 
-    Input: any DataFrame with (*url_col*, *xml_col*) — e.g. the crawl
-    store's rows for ``/sitemap.xml`` urls, or a WARC ingest filtered to
+    Input: any DataFrame with (*url_col*, *xml_col*) — e.g. the crawl's
+    stored bodies for ``/sitemap.xml`` urls, or a WARC ingest filtered to
     ``application/xml``. Output columns: ``sitemap_url`` (the source
     document), ``kind`` ('urlset' leaf entry | 'sitemapindex' child
     pointer), ``loc``, ``lastmod``, ``changefreq``, ``priority``.

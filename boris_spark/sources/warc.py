@@ -48,8 +48,8 @@ def write_warc(pages: DataFrame, out_dir: str, compress: bool = True) -> int:
 
     The inverse of :func:`read_warc`: ``read_warc(write_warc(df)) == df``
     on (url, warc_ts, html) — pinned by tests/test_warc.py. A crawl exports
-    its store sink this way to hand fetched pages downstream in the
-    archive format the rest of the CC ecosystem consumes.
+    its seen sink's stored bodies this way to hand fetched pages downstream
+    in the archive format the rest of the CC ecosystem consumes.
 
     Task-retry safe: each attempt streams into a unique HIDDEN temp file
     (``.``-prefixed, so Spark file sources ignore it even if a failed or
@@ -158,7 +158,7 @@ def write_wet(pages: DataFrame, out_dir: str, compress: bool = True) -> int:
     (hidden temp + delete-on-failure + rename, reader glob filter).
 
     This completes the Common-Crawl artifact family the engine can emit
-    from a crawl's store sink: WARC (response records, write_warc), WET
+    from a crawl's stored bodies: WARC (response records, write_warc), WET
     (text conversions, here), CDX (the capture index, ops cdx_index)."""
     import gzip as _gzip
     import os

@@ -293,8 +293,13 @@ def test_robots_parity_fused_callable(spark, corpus, tmp_path):
     from boris_spark.oracle import spider as run_spider
 
     oracle = run_spider(program, RobotsSnapshotFetcher(pages_dict, rules))
+    log = tmp_path / "calls"
+    log.mkdir()
 
     def fetch_fn(urls):
+        import uuid as _uuid
+
+        (log / _uuid.uuid4().hex).write_text("\n".join(urls))
         return [
             (pages_dict.get(u), 200 if u in pages_dict else 404) for u in urls
         ]
@@ -311,6 +316,58 @@ def test_robots_parity_fused_callable(spark, corpus, tmp_path):
         r["url_canon"] for r in eng.seen_df().where("status = 999").collect()
     }
     assert blocked, "rules matched nothing"
+    fetched = [
+        u for p in log.iterdir() for u in p.read_text().splitlines() if u
+    ]
+    assert not blocked & set(fetched)
+    assert len(fetched) == len(set(fetched))
+
+
+@pytest.mark.parametrize("mode", ["snapshot", "callable"])
+def test_robots_resume_parity(spark, tmp_path, mode):
+    """Kill a robots crawl after 2 rounds and resume it: the result must
+    match the oracle. /x is blocked on its first visit (round 1, before
+    the kill) and reached again through /a → /b in round 3, after the
+    resume. Only its seen status keeps it blocked then: in a snapshot
+    crawl the pages table still holds its page, whose title and link to
+    /y the oracle never sees."""
+    from boris_spark.engine.robots import RobotsSnapshotFetcher, robots_rules_df
+    from boris_spark.oracle.program import Label
+
+    def page(title, *links):
+        return f"<title>{title}</title>" + "".join(
+            f"<td class='title'><a href='{u}'>{u}</a></td>" for u in links
+        )
+
+    site = {
+        "http://r.test/": page("root", "/a", "/x"),
+        "http://r.test/a": page("a", "/b"),
+        "http://r.test/b": page("b", "/x"),
+        "http://r.test/x": page("x", "/y"),
+        "http://r.test/y": page("y"),
+    }
+    rules = [("r.test", "/x")]
+    program = Go(
+        "http://r.test/",
+        Label("l", Extract(First(XpathTextE("//title"))),
+              Go(XpathE("//td[@class='title']/a/@href/text()"), Recur("l"))),
+    )
+    oracle = spider(program, RobotsSnapshotFetcher(site, rules))
+    kw = dict(politeness_k=None, robots_rules=robots_rules_df(spark, rules))
+    src = None
+    if mode == "callable":
+        kw.update(fetch_mode="callable", fetch_fn=_page_fetch_fn(site))
+    else:
+        src = spark.createDataFrame(list(site.items()), "url string, html string")
+    mk = lambda: CrawlEngine(spark, src, str(tmp_path / "work"), **kw)  # noqa: E731
+    mk().run(program, max_rounds=2)
+    assert [
+        r["url_canon"] for r in mk().seen_df().where("status = 999").collect()
+    ] == ["http://r.test/x"]
+    eng = mk()
+    eng.run(program, max_rounds=10, resume=True)
+    assert_parity(oracle, eng)
+    assert eng.table.round_metrics(3)["routed"]["replay"] == 1
 
 
 def test_per_host_budget_invariance(spark, corpus, tmp_path):
@@ -468,10 +525,10 @@ def test_cookie_memoized_first_fetch_wins(spark, tmp_path):
 
 def test_resume_callable_mode_with_store(spark, corpus, tmp_path):
     """Kill a callable-mode (fused fetch) crawl after 2 rounds, resume in a
-    fresh engine: cache hits of pre-kill fetches must replay from the store
-    sink, the final output must match the oracle exactly, and no url may be
-    fetched (= stored) twice across the kill — the fetch-once contract that
-    matters for live fetchers."""
+    fresh engine: cache hits of pre-kill fetches must replay from the seen
+    sink's stored bodies, the final output must match the oracle exactly,
+    and no url may be fetched (= seen) twice across the kill — the
+    fetch-once contract that matters for live fetchers."""
     _, pages_dict = corpus
     seeds = webgen.seeds_for(N_PAGES, SEED)
     program = flagship_program(seeds)
@@ -494,11 +551,10 @@ def test_resume_callable_mode_with_store(spark, corpus, tmp_path):
     )
     eng2.run(program, max_rounds=50, resume=True)
     assert_parity(oracle, eng2)
-    # fetch-once across the kill: each url appears in exactly one store
-    # round (distinct per round; batch-straddling dupes within a round are
-    # tolerated and deduped at replay)
-    store = eng2._read_sink("store").select("url_canon", "round").distinct()
-    assert store.groupBy("url_canon").count().where("count > 1").count() == 0
+    # fetch-once across the kill: each url appears in exactly one seen
+    # round
+    seen = eng2.seen_df().select("url_canon", "round").distinct()
+    assert seen.groupBy("url_canon").count().where("count > 1").count() == 0
 
 
 def test_fetch_once_across_arrow_batches(spark, tmp_path):
@@ -702,14 +758,12 @@ def test_worker_seen_delta_matches_jvm_aggregate(spark, corpus, tmp_path):
     """The fused stage's workers write each fetched url's seen row. With
     maxRecordsPerBatch=1 every url's rows straddle Arrow batches, and each
     round's seen delta must still equal the JVM aggregate it replaces: a
-    groupBy over frontier delta r restricted to the urls fetched in r —
-    min path_key, pmod(url_hash, n_buckets), and the store delta's
-    status."""
+    groupBy over frontier delta r restricted to the urls first seen in r —
+    min path_key, pmod(url_hash, n_buckets), and the status the test's
+    own fetcher gives the url."""
     from pyspark.sql import functions as F
 
-    from boris_spark.engine.crawler import (
-        REQUEST_SCHEMA, SEEN_SCHEMA, STORE_SCHEMA,
-    )
+    from boris_spark.engine.crawler import REQUEST_SCHEMA, SEEN_SCHEMA
 
     _, pages_dict = corpus
     program = flagship_program(webgen.seeds_for(N_PAGES, SEED))
@@ -725,27 +779,32 @@ def test_worker_seen_delta_matches_jvm_aggregate(spark, corpus, tmp_path):
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", prev)
     cols = ["url_hash", "url_canon", "host", "bucket", "status", "path_first"]
+    status = (
+        F.when(F.col("url_canon").isin(list(pages_dict)), 200)
+        .otherwise(404).cast("int")
+    )
+    seen = eng.seen_df()
     n_checked = 0
     for r in eng.table.committed_rounds():
         got = []
         if eng.table.delta_rows("seen", r):
             got = eng.table.delta_df("seen", r, SEEN_SCHEMA).select(*cols).collect()
-        want = []
-        if eng.table.delta_rows("store", r):
-            store = eng.table.delta_df("store", r, STORE_SCHEMA)
-            want = (
-                eng.table.delta_df("frontier", r, REQUEST_SCHEMA)
-                .join(store.select("url_canon", "status"), "url_canon")
-                .groupBy("url_canon")
-                .agg(
-                    F.first("url_hash").alias("url_hash"),
-                    F.first("host").alias("host"),
-                    F.first("status").alias("status"),
-                    F.min("path_key").alias("path_first"),
-                )
-                .withColumn("bucket", F.pmod("url_hash", F.lit(7)).cast("int"))
-                .select(*cols).collect()
+        want = (
+            eng.table.delta_df("frontier", r, REQUEST_SCHEMA)
+            .join(
+                seen.where(F.col("round") < r).select("url_canon"),
+                "url_canon", "left_anti",
             )
+            .groupBy("url_canon")
+            .agg(
+                F.first("url_hash").alias("url_hash"),
+                F.first("host").alias("host"),
+                F.min("path_key").alias("path_first"),
+            )
+            .withColumn("status", status)
+            .withColumn("bucket", F.pmod("url_hash", F.lit(7)).cast("int"))
+            .select(*cols).collect()
+        )
         assert len(got) == len({row["url_canon"] for row in got})
         assert sorted(map(tuple, got)) == sorted(map(tuple, want)), r
         n_checked += len(want)
@@ -755,8 +814,8 @@ def test_worker_seen_delta_matches_jvm_aggregate(spark, corpus, tmp_path):
 def test_resume_sweeps_stale_inboxes(spark, corpus, tmp_path):
     """A round killed after its workers wrote inbox files leaves them
     behind. Resuming must discard them (the durable sinks and manifests
-    are the resume state): a stale seen row for an already-seen url and a
-    stale store body would otherwise be adopted into the next round."""
+    are the resume state): a stale seen row for an already-seen url, with
+    a stale body, would otherwise be adopted into the next round."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -772,19 +831,16 @@ def test_resume_sweeps_stale_inboxes(spark, corpus, tmp_path):
     url, url_h, host = (
         mk().seen_df().select("url_canon", "url_hash", "host").first()
     )
-    for inbox, tbl in (
-        ("seen_inbox", pa.table({
+    (work / "seen_inbox").mkdir()
+    pq.write_table(
+        pa.table({
             "url_hash": pa.array([url_h], pa.int64()), "url_canon": [url],
             "host": [host], "bucket": pa.array([0], pa.int32()),
             "status": pa.array([500], pa.int32()), "path_first": ["0"],
-        })),
-        ("store_inbox", pa.table({
-            "url_canon": [url], "body": ["<p>stale</p>"],
-            "status": pa.array([500], pa.int32()), "head": [None],
-        })),
-    ):
-        (work / inbox).mkdir()
-        pq.write_table(tbl, str(work / inbox / "part-99999-0000.parquet"))
+            "body": ["<p>stale</p>"], "head": pa.array([None], pa.string()),
+        }),
+        str(work / "seen_inbox" / "part-99999-0000.parquet"),
+    )
     eng = mk()
     eng.run(program, max_rounds=50, resume=True)
     assert_parity(oracle, eng)
@@ -881,8 +937,9 @@ def test_routed_counts_in_every_mode(spark, corpus, tmp_path):
     snapshot crawl runs at two records per Arrow batch: batches mix page
     rows with request rows (whose 64-bit url hashes must survive the
     union into pandas), and a url's page row often ends a batch apart
-    from its requests. It writes no store delta (its pages table is the
-    body source). The politeness budget binds, so cache hits replay in
+    from its requests. Its seen rows store no body (its pages table is the
+    body source); every fetched callable seen row does. The politeness
+    budget binds, so cache hits replay in
     many rounds, and the callable crawl never fetches a url twice."""
     pages_df, pages_dict = corpus
     log = tmp_path / "calls"
@@ -928,8 +985,8 @@ def test_routed_counts_in_every_mode(spark, corpus, tmp_path):
     )
     for seg in ("fresh", "replay", "deferred"):
         assert any(r[seg] for r in routes[0]), (seg, routes[0])
-    assert snap.table.sink_rows("store") == 0
-    assert call.table.sink_rows("store") > 0
+    assert snap._read_sink("seen").where("body IS NOT NULL").count() == 0
+    assert call._read_sink("seen").where("body IS NULL").count() == 0
     fetched = [
         u for p in log.iterdir() for u in p.read_text().splitlines() if u
     ]

@@ -242,9 +242,9 @@ def test_compact_mid_crawl_resume(spark, tmp_path):
     assert got == want
     assert {r["url_canon"] for r in eng2.seen_df().collect()} == oracle.seen
     # fetch-once across kill + compaction
-    store = eng2._read_sink("store").select("url_canon", "round").distinct()
+    seen = eng2.seen_df().select("url_canon", "round").distinct()
     assert (
-        store.groupBy("url_canon").count().where("count > 1").count() == 0
+        seen.groupBy("url_canon").count().where("count > 1").count() == 0
     )
 
 
