@@ -939,8 +939,8 @@ def test_routed_counts_in_every_mode(spark, corpus, tmp_path):
     union into pandas), and a url's page row often ends a batch apart
     from its requests. Its seen rows store no body (its pages table is the
     body source); every fetched callable seen row does. The politeness
-    budget binds, so cache hits replay in
-    many rounds, and the callable crawl never fetches a url twice."""
+    budget binds, so cache hits replay in many rounds, and the callable
+    crawl never fetches a url twice."""
     pages_df, pages_dict = corpus
     log = tmp_path / "calls"
     log.mkdir()
