@@ -19,7 +19,7 @@ interpreter, /root/reference/boris/interpreter.rkt:54-59 — see SURVEY.md §3):
    exact top-k) — skew-safe where a naive ``Window.partitionBy(host)`` would
    funnel the hottest host through one task;
 5. respond, inside the round's ONE Python stage: fresh urls and every
-   cache hit share one url-sorted ``mapInPandas`` and differ only in
+   cache hit share one url-sorted ``mapInArrow`` and differ only in
    where a url's response comes from (the reference's request service:
    replay on a hit, fetch on a miss, browser-services.rkt:35-47). A fresh
    url's DFS-min request goes to the one ``fetch_fn`` contract (a
@@ -68,6 +68,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..oracle import program as P
 from .bloom import BloomShardStore
@@ -668,8 +669,6 @@ class CrawlEngine:
             bloom_bc = self._bloom_bc
 
             def flag(batches):
-                import pandas as pd  # noqa: F401
-
                 bloom = bloom_bc.value
                 for pdf in batches:
                     pdf = pdf.copy()
@@ -678,10 +677,11 @@ class CrawlEngine:
                     )
                     yield pdf
 
+            # a copy of the fields: ``add`` appends to the list it was
+            # built from, here ``urls``' cached schema
             flagged = urls.mapInPandas(
                 flag,
-                urls.schema.simpleString().replace("struct<", "").rstrip(">").replace(":", " ")
-                + ", maybe_seen boolean",
+                StructType([*urls.schema.fields]).add("maybe_seen", "boolean"),
             ).persist()
             self._round_persists.append(flagged)
             definitely_new = (
@@ -835,30 +835,21 @@ class CrawlEngine:
         """The round's Python stage (udfs.make_round_fn) over *rows*: one
         url_canon exchange of *width* partitions, then sorted so each url's
         rows are consecutive. With *bodies* (``_body_source``), each url's
-        single body row (``_src=0``) is unioned with its request rows
-        (``_src=1``, no body) and sorted ahead of them — a page body
-        crosses exactly one shuffle and one Arrow boundary and is never
-        copied per path."""
-        order = ["url_canon", "pc", "bindings"]
+        single body row is unioned with its request rows (no body) and
+        sorted ahead of them — a page body crosses exactly one shuffle and
+        one Arrow boundary and is never copied per path.
+
+        Invariant: a body row is the only row of its url with a null
+        ``pc`` (the union leaves every request column null on it), while
+        every request row carries the ``pc`` of the node that emitted it,
+        seed rows included (the root's ``node_id``) — so sorting ``pc``
+        nulls first puts the body row first."""
         if bodies is not None:
-            # body rows fill the int64 and flag columns: a null would make
-            # pandas widen int64 to float64 (truncating url hashes) and
-            # booleans to objects
-            fill = {"bigint": F.lit(0).cast("long"), "boolean": F.lit(False)}
-            pads = [
-                fill[f.dataType.simpleString()].alias(f.name)
-                for f in rows.schema.fields
-                if f.dataType.simpleString() in fill
-            ]
-            rows = rows.withColumn("_src", F.lit(1)).unionByName(
-                bodies.select("*", F.lit(0).alias("_src"), *pads),
-                allowMissingColumns=True,
-            )
-            order.insert(1, "_src")
+            rows = rows.unionByName(bodies, allowMissingColumns=True)
         return (
             rows.repartition(width, "url_canon")
-            .sortWithinPartitions(*order)
-            .mapInPandas(self._round_fn, CASCADE_SCHEMA)
+            .sortWithinPartitions("url_canon", F.asc_nulls_first("pc"), "bindings")
+            .mapInArrow(self._round_fn, CASCADE_SCHEMA)
         )
 
     def _body_source(self, rows: DataFrame) -> DataFrame | None:
@@ -931,10 +922,12 @@ class CrawlEngine:
         return df.select("path_key", "value", "vkind", "pc").orderBy("path_key")
 
     def seen_df(self) -> DataFrame:
-        """The seen rows without their stored responses."""
+        """The seen rows without their stored responses, with the
+        ``round`` that wrote each one (an empty frame of the same columns
+        when nothing was seen)."""
         df = self._read_sink("seen")
         if df is None:
-            return self._empty(SEEN_SCHEMA)
+            return self._empty(SEEN_SCHEMA + ", round int")
         return df.drop("body", "head")
 
     def visit_order_df(self) -> DataFrame:

@@ -13,7 +13,7 @@ Reproduces the reference's fetch semantics
 The reference fetches one URL at a time on one thread. Here the fetcher is
 a plain ``fetch_fn`` like any other (the reference's swappable request
 service, boris/interpreter/services.rkt:14-15): the crawl's fused
-fetch+extract ``mapInPandas`` stage calls it once per Arrow batch with the
+fetch+extract ``mapInArrow`` stage calls it once per Arrow batch with the
 batch's fresh urls and their DFS-min requests, and it fetches them
 concurrently on a small thread pool (network-bound work — threads, not
 processes). The engine's per-host politeness budget upstream bounds the

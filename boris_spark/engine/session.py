@@ -6,8 +6,8 @@ parity runs are deterministic:
 - AQE on (runtime re-planning, skew-join splitting);
 - shuffle-hash joins preferred over sort-merge for the engine's equi-joins on
   64-bit hashes (no useful sort order to exploit);
-- Arrow enabled for pandas UDF / mapInPandas batches (the only Python↔JVM
-  boundary in the hot path);
+- Arrow enabled for pandas UDF / mapInPandas batches (the crawl round's
+  own Python stage is a mapInArrow, Arrow by construction);
 - shuffle partitions sized to the sandbox; on a real cluster this scales with
   executor count (AQE coalesces the rest).
 """

@@ -1,15 +1,18 @@
 """Arrow-batched executor-side program evaluation.
 
 A crawl round runs ONE Python stage (``make_round_fn``): a url-sorted
-``mapInPandas`` whose worker holds each url's page and evaluates every
+``mapInArrow`` whose worker holds each url's page and evaluates every
 non-fetch program node on it to fixpoint (``eval_to_fixpoint`` — the
 reference's per-branch closure application,
 /root/reference/boris/semantics.rkt:52-92, and interpreter.rkt:54-59,
 which applies let/for/label/recur/show to the page it already holds).
 Fresh urls and cache-hit replays share that stage; a url's response comes
 from ``fetch_fn``, its pages-table row (snapshot) or its seen row's stored
-body (replay). Output is a single union schema split by ``kind`` on the JVM
-side:
+body (replay). The worker reads Arrow columns as Python lists (nulls stay
+None) and builds its output batches from ``OUT_SCHEMA`` with one row
+builder, ``RecordBatch.from_pylist``; the same builder writes every
+worker- and driver-side parquet file. Output is a single union schema
+split by ``kind`` on the JVM side:
 
 - ``request``  → a navigate fan-out (semantics.rkt:52-57): resolved +
   canonicalized + hashed target, path extended with the fan-out index;
@@ -27,7 +30,7 @@ import json
 from collections.abc import Iterator
 from typing import Any
 
-import pandas as pd
+import pyarrow as pa
 
 from ..kernel import host_of, resolve2, url_hash
 from ..oracle import program as P
@@ -44,7 +47,7 @@ _OUT_COLS = (
     ("value", "string"), ("vkind", "string"), ("cookies", "string"),
 )
 _COLS = [c for c, _ in _OUT_COLS]
-_INT_COLS = tuple(c for c, t in _OUT_COLS if t == "int64")
+OUT_SCHEMA = pa.schema([(c, pa.type_for_alias(t)) for c, t in _OUT_COLS])
 CASCADE_SCHEMA = ", ".join(
     f"{c} {'long' if t == 'int64' else t}" for c, t in _OUT_COLS
 )
@@ -208,27 +211,27 @@ def eval_to_fixpoint(
             o["path_key"] = r["path_key"] + o["path_key"]
 
 
-# worker-written seen files: (column, arrow type) in the sink schema's
-# order (crawler.py SEEN_SINK_SCHEMA)
-_SEEN_FILE_COLS = (
-    ("url_hash", "int64"), ("url_canon", "string"), ("host", "string"),
-    ("bucket", "int32"), ("status", "int32"), ("path_first", "string"),
-    ("body", "string"), ("head", "string"),
-)
+# worker-written seen files, in the sink schema's order (crawler.py
+# SEEN_SINK_SCHEMA)
+_SEEN_FILE_SCHEMA = pa.schema([
+    ("url_hash", pa.int64()), ("url_canon", pa.string()),
+    ("host", pa.string()), ("bucket", pa.int32()), ("status", pa.int32()),
+    ("path_first", pa.string()), ("body", pa.string()), ("head", pa.string()),
+])
 
 
 def _write_batch(
-    out_dir: str, cols: tuple, rows: list[tuple], batch_idx: int
+    out_dir: str, schema: pa.Schema, rows: list[dict], batch_idx: int
 ) -> None:
     """Worker-side sink write: one parquet file per (partition, batch),
-    *cols* columns, snappy. tmp-name + ``os.replace`` makes task retries
-    atomic; names are deterministic in (partitionId, batch index) — a
-    re-run attempt overwrites with byte-identical content, so
+    *rows* built by *schema*'s columns (``from_pylist``, the output
+    batches' builder), snappy. tmp-name + ``os.replace`` makes task
+    retries atomic; names are deterministic in (partitionId, batch index)
+    — a re-run attempt overwrites with byte-identical content, so
     last-writer-wins is consistent. The engine adopts the directory as the
     round's sink delta without rewriting a byte (Iceberg add_files)."""
     import os
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
     from pyspark import TaskContext
 
@@ -237,11 +240,9 @@ def _write_batch(
     os.makedirs(out_dir, exist_ok=True)
     name = f"part-{pid:05d}-{batch_idx:04d}.parquet"
     tmp = os.path.join(out_dir, f".{name}.tmp-{os.getpid()}")
-    tbl = pa.table({
-        c: pa.array([r[i] for r in rows], pa.type_for_alias(t))
-        for i, (c, t) in enumerate(cols)
-    })
-    pq.write_table(tbl, tmp, compression="snappy")
+    pq.write_table(
+        pa.Table.from_pylist(rows, schema=schema), tmp, compression="snappy"
+    )
     os.replace(tmp, os.path.join(out_dir, name))
 
 
@@ -253,33 +254,13 @@ def write_by_kind(out_dir: str, out: list[dict]) -> None:
     import os
 
     os.makedirs(out_dir, exist_ok=True)
-    by_kind: dict[str, list[tuple]] = {}
+    by_kind: dict[str, list[dict]] = {}
     for r in out:
-        by_kind.setdefault(r["kind"], []).append(
-            tuple(r[c] for c, _ in _OUT_COLS[1:])
-        )
+        by_kind.setdefault(r["kind"], []).append(r)
     for kind, rows in by_kind.items():
         _write_batch(
-            os.path.join(out_dir, f"kind={kind}"), _OUT_COLS[1:], rows, 0
+            os.path.join(out_dir, f"kind={kind}"), OUT_SCHEMA.remove(0), rows, 0
         )
-
-
-def _frame(out: list[dict]) -> pd.DataFrame:
-    """Build the output batch WITHOUT float64 inference: a mixed
-    int/None column (e.g. url_hash on request rows vs result rows) would
-    otherwise be inferred as float64, silently truncating 64-bit hashes to
-    the 53-bit double mantissa — which breaks the (url_hash, url_canon)
-    seen anti-join and refetches already-seen URLs."""
-    if not out:
-        return pd.DataFrame({c: [] for c in _COLS})
-    return pd.DataFrame({
-        c: (
-            pd.array([r[c] for r in out], dtype="Int64")
-            if c in _INT_COLS
-            else [r[c] for r in out]
-        )
-        for c in _COLS
-    })
 
 
 def _eval_memo(
@@ -321,9 +302,9 @@ def _eval_memo(
         out.append(r2)
 
 
-# output rows per yielded frame: result values are page-sized, so a
+# output rows per yielded batch: result values are page-sized, so a
 # worker's output buffer is bounded by rows, not by its input batch
-_FRAME_ROWS = 1024
+_BATCH_ROWS = 1024
 
 
 def make_round_fn(
@@ -332,7 +313,7 @@ def make_round_fn(
     seen_dir: str,
     n_buckets: int,
 ):
-    """The crawl round's one Python worker: a ``mapInPandas`` over every
+    """The crawl round's one Python worker: a ``mapInArrow`` over every
     request row the round evaluates — fresh urls and cache-hit replays
     alike, since the two differ only in where a url's response comes from
     (the reference's request service replays a memoized response on a hit
@@ -342,11 +323,12 @@ def make_round_fn(
     (``_eval_memo``) evaluate each distinct state of a url once.
 
     Input rows carry the REQUEST columns + ``_fresh`` + ``_blk``, plus
-    ``_src``/``body``/``head`` when a body source is joined in; they
-    arrive url-partitioned and sorted by (url_canon, _src, pc, bindings),
-    so a url's rows are consecutive and its body row (``_src=0``), if any,
-    leads its request rows (``_src=1``). Per url there is ONE response
-    (body, status, head):
+    ``body``/``head`` when a body source is joined in; they arrive
+    url-partitioned and sorted by (url_canon, pc nulls first, bindings), so
+    a url's rows are consecutive and its body row, if any, leads its
+    request rows: a body row is the only row with a null ``pc``
+    (crawler.py ``_url_stage``). Per url there is ONE response (body,
+    status, head):
 
     - the url's body row, if it has one: its pages-table row in a snapshot
       crawl, or its seen row's stored body for a cache-hit replay (status
@@ -406,7 +388,7 @@ def make_round_fn(
     wants_cookies = "cookie_headers" in _params
     wants_requests = "requests" in _params
 
-    def fetch(pdf: pd.DataFrame, cur) -> dict[str, tuple]:
+    def fetch(cols: dict[str, list], cur) -> dict[str, tuple]:
         """This batch's fetched responses: its fresh urls bar *cur*, the
         url in progress, whose response is already held."""
         from ..kernel.cookies import cookies_ref, cookies_to_header, jar_from_json
@@ -417,14 +399,14 @@ def make_round_fn(
         # payload, jar)
         fetch_row: dict[str, tuple] = {}
         for fresh, blk, url, full, path, method, payload, cj in zip(
-            pdf["_fresh"], pdf["_blk"], pdf["url_canon"], pdf["url_full"],
-            pdf["path_key"], pdf["method"], pdf["payload"], pdf["cookies"],
+            cols["_fresh"], cols["_blk"], cols["url_canon"], cols["url_full"],
+            cols["path_key"], cols["method"], cols["payload"], cols["cookies"],
         ):
             if not fresh or blk:
                 continue
             row = fetch_row.get(url)
-            if row is None or (path or "") < row[0]:
-                fetch_row[url] = (path or "", full, method, payload, cj)
+            if row is None or path < row[0]:
+                fetch_row[url] = (path, full, method, payload, cj)
         need = sorted(u for u in fetch_row if u != cur)
         if not need:
             return {}
@@ -444,7 +426,7 @@ def make_round_fn(
             ]
         return dict(zip(need, fetch_fn(need, **kw)))
 
-    def evaluate(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def evaluate(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         from ..kernel.cookies import jar_fold_head, jar_from_json, jar_to_json
 
         # the url in progress: its response (``kept``: fetch_fn's, so the
@@ -455,58 +437,52 @@ def make_round_fn(
         kept = False
         seen_row = None
         memo: dict = {}
-        for batch_idx, pdf in enumerate(batches):
-            if "_src" not in pdf:  # no body source joined in
-                pdf = pdf.assign(_src=1, body=None, head=None)
+        for batch_idx, batch in enumerate(batches):
+            cols = batch.to_pydict()
             out: list[dict] = []
-            seen_rows: list[tuple] = []
-            fetched = fetch(pdf, cur)
-            for src, fresh, blk, pc, url, url_full, uhash, host, bindings_json, path, method, cj, b, h in zip(
-                pdf["_src"], pdf["_fresh"], pdf["_blk"], pdf["pc"],
-                pdf["url_canon"], pdf["url_full"], pdf["url_hash"],
-                pdf["host"], pdf["bindings"], pdf["path_key"], pdf["method"],
-                pdf["cookies"], pdf["body"], pdf["head"],
-            ):
+            seen_rows: list[dict] = []
+            fetched = fetch(cols, cur)
+            for i, (fresh, blk, pc, url, url_full, uhash, host, bindings_json, path, method, cj) in enumerate(zip(
+                cols["_fresh"], cols["_blk"], cols["pc"], cols["url_canon"],
+                cols["url_full"], cols["url_hash"], cols["host"],
+                cols["bindings"], cols["path_key"], cols["method"],
+                cols["cookies"],
+            )):
                 if url != cur:
                     if seen_row is not None:
-                        seen_rows.append(tuple(seen_row))
+                        seen_rows.append(seen_row)
                         seen_row = None
                     cur = url
                     memo.clear()
                     kept = url in fetched
                     resp = fetched.get(url, ("", 404))
-                    body = "" if resp[0] is None else resp[0]
+                    body = resp[0] or ""
                     status = resp[1]
                     head = resp[2] if len(resp) > 2 else None
-                if src == 0:
-                    body = b if isinstance(b, str) else ""
+                if pc is None:  # the url's body row
+                    body = cols["body"][i] or ""
                     status = 200
-                    head = tuple(json.loads(h)) if isinstance(h, str) and h else None
+                    h = cols["head"][i]
+                    head = tuple(json.loads(h)) if h else None
                     kept = False
                     continue
-                path = path or ""
-                blk = bool(blk)
                 if fresh:
                     if seen_row is None:
                         # the url's first request row: exactly ONE seen row
                         # per url per crawl, so the sink is duplicate-free
                         # by construction
-                        seen_row = [
-                            int(uhash), url, host, int(uhash) % n_buckets,
-                            ROBOTS_STATUS if blk else int(status), path,
-                            body if kept else None,
-                            json.dumps(list(head))
+                        seen_row = {
+                            "url_hash": uhash, "url_canon": url, "host": host,
+                            "bucket": uhash % n_buckets,
+                            "status": ROBOTS_STATUS if blk else status,
+                            "path_first": path,
+                            "body": body if kept else None,
+                            "head": json.dumps(list(head))
                             if kept and head is not None else None,
-                        ]
-                    elif path < seen_row[5]:
-                        seen_row[5] = path
-                pc = int(pc)
-                url_full = url_full if isinstance(url_full, str) else None
-                bindings_json = (
-                    bindings_json if isinstance(bindings_json, str) else None
-                )
-                method = method if isinstance(method, str) else "GET"
-                cj = cj if isinstance(cj, str) else None
+                        }
+                    elif path < seen_row["path_first"]:
+                        seen_row["path_first"] = path
+                method = method or "GET"
                 rb, rh = ("", None) if blk else (body, head)
                 # per-branch cookie fold: the response's Set-Cookie enters
                 # THIS branch's jar before its children run
@@ -522,16 +498,14 @@ def make_round_fn(
                         url, url_full, rb, bindings_json, path + _hx(j), out,
                         head=rh, method=method, cookies_json=cj,
                     )
-                if len(out) >= _FRAME_ROWS:
-                    yield _frame(out)
+                if len(out) >= _BATCH_ROWS:
+                    yield pa.RecordBatch.from_pylist(out, schema=OUT_SCHEMA)
                     out = []
             if seen_rows:
-                _write_batch(seen_dir, _SEEN_FILE_COLS, seen_rows, batch_idx)
-            yield _frame(out)
+                _write_batch(seen_dir, _SEEN_FILE_SCHEMA, seen_rows, batch_idx)
+            yield pa.RecordBatch.from_pylist(out, schema=OUT_SCHEMA)
         if seen_row is not None:
             # the partition's last fresh url is complete once its input ends
-            _write_batch(
-                seen_dir, _SEEN_FILE_COLS, [tuple(seen_row)], batch_idx + 1
-            )
+            _write_batch(seen_dir, _SEEN_FILE_SCHEMA, [seen_row], batch_idx + 1)
 
     return evaluate

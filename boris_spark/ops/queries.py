@@ -4929,9 +4929,7 @@ def stream_frontier_merge(spark, sf_dir):
     exactly once per canonical URL — ``dropDuplicates`` on the canonical
     key under a watermark is Spark's built-in streaming dedup state store
     playing the Bloom-shard seen filter's role
-    (streaming/frontier_feed.py; the CUSTOM stateful form —
-    applyInPandasWithState min-path-per-url — is pinned in
-    tests/test_streaming.py). The discovery stream derives closed-form
+    (streaming/frontier_feed.py). The discovery stream derives closed-form
     from events (each event "discovers" one of 10k URLs, heavily
     duplicated), lands as parquet, and drains with AvailableNow; the
     gate emits only the KEY columns so the result is survivor-order

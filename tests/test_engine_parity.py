@@ -599,7 +599,7 @@ def test_replay_across_arrow_batches(spark, corpus, tmp_path, mode):
     """The round's one Python stage keeps a url's response, seen row and
     eval memo across Arrow batch boundaries and resets them when the url
     changes (udfs.py make_round_fn). With maxRecordsPerBatch=1 every body
-    row (a replayed url's store row, or a snapshot page row) sits in a
+    row (a replayed url's seen row, or a snapshot page row) sits in a
     different batch from each of its request rows, and fresh and replayed
     urls share partitions, so a worker that lost the carried response, or
     leaked one url's response into the next, would break parity; and a
@@ -991,3 +991,20 @@ def test_routed_counts_in_every_mode(spark, corpus, tmp_path):
         u for p in log.iterdir() for u in p.read_text().splitlines() if u
     ]
     assert len(fetched) == len(set(fetched))
+
+
+def test_seen_df_columns_do_not_depend_on_state(spark, corpus, tmp_path):
+    """``seen_df()`` has the same columns, ``round`` included, whether or
+    not the crawl saw anything: a caller that groups by round also runs on
+    a program that never navigates."""
+    pages_df, _ = corpus
+    idle = CrawlEngine(spark, pages_df, str(tmp_path / "idle"), politeness_k=None)
+    idle.run(Extract(Lit("no page")), max_rounds=5)
+    assert idle.seen_df().groupBy("round").count().collect() == []
+    busy = CrawlEngine(spark, pages_df, str(tmp_path / "busy"), politeness_k=None)
+    busy.run(
+        Go(Lit(webgen.seeds_for(N_PAGES, SEED)[:2]), Extract(UrlE())),
+        max_rounds=5,
+    )
+    assert busy.seen_df().count() == 2
+    assert idle.seen_df().dtypes == busy.seen_df().dtypes

@@ -210,12 +210,18 @@ def test_ann_ivf_recall_clustered(spark, tmp_path):
     assert probed < 0.10, f"probed fraction {probed}"
 
 
-def test_cascade_int64_hash_exact():
-    """Regression: mixed result/request batches must not let pandas infer
-    float64 for url_hash (53-bit mantissa would truncate 64-bit hashes,
-    breaking the seen anti-join and refetching seen URLs)."""
+def test_cascade_int64_hash_exact(tmp_path):
+    """Regression: mixed result/request rows must keep url_hash int64 (a
+    float64 column's 53-bit mantissa would truncate 64-bit hashes,
+    breaking the seen anti-join and refetching seen URLs). The rows go
+    through the output row builder: the schema-typed ``from_pylist`` that
+    builds the worker's output batches and writes ``write_by_kind``'s
+    files."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from boris_spark.engine.compiler import compile_program
-    from boris_spark.engine.udfs import _frame, eval_to_fixpoint
+    from boris_spark.engine.udfs import OUT_SCHEMA, eval_to_fixpoint, write_by_kind
     from boris_spark.kernel import url_hash
     from boris_spark.oracle.program import Extract, Go, Lit, UrlE
 
@@ -228,10 +234,18 @@ def test_cascade_int64_hash_exact():
     # row and one request row in the same batch
     for child in nt[program.node_id].child_ids:
         eval_to_fixpoint(nt, child, url, url, "<html></html>", None, rows)
-    out = _frame(rows)
-    req = out[out["kind"] == "request"]
-    assert len(req) == 1
-    assert int(req["url_hash"].iloc[0]) == url_hash(url)
+    assert {r["kind"] for r in rows} == {"request", "result"}
+    out = pa.RecordBatch.from_pylist(rows, schema=OUT_SCHEMA)
+    assert out.schema.field("url_hash").type == pa.int64()
+    got = [
+        h for k, h in zip(out["kind"].to_pylist(), out["url_hash"].to_pylist())
+        if k == "request"
+    ]
+    assert got == [url_hash(url)]
+    write_by_kind(str(tmp_path), rows)
+    req = pq.read_table(tmp_path / "kind=request")
+    assert req.schema.field("url_hash").type == pa.int64()
+    assert req["url_hash"].to_pylist() == [url_hash(url)]
 
 
 def test_connected_components_path_graph(spark):

@@ -66,64 +66,6 @@ def test_stream_frontier_dedup_exactly_once(spark, tmp_path):
     assert got == ["http://a/1", "http://a/2", "http://b/1"]
 
 
-def test_stream_frontier_dedup_stateful(spark, tmp_path):
-    """applyInPandasWithState frontier dedup: one output row per url — the
-    min-path discovery — and re-discoveries in LATER micro-batches stay
-    silent (per-key state across batches)."""
-    import os
-
-    from boris_spark.streaming.frontier_state import (
-        stream_frontier_dedup_stateful,
-    )
-
-    src = tmp_path / "disc"
-    src.mkdir()
-    ts = dt.datetime(2024, 1, 1)
-    b1 = [
-        ("http://a/1", 11, "a", "0003", ts),
-        ("http://a/1", 11, "a", "0001", ts),  # min path in batch 1
-        ("http://b/1", 33, "b", "0002", ts),
-    ]
-    b2 = [
-        ("http://a/1", 11, "a", "0000", ts + dt.timedelta(minutes=1)),  # late re-discovery: silent
-        ("http://c/1", 44, "c", "0009", ts + dt.timedelta(minutes=1)),
-    ]
-    schema = (
-        "url_canon string, url_hash bigint, host string, path_key string, "
-        "discovered_ts timestamp"
-    )
-    for i, rows in enumerate((b1, b2)):
-        f = str(src / f"b{i}.parquet")
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f + ".dir")
-        part = next(
-            p for p in os.listdir(f + ".dir") if p.endswith(".parquet")
-        )
-        os.rename(os.path.join(f + ".dir", part), f)
-        os.utime(f, (1_000_000 + i, 1_000_000 + i))
-
-    sdf = stream_frontier_dedup_stateful(
-        spark, str(src), max_files_per_trigger=1
-    )
-    assert sdf.isStreaming
-    out = str(tmp_path / "out")
-    q = (
-        sdf.writeStream.format("parquet")
-        .outputMode("append")
-        .option("path", out)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    got = {
-        r["url_canon"]: r["path_key"]
-        for r in spark.read.parquet(out).collect()
-    }
-    assert got == {"http://a/1": "0001", "http://b/1": "0002", "http://c/1": "0009"}
-
-
 def test_stream_host_rates_append(spark, tmp_path):
     """Tumbling-window rates: epoch-minute alignment, one row per closed
     (host, window), sentinel's far-future window never reaches the sink."""
